@@ -494,10 +494,10 @@ HEADLINE = [
     "q_winnow_pairs",
     "q_leakage_split",
     # q_lsh_precision is deliberately NOT here: it audits the
-    # engine-NEUTRAL minhash twin (interpreted arithmetic hash family,
-    # like q_minhash_neutral, also unbenched) — its runtime measures the
-    # verification twin's hashing, not the xxhash64 hot path the bench
-    # already times via q_minhash_pairs.  Correctness is driver-gated.
+    # minhash_neutral_pairs candidates (like q_minhash_neutral, also
+    # unbenched), whose signature and band stages q_minhash_pairs
+    # already times — the same hash family and the same LSH pair core.
+    # Correctness is driver-gated.
 ]
 
 

@@ -4,7 +4,7 @@ from .dedup import (
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    simhash_buckets,
+    simhash_neutral,
 )
 from .similarity import cosine_topk, lsh_bucketed_topk
 from .text import (
@@ -19,7 +19,7 @@ from .text import (
 __all__ = [
     "bpe_learn_merges", "bpe_segment", "word_frequencies",
     "embedding_dup_pairs", "exact_dedup", "minhash_lsh_pairs",
-    "ngram_jaccard_pairs", "simhash_buckets",
+    "ngram_jaccard_pairs", "simhash_neutral",
     "cosine_topk", "lsh_bucketed_topk",
     "chunk_documents", "fingerprint_documents", "language_id",
     "normalize_text", "quality_features", "token_counts",

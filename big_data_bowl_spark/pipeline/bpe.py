@@ -28,18 +28,6 @@ def _chars(col):
     return F.filter(F.split(col, r"(?!^)"), lambda s: s != "")
 
 
-def _adjacent_pairs(sym_col):
-    """array<struct<l,r>> of adjacent symbol pairs (empty for 1-symbol
-    words)."""
-    return F.when(
-        F.size(sym_col) >= 2,
-        F.transform(F.sequence(F.lit(0), F.size(sym_col) - 2),
-                    lambda i: F.struct(
-                        F.element_at(sym_col, i + 1).alias("l"),
-                        F.element_at(sym_col, i + 2).alias("r")))) \
-        .otherwise(F.array().cast("array<struct<l:string,r:string>>"))
-
-
 def _apply_merge(sym_col, left: str, right: str):
     """Greedy left-to-right merge of adjacent (left, right) into one
     symbol — the exact BPE application rule ("a a a" with merge (a,a)

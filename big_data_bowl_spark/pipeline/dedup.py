@@ -7,14 +7,23 @@ Four tiers, cheapest to richest, all shuffle-architected for 100 TB:
 - n-gram Jaccard: explode→equi-join on token — the classic set-similarity
   join; candidates bounded by a probe set / LSH bucket so the common-token
   fan-out never goes quadratic in the corpus.
-- MinHash + LSH: signature = k independent min-hashes over shingle hashes
-  (all JVM-side xxhash64 + aggregate, no Python); banding buckets are the
-  join key, so only same-bucket docs ever meet — the scale path.
-- SimHash: 64-bit fingerprint via per-token hash bit-voting; near-dup
+- MinHash + LSH: signature = k independent min-hashes over shingle hashes;
+  banding buckets are the join key, so only same-bucket docs ever meet —
+  the scale path.
+- SimHash: 60-bit fingerprint via per-token hash bit-voting; near-dup
   candidates share a fingerprint band.
+
+The MinHash/SimHash tier has ONE hash family: a polynomial character hash
+(h·31+code mod 10^9+7) for shingles/tokens, the affine (a·h+b) mod 2^31−1
+family for slots, and a polynomial fold for band buckets.  Every step is
+explicit integer arithmetic, so any SQL engine reproduces signatures,
+buckets and estimates bit-for-bit (the DuckDB oracles do) — and it
+measured faster than the xxhash64 family it replaced.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -543,27 +552,19 @@ def _mh_coeffs(n: int) -> list[tuple[int, int]]:
     return out
 
 
-def shingle_base_hashes(text: Column, shingle_len: int = 3,
-                        neutral: bool = False) -> Column:
+def shingle_base_hashes(text: Column, shingle_len: int = 3) -> Column:
     """Word-shingle base hashes as an array<long>: each ``shingle_len``
-    word shingle hashed once, reduced mod p.  The expensive string work —
-    split, slice, concat, hash — happens HERE, exactly once per shingle.
-
-    ``neutral=False`` (default) hashes with xxhash64 (JVM-intrinsic, the
-    throughput path); ``neutral=True`` uses the polynomial character
-    hash (h·31+code mod 10^9+7, seed 7 — < 2^31, so it feeds the affine
-    slot family unchanged), which any SQL engine reproduces bit-for-bit
-    — the switch that makes the SAME pipeline code oracle-checkable."""
+    word shingle hashed once with the polynomial character hash
+    (h·31+code mod 10^9+7, seed 7 — < 2^31, so it feeds the affine slot
+    family unchanged).  The expensive string work — split, slice,
+    concat, hash — happens HERE, exactly once per shingle."""
+    from .text import polynomial_token_hash
     words = F.split(text, " ")
     n_sh = F.greatest(F.size(words) - (shingle_len - 1), F.lit(1))
     shingles = F.transform(
         F.sequence(F.lit(0), n_sh - 1),
         lambda i: F.concat_ws(" ", F.slice(words, i + 1, shingle_len)))
-    if neutral:
-        from .text import polynomial_token_hash
-        return F.transform(shingles, polynomial_token_hash)
-    return F.transform(shingles,
-                       lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME)))
+    return F.transform(shingles, polynomial_token_hash)
 
 
 def minhash_slots(base_col: str, n_hashes: int = N_MINHASH) -> Column:
@@ -576,7 +577,7 @@ def minhash_slots(base_col: str, n_hashes: int = N_MINHASH) -> Column:
     staged via ``withColumn``), not an inlined expression: higher-order
     functions are interpreted (outside codegen), and Catalyst does not
     common-subexpression-eliminate through lambda bodies — inlining the
-    base recomputes split+concat+xxhash64 once PER SLOT, a measured ~45×
+    base recomputes split+concat+hash once PER SLOT, a measured ~45×
     slowdown at sf0.1.
 
     Measured and REJECTED (r11): the "codegen" alternative — explode
@@ -594,33 +595,13 @@ def minhash_slots(base_col: str, n_hashes: int = N_MINHASH) -> Column:
         for a, b in _mh_coeffs(n_hashes)])
 
 
-def minhash_signature(text: Column, n_hashes: int = N_MINHASH,
-                      shingle_len: int = 3) -> Column:
-    """Single-Column MinHash signature (array<long>), fully JVM-side, for
-    contexts that can't stage a named column.  Prefer the staged
-    ``shingle_base_hashes`` + ``minhash_slots`` pair in any hot path —
-    see :func:`minhash_slots` for why."""
-    words = F.split(text, " ")
-    n_sh = F.greatest(F.size(words) - (shingle_len - 1), F.lit(1))
-    shingles = F.transform(
-        F.sequence(F.lit(0), n_sh - 1),
-        lambda i: F.concat_ws(" ", F.slice(words, i + 1, shingle_len)))
-    base = F.transform(shingles,
-                       lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME)))
-    return F.array(*[
-        F.aggregate(base, F.lit(_MH_PRIME).cast("long"),
-                    lambda acc, h: F.least(acc, (F.lit(a) * h + F.lit(b))
-                                           % _MH_PRIME))
-        for a, b in _mh_coeffs(n_hashes)])
-
-
 def _neutral_minhash_sigs_arrow(df: DataFrame, id_col: str, text_col: str,
                                 n_hashes: int, shingle_len: int,
                                 drop_empty_words: bool) -> DataFrame:
-    """NEUTRAL-family MinHash signatures as ONE vectorized Arrow batch
-    stage — bit-identical to the interpreted-HOF form (r14, guide §4.2).
+    """MinHash signatures as ONE vectorized Arrow batch stage —
+    bit-identical to the interpreted-HOF form (r14, guide §4.2).
 
-    The neutral family is explicit integer arithmetic end-to-end
+    The polynomial family is explicit integer arithmetic end-to-end
     (polynomial char hash mod 10^9+7, affine (a·h+b) mod 2^31−1 slots),
     which the JVM evaluates as INTERPRETED higher-order functions:
     ~len(shingle) char-fold steps + n_hashes affine folds per shingle,
@@ -647,7 +628,9 @@ def _neutral_minhash_sigs_arrow(df: DataFrame, id_col: str, text_col: str,
     :func:`minhash_neutral_pairs` filters empty tokens,
     :func:`shingle_base_hashes` (→ :func:`minhash_signatures`) keeps
     them — both reproduced exactly (empty shingles fold to the bare
-    seed, matching ``_poly_hash``'s empty-string guard).
+    seed, matching ``_poly_hash``'s empty-string guard).  A null text
+    hashes like ``""``, as the expression form does (split of null is
+    null, which still yields one empty shingle).
     """
     from .text import FP_PRIME
     from ..schemas import arrow_fanout
@@ -673,7 +656,8 @@ def _neutral_minhash_sigs_arrow(df: DataFrame, id_col: str, text_col: str,
             n_docs = len(pdf)
             if n_docs == 0:
                 continue
-            word_lists = [t.split(" ") for t in pdf[text_col].tolist()]
+            word_lists = [(t or "").split(" ")
+                          for t in pdf[text_col].tolist()]
             if drop_empty_words:
                 word_lists = [[w for w in ws if w] for ws in word_lists]
             wcounts = np.array([len(ws) for ws in word_lists],
@@ -750,7 +734,8 @@ def word_shingle_sets(df: DataFrame, id_col: str = "doc_id",
     strings cross exactly one exchange, nested, keyed by doc id).
     Element order within a doc's array is unspecified (a Python set);
     consumers must treat it as a set — both consumers (explode +
-    array_intersect) do.
+    array_intersect) do.  A null text yields the ``[""]`` singleton, as
+    ``""`` does (the expression form's behavior).
     """
     require_columns(df, [id_col, text_col], "word_shingle_sets")
     from ..schemas import arrow_fanout
@@ -764,7 +749,7 @@ def word_shingle_sets(df: DataFrame, id_col: str = "doc_id",
         for pdf in batches:
             ids, sets = [], []
             for i, t in zip(pdf[id_col].tolist(), pdf[text_col].tolist()):
-                words = [w for w in t.split(" ") if w]
+                words = [w for w in (t or "").split(" ") if w]
                 n_sh = max(len(words) - (shingle_len - 1), 1)
                 seen = {" ".join(words[j:j + shingle_len])
                         for j in range(n_sh)}
@@ -788,72 +773,106 @@ def distinct_word_shingles(df: DataFrame, id_col: str = "doc_id",
 
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text",
-                       n_hashes: int = N_MINHASH,
-                       neutral: bool = False) -> DataFrame:
+                       n_hashes: int = N_MINHASH) -> DataFrame:
     """The (id, sig) MinHash signature table — the persistable INDEX of a
     continuously-ingested corpus (stage it as parquet; signatures never
-    need recomputing for already-seen documents).  Fan-out + the staged
-    base-hash projection as in minhash_lsh_pairs.  ``neutral`` picks the
-    shingle hash family (see :func:`shingle_base_hashes`); an index must
-    be queried with the SAME family it was built with."""
+    need recomputing for already-seen documents).  One vectorized Arrow
+    stage (:func:`_neutral_minhash_sigs_arrow`, r14) over the unfiltered
+    split, bit-identical to ``shingle_base_hashes`` staged through
+    :func:`minhash_slots`."""
     require_columns(df, [id_col, text_col], "minhash_signatures")
-    if neutral:
-        # r14: the neutral family's interpreted char+affine folds move
-        # to one vectorized Arrow stage, bit-identical — see
-        # _neutral_minhash_sigs_arrow (xxhash64 stays the JVM path:
-        # its hashing is a codegen intrinsic numpy cannot reproduce).
-        return _neutral_minhash_sigs_arrow(
-            df, id_col, text_col, n_hashes, shingle_len=3,
-            drop_empty_words=False)
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    narrow = df.select(F.col(id_col), F.col(text_col)) \
-               .repartition(parallelism)
-    return (narrow
-            .withColumn("_base", shingle_base_hashes(F.col(text_col),
-                                                     neutral=neutral))
-            .select(F.col(id_col), minhash_slots("_base", n_hashes)
-                    .alias("sig")))
+    return _neutral_minhash_sigs_arrow(df, id_col, text_col, n_hashes,
+                                       shingle_len=3, drop_empty_words=False)
+
+
+def _check_bands(n_slots: int, bands: int) -> None:
+    if n_slots % bands != 0:
+        raise ValueError(f"signature width ({n_slots}) must be divisible "
+                         f"by bands ({bands}) — trailing slots would be "
+                         "silently excluded from banding")
 
 
 def _band_buckets(sig_df: DataFrame, id_col: str,
-                  n_hashes: int, bands: int,
-                  neutral: bool = False) -> DataFrame:
+                  n_slots: int, bands: int) -> DataFrame:
     """(id, band, bucket) banding table from a signature table — the LSH
-    join key generator shared by the batch and incremental paths.
-    ``neutral=True`` folds each band's slots with the polynomial
-    (acc·31 + slot) mod 10^9+7 seeded by the band index (engine-
-    reproducible) instead of xxhash64.
+    join key generator shared by the batch and incremental paths.  Each
+    band's slots fold with the polynomial (acc·31 + slot) mod 10^9+7
+    seeded by the band index (engine-reproducible).
 
     r15 measured NO-GO for an Arrow twin (the interpreted-HOF sweep):
-    the neutral band fold isolates at 0.22-0.30s at BOTH sf0.01 and
-    sf0.1 — already at the ~0.2s Python-worker round-trip floor a new
+    the band fold isolates at 0.22-0.30s at BOTH sf0.01 and sf0.1 —
+    already at the ~0.2s Python-worker round-trip floor a new
     mapInPandas stage would pay, and the fold tree is ~10² nodes/row
     (below the r14-measured ~10³ pay threshold).  Left as JVM
     expressions."""
-    rows_per_band = n_hashes // bands
-    if neutral:
-        from .text import FP_PRIME
-        bucket_arr = F.array(*[
-            F.aggregate(F.slice(F.col("sig"), b * rows_per_band + 1,
-                                rows_per_band),
-                        F.lit(b).cast("long"),
-                        lambda acc, s: (acc * 31 + s) % F.lit(FP_PRIME))
-            for b in range(bands)])
-    else:
-        bucket_arr = F.array(*[
-            F.xxhash64(F.concat_ws(
-                ",", *[F.element_at("sig", b * rows_per_band + r + 1)
-                       for r in range(rows_per_band)]), F.lit(b))
-            for b in range(bands)])
+    from .text import FP_PRIME
+    rows_per_band = n_slots // bands
+    bucket_arr = F.array(*[
+        F.aggregate(F.slice(F.col("sig"), b * rows_per_band + 1,
+                            rows_per_band),
+                    F.lit(b).cast("long"),
+                    lambda acc, s: (acc * 31 + s) % F.lit(FP_PRIME))
+        for b in range(bands)])
     return sig_df.select(
         id_col, F.posexplode(bucket_arr).alias("band", "bucket"))
+
+
+def _slot_estimate(pairs: DataFrame, sig_a: DataFrame, sig_b: DataFrame,
+                   id_col: str, a: str, b: str, n_slots: int,
+                   min_est_jaccard: float) -> DataFrame:
+    """Join both signatures back onto the (a, b) id pairs and keep the
+    pairs whose INTEGER matched-slot count m ≥ ceil(τ·n) — the form the
+    SQL oracles state; est = m/n is dyadic for n = 32, so no float
+    comparison sits on a candidate boundary.  Returns (a, b,
+    est_jaccard)."""
+    pairs = (pairs
+             .join(sig_a.select(F.col(id_col).alias(a),
+                                F.col("sig").alias("__sa")), a)
+             .join(sig_b.select(F.col(id_col).alias(b),
+                                F.col("sig").alias("__sb")), b))
+    matches = F.size(F.filter(
+        F.zip_with("__sa", "__sb", lambda x, y: x == y), lambda v: v))
+    return (pairs.withColumn("__m", matches)
+                 .filter(F.col("__m") >= math.ceil(min_est_jaccard * n_slots))
+                 .select(a, b, roundn(F.col("__m") / F.lit(float(n_slots)))
+                         .alias("est_jaccard")))
+
+
+def _lsh_pairs(sig_df: DataFrame, id_col: str, n_slots: int, bands: int,
+               min_est_jaccard: float) -> DataFrame:
+    """The LSH pair core of every MinHash pair generator: band the
+    signature table, self-join on (band, bucket), dedup the id pairs,
+    then :func:`_slot_estimate`.
+
+    The signature table feeds BOTH sides of the band self-join and both
+    post-dedup join-backs; it is pinned (eager localCheckpoint,
+    GC-released with the plan object) so the CPU-bound hashing runs
+    exactly once, and repeated calls in one session never accumulate
+    cached copies the way a bare .persist() would.  Candidate pairs
+    carry ONLY the two ids through the band shuffle and the pair dedup;
+    the 2·n_slots-long signature arrays join back AFTER it, so the
+    widest shuffle stays 2 longs per row.
+
+    Returns (doc_a, doc_b, est_jaccard) with doc_a < doc_b."""
+    _check_bands(n_slots, bands)
+    sig = sig_df.localCheckpoint(eager=True)
+    banded = _band_buckets(sig, id_col, n_slots, bands)
+    pairs = (banded.alias("a")
+             .join(banded.alias("b"),
+                   (F.col("a.band") == F.col("b.band"))
+                   & (F.col("a.bucket") == F.col("b.bucket"))
+                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+             .select(F.col(f"a.{id_col}").alias("doc_a"),
+                     F.col(f"b.{id_col}").alias("doc_b"))
+             .dropDuplicates(["doc_a", "doc_b"]))
+    return _slot_estimate(pairs, sig, sig, id_col, "doc_a", "doc_b",
+                          n_slots, min_est_jaccard)
 
 
 def minhash_lsh_match(new_df: DataFrame, index_sig: DataFrame,
                       id_col: str = "doc_id", text_col: str = "text",
                       n_hashes: int = N_MINHASH, bands: int = LSH_BANDS,
-                      min_est_jaccard: float = 0.5,
-                      neutral: bool = False) -> DataFrame:
+                      min_est_jaccard: float = 0.5) -> DataFrame:
     """INCREMENTAL near-dup matching: a new batch against an EXISTING
     signature index (``minhash_signatures`` output, typically read back
     from parquet).  Only the new batch's text is hashed; the index side
@@ -864,17 +883,15 @@ def minhash_lsh_match(new_df: DataFrame, index_sig: DataFrame,
 
     Returns (new_id, index_id, est_jaccard) ≥ threshold.
     """
-    if n_hashes % bands != 0:
-        raise ValueError(f"n_hashes ({n_hashes}) must be divisible by "
-                         f"bands ({bands})")
+    _check_bands(n_hashes, bands)
     # localCheckpoint (GC-released), not a bare .persist(): the batch
     # signature table feeds banding AND the join-back, but its lifetime
     # should end with the plan object — repeated incremental ingests in
     # one session must not accumulate cached signature tables.
-    new_sig = minhash_signatures(new_df, id_col, text_col, n_hashes,
-                                 neutral=neutral).localCheckpoint(eager=True)
-    nb = _band_buckets(new_sig, id_col, n_hashes, bands, neutral=neutral)
-    ib = _band_buckets(index_sig, id_col, n_hashes, bands, neutral=neutral)
+    new_sig = minhash_signatures(new_df, id_col, text_col,
+                                 n_hashes).localCheckpoint(eager=True)
+    nb = _band_buckets(new_sig, id_col, n_hashes, bands)
+    ib = _band_buckets(index_sig, id_col, n_hashes, bands)
     pairs = (nb.alias("a")
              .join(ib.alias("b"),
                    (F.col("a.band") == F.col("b.band"))
@@ -882,80 +899,34 @@ def minhash_lsh_match(new_df: DataFrame, index_sig: DataFrame,
              .select(F.col(f"a.{id_col}").alias("new_id"),
                      F.col(f"b.{id_col}").alias("index_id"))
              .dropDuplicates(["new_id", "index_id"]))
-    pairs = (pairs
-             .join(new_sig.select(F.col(id_col).alias("new_id"),
-                                  F.col("sig").alias("sig_a")), "new_id")
-             .join(index_sig.select(F.col(id_col).alias("index_id"),
-                                    F.col("sig").alias("sig_b")), "index_id"))
-    agree = F.size(F.filter(F.zip_with("sig_a", "sig_b",
-                                       lambda x, y: x == y), lambda v: v))
-    est = agree.cast("double") / F.lit(float(n_hashes))
-    return (pairs.withColumn("est_jaccard", roundn(est))
-                 .filter(F.col("est_jaccard") >= min_est_jaccard)
-                 .select("new_id", "index_id", "est_jaccard"))
+    return _slot_estimate(pairs, new_sig, index_sig, id_col, "new_id",
+                          "index_id", n_hashes, min_est_jaccard)
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text",
                       n_hashes: int = N_MINHASH, bands: int = LSH_BANDS,
-                      min_est_jaccard: float = 0.5,
-                      neutral: bool = False) -> DataFrame:
+                      min_est_jaccard: float = 0.5) -> DataFrame:
     """MinHash + LSH near-duplicate candidate pairs.
 
     Banding: the signature splits into ``bands`` groups; docs sharing any
     band hash collide into a bucket (the ONLY join key — no all-pairs
     shuffle).  Within a bucket, the estimated Jaccard is the fraction of
-    agreeing signature slots — a dyadic rational (m/32), so the
-    threshold comparison never sits on a float boundary (the SQL oracle
-    states the same filter as an integer slot count, m >= ceil(tau*32)).
+    agreeing signature slots — a dyadic rational (m/32), and the
+    threshold is the integer slot count m >= ceil(tau*32), exactly as
+    the SQL oracle states it.
 
-    ``neutral`` picks the hash family (see :func:`shingle_base_hashes`):
-    xxhash64 is the throughput path; the neutral polynomial family makes
-    this exact pipeline reproducible in SQL, which is how q_minhash_pairs
-    is hash-verified against the DuckDB oracle (r5 — previously only the
-    separate ``minhash_neutral_pairs`` twin was).  Identical-doc → est
-    1.0 and disjoint-doc → est ~0 property tests cover both families.
+    Signatures are :func:`minhash_signatures` (unfiltered split — the
+    persistable index form); :func:`minhash_neutral_pairs` is the same
+    pipeline over the empty-token-filtered split.  Every hash is the
+    polynomial family, so q_minhash_pairs is hash-verified against the
+    DuckDB oracle.
 
     Returns (doc_a, doc_b, est_jaccard) with doc_a < doc_b.
     """
     require_columns(df, [id_col, text_col], "minhash_lsh_pairs")
-    if n_hashes % bands != 0:
-        raise ValueError(f"n_hashes ({n_hashes}) must be divisible by "
-                         f"bands ({bands}) — trailing slots would be "
-                         "silently excluded from banding")
-    # The signature table feeds BOTH sides of the band self-join and the
-    # two post-dedup signature join-backs; pin it (eager localCheckpoint,
-    # GC-released with the plan object) so the CPU-bound hashing runs
-    # exactly once — it is the narrow (id, 32 longs) table any LSH index
-    # materializes anyway (minhash_signatures is the persistable-index
-    # form of this step), and repeated calls in one session must not
-    # accumulate cached copies the way a bare .persist() would.
-    sig = minhash_signatures(df, id_col, text_col, n_hashes,
-                             neutral=neutral).localCheckpoint(eager=True)
-    banded = _band_buckets(sig, id_col, n_hashes, bands, neutral=neutral)
-    # Candidate pairs carry ONLY the two ids through the band shuffle and
-    # the pair-dedup; the 2 × n_hashes-long signature arrays are joined
-    # back AFTER dropDuplicates, so the widest shuffle stays 2 longs per
-    # row instead of 2 + 2·n_hashes.
-    pairs = (banded.alias("a")
-             .join(banded.alias("b"),
-                   (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bucket") == F.col("b.bucket"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-             .select(F.col(f"a.{id_col}").alias("doc_a"),
-                     F.col(f"b.{id_col}").alias("doc_b"))
-             .dropDuplicates(["doc_a", "doc_b"]))
-    pairs = (pairs
-             .join(sig.select(F.col(id_col).alias("doc_a"),
-                              F.col("sig").alias("sig_a")), "doc_a")
-             .join(sig.select(F.col(id_col).alias("doc_b"),
-                              F.col("sig").alias("sig_b")), "doc_b"))
-    agree = F.size(F.filter(F.zip_with("sig_a", "sig_b",
-                                       lambda x, y: x == y), lambda v: v))
-    est = agree.cast("double") / F.lit(float(n_hashes))
-    return (pairs.withColumn("est_jaccard", roundn(est))
-                 .filter(F.col("est_jaccard") >= min_est_jaccard)
-                 .select("doc_a", "doc_b", "est_jaccard"))
+    return _lsh_pairs(minhash_signatures(df, id_col, text_col, n_hashes),
+                      id_col, n_hashes, bands, min_est_jaccard)
 
 
 # Densification offset stride for OPH (one-permutation hashing): strictly
@@ -968,8 +939,7 @@ _OPH_C = 1 << 31
 
 def minhash_oph_signatures(df: DataFrame, id_col: str = "doc_id",
                            text_col: str = "text",
-                           n_bins: int = N_MINHASH,
-                           neutral: bool = False) -> DataFrame:
+                           n_bins: int = N_MINHASH) -> DataFrame:
     """MinHash signatures by ONE-PERMUTATION HASHING (Li, Owen, Zhang,
     NIPS'12) with rotation densification (Shrivastava & Li, ICML'14):
     ONE hash per shingle binned by ``h mod B``, min per non-empty bin —
@@ -1006,9 +976,9 @@ def minhash_oph_signatures(df: DataFrame, id_col: str = "doc_id",
     (see inline comment — InferFiltersFromGenerate, also excluded
     session-wide in session.py since r13).
 
-    ``neutral=True`` uses the polynomial shingle hash so any SQL engine
-    reproduces the signature bit-for-bit (q_minhash_oph's DuckDB oracle
-    rebuilds bins, rotation, and offsets exactly).
+    The polynomial shingle hash lets any SQL engine reproduce the
+    signature bit-for-bit (q_minhash_oph's DuckDB oracle rebuilds bins,
+    rotation, and offsets exactly).
 
     Returns (id_col, sig array<long>) with ``n_bins`` slots.
     """
@@ -1021,8 +991,7 @@ def minhash_oph_signatures(df: DataFrame, id_col: str = "doc_id",
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     binned = (df.select(F.col(id_col), F.col(text_col))
                 .repartition(parallelism)
-                .withColumn("_base", shingle_base_hashes(F.col(text_col),
-                                                         neutral=neutral))
+                .withColumn("_base", shingle_base_hashes(F.col(text_col)))
                 # explode_outer, NOT explode: for a plain explode,
                 # Catalyst's InferFiltersFromGenerate synthesizes a
                 # size(_base) > 0 filter and pushes the ENTIRE
@@ -1084,98 +1053,15 @@ def minhash_oph_signatures(df: DataFrame, id_col: str = "doc_id",
 def minhash_oph_pairs(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text",
                       n_bins: int = N_MINHASH, bands: int = LSH_BANDS,
-                      min_est_jaccard: float = 0.5,
-                      neutral: bool = False) -> DataFrame:
+                      min_est_jaccard: float = 0.5) -> DataFrame:
     """MinHash+LSH near-dup pairs over OPH signatures — the same
-    band/bucket/estimate composition as :func:`minhash_lsh_pairs`
-    (banding reads any fixed-width signature array), with the signature
-    build swapped for the one-pass :func:`minhash_oph_signatures`.
+    band/bucket/estimate core as :func:`minhash_lsh_pairs` (banding
+    reads any fixed-width signature array), with the signature build
+    swapped for the one-pass :func:`minhash_oph_signatures`.
     Returns (doc_a, doc_b, est_jaccard), doc_a < doc_b."""
-    import math
     require_columns(df, [id_col, text_col], "minhash_oph_pairs")
-    if n_bins % bands != 0:
-        raise ValueError(f"n_bins ({n_bins}) must be divisible by "
-                         f"bands ({bands})")
-    sig = minhash_oph_signatures(df, id_col, text_col, n_bins,
-                                 neutral=neutral).localCheckpoint(
-                                     eager=True)
-    banded = _band_buckets(sig, id_col, n_bins, bands, neutral=neutral)
-    pairs = (banded.alias("a")
-             .join(banded.alias("b"),
-                   (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bucket") == F.col("b.bucket"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-             .select(F.col(f"a.{id_col}").alias("doc_a"),
-                     F.col(f"b.{id_col}").alias("doc_b"))
-             .dropDuplicates(["doc_a", "doc_b"]))
-    pairs = (pairs
-             .join(sig.select(F.col(id_col).alias("doc_a"),
-                              F.col("sig").alias("sig_a")), "doc_a")
-             .join(sig.select(F.col(id_col).alias("doc_b"),
-                              F.col("sig").alias("sig_b")), "doc_b"))
-    matches = F.size(F.filter(F.zip_with("sig_a", "sig_b",
-                                         lambda x, y: x == y),
-                              lambda v: v))
-    min_matches = math.ceil(min_est_jaccard * n_bins)
-    return (pairs.withColumn("__m", matches)
-                 .filter(F.col("__m") >= min_matches)
-                 .select("doc_a", "doc_b",
-                         roundn(F.col("__m") / F.lit(float(n_bins)))
-                         .alias("est_jaccard")))
-
-
-def simhash_buckets(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text", bits: int = 64) -> DataFrame:
-    """SimHash fingerprint per document + a 16-bit band for bucketing.
-
-    Each token votes its xxhash64 bit-pattern (+1/−1 per bit); the sign of
-    the vote sum is the fingerprint bit.  All expressed as array transforms
-    over the token list — JVM-side.  Near-dups share bands; Hamming distance
-    between fingerprints refines.  Returns (doc_id, simhash, band0..band3).
-    """
-    require_columns(df, [id_col, text_col], "simhash_buckets")
-    # Stage the token hashes as a NAMED column first (HOF lambdas are
-    # interpreted and Catalyst does not CSE through them — inlining this
-    # array into the vote fold recomputes split+filter+xxhash64; see
-    # SCALE.md "Higher-order-function caveat").  CPU-bound, so fan out
-    # round-robin (unconditional — probing .rdd.getNumPartitions() forces
-    # plan analysis + an RDD conversion on the driver).
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    narrow = df.select(F.col(id_col), F.col(text_col)) \
-               .repartition(parallelism)
-    staged = narrow.withColumn(
-        "_th", F.transform(F.filter(F.split(F.col(text_col), " "),
-                                    lambda t: t != ""),
-                           lambda t: F.xxhash64(t)))
-
-    # Single-pass bit voting: ONE aggregate over the token-hash array whose
-    # accumulator is an array of `bits` counters (+1/−1 per bit per token),
-    # instead of `bits` separate folds — one array traversal per document,
-    # not 64.  Bit masks are constant literals (two's-complement: bit 63's
-    # mask is the sign bit, 1<<63 overflows a signed Java long).
-    masks = F.array(*[
-        F.lit((1 << b) if b < 63 else -(1 << 63)).cast("long")
-        for b in range(bits)])
-    counters = F.aggregate(
-        F.col("_th"),
-        F.array_repeat(F.lit(0), bits),
-        lambda acc, h: F.zip_with(
-            acc, masks,
-            lambda a, m: a + F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1)))
-    # fingerprint = Σ masks where counter > 0 (disjoint masks, so signed
-    # addition ≡ bitwise OR, sign bit included)
-    fingerprint = F.aggregate(
-        F.zip_with(F.col("_cnt"), masks,
-                   lambda c, m: F.when(c > 0, m)
-                                 .otherwise(F.lit(0).cast("long"))),
-        F.lit(0).cast("long"), lambda acc, x: acc + x)
-    out = (staged.withColumn("_cnt", counters)
-                 .select(F.col(id_col), fingerprint.alias("simhash")))
-    for i in range(4):
-        out = out.withColumn(
-            f"band{i}",
-            F.shiftrightunsigned(F.col("simhash"), i * 16).bitwiseAND(F.lit(0xFFFF)))
-    return out
+    return _lsh_pairs(minhash_oph_signatures(df, id_col, text_col, n_bins),
+                      id_col, n_bins, bands, min_est_jaccard)
 
 
 def embedding_dup_pairs(df: DataFrame, threshold: float = 0.9,
@@ -1441,91 +1327,42 @@ def minhash_neutral_pairs(df: DataFrame, min_est_jaccard: float = 0.5,
                           n_hashes: int = N_MINHASH,
                           bands: int = LSH_BANDS,
                           shingle_len: int = 3) -> DataFrame:
-    """Engine-neutral MinHash+LSH pair generation: the SAME pipeline as
-    :func:`minhash_lsh_pairs` — shingle, signature, band, bucket-join,
-    estimate — with every hash an explicit arithmetic formula instead of
-    xxhash64: polynomial character hash for shingles (h·31+code mod P,
-    the :func:`fingerprint_documents` family), the affine (a·h+b) mod p
-    family for slots, and a polynomial fold seeded by the band index for
-    buckets.  Any engine that can fold integers reproduces signatures,
-    buckets, candidate pairs, AND estimates bit-for-bit — which turns
-    the probabilistic dedup tier from rows-only into a hash-verified
-    DuckDB oracle row, and doubles as the portability story for the
-    persisted signature index.
+    """MinHash+LSH pair generation over the EMPTY-TOKEN-FILTERED split:
+    the :func:`minhash_lsh_pairs` pipeline — shingle, signature, band,
+    bucket-join, estimate — with runs of spaces never producing empty
+    words (``minhash_lsh_pairs`` keeps them, as the persistable index
+    form does).  Every hash is explicit arithmetic: polynomial character
+    hash for shingles (h·31+code mod P, the :func:`fingerprint_documents`
+    family), the affine (a·h+b) mod p family for slots, and a polynomial
+    fold seeded by the band index for buckets — any engine that can fold
+    integers reproduces signatures, buckets, candidate pairs, AND
+    estimates bit-for-bit (q_minhash_neutral's DuckDB oracle), which
+    also makes a persisted signature index portable.
 
-    The xxhash64 form remains the hot path (JVM-intrinsic hashing); use
-    this form where cross-engine reproducibility of the index matters
-    more than hashing throughput.  Same staged-array discipline: base
-    hashes materialize ONCE as a named column (higher-order functions
-    are interpreted and not CSE'd through — see :func:`minhash_slots`).
-
-    The estimate threshold compares INTEGER matched-slot counts
-    (matches ≥ ceil(τ·n)), and est = matches/n is a dyadic rational for
-    the default n=32 — no float boundary anywhere.
+    The signature build is one vectorized Arrow stage
+    (:func:`_neutral_minhash_sigs_arrow`, r14); pinning and the integer
+    matched-slot threshold live in the shared :func:`_lsh_pairs` core.
 
     Returns (doc_a, doc_b, est_jaccard), doc_a < doc_b.
     """
     require_columns(df, [id_col, text_col], "minhash_neutral_pairs")
-    import math
-
-    # pinned: the signature table feeds FOUR plan references (both sides
-    # of the banded bucket self-join, both sides of the verification
-    # join); without the pin each reference re-runs the whole shingle→
-    # hash→fold pipeline (measured 12.9s → ~4s at sf0.1, doc-grain rows)
-    # r14: the signature build itself — previously 32 interpreted affine
-    # folds over interpreted per-char polynomial hashes — is ONE
-    # vectorized Arrow stage, bit-identical (see
-    # _neutral_minhash_sigs_arrow; this call keeps the r13 fan-out
-    # inside the helper).  drop_empty_words=True is THIS function's
-    # historical split semantics (minhash_signatures keeps empties).
-    sig_df = (_neutral_minhash_sigs_arrow(
-                  df, id_col, text_col, n_hashes, shingle_len,
-                  drop_empty_words=True)
-              .localCheckpoint(eager=True))
-    rpb = n_hashes // bands
-    from .text import FP_PRIME
-    banded = sig_df.select(
-        id_col,
-        F.posexplode(F.array(*[
-            F.aggregate(F.slice(F.col("sig"), b * rpb + 1, rpb),
-                        F.lit(b).cast("long"),
-                        lambda acc, s: (acc * 31 + s) % F.lit(FP_PRIME))
-            for b in range(bands)])).alias("band", "bucket"))
-    cand = (banded.select(F.col(id_col).alias("doc_a"), "band", "bucket")
-            .join(banded.select(F.col(id_col).alias("doc_b"),
-                                "band", "bucket"),
-                  ["band", "bucket"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b").distinct())
-    sa = sig_df.select(F.col(id_col).alias("doc_a"),
-                       F.col("sig").alias("__sa"))
-    sb = sig_df.select(F.col(id_col).alias("doc_b"),
-                       F.col("sig").alias("__sb"))
-    matches = F.size(F.filter(
-        F.zip_with("__sa", "__sb", lambda x, y: x == y), lambda v: v))
-    min_matches = math.ceil(min_est_jaccard * n_hashes)
-    return (cand.join(sa, "doc_a").join(sb, "doc_b")
-                .withColumn("__m", matches)
-                .filter(F.col("__m") >= min_matches)
-                .select("doc_a", "doc_b",
-                        roundn(F.col("__m") / F.lit(float(n_hashes)))
-                        .alias("est_jaccard")))
+    sig = _neutral_minhash_sigs_arrow(df, id_col, text_col, n_hashes,
+                                      shingle_len, drop_empty_words=True)
+    return _lsh_pairs(sig, id_col, n_hashes, bands, min_est_jaccard)
 
 
 def simhash_neutral(df: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text") -> DataFrame:
-    """Engine-neutral SimHash: the same bit-voting fingerprint as
-    :func:`simhash_buckets`, with the token hash built from TWO
-    polynomial character hashes (bases 31/37, seeds 7/11, both mod the
-    31-bit prime) concatenated into a 60-bit pattern — every bit is
-    explicit integer arithmetic, so a SQL oracle reproduces fingerprints
-    and bands exactly.  Completes the sketch-tier verification story
-    begun by :func:`minhash_neutral_pairs`; xxhash64's full 64 random
-    bits remain the hot path.
-
-    60 positive bits also sidestep the two's-complement sign-bit special
-    case the 64-bit form needs.  Bands are 4×15 bits.  Token
-    multiplicity votes, exactly like the xxhash64 form.
+    """SimHash fingerprint per document + four 15-bit bands for
+    bucketing.  Each non-empty token votes its hash bit-pattern (+1/−1
+    per bit; token multiplicity votes) and the sign of each vote sum is
+    the fingerprint bit.  The token hash is TWO polynomial character
+    hashes (bases 31/37, seeds 7/11, both mod the 31-bit prime)
+    concatenated into a 60-bit pattern — every bit is explicit integer
+    arithmetic, so a SQL oracle reproduces fingerprints and bands
+    exactly, and 60 positive bits sidestep the two's-complement sign-bit
+    case a 64-bit pattern needs.  A null text gives a null fingerprint
+    and null bands (the expression form's result).
 
     Returns (doc_id, simhash, band0..band3).
     """
@@ -1559,8 +1396,9 @@ def simhash_neutral(df: DataFrame, id_col: str = "doc_id",
             n_docs = len(pdf)
             if n_docs == 0:
                 continue
-            tok_lists = [[w for w in t.split(" ") if w]
-                         for t in pdf[text_col].tolist()]
+            texts = pdf[text_col].tolist()
+            tok_lists = [[w for w in (t or "").split(" ") if w]
+                         for t in texts]
             tcounts = np.array([len(ts) for ts in tok_lists],
                                dtype=np.int64)
             flat = [w for ts in tok_lists for w in ts]
@@ -1597,6 +1435,10 @@ def simhash_neutral(df: DataFrame, id_col: str = "doc_id",
                 counters = np.zeros((n_docs, bits), dtype=np.int64)
             sig = ((counters > 0).astype(np.int64)
                    << np.arange(bits, dtype=np.int64)).sum(axis=1)
+            # null text -> null fingerprint (nullable Int64 keeps every
+            # 60-bit value exact; a float NaN column would not)
+            sig = pd.array(sig, dtype="Int64")
+            sig[np.array([t is None for t in texts])] = pd.NA
             yield pd.DataFrame({id_col: pdf[id_col].values,
                                 "simhash": sig})
 
@@ -1694,6 +1536,19 @@ def minhash_audience_similarity(sigs: DataFrame, group_col: str,
                                     / F.lit(float(n_hashes)), 6)))
 
 
+def _token_ngrams(text_col: str, n: int) -> Column:
+    """The rolling n-TOKEN grams of ``text_col`` as array<string> (each
+    gram its tokens space-joined), built in-row; empty for a doc with
+    fewer than ``n`` tokens."""
+    from .text import _tokens
+    arr = _tokens(text_col)
+    return F.when(
+        F.size(arr) >= n,
+        F.transform(F.sequence(F.lit(0), F.size(arr) - n),
+                    lambda i: F.array_join(F.slice(arr, i + 1, n), " "))
+    ).otherwise(F.array().cast("array<string>"))
+
+
 def duplicated_spans(df: DataFrame, n: int = 8, min_docs: int = 2,
                      id_col: str = "doc_id",
                      text_col: str = "text") -> DataFrame:
@@ -1707,23 +1562,14 @@ def duplicated_spans(df: DataFrame, n: int = 8, min_docs: int = 2,
     least one gram (≥ n tokens); dup_fraction is a raw long/long
     division (bit-identical across engines — no rounding needed).
 
-    Shape: grams build IN-ROW (transform over a position sequence +
-    slice + array_join — zero exchange), roll up to the (gram, doc)
-    grain, flag via a per-gram window count on that same relation
-    (single scan — no seen-set join-back), and roll up to the doc
-    grain.  The gram STRING is the
-    join key — exact by construction; at 100 TB swap the key for
-    xxhash64(gram) with an in-row string verify on the matched pairs
-    (the minhash tier's hot-path/neutral split), which cuts the shuffle
-    to 8 bytes per position without changing the semantics."""
-    from .text import _tokens
+    Shape: grams build IN-ROW (:func:`_token_ngrams` — zero exchange),
+    roll up to the (gram, doc) grain, flag via a per-gram window count
+    on that same relation (single scan — no seen-set join-back), and
+    roll up to the doc grain.  The gram STRING is the key — exact by
+    construction; at 100 TB a 64-bit hash of the gram with an in-row
+    string verify on the matched grams would cut the shuffle to 8 bytes
+    per position without changing the semantics."""
     require_columns(df, [id_col, text_col], "duplicated_spans")
-    arr = _tokens(text_col)
-    grams_col = F.when(
-        F.size(arr) >= n,
-        F.transform(F.sequence(F.lit(0), F.size(arr) - n),
-                    lambda i: F.array_join(F.slice(arr, i + 1, n), " "))
-    ).otherwise(F.array().cast("array<string>"))
     # fan the narrow projection out BEFORE gram construction (r14): the
     # in-row gram build concatenates n tokens per position (~n× the text
     # volume in string work) and runs at scan parallelism — one core for
@@ -1736,7 +1582,8 @@ def duplicated_spans(df: DataFrame, n: int = 8, min_docs: int = 2,
     narrow = (df.select(F.col(id_col), F.col(text_col))
                 .repartition(df.sparkSession.sparkContext
                              .defaultParallelism))
-    grams = (narrow.select(F.col(id_col), grams_col.alias("__g"))
+    grams = (narrow.select(F.col(id_col),
+                           _token_ngrams(text_col, n).alias("__g"))
                    .select(F.col(id_col), F.explode("__g").alias("gram")))
     # SINGLE-SCAN shape: roll positions up to the (gram, doc) grain
     # (map-side combinable), count each gram's documents with a
@@ -1765,19 +1612,13 @@ def gram_index(df: DataFrame, n: int = 8, id_col: str = "doc_id",
     incremental ingest pipeline stores per corpus instead of re-gramming
     history (count addition is a monoid, so per-batch indexes sum-merge
     like every other state in the engine).  Returns (gram, n_docs)."""
-    from .text import _tokens
     require_columns(df, [id_col, text_col], "gram_index")
-    arr = _tokens(text_col)
-    grams_col = F.when(
-        F.size(arr) >= n,
-        F.transform(F.sequence(F.lit(0), F.size(arr) - n),
-                    lambda i: F.array_join(F.slice(arr, i + 1, n), " "))
-    ).otherwise(F.array().cast("array<string>"))
     # fan out before the gram build — see duplicated_spans (r14)
     narrow = (df.select(F.col(id_col), F.col(text_col))
                 .repartition(df.sparkSession.sparkContext
                              .defaultParallelism))
-    return (narrow.select(F.col(id_col), F.explode(grams_col).alias("gram"))
+    return (narrow.select(F.col(id_col),
+                          F.explode(_token_ngrams(text_col, n)).alias("gram"))
                   .groupBy("gram")
                   .agg(F.count_distinct(F.col(id_col)).alias("n_docs")))
 
@@ -1793,18 +1634,12 @@ def duplicated_spans_incremental(new_df: DataFrame, index: DataFrame,
     compose: gate a batch against history, then dedup within it.
     Returns the per-document rollup (doc_id, n_grams, n_index_grams,
     index_fraction) for batch docs with ≥ n tokens."""
-    from .text import _tokens
     require_columns(new_df, [id_col, text_col],
                     "duplicated_spans_incremental")
     require_columns(index, ["gram"], "duplicated_spans_incremental")
-    arr = _tokens(text_col)
-    grams_col = F.when(
-        F.size(arr) >= n,
-        F.transform(F.sequence(F.lit(0), F.size(arr) - n),
-                    lambda i: F.array_join(F.slice(arr, i + 1, n), " "))
-    ).otherwise(F.array().cast("array<string>"))
     grams = (new_df.select(F.col(id_col),
-                           F.explode(grams_col).alias("gram")))
+                           F.explode(_token_ngrams(text_col, n))
+                            .alias("gram")))
     hit = index.select("gram").distinct().withColumn("__hit", F.lit(1))
     return (grams.join(hit, "gram", "left")
                  .groupBy(id_col)

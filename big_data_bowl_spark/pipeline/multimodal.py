@@ -125,14 +125,6 @@ def extract_features(df: DataFrame, batch_hint: int = 64,
     return df.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame-sampling shape for video payloads: deterministic stride over a
-    per-media frame index — pure relational (no decode needed when frame
-    index is a column), keeping the expensive decode for sampled rows
-    only."""
-    return df.filter(F.col("media_id") % every_n == 0)
-
-
 RESIZE_SCHEMA = StructType([
     StructField("media_id", LongType()),
     StructField("resized", ArrayType(FloatType())),

@@ -748,17 +748,14 @@ def q_minhash_incremental(spark, sf_dir):
     """Incremental dedup under the driver: ~1/7 of the corpus arrives as
     the 'new batch' and is matched against the signature INDEX of the
     rest — only the batch is shingled; index buckets derive from stored
-    signatures.  Hash-verified since r5 (neutral hash family — the
-    oracle rebuilds both the stored index and the batch probe in SQL);
-    the cross-batch match ≡ batch-mode equivalence is property-tested,
-    and xxhash64 remains the library default family."""
+    signatures.  Hash-verified (the polynomial hash family — the oracle
+    rebuilds both the stored index and the batch probe in SQL); the
+    cross-batch match ≡ batch-mode equivalence is property-tested."""
     from .pipeline.dedup import minhash_lsh_match, minhash_signatures
     d = _t(spark, sf_dir, "documents")
-    index = minhash_signatures(d.filter(F.col("doc_id") % 7 != 0),
-                               neutral=True)
+    index = minhash_signatures(d.filter(F.col("doc_id") % 7 != 0))
     batch = d.filter(F.col("doc_id") % 7 == 0)
-    return minhash_lsh_match(batch, index, min_est_jaccard=0.5,
-                             neutral=True)
+    return minhash_lsh_match(batch, index, min_est_jaccard=0.5)
 
 
 def q_embed_dup(spark, sf_dir):
@@ -1677,23 +1674,20 @@ def q_union_by_name(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 def q_minhash_pairs(spark, sf_dir):
-    """MinHash+LSH near-dup candidates over documents — the HOT-PATH
-    pipeline (minhash_lsh_pairs) run with the neutral hash family, so
-    the query itself is hash-verified against the DuckDB oracle (r5;
-    xxhash64 stays the default family for throughput, covered by the
-    same property tests).  Threshold 0.4 distinguishes it from
-    q_minhash_neutral's 0.5."""
+    """MinHash+LSH near-dup candidates over documents (minhash_lsh_pairs,
+    unfiltered split), hash-verified against the DuckDB oracle: every
+    hash in the pipeline is the polynomial family.  Threshold 0.4
+    distinguishes it from q_minhash_neutral's 0.5."""
     from .pipeline.dedup import minhash_lsh_pairs
     return minhash_lsh_pairs(_t(spark, sf_dir, "documents"),
-                             min_est_jaccard=0.4, neutral=True)
+                             min_est_jaccard=0.4)
 
 
 def q_simhash(spark, sf_dir):
     """SimHash near-duplicate PAIRS: band equi-join candidates + exact
     Hamming filter (bit_count of XOR) over the engine-neutral 60-bit
     fingerprint — hash-verified (r5; previously fingerprints only,
-    rows-only).  The xxhash64 64-bit fingerprint (simhash_buckets)
-    remains the library hot path."""
+    rows-only)."""
     from .pipeline.dedup import simhash_neutral_pairs
     return simhash_neutral_pairs(_t(spark, sf_dir, "documents"),
                                  max_hamming=4)
@@ -4172,7 +4166,7 @@ def q_simhash_neutral(spark, sf_dir):
     """Engine-neutral SimHash: 60-bit fingerprint from two polynomial
     character hashes with bit voting — integer arithmetic end-to-end, so
     the oracle reproduces fingerprints and 15-bit bands exactly (the
-    sketch-tier verification twin; xxhash64 stays the hot path)."""
+    fingerprint stage of q_simhash)."""
     from .pipeline.dedup import simhash_neutral
     d = _t(spark, sf_dir, "documents")
     return simhash_neutral(d)
@@ -4193,8 +4187,8 @@ def q_minhash_neutral(spark, sf_dir):
     """MinHash+LSH with every hash an explicit arithmetic formula
     (polynomial shingle hash, affine slot family, polynomial band fold):
     the DuckDB oracle reproduces signatures, buckets, candidate pairs,
-    and estimates bit-for-bit — the probabilistic dedup tier's
-    hash-verified twin (the xxhash64 form stays the hot path)."""
+    and estimates bit-for-bit.  Same pipeline as q_minhash_pairs over
+    the empty-token-filtered split (minhash_neutral_pairs)."""
     from .pipeline.dedup import minhash_neutral_pairs
     d = _t(spark, sf_dir, "documents")
     return minhash_neutral_pairs(d, min_est_jaccard=0.5)
@@ -4211,8 +4205,7 @@ def q_minhash_oph(spark, sf_dir):
     throughput default — see minhash_oph_signatures' docstring for
     the numbers and the row-cost argument."""
     from .pipeline.dedup import minhash_oph_signatures
-    sig = minhash_oph_signatures(_t(spark, sf_dir, "documents"),
-                                 neutral=True)
+    sig = minhash_oph_signatures(_t(spark, sf_dir, "documents"))
     return sig.select("doc_id",
                       F.posexplode("sig").alias("slot", "value"))
 
@@ -4226,7 +4219,7 @@ def q_minhash_oph_pairs(spark, sf_dir):
     (q_minhash_neutral)."""
     from .pipeline.dedup import minhash_oph_pairs
     return minhash_oph_pairs(_t(spark, sf_dir, "documents"),
-                             min_est_jaccard=0.5, neutral=True)
+                             min_est_jaccard=0.5)
 
 
 def q_entity_resolution(spark, sf_dir):

@@ -60,6 +60,12 @@ def arrow_fanout(df: DataFrame, rows_floor: int = ARROW_ROWS_FLOOR) -> DataFrame
     (n ≥ parallelism·floor) keeps full parallelism, which is where the
     fan-out wins live (single-row-group scans would otherwise run the
     whole Arrow stage on one core).
+
+    The probe is EAGER: calling this runs a Spark job at plan-
+    construction time, and the input lineage is evaluated twice (the
+    probe, then the real stage).  Cheap over a scan or a checkpoint;
+    a caller holding an expensive un-pinned lineage should pin it
+    first.
     """
     sc = df.sparkSession.sparkContext
     parallelism = sc.defaultParallelism

@@ -119,12 +119,12 @@ def with_hilbert(df: DataFrame, col_x: str, col_y: str,
     ``normalize=False`` when inputs are already in range), then the
     ``bits`` reflect/swap rounds.
 
-    Each round STAGES its (x, y, d, rx, ry) as named projection columns
-    instead of nesting expressions — the rotation references x/y twice,
-    so a nested build would grow the expression tree ~3× per round
-    (3^bits at bits=8); staged, the plan is 2·bits narrow projections
-    that whole-stage codegen fuses into one pass.  The SQL oracle twin
-    mirrors the rounds as chained CTE stages for the same reason."""
+    The rounds run in ONE vectorized pandas UDF over the two normalized
+    long columns (see the inline note below); as expressions, the
+    rotation references x/y twice, so a nested build would grow ~3× per
+    round.  The SQL oracle twin mirrors the rounds as chained CTE stages
+    for that reason.  A null coordinate gives a null value (sorts
+    first, harmless for layout), as in :func:`with_zorder`."""
     require_columns(df, [col_x, col_y], "with_hilbert")
     n = 1 << bits
     if normalize:
@@ -155,15 +155,18 @@ def with_hilbert(df: DataFrame, col_x: str, col_y: str,
     # over exactly the two normalized long columns (carry columns never
     # cross the Python boundary — an ArrowEvalPython of (hx, hy) →
     # hval, §4.1 "pass only the columns the function needs").  Pure
-    # int64 reflect/swap arithmetic — bit-identical to the expression
-    # rounds (pinned by test_hilbert_pandas_rounds_equal_expression_
-    # rounds; the SQL oracle still mirrors the same rounds as CTE
-    # stages).  Rounds stage 0.76→~0.2s; q_hilbert_values ~1.2→~0.6s.
+    # int64 reflect/swap arithmetic — equal to the Python reference
+    # (pinned by test_with_hilbert_matches_python_reference; the SQL
+    # oracle still mirrors the same rounds as CTE stages).  Rounds
+    # stage 0.76→~0.2s; q_hilbert_values ~1.2→~0.6s.
     @pandas_udf("long")
     def _hval(hx: pd.Series, hy: pd.Series) -> pd.Series:
         import numpy as np
-        x = hx.to_numpy(dtype=np.int64).copy()
-        y = hy.to_numpy(dtype=np.int64).copy()
+        # a null coordinate arrives as NaN (float64 column): compute on
+        # 0 in its place, then null the result
+        null = (hx.isna() | hy.isna()).to_numpy()
+        x = hx.fillna(0).to_numpy(dtype=np.int64).copy()
+        y = hy.fillna(0).to_numpy(dtype=np.int64).copy()
         d = np.zeros(len(x), dtype=np.int64)
         for i in reversed(range(bits)):
             s = 1 << i
@@ -175,20 +178,10 @@ def with_hilbert(df: DataFrame, col_x: str, col_y: str,
             swap = ry == 0
             x, y = (np.where(swap, refl_x, x),
                     np.where(swap, refl_y, y))
-        return pd.Series(d)
+        hval = pd.Series(pd.array(d, dtype="Int64"))
+        hval[null] = pd.NA
+        return hval
 
     return (cur.withColumn(out, _hval(F.col("__hx"), F.col("__hy")))
                .drop("__hx", "__hy"))
 
-
-def write_hilbert_clustered(df: DataFrame, path: str, col_x: str,
-                            col_y: str, n_files: int = 8, bits: int = 8,
-                            mode: str = "overwrite") -> None:
-    """Write parquet clustered on the Hilbert value of (col_x, col_y) —
-    :func:`write_zordered` with the better-locality key; same one range
-    exchange + within-partition sort, helper column dropped."""
-    hdf = with_hilbert(df, col_x, col_y, bits=bits, out="__h")
-    (hdf.repartitionByRange(n_files, "__h")
-        .sortWithinPartitions("__h")
-        .drop("__h")
-        .write.mode(mode).parquet(path))

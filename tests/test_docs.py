@@ -50,3 +50,37 @@ def test_bench_headline_queries_exist():
     missing = [n for n in HEADLINE if n not in QUERIES]
     assert not missing, missing
     assert len(HEADLINE) == len(set(HEADLINE)), "duplicate headline"
+
+
+def test_no_unreferenced_functions():
+    """Dead-code guard: every top-level function in the package is named
+    somewhere besides its own definition — in the package, the tests,
+    the scripts, the benchmarks or the driver entry point.  Registry
+    query functions (q_* in queries.py) are reached through QUERIES."""
+    import ast
+    import glob
+
+    pkg = f"{REPO}/big_data_bowl_spark"
+    sources = {p: open(p).read() for p in sorted(
+        glob.glob(f"{pkg}/**/*.py", recursive=True)
+        + glob.glob(f"{REPO}/tests/*.py")
+        + glob.glob(f"{REPO}/scripts/*.py")
+        + glob.glob(f"{REPO}/perfbench/*.py")
+        + [f"{REPO}/bench.py", f"{REPO}/__spark_entry__.py"])}
+    defs = []
+    for path, text in sources.items():
+        if not path.startswith(pkg):
+            continue
+        for node in ast.parse(text).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if path.endswith("/queries.py") and node.name.startswith("q_"):
+                continue
+            defs.append(node.name)
+    unused = []
+    for name in sorted(set(defs)):
+        pat = re.compile(rf"\b{re.escape(name)}\b")
+        hits = sum(len(pat.findall(t)) for t in sources.values())
+        if hits <= defs.count(name):
+            unused.append(name)
+    assert not unused, f"functions nothing references: {unused}"

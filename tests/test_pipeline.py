@@ -12,9 +12,10 @@ from big_data_bowl_spark.ml.split import group_split
 from big_data_bowl_spark.operators.sequences import build_sequences, unpivot_sequences
 from big_data_bowl_spark.pipeline.dedup import (
     minhash_lsh_pairs,
+    minhash_neutral_pairs,
     minhash_oph_pairs,
     minhash_oph_signatures,
-    simhash_buckets,
+    simhash_neutral,
 )
 from big_data_bowl_spark.pipeline.multimodal import (
     attach_binary_payload,
@@ -29,26 +30,30 @@ from tests.conftest import SF_SMALL
 import pytest
 
 
-@pytest.mark.parametrize("neutral", [False, True],
-                         ids=["xxhash64", "neutral"])
-def test_minhash_identical_docs_estimate_one(spark, neutral):
-    """Both hash families (the xxhash64 hot path and the oracle-checked
-    neutral polynomial family) satisfy the core estimates."""
+# both pair generators over the shared LSH core: the unfiltered split
+# (minhash_lsh_pairs) and the empty-token-filtered one
+# (minhash_neutral_pairs)
+_PAIR_FNS = pytest.mark.parametrize(
+    "pairs_fn", [minhash_lsh_pairs, minhash_neutral_pairs],
+    ids=["lsh", "neutral"])
+
+
+@_PAIR_FNS
+def test_minhash_identical_docs_estimate_one(spark, pairs_fn):
+    """Identical docs estimate 1.0; unrelated docs stay far below."""
     docs = spark.createDataFrame([
         Row(doc_id=1, text="the quick brown fox jumps over the lazy dog again"),
         Row(doc_id=2, text="the quick brown fox jumps over the lazy dog again"),
         Row(doc_id=3, text="completely different words entirely unrelated content here now ok"),
     ])
-    pairs = minhash_lsh_pairs(docs, min_est_jaccard=0.0,
-                              neutral=neutral).collect()
+    pairs = pairs_fn(docs, min_est_jaccard=0.0).collect()
     by_pair = {(r.doc_a, r.doc_b): r.est_jaccard for r in pairs}
     assert by_pair.get((1, 2)) == 1.0
     assert (1, 3) not in by_pair or by_pair[(1, 3)] < 0.3
 
 
-@pytest.mark.parametrize("neutral", [False, True],
-                         ids=["xxhash64", "neutral"])
-def test_minhash_near_dup_detected(spark, neutral):
+@_PAIR_FNS
+def test_minhash_near_dup_detected(spark, pairs_fn):
     # 30 distinct words, one substitution → shingle jaccard ≈ 27/33 ≈ 0.82,
     # comfortably above the 8×4 banding s-curve threshold (~0.59)
     words = [f"w{i}" for i in range(30)]
@@ -56,13 +61,12 @@ def test_minhash_near_dup_detected(spark, neutral):
     near = " ".join(["sub" if w == "w15" else w for w in words])
     docs = spark.createDataFrame([Row(doc_id=1, text=base),
                                   Row(doc_id=2, text=near)])
-    pairs = minhash_lsh_pairs(docs, min_est_jaccard=0.3,
-                              neutral=neutral).collect()
+    pairs = pairs_fn(docs, min_est_jaccard=0.3).collect()
     assert pairs and pairs[0].est_jaccard > 0.5
 
 
 def _oph_reference(text: str, n_bins: int = 32) -> list[int]:
-    """Pure-Python twin of minhash_oph_signatures(neutral=True): the same
+    """Pure-Python twin of minhash_oph_signatures: the same
     unfiltered split, 3-word shingles, polynomial char hash, h mod B
     binning, and rotation densification with the 2^31 offset stride."""
     P = 1_000_000_007
@@ -103,7 +107,7 @@ def test_oph_signature_matches_python_reference(spark):
     docs = spark.createDataFrame(
         [Row(doc_id=i, text=t) for i, t in enumerate(texts)])
     got = {r.doc_id: list(r.sig)
-           for r in minhash_oph_signatures(docs, neutral=True).collect()}
+           for r in minhash_oph_signatures(docs).collect()}
     for i, t in enumerate(texts):
         assert got[i] == _oph_reference(t), f"doc {i}: {t[:40]!r}"
 
@@ -140,21 +144,16 @@ def test_oph_estimator_tracks_exact_jaccard():
     assert _oph_reference(t) == _oph_reference(t)
 
 
-@pytest.mark.parametrize("neutral", [False, True],
-                         ids=["xxhash64", "neutral"])
-def test_oph_pairs_identical_and_disjoint(spark, neutral):
+def test_oph_pairs_identical_and_disjoint(spark):
     """End-to-end OPH LSH: identical docs surface at est 1.0; disjoint
-    docs never pair at τ=0.5.  Parametrized over BOTH hash families
-    (r13 ADVICE: the xxhash64 path was otherwise never exercised —
-    registry queries and the reference-twin tests all run neutral)."""
+    docs never pair at τ=0.5."""
     docs = spark.createDataFrame([
         Row(doc_id=1, text="the quick brown fox jumps over the lazy dog"),
         Row(doc_id=2, text="the quick brown fox jumps over the lazy dog"),
         Row(doc_id=3, text="entirely different vocabulary in this one here"),
     ])
     got = {(r.doc_a, r.doc_b): r.est_jaccard
-           for r in minhash_oph_pairs(docs, min_est_jaccard=0.5,
-                                      neutral=neutral).collect()}
+           for r in minhash_oph_pairs(docs, min_est_jaccard=0.5).collect()}
     assert got == {(1, 2): 1.0}
 
 
@@ -164,7 +163,7 @@ def test_simhash_identical_docs_same_fingerprint(spark):
         Row(doc_id=2, text="one two three four five"),
         Row(doc_id=3, text="zebra yak xylophone wombat vulture"),
     ])
-    rows = {r.doc_id: r.simhash for r in simhash_buckets(docs).collect()}
+    rows = {r.doc_id: r.simhash for r in simhash_neutral(docs).collect()}
     assert rows[1] == rows[2]
     assert rows[1] != rows[3]
 
@@ -862,14 +861,6 @@ def test_minhash_incremental_match_against_index(spark):
     # batch mode over the union sees the same cross-pair
     both = minhash_lsh_pairs(corpus.union(batch), min_est_jaccard=0.5)
     assert any((r.doc_a, r.doc_b) == (1, 10) for r in both.collect())
-    # and the neutral family (the oracle-checked q_minhash_incremental
-    # configuration) agrees — an index must be queried with the family
-    # it was built with
-    n_index = minhash_signatures(corpus, neutral=True)
-    n_hits = minhash_lsh_match(batch, n_index, min_est_jaccard=0.5,
-                               neutral=True).collect()
-    assert {(r.new_id, r.index_id): r.est_jaccard for r in n_hits} == \
-        {(10, 1): 1.0}
 
 
 # ---------------------------------------------------------------------------
@@ -2520,16 +2511,19 @@ def test_hilbert_reference_is_bijective_and_adjacent():
 
 
 def test_with_hilbert_matches_python_reference(spark):
-    """The staged-round column build equals the Python reference on
-    random in-range coordinates (normalize=False isolates the rounds)."""
+    """The vectorized rounds equal the Python reference on in-range
+    coordinates (normalize=False isolates the rounds); a null coordinate
+    gives a null value."""
     from big_data_bowl_spark.sources.layout import (
         hilbert_xy2d_py, with_hilbert)
     pts = [(i, (i * 37) % 256, (i * 101 + 13) % 256) for i in range(300)]
-    df = spark.createDataFrame(pts, "i long, x long, y long")
+    nulls = [(300, None, 5), (301, 7, None), (302, None, None)]
+    df = spark.createDataFrame(pts + nulls, "i long, x long, y long")
     got = {r.i: r.hval
            for r in with_hilbert(df, "x", "y", bits=8,
                                  normalize=False).collect()}
     want = {i: hilbert_xy2d_py(8, x, y) for i, x, y in pts}
+    want.update({i: None for i, _, _ in nulls})
     assert got == want
 
 
@@ -3371,6 +3365,7 @@ _ADVERSARIAL_DOCS = [
     (7, "café naïve 中文 中文词"),
     (8, "emoji \U0001F600 tail words here"),
     (9, "x " * 50 + "y"),
+    (10, None),
 ]
 
 
@@ -3392,9 +3387,7 @@ def test_neutral_sig_arrow_equals_expression_form(spark):
                                  "doc_id long, text string")
 
     # unfiltered variant (shingle_base_hashes semantics)
-    jvm_u = (docs.withColumn("_base",
-                             shingle_base_hashes(F.col("text"),
-                                                 neutral=True))
+    jvm_u = (docs.withColumn("_base", shingle_base_hashes(F.col("text")))
                  .select("doc_id", minhash_slots("_base", 32).alias("sig")))
     # filtered variant (minhash_neutral_pairs semantics)
     words = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
@@ -3451,7 +3444,7 @@ def test_simhash_neutral_arrow_equals_expression_form(spark):
     )
 
     docs = spark.createDataFrame(
-        _ADVERSARIAL_DOCS + [(10, ""), (11, "   ")],
+        _ADVERSARIAL_DOCS + [(11, ""), (12, "   ")],
         "doc_id long, text string")
     bits = 60
     staged = docs.withColumn(
