@@ -1,9 +1,9 @@
 """Iterative graph operators beyond connected components: PageRank.
 
 Same scale discipline as the dedup components fixpoint
-(pipeline/dedup.py): pure DataFrame joins + aggregates per round,
-``localCheckpoint`` each iteration so plan depth stays O(1), no driver
-data paths.  Ranks are floats reduced by distributed sums; per-round
+(pipeline/dedup.py): pure DataFrame joins + aggregates per round, each
+round pinned by :func:`.fixpoint.iterate` so plan depth stays O(1), no
+driver data paths.  Ranks are floats reduced by distributed sums; per-round
 association-order drift is ~1e-16 relative — far inside the round-to-6
 output window — so the fixed-iteration fixpoint hash-matches a DuckDB
 oracle that unrolls the rounds as CTE stages with IEEE-identical
@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import require_columns
+from .fixpoint import iterate
 
 
 def bipartite_edges(df: DataFrame, entity_col: str, item_col: str,
@@ -50,8 +51,7 @@ def bipartite_edges(df: DataFrame, entity_col: str, item_col: str,
 
 
 def pagerank(edges: DataFrame, iters: int = 10,
-             damping: float = 0.85,
-             checkpoint_every: int = 2) -> DataFrame:
+             damping: float = 0.85) -> DataFrame:
     """PageRank over an edge list (src, dst): ``iters`` rounds of
     rank/out-degree propagation with damping; dangling-node mass is
     redistributed uniformly each round so total rank stays n_nodes.
@@ -64,26 +64,9 @@ def pagerank(edges: DataFrame, iters: int = 10,
     scalar.  The static out-degree is folded INTO the ranks relation
     once up front and carried round to round, so each iteration needs no
     second join and the dangling filter is a co-located null test.
-    ``localCheckpoint`` every ``checkpoint_every`` rounds bounds lineage;
-    the cadence is a latency/recovery trade (checkpointing is a barrier,
-    never a semantic): letting 2 rounds pipeline into one job measured
-    ~20% faster at sf0.1, and r14 went further — every pin here is LAZY
-    (``eager=False``), which still truncates the logical plan at
-    definition but materializes piggybacked on the terminal action
-    instead of in a dedicated per-round count job (this family has no
-    mid-loop driver action to force it earlier).  Measured r14,
-    interleaved min-of-3 at sf0.1, outputs exceptAll-identical:
-    q_pagerank 3.56→3.18s, q_kcore 2.60→1.91s, q_bfs_hops 2.22→1.77s,
-    q_label_propagation 1.51→1.28s, q_hits 2.81→2.57s.  On a cluster,
-    replace with reliable checkpointing at the same cadence.  Returns
+    Rounds run through :func:`.fixpoint.iterate`.  Returns
     (node, rank)."""
     require_columns(edges, ["src", "dst"], "pagerank")
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"pagerank: checkpoint_every must be >= 1, got "
-            f"{checkpoint_every} (use a large value to checkpoint "
-            "rarely; skipping entirely would let the lineage grow "
-            "with iters — the plan blow-up the cadence exists to stop)")
     # Pin the edge relation ONCE: every iteration (and nodes/outdeg below)
     # re-consumes it, and an unpinned lineage would re-run the caller's
     # whole edge construction — e.g. a bipartite projection's self-join —
@@ -101,18 +84,17 @@ def pagerank(edges: DataFrame, iters: int = 10,
     ranks = (nodes.join(outdeg, "node", "left")
                   .withColumn("rank", F.lit(1.0))
                   .localCheckpoint(eager=False))
-    for i in range(iters):
-        ranks = pagerank_round(edges, ranks, n_nodes, damping)
-        if (i + 1) % checkpoint_every == 0 or i == iters - 1:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks.select("node", "rank")
+    def step(r: DataFrame) -> DataFrame:
+        return pagerank_round(edges, r, n_nodes, damping)
+
+    return iterate(ranks, step, iters).select("node", "rank")
 
 
-def pagerank_round(edges: DataFrame, ranks: DataFrame, n_nodes: int,
-                   damping: float) -> DataFrame:
-    """One propagation round (exposed unexecuted so tests can pin the plan
-    shape: the ONLY broadcast hint is the 1-row dangling scalar — never a
-    node-grain table).  ``ranks`` carries (node, outdeg, rank)."""
+def _inflow(edges: DataFrame, ranks: DataFrame, *carried: str) -> DataFrame:
+    """The propagation half both PageRank rounds share: ``ranks``'
+    ``node`` and ``carried`` columns, the rank ``inflow`` along edges
+    (NULL for nodes nobody links to) and the dangling mass ``__dm``
+    on every row.  ``ranks`` carries (node, outdeg, rank, ...)."""
     contrib = (edges.join(ranks.select(F.col("node").alias("src"),
                                        "rank", "outdeg"), "src")
                     .groupBy(F.col("dst").alias("node"))
@@ -123,14 +105,20 @@ def pagerank_round(edges: DataFrame, ranks: DataFrame, n_nodes: int,
     dangling = (ranks.filter(F.col("outdeg").isNull())
                      .agg(F.coalesce(F.sum("rank"), F.lit(0.0))
                            .alias("__dm")))
-    return (ranks.select("node", "outdeg").join(contrib, "node", "left")
-                 .crossJoin(F.broadcast(dangling))
-                 .select("node", "outdeg",
-                         ((1 - damping)
-                          + damping * (F.coalesce(F.col("inflow"),
-                                                  F.lit(0.0))
-                                       + F.col("__dm") / n_nodes))
-                         .alias("rank")))
+    return (ranks.select("node", *carried).join(contrib, "node", "left")
+                 .crossJoin(F.broadcast(dangling)))
+
+
+def pagerank_round(edges: DataFrame, ranks: DataFrame, n_nodes: int,
+                   damping: float) -> DataFrame:
+    """One propagation round (exposed unexecuted so tests can pin the plan
+    shape: the ONLY broadcast hint is the 1-row dangling scalar — never a
+    node-grain table).  ``ranks`` carries (node, outdeg, rank)."""
+    return _inflow(edges, ranks, "outdeg").select(
+        "node", "outdeg",
+        ((1 - damping)
+         + damping * (F.coalesce(F.col("inflow"), F.lit(0.0))
+                      + F.col("__dm") / n_nodes)).alias("rank"))
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -216,9 +204,9 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
 
     Per round: ONE degree aggregate over the canonical edge union + two
     left-semi joins that keep only edges between surviving nodes, with
-    the result pinned (``localCheckpoint``) so lineage stays O(1) and
-    the next round's degree union never re-executes the previous rounds
-    (the pagerank:87 discipline).  The keep-set is node-grain — far
+    the result pinned by :func:`.fixpoint.iterate` so lineage stays O(1)
+    and the next round's degree union never re-executes the previous
+    rounds.  The keep-set is node-grain — far
     smaller than edges; the semi joins shuffle on the node key and stay
     co-partitioned round to round, so no broadcast hint.  Returns the
     surviving (node, deg) after ``rounds`` peels.
@@ -238,20 +226,21 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
                  .union(e.select(F.col("b").alias("node")))
                  .groupBy("node").agg(F.count(F.lit(1)).alias("deg")))
 
-    for _ in range(rounds):
-        keep = degrees(und).filter(F.col("deg") >= k).select("node")
-        und = (und.join(keep.select(F.col("node").alias("a")),
-                        "a", "left_semi")
-                  .join(keep.select(F.col("node").alias("b")),
-                        "b", "left_semi")
-                  .localCheckpoint(eager=False))
-    return degrees(und)
+    def step(e: DataFrame) -> DataFrame:
+        keep = degrees(e).filter(F.col("deg") >= k).select("node")
+        return (e.join(keep.select(F.col("node").alias("a")),
+                       "a", "left_semi")
+                 .join(keep.select(F.col("node").alias("b")),
+                       "b", "left_semi"))
+
+    return degrees(iterate(und, step, rounds))
 
 
 def _undirected_neighbors(edges: DataFrame) -> DataFrame:
     """Canonicalize an edge list to distinct undirected edges, then emit
     the doubled (node, nb) adjacency — pinned once, because iterative
-    consumers hit it every round (the pagerank:87 discipline)."""
+    consumers hit it every round (loop inputs pin once, loop states
+    through :func:`.fixpoint.iterate`)."""
     und = (edges.select(F.least("src", "dst").alias("a"),
                         F.greatest("src", "dst").alias("b"))
                 .filter(F.col("a") != F.col("b"))
@@ -285,17 +274,18 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
     nbr = _undirected_neighbors(edges)
     labels = (nbr.select("node").distinct()
                  .withColumn("label", F.col("node")))
-    for _ in range(rounds):
-        votes = (nbr.join(labels.select(F.col("node").alias("nb"),
-                                        "label"), "nb")
+    best = F.max(F.struct(F.col("c"),
+                          (-F.col("label")).alias("nl"))).alias("m")
+
+    def step(lab: DataFrame) -> DataFrame:
+        votes = (nbr.join(lab.select(F.col("node").alias("nb"), "label"),
+                          "nb")
                     .groupBy("node", "label")
                     .agg(F.count(F.lit(1)).alias("c")))
-        best = F.max(F.struct(F.col("c"),
-                              (-F.col("label")).alias("nl"))).alias("m")
-        labels = (votes.groupBy("node").agg(best)
-                       .select("node", (-F.col("m.nl")).alias("label"))
-                       .localCheckpoint(eager=False))
-    return labels
+        return (votes.groupBy("node").agg(best)
+                     .select("node", (-F.col("m.nl")).alias("label")))
+
+    return iterate(labels, step, rounds)
 
 
 def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
@@ -376,20 +366,19 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame,
     nbr = _undirected_neighbors(edges)
     dist = (seeds.select("node").distinct()
                  .withColumn("hops", F.lit(0).cast("long")))
-    for _ in range(max_hops):
-        relaxed = (nbr.join(dist, "node")
+    def step(d: DataFrame) -> DataFrame:
+        relaxed = (nbr.join(d, "node")
                       .select(F.col("nb").alias("node"),
                               (F.col("hops") + 1).alias("hops")))
-        dist = (dist.unionByName(relaxed)
-                    .groupBy("node")
-                    .agg(F.min("hops").alias("hops"))
-                    .localCheckpoint(eager=False))
-    return dist
+        return (d.unionByName(relaxed)
+                 .groupBy("node")
+                 .agg(F.min("hops").alias("hops")))
+
+    return iterate(dist, step, max_hops)
 
 
 def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
-                          iters: int = 5, damping: float = 0.85,
-                          checkpoint_every: int = 2) -> DataFrame:
+                          iters: int = 5, damping: float = 0.85) -> DataFrame:
     """Personalized (topic-sensitive) PageRank: teleport lands on the
     ``seeds`` set instead of uniformly, so rank mass concentrates in
     the seeds' neighborhood — the classic relatedness/recommendation
@@ -405,8 +394,6 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
     the rounds exactly like the PageRank one.  Returns (node, rank)."""
     require_columns(edges, ["src", "dst"], "personalized_pagerank")
     require_columns(seeds, ["node"], "personalized_pagerank")
-    if checkpoint_every < 1:
-        raise ValueError("personalized_pagerank: checkpoint_every >= 1")
     edges = edges.localCheckpoint(eager=False)
     nodes = (edges.select(F.col("src").alias("node"))
                   .union(edges.select(F.col("dst").alias("node")))
@@ -433,28 +420,14 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
                   .withColumn("rank", F.col("tele"))
                   .select("node", "outdeg", "tele", "rank")
                   .localCheckpoint(eager=False))
-    for i in range(iters):
-        contrib = (edges.join(ranks.select(F.col("node").alias("src"),
-                                           "rank", "outdeg"), "src")
-                        .groupBy(F.col("dst").alias("node"))
-                        .agg(F.sum(F.col("rank") / F.col("outdeg"))
-                              .alias("inflow")))
-        dangling = (ranks.filter(F.col("outdeg").isNull())
-                         .agg(F.coalesce(F.sum("rank"), F.lit(0.0))
-                               .alias("__dm")))
-        ranks = (ranks.select("node", "outdeg", "tele")
-                      .join(contrib, "node", "left")
-                      .crossJoin(F.broadcast(dangling))
-                      .select("node", "outdeg", "tele",
-                              (F.col("tele")
-                               * ((1 - damping)
-                                  + damping * F.col("__dm"))
-                               + damping
-                               * F.coalesce(F.col("inflow"), F.lit(0.0)))
-                              .alias("rank")))
-        if (i + 1) % checkpoint_every == 0 or i == iters - 1:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks.select("node", "rank")
+    def step(r: DataFrame) -> DataFrame:
+        return _inflow(edges, r, "outdeg", "tele").select(
+            "node", "outdeg", "tele",
+            (F.col("tele") * ((1 - damping) + damping * F.col("__dm"))
+             + damping * F.coalesce(F.col("inflow"), F.lit(0.0)))
+            .alias("rank"))
+
+    return iterate(ranks, step, iters).select("node", "rank")
 
 
 # rescale only when a sweep max passes this; below it the classic
@@ -486,44 +459,49 @@ def hits(edges: DataFrame, iters: int = 3,
 
     Scale shape: the pagerank discipline — scores are node-grain and
     join edges on the node key (never broadcast), one shuffle join +
-    one long-sum aggregate per sweep, state pinned per round with
-    localCheckpoint.  Returns (node, hub, auth) longs."""
+    one long-sum aggregate per sweep, rounds through
+    :func:`.fixpoint.iterate`.  Each rescale's driver ``max`` reads a
+    pinned frame: the auth half pins inside the round, and the hub
+    rescale runs at the top of the next round and once after the last.
+    Returns (node, hub, auth) longs."""
     require_columns(edges, ["src", "dst"], "hits")
     edges = edges.localCheckpoint(eager=False)
     nodes = (edges.select(F.col("src").alias("node"))
                   .union(edges.select(F.col("dst").alias("node")))
                   .distinct())
-    state = nodes.withColumn("hub", F.lit(quantum).cast("long")) \
+    start = nodes.withColumn("hub", F.lit(quantum).cast("long")) \
                  .withColumn("auth", F.lit(quantum).cast("long"))
 
     def _rescaled(df: DataFrame, col: str) -> DataFrame:
         # one driver-scale max per sweep; integral DIV keeps it exact
+        if df is start:  # its max is quantum: rescaling is a no-op
+            return df
         mx = df.agg(F.max(col)).first()[0] or 0
         if mx <= _HITS_RESCALE_TRIGGER:
             return df
         s = mx // quantum
         return df.withColumn(col, F.expr(f"{col} DIV {s}"))
 
-    for _ in range(iters):
-        auth = (edges.join(state.select(F.col("node").alias("src"),
-                                        "hub"), "src")
+    def step(st: DataFrame) -> DataFrame:
+        st = _rescaled(st, "hub")
+        auth = (edges.join(st.select(F.col("node").alias("src"), "hub"),
+                           "src")
                      .groupBy(F.col("dst").alias("node"))
                      .agg(F.sum("hub").cast("long").alias("__a")))
         st_a = _rescaled(
-            state.select("node", "hub").join(auth, "node", "left")
-                 .select("node", "hub",
-                         F.coalesce("__a", F.lit(0))
-                          .cast("long").alias("auth"))
-                 .localCheckpoint(eager=False), "auth")
-        hub = (edges.join(st_a.select(F.col("node").alias("dst"),
-                                      "auth"), "dst")
+            st.select("node", "hub").join(auth, "node", "left")
+              .select("node", "hub",
+                      F.coalesce("__a", F.lit(0)).cast("long").alias("auth"))
+              .localCheckpoint(eager=False), "auth")
+        hub = (edges.join(st_a.select(F.col("node").alias("dst"), "auth"),
+                          "dst")
                     .groupBy(F.col("src").alias("node"))
                     .agg(F.sum("auth").cast("long").alias("__h")))
-        state = _rescaled(
-            st_a.select("node", "auth").join(hub, "node", "left")
-                .select("node",
-                        F.coalesce("__h", F.lit(0))
-                         .cast("long").alias("hub"),
-                        "auth")
-                .localCheckpoint(eager=False), "hub")
+        return (st_a.select("node", "auth").join(hub, "node", "left")
+                    .select("node",
+                            F.coalesce("__h", F.lit(0)).cast("long")
+                             .alias("hub"),
+                            "auth"))
+
+    state = _rescaled(iterate(start, step, iters), "hub")
     return state.select("node", "hub", "auth")

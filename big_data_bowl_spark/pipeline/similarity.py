@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalar import roundn
+from ..operators.fixpoint import iterate
 from ..schemas import require_columns
 from .sampling import HASH_KEY_MOD, HASH_MOD, HASH_MULT
 
@@ -622,70 +623,51 @@ def assign_to_centroids(df: DataFrame, cents: DataFrame,
 
 def lloyd_kmeans(df: DataFrame, iters: int = 3, id_col: str = "vec_id",
                  vec_col: str = "embedding",
-                 label_col: str = "label",
-                 checkpoint_every: int = 2) -> DataFrame:
+                 label_col: str = "label") -> DataFrame:
     """Full Lloyd k-means loop as pure DataFrame ops — the iterative-
     algorithm pattern (cf. ``duplicate_components``): each round is
     assignment (map-only in-row argmin against the broadcast-nested
     codebook — zero exchanges since r5) + update (posexplode
     → (cluster, dim) mean → re-assembled arrays), so the only per-round
-    shuffle is the map-side-combinable centroid aggregation.  ``localCheckpoint`` on
-    the K-row centroid table cuts lineage every ``checkpoint_every``
-    rounds, bounding plan depth — the same latency/recovery cadence as
-    ``pagerank``: letting 2 rounds pipeline into one job measured
-    ~15-20% faster at sf0.1, and the pin is LAZY since r14
-    (``eager=False`` — truncates the plan at definition, materializes
-    inside the next consuming job instead of a dedicated count job;
-    q_lloyd_kmeans 2.78→2.11s, q_silhouette 3.07→2.70s interleaved
-    min-of-3, outputs exceptAll-identical).  Initial centroids are the
-    per-``label_col`` means
+    shuffle is the map-side-combinable centroid aggregation.  The K-row
+    centroid table is the ``operators.fixpoint.iterate`` state, pinned
+    every round.  Initial centroids are the per-``label_col`` means
     (deterministic — no random init, so results are engine-reproducible).
 
     Returns (id, cluster, score) plus per-cluster sizes would be one more
     agg; kept minimal to compose."""
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"lloyd_kmeans: checkpoint_every must be >= 1, got "
-            f"{checkpoint_every}")
     vecs = _fan_out(df.select(F.col(id_col),
                               _as_double(F.col(vec_col)).alias("v")))
     cents = (label_centroids(df, id_col, vec_col, label_col)
              .select(F.col(label_col).cast("long").alias("cand_label"),
                      "centroid"))
-    cents = lloyd_centroids(vecs, cents, iters, id_col=id_col,
-                            checkpoint_every=checkpoint_every)
+    cents = lloyd_centroids(vecs, cents, iters, id_col=id_col)
     return (assign_to_centroids(vecs, cents, id_col, "v", metric="l2")
             .select(F.col(id_col),
                     F.col("assigned_label").alias("cluster"), "score"))
 
 
 def lloyd_centroids(vecs: DataFrame, cents: DataFrame, iters: int,
-                    id_col: str = "vec_id",
-                    checkpoint_every: int = 2) -> DataFrame:
+                    id_col: str = "vec_id") -> DataFrame:
     """The Lloyd update loop alone: ``iters`` rounds of map-only
     assignment + posexplode-mean update over an initial (cand_label,
     centroid) table, returning the FINAL centroids — extracted from
     :func:`lloyd_kmeans` so evaluation queries (silhouette) can reuse
     the identical iteration instead of re-implementing it."""
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"lloyd_centroids: checkpoint_every must be >= 1, got "
-            f"{checkpoint_every}")
-    for it in range(iters):
-        assign = assign_to_centroids(vecs, cents, id_col, "v", metric="l2")
+    def step(c: DataFrame) -> DataFrame:
+        assign = assign_to_centroids(vecs, c, id_col, "v", metric="l2")
         comp = (vecs.join(assign.select(id_col, "assigned_label"), id_col)
                     .select(F.col("assigned_label").alias("cand_label"),
                             F.posexplode("v").alias("dim", "val"))
                     .groupBy("cand_label", "dim")
                     .agg(F.avg("val").alias("c")))
-        cents = (comp.groupBy("cand_label")
-                     .agg(F.transform(
-                             F.sort_array(F.collect_list(
-                                 F.struct("dim", "c"))),
-                             lambda s: s["c"]).alias("centroid")))
-        if (it + 1) % checkpoint_every == 0 or it == iters - 1:
-            cents = cents.localCheckpoint(eager=False)
-    return cents
+        return (comp.groupBy("cand_label")
+                    .agg(F.transform(
+                            F.sort_array(F.collect_list(
+                                F.struct("dim", "c"))),
+                            lambda s: s["c"]).alias("centroid")))
+
+    return iterate(cents, step, iters)
 
 
 def ivfpq_topk(df: DataFrame, query_ids: list[int], k: int = 3,

@@ -5653,7 +5653,7 @@ def q_label_propagation(spark, sf_dir):
     graphs with actual sparse structure.  Per round one adjacency⋈labels
     shuffle + one count aggregate whose argmax rides the same pass as
     max(struct(c, −label)) — no window; labels are node-grain and pin
-    each round (pagerank:87)."""
+    each round (fixpoint.iterate)."""
     from .operators.graph import bipartite_edges, label_propagation
     e = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     rel = e.select("user_id",
@@ -5762,7 +5762,8 @@ def q_poisson_bootstrap(spark, sf_dir):
         o.select("o_orderkey", cents(F.col("o_totalprice")).alias("units")),
         "units", "o_orderkey", reps=32)
     # 32-row replicate table feeds BOTH the output and the CI agg —
-    # pin it so the x32 fan-out pass runs once (pagerank:87 discipline)
+    # pin it so the x32 fan-out pass runs once (as fixpoint.iterate's
+    # callers pin their loop inputs)
     means = reps.select(
         "rep", "n_eff",
         F.round(F.col("mean_units") / 100.0, 6).alias("boot_mean")) \
@@ -6256,6 +6257,7 @@ def q_stationary_dist(spark, sf_dir):
     the ONE lag-window pass counting transitions.  P entries are exact
     long/long divisions; per-round sums drift only at ~1e-16 relative
     (the q_pagerank argument), far inside the round-6 output."""
+    from .operators.fixpoint import iterate
     e = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = e.select("user_id", "event_type",
@@ -6275,9 +6277,10 @@ def q_stationary_dist(spark, sf_dir):
                .union(p.select("next_state")).distinct()
                .localCheckpoint(eager=False))
     ns = states.agg(F.count(F.lit(1)).alias("__ns"))
-    pi = (states.crossJoin(F.broadcast(ns))
-                .select("state", (1.0 / F.col("__ns")).alias("pi")))
-    for _ in range(5):
+    uniform = (states.crossJoin(F.broadcast(ns))
+                     .select("state", (1.0 / F.col("__ns")).alias("pi")))
+
+    def step(pi):
         # absorbing states (no outgoing transitions) keep their mass:
         # flow = pi·P for rows with outgoing edges, self-loop otherwise
         flow = (pi.join(p, pi.state == p.prev_state)
@@ -6286,13 +6289,14 @@ def q_stationary_dist(spark, sf_dir):
         stay = (pi.join(p.select(F.col("prev_state").alias("state"))
                          .distinct(), "state", "left_anti")
                   .select("state", F.col("pi").alias("__keep")))
-        pi = (states.join(flow, "state", "left")
-                    .join(stay, "state", "left")
-                    .select("state",
-                            (F.coalesce(F.col("__in"), F.lit(0.0))
-                             + F.coalesce(F.col("__keep"), F.lit(0.0)))
-                            .alias("pi"))
-                    .localCheckpoint(eager=False))
+        return (states.join(flow, "state", "left")
+                      .join(stay, "state", "left")
+                      .select("state",
+                              (F.coalesce(F.col("__in"), F.lit(0.0))
+                               + F.coalesce(F.col("__keep"), F.lit(0.0)))
+                              .alias("pi")))
+
+    pi = iterate(uniform, step, 5)
     return pi.select("state", F.round(F.col("pi"), 6).alias("pi"))
 
 

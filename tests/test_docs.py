@@ -84,3 +84,56 @@ def test_no_unreferenced_functions():
         if hits <= defs.count(name):
             unused.append(name)
     assert not unused, f"functions nothing references: {unused}"
+
+
+# Loops that pin inside their own body instead of going through
+# operators/fixpoint.py:iterate, each with the reason it cannot.
+_LOOP_PIN_EXEMPT = {
+    ("operators/separation.py", "grid_nearest"):
+        "walks a list of grid widths, not a fixpoint",
+    ("operators/separation.py", "grid_knn"):
+        "walks a list of grid widths, not a fixpoint",
+    ("pipeline/similarity.py", "pq_codebooks"):
+        "<=2 rounds over a two-frame state; the final eager pin is tied "
+        "to the sub.persist() lifetime",
+    ("pipeline/similarity.py", "kcenter_coreset"):
+        "greedy selector: driver-side chosen list + per-round argmax action",
+    ("pipeline/similarity.py", "mmr_rerank"):
+        "greedy selector: driver-side chosen list + per-round argmax action",
+}
+
+
+def test_loop_pins_only_in_fixpoint_driver():
+    """No ``.localCheckpoint``/``.persist``/``.cache`` call sits lexically
+    inside a ``for``/``while`` body in the package: an iterative
+    operator cuts lineage through ``fixpoint.iterate`` (the one place
+    that decides the pin policy), bar the exempt loops above."""
+    import ast
+    import glob
+
+    pkg = f"{REPO}/big_data_bowl_spark"
+    found = set()
+
+    def visit(node, path, fn):
+        for child in ast.iter_child_nodes(node):
+            name = fn
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                name = child.name
+            if isinstance(child, (ast.For, ast.AsyncFor, ast.While)):
+                for stmt in child.body + child.orelse:
+                    for n in ast.walk(stmt):
+                        if (isinstance(n, ast.Call)
+                                and isinstance(n.func, ast.Attribute)
+                                and n.func.attr in ("localCheckpoint",
+                                                    "persist", "cache")):
+                            found.add((path, name, n.lineno))
+            visit(child, path, name)
+
+    for p in sorted(glob.glob(f"{pkg}/**/*.py", recursive=True)):
+        visit(ast.parse(open(p).read()), p[len(pkg) + 1:], None)
+    bad = sorted(f for f in found
+                 if f[0] != "operators/fixpoint.py"
+                 and f[:2] not in _LOOP_PIN_EXEMPT)
+    assert not bad, f"pins inside loop bodies (use fixpoint.iterate): {bad}"
+    assert {f[:2] for f in found} >= set(_LOOP_PIN_EXEMPT), \
+        "an exempt loop no longer pins: drop it from _LOOP_PIN_EXEMPT"

@@ -1372,12 +1372,11 @@ def test_bloom_state_merge_and_no_false_negatives(spark):
 def test_sketch_state_guards_fail_loud(spark):
     """The mergeable states refuse silent contract violations: merging
     quantile states to a LARGER k than they were built with (a biased
-    sample), gating against a Bloom state built with different geometry
-    (broken no-false-negative guarantee), and a non-positive PageRank
-    checkpoint cadence all raise instead of degrading."""
+    sample) and gating against a Bloom state built with different
+    geometry (broken no-false-negative guarantee) both raise instead of
+    degrading."""
     import pytest
 
-    from big_data_bowl_spark.operators.graph import pagerank
     from big_data_bowl_spark.operators.sketches import (
         bloom_neutral_state, quantile_sketch_merge, quantile_sketch_state,
         with_bloom_maybe_seen)
@@ -1413,10 +1412,6 @@ def test_sketch_state_guards_fail_loud(spark):
     _bloom_check_params(bstate, "t", m_words=512, k=None)
     with pytest.raises(ValueError, match="geometry"):
         _bloom_check_params(bstate, "t", m_words=None, k=99)
-
-    edges = spark.createDataFrame([(1, 2)], "src long, dst long")
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        pagerank(edges, iters=2, checkpoint_every=0)
 
 
 def test_quantile_sketch_merge_equals_whole(spark):
@@ -3575,3 +3570,91 @@ def test_pq_assign_equals_expression_argmin(spark):
     want = {(r["vec_id"], r["subspace"]): r["code"] for r in expr.collect()}
     assert got == want
     assert got[(10, 0)] == 0 and got[(12, 0)] == 0  # tie -> lowest position
+
+
+def test_iterate_zero_rounds_returns_state_unchanged(spark):
+    from big_data_bowl_spark.operators.fixpoint import iterate
+
+    def boom(df):
+        raise AssertionError("step must not run at rounds=0")
+
+    df = spark.range(3)
+    assert iterate(df, boom, 0) is df
+
+
+def test_iterate_until_stops_the_loop(spark):
+    """``until`` is checked after every round: a counting step whose
+    ``until`` turns true after the third round runs exactly 3 times,
+    and the returned state is the third one."""
+    from big_data_bowl_spark.operators.fixpoint import iterate
+
+    calls = []
+
+    def step(df):
+        calls.append(1)
+        return df.withColumn("r", F.col("r") + 1)
+
+    out = iterate(spark.range(1).select(F.lit(0).alias("r")), step, 10,
+                  until=lambda s: len(calls) == 3)
+    assert len(calls) == 3
+    assert out.first()["r"] == 3
+
+
+def _routed_fixpoint(spark, name, rounds, monkeypatch):
+    """Run one operator that loops through ``fixpoint.iterate`` for
+    ``rounds`` rounds on a small graph / point set."""
+    from big_data_bowl_spark.operators import fixpoint, graph
+    from big_data_bowl_spark.pipeline.dedup import duplicate_components
+    from big_data_bowl_spark.pipeline.similarity import lloyd_centroids
+    from big_data_bowl_spark.queries import QUERIES
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)] + [(0, 5), (5, 9), (3, 0)],
+        "src long, dst long")
+    seeds = spark.createDataFrame([(0,), (7,)], "node long")
+    if name == "pagerank":
+        return graph.pagerank(edges, iters=rounds)
+    if name == "personalized_pagerank":
+        return graph.personalized_pagerank(edges, seeds, iters=rounds)
+    if name == "kcore":
+        return graph.kcore(edges, k=2, rounds=rounds)
+    if name == "label_propagation":
+        return graph.label_propagation(edges, rounds=rounds)
+    if name == "bfs_hops":
+        return graph.bfs_hops(edges, seeds, max_hops=rounds)
+    if name == "hits":
+        return graph.hits(edges, iters=rounds)
+    if name == "lloyd_centroids":
+        vecs = spark.createDataFrame(
+            [(i, [float(i % 5), float(i // 5)]) for i in range(20)],
+            "vec_id long, v array<double>")
+        cents = spark.createDataFrame(
+            [(0, [0.0, 0.0]), (1, [4.0, 3.0])],
+            "cand_label long, centroid array<double>")
+        return lloyd_centroids(vecs, cents, rounds)
+    if name == "duplicate_components":
+        # a 12-edge chain: min-label propagation needs every round
+        return duplicate_components(
+            edges.select(F.col("src").alias("doc_a"),
+                         F.col("dst").alias("doc_b")), max_iter=rounds)
+    # q_stationary_dist runs a fixed 5 rounds: vary them at the driver
+    real = fixpoint.iterate
+    monkeypatch.setattr(fixpoint, "iterate",
+                        lambda s, step, _r, until=None:
+                        real(s, step, rounds, until))
+    return QUERIES["q_stationary_dist"](spark, SF_SMALL)
+
+
+@pytest.mark.parametrize("name", [
+    "pagerank", "personalized_pagerank", "kcore", "label_propagation",
+    "bfs_hops", "hits", "lloyd_centroids", "duplicate_components",
+    "q_stationary_dist"])
+def test_fixpoint_lineage_is_bounded(spark, name, monkeypatch):
+    """Every operator routed through ``fixpoint.iterate`` cuts lineage
+    each round: its result's plan carries as many exchanges after 6
+    rounds as after 2."""
+    from big_data_bowl_spark.plans.inspect import count_exchanges
+
+    counts = [count_exchanges(_routed_fixpoint(spark, name, r, monkeypatch))
+              for r in (2, 6)]
+    assert counts[0] == counts[1], counts
