@@ -30,7 +30,8 @@ from pyspark.sql import functions as F
 
 from ..functions.scalar import roundn
 from ..operators.fixpoint import iterate
-from ..schemas import require_columns
+from ..schemas import arrow_fanout, fan_out, require_columns
+from .text import FP_PRIME, _token_ngrams
 
 
 def _tokens_distinct(df: DataFrame, id_col: str, text_col: str,
@@ -422,7 +423,7 @@ def _jaccard_smallvocab(tok: DataFrame, freq: DataFrame, tau: float,
     # The build side stays the broadcast (plan-confirmed
     # BroadcastHashJoin at both SFs) — only the probe side's
     # partitioning carries the parallelism.
-    sa = sa.repartition(spfx.sparkSession.sparkContext.defaultParallelism)
+    sa = fan_out(sa)
     sb = spfx.select(*[F.col(m).alias(b) for m, b in zip(mask_cols, b_cols)],
                      *[F.col(p).alias(b) for p, b in zip(pfx_cols, pb_cols)],
                      F.col("__n").alias("__nb"), "__g",
@@ -596,112 +597,111 @@ def minhash_slots(base_col: str, n_hashes: int = N_MINHASH) -> Column:
         for a, b in _mh_coeffs(n_hashes)])
 
 
-def _neutral_minhash_sigs_arrow(df: DataFrame, id_col: str, text_col: str,
-                                n_hashes: int, shingle_len: int,
-                                drop_empty_words: bool) -> DataFrame:
-    """MinHash signatures as ONE vectorized Arrow batch stage —
-    bit-identical to the interpreted-HOF form (r14, guide §4.2).
+def _token_folds(tokens: list[str], base: int):
+    """The polynomial character fold of every token, vectorized over
+    character POSITION: returns uint64 arrays ``(h0, pw)`` with h0 the
+    fold ``h·base + code mod P`` from seed 0 and pw = base^len mod P.
 
-    The polynomial family is explicit integer arithmetic end-to-end
-    (polynomial char hash mod 10^9+7, affine (a·h+b) mod 2^31−1 slots),
-    which the JVM evaluates as INTERPRETED higher-order functions:
-    ~len(shingle) char-fold steps + n_hashes affine folds per shingle,
-    each step an expression-tree walk (~30 ns) — the same per-row cost
-    class as the OPH adjudication above measured.  numpy does the
-    identical uint64 arithmetic at vector throughput.  Exactness: every
-    intermediate is an integer < 2^62 (a < p ≈ 2^31, h < 10^9+7 < 2^30
-    ⇒ a·h+b < 2^61; char fold acc·31+c < 2^35), uint64 is exact, and
-    the char/word/shingle decomposition below reproduces Spark's fold
-    ORDER exactly, so signatures match bit-for-bit (exceptAll 0/0 at
-    sf0.01 + sf0.1 against the expression form; oracle sweeps green).
+    Seeded folds and space-joined concatenations follow by composition
+    (all mod P): from seed s the fold is ``s·pw + h0``, and
+    ``h(x·y) = h(x)·pw(y) + h0(y)``.  Code points come from a utf-32
+    decode — exactly Spark's ``ascii(substr(t, i, 1))`` for ASCII, BMP
+    and astral characters alike.  Every intermediate is below 2^36, so
+    uint64 is exact.  The numpy twin of :func:`~.text.polynomial_token_hash`
+    and the one fold every text-hash Arrow stage in this module uses."""
+    import numpy as np
+    fp, b = np.uint64(FP_PRIME), np.uint64(base)
+    lens = np.fromiter(map(len, tokens), dtype=np.int64, count=len(tokens))
+    codes = np.frombuffer("".join(tokens).encode("utf-32-le"),
+                          dtype=np.uint32)
+    starts = np.cumsum(lens) - lens
+    h0 = np.zeros(len(tokens), dtype=np.uint64)
+    pw = np.ones(len(tokens), dtype=np.uint64)
+    live = np.arange(len(tokens))
+    for pos in range(int(lens.max(initial=0))):
+        live = live[lens[live] > pos]       # tokens longer than pos
+        h0[live] = (h0[live] * b + codes[starts[live] + pos]) % fp
+        pw[live] = pw[live] * b % fp
+    return h0, pw
 
-    Char folds vectorize by POSITION over all words at once (utf-32
-    decode gives code points — exactly Spark's ``ascii(substr(t, i,
-    1))``, probe-verified for ASCII, BMP and astral chars alike);
-    per-shingle hashes then come from the
-    polynomial composition rule h(x·y) = (h(x)·31^len(y) + h0(y)) mod P
-    — each word's (h0, 31^len) is computed once and reused by the ≤
-    ``shingle_len`` shingles containing it (the JVM form re-folds every
-    char ×shingle_len via concat_ws).  Slot minima are
-    ``np.minimum.reduceat`` over doc segments.
 
-    ``drop_empty_words`` selects the caller's split semantics:
-    :func:`minhash_neutral_pairs` filters empty tokens,
-    :func:`shingle_base_hashes` (→ :func:`minhash_signatures`) keeps
-    them — both reproduced exactly (empty shingles fold to the bare
-    seed, matching ``_poly_hash``'s empty-string guard).  A null text
-    hashes like ``""``, as the expression form does (split of null is
-    null, which still yields one empty shingle).
-    """
-    from .text import FP_PRIME
-    from ..schemas import arrow_fanout
+def _split_words(texts: list, drop_empty_words: bool):
+    """All words of ``texts`` split on " " in one flat list, plus each
+    text's word count; ``drop_empty_words`` drops the empty words of
+    space runs, and a null text splits like ``""``."""
+    import numpy as np
+    words, counts = [], []
+    for t in texts:
+        ws = (t or "").split(" ")
+        if drop_empty_words:
+            ws = [w for w in ws if w]
+        words += ws
+        counts.append(len(ws))
+    return words, np.array(counts, dtype=np.int64)
+
+
+def _shingle_hashes(texts: list, shingle_len: int, drop_empty_words: bool):
+    """numpy twin of :func:`shingle_base_hashes`: the polynomial hash
+    (base 31, seed 7) of every ``shingle_len``-word shingle, words split
+    on " " and re-joined by one space, ``max(n_words − len + 1, 1)``
+    shingles per doc — a 1-2-word doc hashes its join and an empty doc
+    the bare seed.  ``drop_empty_words`` drops the empty words of space
+    runs (the filtered split of :func:`minhash_neutral_pairs`); a null
+    text hashes like ``""`` (what the expression form returns).
+
+    Each word is folded once (:func:`_token_folds`) and reused by the ≤
+    ``shingle_len`` shingles containing it.  Returns ``(h, doc_starts)``:
+    uint64 shingle hashes in doc order and the offset of each doc's first
+    shingle (every doc has at least one, so ``np.*.reduceat`` over
+    ``doc_starts`` is one segment per doc)."""
+    import numpy as np
+    words, wcounts = _split_words(texts, drop_empty_words)
+    h0, p31 = _token_folds(words, 31)
+    del words
+    fp = np.uint64(FP_PRIME)
+    n_sh = np.maximum(wcounts - (shingle_len - 1), 1)
+    doc_starts = np.cumsum(n_sh) - n_sh
+    sh_doc = np.repeat(np.arange(len(wcounts)), n_sh)
+    sh_pos = np.arange(int(n_sh.sum())) - doc_starts[sh_doc]
+    w_first = (np.cumsum(wcounts) - wcounts)[sh_doc] + sh_pos
+    h = np.full(len(sh_doc), 7, dtype=np.uint64)        # _poly_hash seed
+    for t in range(shingle_len):
+        m = sh_pos + t < wcounts[sh_doc]
+        wi = w_first[m] + t
+        if t:
+            h[m] = (h[m] * np.uint64(31) + np.uint64(32)) % fp  # the " "
+        h[m] = (h[m] * p31[wi] + h0[wi]) % fp
+    return h, doc_starts
+
+
+def _minhash_sigs_arrow(df: DataFrame, id_col: str, text_col: str,
+                        n_hashes: int, shingle_len: int,
+                        drop_empty_words: bool) -> DataFrame:
+    """MinHash signatures as ONE vectorized Arrow batch stage:
+    :func:`_shingle_hashes` per batch, then slot i is the per-doc
+    ``np.minimum.reduceat`` of the affine hash (a_i·h + b_i) mod 2^31−1
+    (a·h+b < 2^62, exact in uint64).  Bit-identical to
+    ``shingle_base_hashes`` staged through :func:`minhash_slots`
+    (``drop_empty_words=False``) and to its filtered-split twin; the
+    measurements behind the Arrow stage are in SCALE.md ("One shingle-
+    hash kernel")."""
     coeffs = _mh_coeffs(n_hashes)
     id_type = dict(df.select(F.col(id_col)).dtypes)[id_col]
-    # r15: fan-out bounded by input size (arrow_fanout) — 32 Python
-    # workers over ~2k sf0.1 docs paid the worker spin-up floor for
-    # nothing (driver measured 2.28→5.18s on a degraded host at 32
-    # cores while 8 cores was FASTER); full parallelism returns at
-    # n ≥ parallelism·floor rows, where the win lives.
     narrow = arrow_fanout(df.select(F.col(id_col), F.col(text_col)))
 
     def _sigs(batches):
         import numpy as np
         import pandas as pd
         p = np.uint64(_MH_PRIME)
-        fp = np.uint64(FP_PRIME)
-        a_arr = np.array([a for a, _ in coeffs], dtype=np.uint64)
-        b_arr = np.array([b for _, b in coeffs], dtype=np.uint64)
-        c31 = np.uint64(31)
-        space = np.uint64(32)
         for pdf in batches:
-            n_docs = len(pdf)
-            if n_docs == 0:
+            if len(pdf) == 0:
                 continue
-            word_lists = [(t or "").split(" ")
-                          for t in pdf[text_col].tolist()]
-            if drop_empty_words:
-                word_lists = [[w for w in ws if w] for ws in word_lists]
-            wcounts = np.array([len(ws) for ws in word_lists],
-                               dtype=np.int64)
-            flat = [w for ws in word_lists for w in ws]
-            n_words = len(flat)
-            if n_words:
-                lens = np.array([len(w) for w in flat], dtype=np.int64)
-                codes = np.frombuffer(
-                    "".join(flat).encode("utf-32-le"),
-                    dtype=np.uint32).astype(np.uint64)
-                starts = np.zeros(n_words, dtype=np.int64)
-                np.cumsum(lens[:-1], out=starts[1:])
-                h0 = np.zeros(n_words, dtype=np.uint64)   # fold from seed 0
-                p31 = np.ones(n_words, dtype=np.uint64)   # 31^len mod P
-                for pos in range(int(lens.max()) if n_words else 0):
-                    m = lens > pos
-                    h0[m] = (h0[m] * c31 + codes[starts[m] + pos]) % fp
-                    p31[m] = (p31[m] * c31) % fp
-            else:
-                h0 = np.zeros(0, dtype=np.uint64)
-                p31 = np.ones(0, dtype=np.uint64)
-            n_sh = np.maximum(wcounts - (shingle_len - 1), 1)
-            doc_w0 = np.zeros(n_docs, dtype=np.int64)
-            np.cumsum(wcounts[:-1], out=doc_w0[1:])
-            sh_starts = np.zeros(n_docs, dtype=np.int64)
-            np.cumsum(n_sh[:-1], out=sh_starts[1:])
-            total_sh = int(n_sh.sum())
-            sh_doc = np.repeat(np.arange(n_docs), n_sh)
-            sh_pos = np.arange(total_sh) - sh_starts[sh_doc]
-            w_first = doc_w0[sh_doc] + sh_pos
-            h = np.full(total_sh, 7, dtype=np.uint64)     # _poly_hash seed
-            for t in range(shingle_len):
-                m = (sh_pos + t) < wcounts[sh_doc]
-                wi = w_first[m] + t
-                if t:
-                    h[m] = (h[m] * c31 + space) % fp      # concat_ws " "
-                h[m] = (h[m] * p31[wi] + h0[wi]) % fp
-            sig = np.empty((n_docs, n_hashes), dtype=np.int64)
-            for i in range(n_hashes):
-                v = (a_arr[i] * h + b_arr[i]) % p
-                sig[:, i] = np.minimum.reduceat(v, sh_starts) \
-                              .astype(np.int64)
+            h, starts = _shingle_hashes(pdf[text_col].tolist(), shingle_len,
+                                        drop_empty_words)
+            sig = np.empty((len(pdf), n_hashes), dtype=np.int64)
+            for i, (a, b) in enumerate(coeffs):
+                v = (np.uint64(a) * h + np.uint64(b)) % p
+                sig[:, i] = np.minimum.reduceat(v, starts).astype(np.int64)
             yield pd.DataFrame({id_col: pdf[id_col].values,
                                 "sig": list(sig)})
 
@@ -739,10 +739,7 @@ def word_shingle_sets(df: DataFrame, id_col: str = "doc_id",
     ``""`` does (the expression form's behavior).
     """
     require_columns(df, [id_col, text_col], "word_shingle_sets")
-    from ..schemas import arrow_fanout
     id_type = dict(df.select(F.col(id_col)).dtypes)[id_col]
-    # size-bounded fan-out, same rationale as
-    # _neutral_minhash_sigs_arrow (Python-worker floor on tiny inputs).
     narrow = arrow_fanout(df.select(F.col(id_col), F.col(text_col)))
 
     def _shingles(batches):
@@ -778,12 +775,12 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
     """The (id, sig) MinHash signature table — the persistable INDEX of a
     continuously-ingested corpus (stage it as parquet; signatures never
     need recomputing for already-seen documents).  One vectorized Arrow
-    stage (:func:`_neutral_minhash_sigs_arrow`, r14) over the unfiltered
-    split, bit-identical to ``shingle_base_hashes`` staged through
+    stage (:func:`_minhash_sigs_arrow`) over the unfiltered split,
+    bit-identical to ``shingle_base_hashes`` staged through
     :func:`minhash_slots`."""
     require_columns(df, [id_col, text_col], "minhash_signatures")
-    return _neutral_minhash_sigs_arrow(df, id_col, text_col, n_hashes,
-                                       shingle_len=3, drop_empty_words=False)
+    return _minhash_sigs_arrow(df, id_col, text_col, n_hashes,
+                               shingle_len=3, drop_empty_words=False)
 
 
 def _check_bands(n_slots: int, bands: int) -> None:
@@ -806,7 +803,6 @@ def _band_buckets(sig_df: DataFrame, id_col: str,
     mapInPandas stage would pay, and the fold tree is ~10² nodes/row
     (below the r14-measured ~10³ pay threshold).  Left as JVM
     expressions."""
-    from .text import FP_PRIME
     rows_per_band = n_slots // bands
     bucket_arr = F.array(*[
         F.aggregate(F.slice(F.col("sig"), b * rows_per_band + 1,
@@ -943,112 +939,54 @@ def minhash_oph_signatures(df: DataFrame, id_col: str = "doc_id",
                            n_bins: int = N_MINHASH) -> DataFrame:
     """MinHash signatures by ONE-PERMUTATION HASHING (Li, Owen, Zhang,
     NIPS'12) with rotation densification (Shrivastava & Li, ICML'14):
-    ONE hash per shingle binned by ``h mod B``, min per non-empty bin —
-    one codegen-side hash-aggregate update per shingle instead of the
-    classic path's B interpreted affine folds.  Empty bins (short docs)
-    densify by rotation: bin j borrows from the nearest non-empty bin
-    to its right (cyclically), offset by ``k·C`` per step so borrowed
-    values only match when both docs borrowed the same value over the
-    same distance — preserving the matched-slot estimator
-    E[matches/B] ≈ J (property-tested against exact Jaccard).
+    ONE polynomial hash per 3-word shingle (the unfiltered split of
+    :func:`shingle_base_hashes`) binned by ``h mod B``, min per non-empty
+    bin — one ``np.minimum.at`` update per shingle instead of the classic
+    path's B affine hashes.  Empty bins (short docs) densify by rotation:
+    bin j borrows from the nearest non-empty bin to its right
+    (cyclically), offset by ``k·C`` per step so borrowed values only
+    match when both docs borrowed the same value over the same distance
+    — preserving the matched-slot estimator E[matches/B] ≈ J
+    (property-tested against exact Jaccard).
 
-    **Measured adjudication (r13): on Spark the classic staged-fold
-    path (:func:`minhash_signatures`) WINS at every width and doc
-    length tried, and stays the default.**  Warm min-of-2, same
-    session, local[32]: longdoc corpus (20k docs × ~200 tokens)
-    classic 3.95s vs OPH 7.93s at B=32; classic 8.2s vs OPH 73s at
-    B=128 (the O(B²) coalesce densification leaves codegen); sf0.1
-    documents (short docs) classic ~1.0s vs OPH ~4.6s.  Why the
-    published 32× arithmetic saving doesn't transfer: exploding a
-    shingle to a row costs ~900ns (UnsafeRow + hash-agg probe) ≈ the
-    ~960ns of 32 interpreted fold steps it replaces — Spark's row
-    machinery and its interpreted HOF arithmetic are the SAME order,
-    so OPH saves nothing per shingle and still pays base hashing,
-    two extra shuffles, and densification.  OPH wins where the
-    min-update is a tight C loop (its home turf), not where rows are
-    the currency.  Kept as the hash-verified alternate (q_minhash_oph
-    pins every slot against the DuckDB oracle) and as the recorded
-    no-go; also the shape to revisit if signatures ever need B ≥ 256
-    with a cheaper densification.
-
-    Two implementation lessons preserved in the plan shape below:
-    the narrow projection REPARTITIONS before hashing (a small scan
-    arrives in 1-2 partitions), and the explode is ``explode_outer``
-    (see inline comment — InferFiltersFromGenerate, also excluded
-    session-wide in session.py since r13).
-
-    The polynomial shingle hash lets any SQL engine reproduce the
-    signature bit-for-bit (q_minhash_oph's DuckDB oracle rebuilds bins,
-    rotation, and offsets exactly).
+    One Arrow stage after a full-parallelism fan-out; a null text
+    hashes like ``""``.  The polynomial shingle hash lets any SQL engine
+    reproduce the signature bit-for-bit (q_minhash_oph's DuckDB oracle
+    rebuilds bins, rotation, and offsets exactly).  The r13 adjudication
+    of the former explode/pivot form and its replacement are in
+    SCALE.md ("One shingle-hash kernel").
 
     Returns (id_col, sig array<long>) with ``n_bins`` slots.
     """
     require_columns(df, [id_col, text_col], "minhash_oph_signatures")
-    # fan the narrow (id, text) projection out to full parallelism BEFORE
-    # the per-shingle hashing, exactly like minhash_signatures: a small
-    # parquet scan (or a localCheckpoint) arrives in 1-2 partitions, and
-    # without this the CPU-bound map stage runs on 1-2 cores (measured:
-    # the longdoc corpus went from minutes to seconds)
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    binned = (df.select(F.col(id_col), F.col(text_col))
-                .repartition(parallelism)
-                .withColumn("_base", shingle_base_hashes(F.col(text_col)))
-                # explode_outer, NOT explode: for a plain explode,
-                # Catalyst's InferFiltersFromGenerate synthesizes a
-                # size(_base) > 0 filter and pushes the ENTIRE
-                # shingle-hash expression below the repartition — the
-                # whole corpus re-hashed on the scan's 1-2 partitions
-                # (measured 80s → 4s on the longdoc leg).  The shingle
-                # array is never empty (n_sh = greatest(..., 1)), so
-                # outer ≡ inner here and no filter is inferred.
-                .select(F.col(id_col), F.explode_outer("_base").alias("__h"))
-                .groupBy(id_col,
-                         F.pmod("__h", F.lit(n_bins)).alias("__bin"))
-                .agg(F.min("__h").alias("__mv")))
-    # Stage 2 pivots the ≤ n_bins (bin, min) rows per doc into n_bins
-    # conditional-min buffers inside whole-stage codegen (a first cut
-    # densified via map_keys + per-slot transform lambdas: ~2k
-    # interpreted expression evals per doc, measured SLOWER than the
-    # classic 32-fold path it was meant to beat).
-    wide = binned.groupBy(id_col).agg(*[
-        F.min(F.when(F.col("__bin") == j, F.col("__mv")))
-         .alias(f"__b{j}") for j in range(n_bins)])
     id_type = dict(df.select(F.col(id_col)).dtypes)[id_col]
+    narrow = fan_out(df.select(F.col(id_col), F.col(text_col)))
 
-    # Rotation densification (r14): slot j = first non-null of
-    # b_{j+k} + k·C over k = 0..B−1 (cyclic).  Because every base hash
-    # is < _MH_PRIME < C, val + k·C < (k+1)·C ≤ any later candidate —
-    # so "first non-null" EQUALS "min over non-null of b_{j+k} + k·C",
-    # which vectorizes.  The original n_bins×n_bins coalesce chain was
-    # a ~1k-node expression tree whose cost was FIXED overhead (the
-    # q_lsh_topk finding): the wide pivot alone ran 2.9s at sf0.1, the
-    # chain pushed the signature stage to 8.3s.  This Arrow batch stage
-    # (optimization-guide §4.2) does the same min in numpy — float64 is
-    # exact here (slot values < 2^36 ≪ 2^53) and nanmin over the
-    # offset-shifted window reproduces every slot bit-for-bit
-    # (oracle-hash-checked at sf0.01/sf0.1; ties are impossible since
-    # the ordering above is strict).
-    b_cols = [f"__b{j}" for j in range(n_bins)]
-
-    def _densify(batches):
+    def _oph(batches):
         import numpy as np
         import pandas as pd
-        offs = (float(_OPH_C) * np.arange(n_bins)).astype(np.float64)
+        # slot j = min over k of b_{j+k} + k·C (cyclic): every base hash
+        # is < C, so this min IS the first non-empty bin to the right.
+        # float64 is exact (slot values < 2^36); inf marks an empty bin.
+        offs = float(_OPH_C) * np.arange(n_bins)
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
-            b = pdf[b_cols].to_numpy(dtype=np.float64)   # null -> NaN
-            b2 = np.concatenate([b, b], axis=1)
+            h, starts = _shingle_hashes(pdf[text_col].tolist(), 3, False)
+            doc = np.repeat(np.arange(n), np.diff(starts, append=len(h)))
+            bins = np.full((n, n_bins), np.inf)
+            np.minimum.at(bins, (doc, (h % np.uint64(n_bins)).astype(np.intp)),
+                          h.astype(np.float64))
+            b2 = np.concatenate([bins, bins], axis=1)
             sig = np.empty((n, n_bins), dtype=np.int64)
             for j in range(n_bins):
-                sig[:, j] = np.nanmin(b2[:, j:j + n_bins] + offs[None, :],
-                                      axis=1).astype(np.int64)
+                sig[:, j] = (b2[:, j:j + n_bins] + offs).min(axis=1)
             yield pd.DataFrame({id_col: pdf[id_col].values,
                                 "sig": list(sig)})
 
-    return wide.mapInPandas(_densify, f"{id_col} {id_type}, "
-                                      "sig array<long>")
+    return narrow.mapInPandas(_oph, f"{id_col} {id_type}, "
+                                    "sig array<long>")
 
 
 def minhash_oph_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -1087,11 +1025,9 @@ def embedding_dup_pairs(df: DataFrame, threshold: float = 0.9,
     # this the blocked self-join's ~|block|² interpreted dot products
     # all run on the scan's lone partition (measured 3.66 → 0.90s at
     # sf0.1, the r13 fan-out-before-CPU-bound-stage rule).
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    v = (df.select(F.col(id_col), F.col(bucket_col),
-                   F.transform(vec_col, lambda x: x.cast("double"))
-                    .alias("__v"))
-           .repartition(parallelism))
+    v = fan_out(df.select(F.col(id_col), F.col(bucket_col),
+                          F.transform(vec_col, lambda x: x.cast("double"))
+                           .alias("__v")))
     # stage the self-norm once per row (CSE does not cross the join)
     v = v.withColumn(
         "__n", F.sqrt(F.aggregate("__v", F.lit(0.0),
@@ -1336,15 +1272,45 @@ def minhash_neutral_pairs(df: DataFrame, min_est_jaccard: float = 0.5,
     also makes a persisted signature index portable.
 
     The signature build is one vectorized Arrow stage
-    (:func:`_neutral_minhash_sigs_arrow`, r14); pinning and the integer
-    matched-slot threshold live in the shared :func:`_lsh_pairs` core.
+    (:func:`_minhash_sigs_arrow`); pinning and the integer matched-slot
+    threshold live in the shared :func:`_lsh_pairs` core.
 
     Returns (doc_a, doc_b, est_jaccard), doc_a < doc_b.
     """
     require_columns(df, [id_col, text_col], "minhash_neutral_pairs")
-    sig = _neutral_minhash_sigs_arrow(df, id_col, text_col, n_hashes,
-                                      shingle_len, drop_empty_words=True)
+    sig = _minhash_sigs_arrow(df, id_col, text_col, n_hashes,
+                              shingle_len, drop_empty_words=True)
     return _lsh_pairs(sig, id_col, n_hashes, bands, min_est_jaccard)
+
+
+def _simhash_fingerprints(texts: list):
+    """The 60-bit SimHash fingerprints of ``texts`` (see
+    :func:`simhash_neutral`) as a nullable Int64 array, null for a null
+    text.  The token hash is ``h31·2^30 + h37`` (both seeded folds from
+    :func:`_token_folds`, < 2^30 each, so < 2^60); bit b is set iff more
+    than half of the doc's tokens have it (2·ones_b > n_tokens, the sign
+    of the ±1 vote sum).  Ones are counted ONE BIT AT A TIME from a
+    token-order prefix sum, so memory is O(tokens), never a
+    (tokens × 60) vote matrix."""
+    import numpy as np
+    import pandas as pd
+    words, counts = _split_words(texts, True)
+    fp = np.uint64(FP_PRIME)
+    h0, pw = _token_folds(words, 31)
+    th = ((np.uint64(7) * pw + h0) % fp) << np.uint64(30)
+    h0, pw = _token_folds(words, 37)
+    th = (th + (np.uint64(11) * pw + h0) % fp).astype(np.int64)
+    del words, h0, pw
+    ends = np.cumsum(counts)
+    ones = np.zeros(len(th) + 1, dtype=np.int64)
+    fps = np.zeros(len(counts), dtype=np.int64)
+    for b in range(60):
+        np.cumsum((th >> b) & 1, out=ones[1:])
+        fps |= (2 * (ones[ends] - ones[ends - counts]) > counts
+                ).astype(np.int64) << b
+    out = pd.array(fps, dtype="Int64")
+    out[np.array([t is None for t in texts], dtype=bool)] = pd.NA
+    return out
 
 
 def simhash_neutral(df: DataFrame, id_col: str = "doc_id",
@@ -1360,83 +1326,23 @@ def simhash_neutral(df: DataFrame, id_col: str = "doc_id",
     case a 64-bit pattern needs.  A null text gives a null fingerprint
     and null bands (the expression form's result).
 
+    The fingerprints are one Arrow stage (:func:`_simhash_fingerprints`;
+    measurements in SCALE.md, "One shingle-hash kernel").
+
     Returns (doc_id, simhash, band0..band3).
     """
     require_columns(df, [id_col, text_col], "simhash_neutral")
-    from .text import FP_PRIME
-    from ..schemas import arrow_fanout
-    bits = 60
     id_type = dict(df.select(F.col(id_col)).dtypes)[id_col]
-    # r15 (guide §4.2, the r14 fixed-overhead finding continued): the
-    # 60-wide per-token vote fold — ~60·n_tokens interpreted zip_with
-    # steps per doc on top of two interpreted char-fold hashes per
-    # token (~10⁴ expression-tree nodes per row, the class the r14
-    # boundary measured as paying) — moves to one vectorized Arrow
-    # batch.  numpy reproduces the integers EXACTLY: char folds
-    # vectorized by position (utf-32 code points = Spark's
-    # ascii(substr), probe-verified in r14 for ASCII/BMP/astral), both
-    # polynomial hashes < FP_PRIME < 2^30 so h1·2^30 + h2 < 2^60 is
-    # exact in uint64, votes are integer sums, and the fingerprint is
-    # a 60-bit OR of disjoint masks — no float anywhere (pinned by
-    # test_simhash_neutral_arrow_equals_expression_form; oracle-hash
-    # q_simhash).  Isolated stage: 0.52s at sf0.1 AND 0.66s at sf0.01
-    # (fixed tree overhead, not data) → ~0.15s.
     narrow = arrow_fanout(df.select(F.col(id_col), F.col(text_col)))
 
     def _fps(batches):
-        import numpy as np
         import pandas as pd
-        fp = np.uint64(FP_PRIME)
-        b31, b37 = np.uint64(31), np.uint64(37)
         for pdf in batches:
-            n_docs = len(pdf)
-            if n_docs == 0:
+            if len(pdf) == 0:
                 continue
-            texts = pdf[text_col].tolist()
-            tok_lists = [[w for w in (t or "").split(" ") if w]
-                         for t in texts]
-            tcounts = np.array([len(ts) for ts in tok_lists],
-                               dtype=np.int64)
-            flat = [w for ts in tok_lists for w in ts]
-            n_tok = len(flat)
-            if n_tok:
-                lens = np.array([len(w) for w in flat], dtype=np.int64)
-                codes = np.frombuffer(
-                    "".join(flat).encode("utf-32-le"),
-                    dtype=np.uint32).astype(np.uint64)
-                starts = np.zeros(n_tok, dtype=np.int64)
-                np.cumsum(lens[:-1], out=starts[1:])
-                h1 = np.full(n_tok, 7, dtype=np.uint64)
-                h2 = np.full(n_tok, 11, dtype=np.uint64)
-                for pos in range(int(lens.max())):
-                    m = lens > pos
-                    c = codes[starts[m] + pos]
-                    h1[m] = (h1[m] * b31 + c) % fp
-                    h2[m] = (h2[m] * b37 + c) % fp
-                th = (h1 << np.uint64(30)) + h2          # < 2^60, exact
-                # ±1 votes per bit: 2·bit − 1, summed per doc segment
-                tbits = ((th[:, None] >> np.arange(bits, dtype=np.uint64))
-                         & np.uint64(1)).astype(np.int64)
-                votes = 2 * tbits - 1                     # (n_tok, 60)
-                doc_t0 = np.zeros(n_docs, dtype=np.int64)
-                np.cumsum(tcounts[:-1], out=doc_t0[1:])
-                # reduceat only over docs WITH tokens: an empty doc's
-                # start index duplicates its successor's (or runs past
-                # the end when trailing), which would corrupt segment
-                # boundaries — token-less docs vote 0 by definition
-                nz = tcounts > 0
-                counters = np.zeros((n_docs, bits), dtype=np.int64)
-                counters[nz] = np.add.reduceat(votes, doc_t0[nz], axis=0)
-            else:
-                counters = np.zeros((n_docs, bits), dtype=np.int64)
-            sig = ((counters > 0).astype(np.int64)
-                   << np.arange(bits, dtype=np.int64)).sum(axis=1)
-            # null text -> null fingerprint (nullable Int64 keeps every
-            # 60-bit value exact; a float NaN column would not)
-            sig = pd.array(sig, dtype="Int64")
-            sig[np.array([t is None for t in texts])] = pd.NA
-            yield pd.DataFrame({id_col: pdf[id_col].values,
-                                "simhash": sig})
+            yield pd.DataFrame({
+                id_col: pdf[id_col].values,
+                "simhash": _simhash_fingerprints(pdf[text_col].tolist())})
 
     out = narrow.mapInPandas(_fps, f"{id_col} {id_type}, simhash long")
     for k in range(4):
@@ -1532,19 +1438,6 @@ def minhash_audience_similarity(sigs: DataFrame, group_col: str,
                                     / F.lit(float(n_hashes)), 6)))
 
 
-def _token_ngrams(text_col: str, n: int) -> Column:
-    """The rolling n-TOKEN grams of ``text_col`` as array<string> (each
-    gram its tokens space-joined), built in-row; empty for a doc with
-    fewer than ``n`` tokens."""
-    from .text import _tokens
-    arr = _tokens(text_col)
-    return F.when(
-        F.size(arr) >= n,
-        F.transform(F.sequence(F.lit(0), F.size(arr) - n),
-                    lambda i: F.array_join(F.slice(arr, i + 1, n), " "))
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def duplicated_spans(df: DataFrame, n: int = 8, min_docs: int = 2,
                      id_col: str = "doc_id",
                      text_col: str = "text") -> DataFrame:
@@ -1575,9 +1468,7 @@ def duplicated_spans(df: DataFrame, n: int = 8, min_docs: int = 2,
     # Distinct from the r13 tokenize no-go (q_leakage_split): there the
     # pre-shuffle work was one split per row; here it is ~n_tokens
     # n-way array_joins per row.
-    narrow = (df.select(F.col(id_col), F.col(text_col))
-                .repartition(df.sparkSession.sparkContext
-                             .defaultParallelism))
+    narrow = fan_out(df.select(F.col(id_col), F.col(text_col)))
     grams = (narrow.select(F.col(id_col),
                            _token_ngrams(text_col, n).alias("__g"))
                    .select(F.col(id_col), F.explode("__g").alias("gram")))
@@ -1610,9 +1501,7 @@ def gram_index(df: DataFrame, n: int = 8, id_col: str = "doc_id",
     like every other state in the engine).  Returns (gram, n_docs)."""
     require_columns(df, [id_col, text_col], "gram_index")
     # fan out before the gram build — see duplicated_spans (r14)
-    narrow = (df.select(F.col(id_col), F.col(text_col))
-                .repartition(df.sparkSession.sparkContext
-                             .defaultParallelism))
+    narrow = fan_out(df.select(F.col(id_col), F.col(text_col)))
     return (narrow.select(F.col(id_col),
                           F.explode(_token_ngrams(text_col, n)).alias("gram"))
                   .groupBy("gram")

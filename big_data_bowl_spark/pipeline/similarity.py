@@ -25,25 +25,12 @@ from pyspark.sql import functions as F
 
 from ..functions.scalar import roundn
 from ..operators.fixpoint import iterate
-from ..schemas import require_columns
+from ..schemas import arrow_fanout, fan_out, require_columns
 from .sampling import HASH_KEY_MOD, HASH_MOD, HASH_MULT
 
 
 def _as_double(col) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
-
-
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Repartition a vector table to full parallelism BEFORE the
-    CPU-bound per-vector stages (r13).  The sf0.1 embeddings parquet is
-    a single row group — ONE scan partition no matter what
-    maxPartitionBytes says — so every dot-product / signature / encode
-    map stage downstream of a bare scan ran on one core (measured:
-    q_minhash_neutral's text twin 6.8s → 4.1s from the same fix; the
-    ANN family numbers are in SCALE.md r13).  One narrow shuffle of
-    (id, vector) rows; at cluster scale scans arrive pre-parallel and
-    this is a cheap no-op-sized exchange."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -67,8 +54,8 @@ def cosine_topk(df: DataFrame, query_ids: list[int], k: int = 3,
     for-bit (then rounded).
     """
     require_columns(df, [id_col, vec_col], "cosine_topk")
-    vecs = _fan_out(df.select(F.col(id_col),
-                              _as_double(F.col(vec_col)).alias("v")))
+    vecs = fan_out(df.select(F.col(id_col),
+                             _as_double(F.col(vec_col)).alias("v")))
     q = (vecs.filter(F.col(id_col).isin(query_ids))
              .select(F.col(id_col).alias("query_id"), F.col("v").alias("qv")))
     pairs = (F.broadcast(q)
@@ -141,7 +128,6 @@ def lsh_bucketed_topk(df: DataFrame, query_ids: list[int], k: int = 3,
     Approximate → no SQL oracle; containment + measured-recall tested.
     """
     require_columns(df, [id_col, vec_col], "lsh_bucketed_topk")
-    from ..schemas import arrow_fanout
     # r15: the fan-out feeds a mapInPandas stage, so its partition count
     # is bounded by input size (see arrow_fanout: Python-worker spin-up
     # floor dominates on tiny inputs; full parallelism at scale).
@@ -636,8 +622,8 @@ def lloyd_kmeans(df: DataFrame, iters: int = 3, id_col: str = "vec_id",
 
     Returns (id, cluster, score) plus per-cluster sizes would be one more
     agg; kept minimal to compose."""
-    vecs = _fan_out(df.select(F.col(id_col),
-                              _as_double(F.col(vec_col)).alias("v")))
+    vecs = fan_out(df.select(F.col(id_col),
+                             _as_double(F.col(vec_col)).alias("v")))
     cents = (label_centroids(df, id_col, vec_col, label_col)
              .select(F.col(label_col).cast("long").alias("cand_label"),
                      "centroid"))
@@ -688,8 +674,8 @@ def ivfpq_topk(df: DataFrame, query_ids: list[int], k: int = 3,
     broadcast equi-join on the cell id.  Returns
     (query_id, neighbor_id, approx_d2), smaller = nearer."""
     require_columns(df, [id_col, vec_col], "ivfpq_topk")
-    vecs = _fan_out(df.select(F.col(id_col),
-                              _as_double(F.col(vec_col)).alias("v")))
+    vecs = fan_out(df.select(F.col(id_col),
+                             _as_double(F.col(vec_col)).alias("v")))
 
     if neutral:
         # Engine-neutral coarse quantizer: deterministic per-label mean
@@ -813,8 +799,8 @@ def lsh_neutral_topk(df: DataFrame, query_ids: list[int], k: int = 3,
     Returns (query_id, neighbor_id, cosine).
     """
     require_columns(df, [id_col, vec_col], "lsh_neutral_topk")
-    vecs = _fan_out(df.select(F.col(id_col),
-                              _as_double(F.col(vec_col)).alias("v")))
+    vecs = fan_out(df.select(F.col(id_col),
+                             _as_double(F.col(vec_col)).alias("v")))
 
     dims = F.sequence(F.lit(0), F.lit(dim - 1)).cast("array<long>")
 
@@ -870,8 +856,8 @@ def ivf_neutral_topk(df: DataFrame, query_ids: list[int], k: int = 3,
     Returns (query_id, neighbor_id, cosine).
     """
     require_columns(df, [id_col, vec_col, label_col], "ivf_neutral_topk")
-    vecs = _fan_out(df.select(F.col(id_col),
-                              _as_double(F.col(vec_col)).alias("v")))
+    vecs = fan_out(df.select(F.col(id_col),
+                             _as_double(F.col(vec_col)).alias("v")))
     cents = (label_centroids(df, id_col, vec_col, label_col)
              .select(F.col(label_col).cast("long").alias("cell"),
                      "centroid"))
@@ -1149,7 +1135,7 @@ def jl_project(df: DataFrame, d_out: int = 16, id_col: str = "vec_id",
     # The iterative siblings (kcenter_coreset, mmr_rerank) measured as
     # NO-GOs for the same treatment — their per-round fixed job latency
     # dominates, the r13 "not inside iteration loops" boundary.
-    df = _fan_out(df.select(F.col(id_col), F.col(vec_col)))
+    df = fan_out(df.select(F.col(id_col), F.col(vec_col)))
     v = _as_double(F.col(vec_col))
     scale = F.lit(d_out ** -0.5)
     def make_signed(_j):

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalar import roundn, safe_div
-from ..schemas import require_columns
+from ..schemas import fan_out, require_columns
 
 # tiny per-language stopword lists for the n-gram/stopword heuristic
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -24,6 +24,25 @@ STOPWORDS_ALL = tuple(sorted({w for ws in LANG_STOPWORDS.values() for w in ws}))
 
 def _tokens(text_col: str = "text"):
     return F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+
+
+def _token_ngrams(text_col: str, n: int) -> "F.Column":
+    """The rolling n-TOKEN grams of ``text_col`` as array<string> (each
+    gram its tokens space-joined), built in-row with no shuffle; empty
+    for a doc with fewer than ``n`` tokens (every caller explodes the
+    grams, so a null doc yields no rows).  ``zip_with`` over n shifted
+    slices keeps the token split OUTSIDE any lambda: a per-position
+    ``transform`` over ``slice(tokens, i, n)`` re-splits the text for
+    every position (no CSE into lambda bodies), O(tokens²) per doc —
+    SCALE.md, "One shingle-hash kernel", has the measurement."""
+    toks = _tokens(text_col)
+    size = F.size(toks)
+    grams = F.slice(toks, 1, F.greatest(size - (n - 1), F.lit(0)))
+    for off in range(1, n):
+        nxt = F.slice(toks, 1 + off, F.greatest(size - (n - 1), F.lit(0)))
+        grams = F.zip_with(grams, nxt,
+                           lambda a, b: F.concat(a, F.lit(" "), b))
+    return grams
 
 
 # BPE-ish pre-tokenizer: letter runs, digit runs, single other non-space —
@@ -355,20 +374,6 @@ def repetition_features(df: DataFrame, id_col: str = "doc_id",
                        .alias("top_token_share")))
 
 
-def _token_ngrams(text_col: str, n: int):
-    """Contiguous token n-grams as an in-row array (space-joined) —
-    zip_with over shifted slices, pure codegen, no shuffle to BUILD
-    grams (counting them is the explode→two-level agg below)."""
-    toks = _tokens(text_col)
-    size = F.size(toks)
-    grams = F.slice(toks, 1, F.greatest(size - (n - 1), F.lit(0)))
-    for off in range(1, n):
-        nxt = F.slice(toks, 1 + off, F.greatest(size - (n - 1), F.lit(0)))
-        grams = F.zip_with(grams, nxt,
-                           lambda a, b: F.concat(a, F.lit(" "), b))
-    return grams
-
-
 def dup_ngram_features(df: DataFrame, n: int = 2, id_col: str = "doc_id",
                        text_col: str = "text") -> DataFrame:
     """Within-document n-gram repetition rules (the Gopher/MassiveText
@@ -441,8 +446,8 @@ def cdc_chunk_documents(df: DataFrame, window: int = 4, divisor: int = 16,
     """
     require_columns(df, [id_col, text_col], "cdc_chunk_documents")
     # fan the narrow (id, text) projection out to full parallelism
-    # BEFORE the per-position window-hash folds (r14, the similarity.py
-    # _fan_out rule): the whole body below is MAP-ONLY interpreted-HOF
+    # BEFORE the per-position window-hash folds (r14, the schemas.fan_out
+    # rule): the whole body below is MAP-ONLY interpreted-HOF
     # arithmetic with no shuffle until the caller aggregates, so a
     # single-row-group parquet scan (1 partition) serializes all of it
     # onto one core.  Measured at sf0.1, interleaved min-of-3:
@@ -451,9 +456,7 @@ def cdc_chunk_documents(df: DataFrame, window: int = 4, divisor: int = 16,
     # exchange.  Contrast: winnow_fingerprints measured as a NO-GO for
     # the same treatment (its first consumer is already the doc-key
     # window shuffle, the r13 tokenize-stage rule).
-    narrow = (df.select(F.col(id_col), F.col(text_col))
-                .repartition(df.sparkSession.sparkContext
-                             .defaultParallelism))
+    narrow = fan_out(df.select(F.col(id_col), F.col(text_col)))
     staged = (narrow.select(F.col(id_col), _tokens(text_col).alias("__toks"))
                 .filter(F.size("__toks") > 0)
                 .withColumn("__n", F.size("__toks"))

@@ -57,6 +57,7 @@ from .operators import (
 from .pipeline.dedup import exact_dedup, ngram_jaccard_pairs
 from .pipeline.similarity import cosine_topk
 from .pipeline.text import language_id, quality_features
+from .schemas import fan_out
 from .sources.io import read_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -4045,9 +4046,7 @@ def q_near_dup_diff(spark, sf_dir):
     # partitions and the O(tokens²) SequenceMatcher runs serially (the
     # fan-out-before-CPU-bound-stage rule; interleaved min-of-3 at
     # sf0.1: 4.11 → 2.12s)
-    withtext = withtext.repartition(
-        spark.sparkContext.defaultParallelism)
-    return diff_summary(withtext)
+    return diff_summary(fan_out(withtext))
 
 
 def q_grid_nearest(spark, sf_dir):
@@ -4200,10 +4199,9 @@ def q_minhash_oph(spark, sf_dir):
     HASH-VERIFIED slot by slot: the DuckDB oracle rebuilds bins,
     rotation distances, and densification offsets exactly; exploding
     to (doc_id, slot, value) verifies the ENTIRE algorithm including
-    the empty-bin borrow logic on every short document.  Measured
-    adjudication (r13): the classic staged-fold path stays the
-    throughput default — see minhash_oph_signatures' docstring for
-    the numbers and the row-cost argument."""
+    the empty-bin borrow logic on every short document.  One Arrow
+    stage on the shared shingle-hash kernel (SCALE.md, "One
+    shingle-hash kernel", has its history and timings)."""
     from .pipeline.dedup import minhash_oph_signatures
     sig = minhash_oph_signatures(_t(spark, sf_dir, "documents"))
     return sig.select("doc_id",

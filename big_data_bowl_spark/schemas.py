@@ -47,6 +47,17 @@ def require_columns(df: DataFrame, cols: list[str], caller: str = "operator") ->
 ARROW_ROWS_FLOOR = 256
 
 
+def fan_out(df: DataFrame) -> DataFrame:
+    """Repartition to full parallelism BEFORE a CPU-bound map stage.  A
+    single-row-group parquet scan or a localCheckpoint arrives in 1-2
+    partitions no matter what maxPartitionBytes says, so every map stage
+    downstream of it would run on 1-2 cores (SCALE.md r13/r14 has the
+    measured wins).  One narrow shuffle; at cluster scale scans arrive
+    pre-parallel and this is a cheap exchange.  The only reader of
+    ``defaultParallelism`` besides :func:`arrow_fanout`."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
 def arrow_fanout(df: DataFrame, rows_floor: int = ARROW_ROWS_FLOOR) -> DataFrame:
     """Repartition a narrow projection ahead of a ``mapInPandas`` stage,
     with the partition count BOUNDED BY INPUT SIZE:

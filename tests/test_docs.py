@@ -137,3 +137,16 @@ def test_loop_pins_only_in_fixpoint_driver():
     assert not bad, f"pins inside loop bodies (use fixpoint.iterate): {bad}"
     assert {f[:2] for f in found} >= set(_LOOP_PIN_EXEMPT), \
         "an exempt loop no longer pins: drop it from _LOOP_PIN_EXEMPT"
+
+
+def test_default_parallelism_read_only_in_schemas():
+    """The fan-out policy lives in ``schemas.py`` (``fan_out`` and the
+    size-bounded ``arrow_fanout``): no other package module reads
+    ``defaultParallelism`` to size a repartition by hand."""
+    import glob
+
+    pkg = f"{REPO}/big_data_bowl_spark"
+    readers = sorted(p[len(pkg) + 1:] for p in glob.glob(
+        f"{pkg}/**/*.py", recursive=True)
+        if "defaultParallelism" in open(p).read())
+    assert readers == ["schemas.py"], readers

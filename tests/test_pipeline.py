@@ -65,12 +65,13 @@ def test_minhash_near_dup_detected(spark, pairs_fn):
     assert pairs and pairs[0].est_jaccard > 0.5
 
 
-def _oph_reference(text: str, n_bins: int = 32) -> list[int]:
+def _oph_reference(text: str | None, n_bins: int = 32) -> list[int]:
     """Pure-Python twin of minhash_oph_signatures: the same
     unfiltered split, 3-word shingles, polynomial char hash, h mod B
-    binning, and rotation densification with the 2^31 offset stride."""
+    binning, and rotation densification with the 2^31 offset stride.
+    A null text hashes like ""."""
     P = 1_000_000_007
-    words = text.split(" ")
+    words = (text or "").split(" ")
     n_sh = max(len(words) - 2, 1)
     shingles = [" ".join(words[i:i + 3]) for i in range(n_sh)]
 
@@ -96,16 +97,18 @@ def test_oph_signature_matches_python_reference(spark):
     """Engine OPH signatures ≡ the independent Python reference on a
     corpus that exercises every densification regime: long docs (all
     bins filled), a single-shingle doc (1 non-empty bin, 31 borrows),
-    double-space tokens, and the empty string (one empty shingle →
-    bare seed hash)."""
+    double-space tokens, the empty string (one empty shingle → bare
+    seed hash), and the adversarial corpus (null, whitespace-only,
+    combining and astral characters)."""
     import random
     rng = random.Random(13)
     pool = [f"tok{i}" for i in range(400)]
     texts = [" ".join(rng.choices(pool, k=rng.randint(1, 120)))
              for _ in range(20)]
     texts += ["a b", "", "one  two   three", "solo"]
-    docs = spark.createDataFrame(
-        [Row(doc_id=i, text=t) for i, t in enumerate(texts)])
+    texts += [t for _, t in _ADVERSARIAL_DOCS]
+    docs = spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id long, text string")
     got = {r.doc_id: list(r.sig)
            for r in minhash_oph_signatures(docs).collect()}
     for i, t in enumerate(texts):
@@ -3346,7 +3349,7 @@ def test_jaccard_array_path_positional_filter_equals_bruteforce(spark):
 # r14 Arrow-stage bit-identity pins: the vectorized numpy twins must equal
 # the interpreted expression forms they replaced, slot for slot / row for
 # row, on an adversarial corpus (empty docs, multi-space runs, 1-2-word
-# docs, non-ASCII BMP, astral emoji, long docs)
+# docs, non-ASCII BMP, astral emoji, combining marks, long docs, null)
 # ---------------------------------------------------------------------------
 
 _ADVERSARIAL_DOCS = [
@@ -3361,18 +3364,19 @@ _ADVERSARIAL_DOCS = [
     (8, "emoji \U0001F600 tail words here"),
     (9, "x " * 50 + "y"),
     (10, None),
+    (11, "cafe\u0301 an\u0303o \u0915\u094d\u0937a"),   # combining marks
 ]
 
 
 def test_neutral_sig_arrow_equals_expression_form(spark):
-    """_neutral_minhash_sigs_arrow (the r14 vectorized signature stage)
+    """_minhash_sigs_arrow (the vectorized signature stage)
     must reproduce the interpreted-HOF form bit-for-bit, in BOTH split
     variants (minhash_neutral_pairs drops empty tokens,
     shingle_base_hashes keeps them)."""
     from big_data_bowl_spark.pipeline.dedup import (
         _MH_PRIME,
         _mh_coeffs,
-        _neutral_minhash_sigs_arrow,
+        _minhash_sigs_arrow,
         minhash_slots,
         shingle_base_hashes,
     )
@@ -3399,8 +3403,8 @@ def test_neutral_sig_arrow_equals_expression_form(spark):
                                      % _MH_PRIME))
                      for a, b in _mh_coeffs(32)]).alias("sig")))
     for drop_empty, jvm in ((False, jvm_u), (True, jvm_f)):
-        arrow = _neutral_minhash_sigs_arrow(docs, "doc_id", "text", 32, 3,
-                                            drop_empty_words=drop_empty)
+        arrow = _minhash_sigs_arrow(docs, "doc_id", "text", 32, 3,
+                                    drop_empty_words=drop_empty)
         got = {r["doc_id"]: list(r["sig"]) for r in arrow.collect()}
         want = {r["doc_id"]: list(r["sig"]) for r in jvm.collect()}
         assert got == want, f"drop_empty_words={drop_empty}"
@@ -3439,7 +3443,7 @@ def test_simhash_neutral_arrow_equals_expression_form(spark):
     )
 
     docs = spark.createDataFrame(
-        _ADVERSARIAL_DOCS + [(11, ""), (12, "   ")],
+        _ADVERSARIAL_DOCS + [(12, ""), (13, "   ")],
         "doc_id long, text string")
     bits = 60
     staged = docs.withColumn(
@@ -3471,6 +3475,45 @@ def test_simhash_neutral_arrow_equals_expression_form(spark):
         "band3").collect()))
     got = sorted(map(tuple, simhash_neutral(docs).collect()))
     assert got == want, (got, want)
+
+
+def test_text_hash_kernels_memory_bound():
+    """The text-hash kernels stay O(tokens) in memory on ONE ~1M-token
+    document (the long-document shape of the adversarial harness): each
+    peaks below 400 MiB under tracemalloc, driver-side.  A
+    (tokens × 60) int64 vote matrix alone is 458 MiB at this size, so
+    the bound fails any such matrix.  SCALE.md records the measured
+    peaks."""
+    import tracemalloc
+
+    import pandas as pd
+
+    from big_data_bowl_spark.pipeline.dedup import (
+        _shingle_hashes,
+        _simhash_fingerprints,
+    )
+
+    n_tok = 1_000_000
+    doc = " ".join(f"w{(i * 7919) % 50_000}" for i in range(n_tok))
+    bound = 400 << 20
+    for name, run in (
+            ("_simhash_fingerprints",
+             lambda: _simhash_fingerprints([doc, None])),
+            ("_shingle_hashes",
+             lambda: _shingle_hashes([doc, None], 3, False))):
+        tracemalloc.start()
+        try:
+            out = run()
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < bound, f"{name}: peak {peak >> 20} MiB"
+        if name == "_simhash_fingerprints":
+            assert not pd.isna(out[0]) and pd.isna(out[1])
+        else:
+            # the doc's n_tok − 2 shingles, then the null doc's one
+            assert len(out[0]) == n_tok - 1
+            assert list(out[1]) == [0, n_tok - 2]
 
 
 def test_shingle_set_intersection_equals_row_join_form(spark):
