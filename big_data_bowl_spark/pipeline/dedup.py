@@ -1361,10 +1361,11 @@ def simhash_neutral_pairs(df: DataFrame, max_hamming: int = 4,
     docs sharing any of the 4 15-bit bands become candidates (band
     equi-join — the pigeonhole guarantee: two 60-bit fingerprints within
     Hamming distance 3 must agree on at least one band; larger
-    ``max_hamming`` trades recall like any LSH), then the exact Hamming
+    ``max_hamming`` trades recall like any LSH).  The exact Hamming
     distance over the full fingerprint (bit_count of XOR — pure integer,
-    so the DuckDB oracle reproduces pairs bit-for-bit) keeps pairs at or
-    under the threshold.
+    so the DuckDB oracle reproduces pairs bit-for-bit) is part of the
+    join condition, so only pairs at or under the threshold reach the
+    pair dedup.
 
     Scale shape: the band join carries (id, fingerprint) only; candidate
     fan-out is bounded by band-bucket occupancy exactly like the MinHash
@@ -1377,20 +1378,18 @@ def simhash_neutral_pairs(df: DataFrame, max_hamming: int = 4,
         F.col(id_col), "simhash",
         F.posexplode(F.array(*[F.col(f"band{k}")
                                for k in range(4)])).alias("band", "bval"))
-    cand = (banded.alias("a")
+    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+    # hamming is a function of the pair, so distinct() is the pair dedup
+    return (banded.alias("a")
             .join(banded.alias("b"),
                   (F.col("a.band") == F.col("b.band"))
                   & (F.col("a.bval") == F.col("b.bval"))
-                  & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+                  & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+                  & (ham <= max_hamming))
             .select(F.col(f"a.{id_col}").alias("doc_a"),
                     F.col(f"b.{id_col}").alias("doc_b"),
-                    F.col("a.simhash").alias("__fa"),
-                    F.col("b.simhash").alias("__fb"))
-            .dropDuplicates(["doc_a", "doc_b"]))
-    ham = F.bit_count(F.col("__fa").bitwiseXOR(F.col("__fb"))).cast("long")
-    return (cand.withColumn("hamming", ham)
-                .filter(F.col("hamming") <= max_hamming)
-                .select("doc_a", "doc_b", "hamming"))
+                    ham.cast("long").alias("hamming"))
+            .distinct())
 
 
 def minhash_audience_signatures(df: DataFrame, group: list[str],

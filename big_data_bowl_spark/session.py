@@ -9,6 +9,11 @@ chosen for a multi-executor cluster and merely *tested* on local[N]:
   overridden (or left to AQE with a high initial value).
 - Arrow on: every pandas-UDF boundary (sequence model inference, multimodal
   decode) moves batches, not rows.
+- One Parquet storage format for every writer (staging, layout, shards,
+  streaming sinks): zstd pages, v2 data pages (DELTA_BINARY_PACKED,
+  DELTA_BYTE_ARRAY, RLE_DICTIONARY encodings) and INT64 TIMESTAMP_MICROS
+  timestamps, whose min/max statistics let timestamp range scans prune
+  (legacy INT96 carries none).  No writer passes its own codec.
 """
 
 from __future__ import annotations
@@ -19,6 +24,20 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+# The Parquet storage format every writer inherits.  Each key is set on
+# the session after getOrCreate, so it also holds when that returns a live
+# session: the session conf is copied into each write's Hadoop conf, which
+# is why the parquet-mr keys are un-prefixed (a spark.hadoop.* key is read
+# only when the context starts).  The buffer pool lets zstd reuse its
+# compression buffers instead of allocating them per column chunk; zstd
+# stays at its default level (SCALE.md, "One storage format").
+PARQUET_FORMAT = {
+    "spark.sql.parquet.compression.codec": "zstd",
+    "parquet.compression.codec.zstd.bufferPool.enabled": "true",
+    "parquet.writer.version": "PARQUET_2_0",
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+}
 
 
 def build_session(app_name: str = "big_data_bowl_spark",
@@ -58,4 +77,7 @@ def build_session(app_name: str = "big_data_bowl_spark",
         builder = builder.master(master)
     elif not SparkSession.getActiveSession():
         builder = builder.master(f"local[{DEFAULT_CPUS}]")
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    for key, value in PARQUET_FORMAT.items():
+        spark.conf.set(key, value)
+    return spark

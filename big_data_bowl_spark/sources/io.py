@@ -10,6 +10,11 @@ all three steps collapse into declarative equivalents:
 - S3: materialize-if-missing becomes a write-once Parquet staging table
   (``mode("ignore")``) — columnar, splittable, statistics-bearing; at 100 TB
   this is the difference between re-parsing CSV per run and pruned scans.
+  Every writer here inherits the session's one storage format
+  (``session.build_session``): zstd pages, v2 data pages, and timestamps
+  as INT64 TIMESTAMP_MICROS.  The INT64 form is what makes timestamp keys
+  statistics-bearing: Spark's default, legacy INT96, carries no min/max
+  statistics, so a timestamp range filter would read every row group.
 - S4: the three-table loader becomes a named catalog of temp views.
 """
 
@@ -207,7 +212,9 @@ def stage_sorted(df: DataFrame, path: str, range_cols: list[str],
     file/row-group, and any range predicate on the key skips every file
     outside its span — the single-dimension cousin of Z-ordering, free in
     stock Spark.  Use for time-range-scanned event tables (the 100 TB
-    access pattern behind W1–W5)."""
+    access pattern behind W1–W5).  Timestamp keys prune because the
+    session writes them as INT64 TIMESTAMP_MICROS, which carries min/max
+    statistics; legacy INT96 carried none, so the scan read every row."""
     (df.repartitionByRange(n_files, *[F.col(c) for c in range_cols])
        .sortWithinPartitions(*range_cols)
        .write.mode(mode).parquet(path))

@@ -148,17 +148,7 @@ def with_hilbert(df: DataFrame, col_x: str, col_y: str,
     else:
         cur = (df.withColumn("__hx", F.col(col_x).cast("long"))
                  .withColumn("__hy", F.col(col_y).cast("long")))
-    # r15 (guide §4.2, the r14 fixed-overhead finding): the 2·bits
-    # staged reflect/swap projections cost ~0.8s at sf0.1 AND sf0.01 —
-    # fixed whole-stage-codegen compile overhead of the fused 16-stage
-    # pass, not data.  The rounds move to ONE vectorized pandas UDF
-    # over exactly the two normalized long columns (carry columns never
-    # cross the Python boundary — an ArrowEvalPython of (hx, hy) →
-    # hval, §4.1 "pass only the columns the function needs").  Pure
-    # int64 reflect/swap arithmetic — equal to the Python reference
-    # (pinned by test_with_hilbert_matches_python_reference; the SQL
-    # oracle still mirrors the same rounds as CTE stages).  Rounds
-    # stage 0.76→~0.2s; q_hilbert_values ~1.2→~0.6s.
+    # Rounds: one pandas UDF over (hx, hy); see SCALE.md "Hilbert UDF".
     @pandas_udf("long")
     def _hval(hx: pd.Series, hy: pd.Series) -> pd.Series:
         import numpy as np

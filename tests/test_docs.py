@@ -150,3 +150,19 @@ def test_default_parallelism_read_only_in_schemas():
         f"{pkg}/**/*.py", recursive=True)
         if "defaultParallelism" in open(p).read())
     assert readers == ["schemas.py"], readers
+
+
+def test_parquet_format_set_only_in_session():
+    """The Parquet storage format (codec, page version, timestamp type)
+    is set once, in ``session.build_session``: no other package module
+    names a compression option, ``outputTimestampType`` or
+    ``parquet.writer.version``, so every writer inherits one format."""
+    import glob
+
+    pkg = f"{REPO}/big_data_bowl_spark"
+    pat = re.compile(
+        r"compression|outputTimestampType|parquet\.writer\.version")
+    setters = sorted(p[len(pkg) + 1:] for p in glob.glob(
+        f"{pkg}/**/*.py", recursive=True)
+        if pat.search(open(p).read()))
+    assert setters == ["session.py"], setters

@@ -21,7 +21,7 @@ from big_data_bowl_spark.plans import (
 )
 from big_data_bowl_spark.queries import QUERIES
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_MEDIUM, SF_SMALL
 
 
 def _q(spark, name: str):
@@ -285,6 +285,57 @@ def test_stage_sorted_files_own_disjoint_ranges(spark, tmp_path):
     for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
         assert hi1 < lo2, spans  # disjoint, ordered ranges
     assert spark.read.parquet(path).count() == e.count()
+
+
+def test_stage_sorted_timestamp_range_scan_prunes(spark, tmp_path):
+    """A range predicate on a ``stage_sorted`` timestamp key skips row
+    groups: the session writes INT64 TIMESTAMP_MICROS, whose min/max
+    statistics the scan prunes on.  Legacy INT96 carries none, so the
+    scan would read every row."""
+    from big_data_bowl_spark.sources.io import read_table, stage_sorted
+
+    e = read_table(spark, SF_MEDIUM, "events")
+    path = str(tmp_path / "ts_sorted_events")
+    stage_sorted(e, path, ["ts"], n_files=8)
+    lo, hi = e.agg(F.min("ts"), F.max("ts")).first()
+    early = F.col("ts") < F.lit(lo + (hi - lo) / 20)
+    staged = spark.read.parquet(path).filter(early).select("ts")
+    got = len(staged.collect())
+    assert got == e.filter(early).count() and got > 0
+    scan = staged._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
+    assert "parquet" in scan.nodeName().lower(), scan.nodeName()
+    scanned = scan.metrics().apply("numOutputRows").value()
+    assert scanned < e.count() / 2, (scanned, e.count())
+
+
+def test_staged_parquet_format(spark, tmp_path):
+    """Every staged file is in the session's storage format: zstd column
+    chunks, v2 data-page encodings, and ``ts`` as INT64
+    TIMESTAMP(MICROS) rather than legacy INT96."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from big_data_bowl_spark.sources.io import read_table, stage_parquet
+
+    path = str(tmp_path / "staged_events")
+    stage_parquet(read_table(spark, SF_SMALL, "events"), path)
+    files = glob.glob(path + "/*.parquet")
+    assert files
+    encodings = set()
+    for f in files:
+        pf = pq.ParquetFile(f)
+        ts = pf.schema.column(pf.schema.names.index("ts"))
+        assert ts.physical_type == "INT64", ts
+        assert str(ts.logical_type).startswith("Timestamp") \
+            and "microseconds" in str(ts.logical_type), ts.logical_type
+        md = pf.metadata
+        for g in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                chunk = md.row_group(g).column(c)
+                assert chunk.compression == "ZSTD", chunk
+                encodings.update(chunk.encodings)
+    assert "DELTA_BINARY_PACKED" in encodings, encodings
 
 
 def test_zscore_no_whole_partition_window(spark):
