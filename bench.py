@@ -502,9 +502,8 @@ HEADLINE = [
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from big_data_bowl_spark.queries import QUERIES
+    from big_data_bowl_spark.session import build_session
 
     # validate SPARK_GRAFT_ONLY before ANY Spark work (r12, ADVICE): a
     # typo used to silently yield an empty timed set and a detail file
@@ -520,19 +519,7 @@ def main() -> None:
                 f"registry: {sorted(unknown)}\n")
             sys.exit(2)
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("bdb-bench")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.sql.optimizer.excludedRules",
-                "org.apache.spark.sql.catalyst.optimizer."
-                "InferFiltersFromGenerate")  # r13: see session.py
-        .getOrCreate())
+    spark = build_session("bdb-bench", f"local[{CPUS}]", int(CPUS))
     spark.sparkContext.setLogLevel("ERROR")
 
     def force(df):

@@ -10,6 +10,7 @@ pandas-UDF boundary for sequence-model inference.
 Layout
 ------
 - ``session``    : tuned SparkSession builder (AQE, shuffle partitions, Arrow)
+                   and ``configure``, the one engine configuration
 - ``schemas``    : explicit StructTypes for every table (no inferred schemas)
 - ``sources``    : readers/writers — parquet catalog, csv glob union, staging
 - ``functions``  : scalar expression helpers (SURVEY §2.8 F1–F19)

@@ -128,27 +128,17 @@ def lsh_bucketed_topk(df: DataFrame, query_ids: list[int], k: int = 3,
     Approximate → no SQL oracle; containment + measured-recall tested.
     """
     require_columns(df, [id_col, vec_col], "lsh_bucketed_topk")
-    # r15: the fan-out feeds a mapInPandas stage, so its partition count
-    # is bounded by input size (see arrow_fanout: Python-worker spin-up
-    # floor dominates on tiny inputs; full parallelism at scale).
+    # The fan-out feeds a mapInPandas stage, so arrow_fanout bounds its
+    # partition count by input size.
     vecs = arrow_fanout(df.select(F.col(id_col),
                                   _as_double(F.col(vec_col)).alias("v")))
     id_type = dict(vecs.dtypes)[id_col]
 
-    # The 96 sign-bit projections are a (n_tables·n_planes)×dim constant
-    # matrix against every vector.  As JVM expressions this was a
-    # 6,144-node interpreted-HOF tree whose cost was FIXED overhead, not
-    # data: measured 3.2s at sf0.1 (2,000 vectors) and 4.2s at sf0.01
-    # (200 vectors) for the stage alone.  r14 moves the stage to a
-    # vectorized Arrow batch (optimization-guide §4.2): weights come
-    # from Spark's own xxhash64 via _lsh_plane_weights (bit-identical),
-    # and the accumulation loops over dim IN ASCENDING i ORDER — acc +=
-    # v[i]·w[i], the exact fold order of the expression form, so every
-    # projection is the same IEEE double and every bucket bit matches
-    # (exceptAll-verified 0/0 at sf0.1).  Stage: 3.2s → 0.47s (~7×).
-    # A constant-literal weight array in the JVM fold was re-measured as
-    # a NO-GO in a second form this round: 96 copies of a 6,144-double
-    # literal OOM'd the executor heap (r13's 84s plan-explosion no-go).
+    # The sign-bit projections run as one vectorized Arrow batch over
+    # weights from Spark's own xxhash64 (_lsh_plane_weights).  The
+    # accumulation folds dim in ascending i order, the fold order of the
+    # expression form, so every projection is the same IEEE double and
+    # every bucket bit is identical.  History: SCALE.md, "LSH Arrow stage".
     weights = _lsh_plane_weights(df.sparkSession, seed, n_tables,
                                  n_planes, dim)
 

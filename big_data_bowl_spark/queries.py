@@ -20,7 +20,6 @@ Hash-stability conventions (SURVEY §7.5 risks 4/5):
 
 from __future__ import annotations
 
-import weakref
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -63,47 +62,13 @@ from .sources.io import read_table
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
-_EXCLUDED_RULE = ("org.apache.spark.sql.catalyst.optimizer."
-                  "InferFiltersFromGenerate")
-# sessions already tuned, so _t() pays the py4j conf round-trip once per
-# session instead of on every table read (r13 ADVICE: the old
-# unconditional set also CLOBBERED any exclusions the driver's own
-# session carried — now the rule is appended to whatever is there).
-# WeakSet, not id()-keyed: a stopped session's id can be reused.
-_TUNED_SESSIONS: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
-
-
-def _ensure_generate_rule_excluded(spark: SparkSession) -> None:
-    # Engine-level optimizer tuning applied to WHATEVER session runs the
-    # registry (the external driver builds its own): excludedRules is a
-    # runtime-settable SQL conf, and InferFiltersFromGenerate is pure
-    # cost for this workload — it duplicates every exploded
-    # gram/shingle/token array expression into a size(e) > 0 filter and
-    # pushes it below repartitions (measured: q_span_dedup 5.5s → 2.3s
-    # at sf0.1, r13; rationale in session.py).  Semantics-preserving by
-    # the optimizer-rule contract.
-    if spark in _TUNED_SESSIONS:
-        return
-    current = spark.conf.get("spark.sql.optimizer.excludedRules", None)
-    rules = [r.strip() for r in (current or "").split(",") if r.strip()]
-    if _EXCLUDED_RULE not in rules:
-        rules.append(_EXCLUDED_RULE)
-        spark.conf.set("spark.sql.optimizer.excludedRules", ",".join(rules))
-    _TUNED_SESSIONS.add(spark)
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    _ensure_generate_rule_excluded(spark)
-    return read_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # P-family: projections / filters / predicates
 # ---------------------------------------------------------------------------
 
 def q_filter_project(spark, sf_dir):
     """P1+P2+P5: conjunctive filter + projection, pushed to the parquet scan."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (li.filter((F.col("l_returnflag") == "R") & (F.col("l_quantity") > 25))
               .select("l_orderkey", "l_linenumber", "l_quantity",
                       roundn(F.col("l_extendedprice")).alias("l_extendedprice")))
@@ -111,7 +76,7 @@ def q_filter_project(spark, sf_dir):
 
 def q_case_norm_filter(spark, sf_dir):
     """P3: case-normalized equality (str.lower().eq, preprocess.py:296-298)."""
-    c = _t(spark, sf_dir, "customer")
+    c = read_table(spark, sf_dir, "customer")
     return (c.filter(F.lower(F.col("c_mktsegment")) == "building")
              .select("c_custkey", "c_name",
                      F.upper(F.col("c_mktsegment")).alias("segment")))
@@ -119,14 +84,14 @@ def q_case_norm_filter(spark, sf_dir):
 
 def q_set_membership(spark, sf_dir):
     """P4: junk-route-style anti-membership filter (~isin)."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     return (e.filter(~F.col("event_type").isin("error", "signup"))
              .select("event_id", "user_id", "event_type"))
 
 
 def q_null_range_filter(spark, sf_dir):
     """P6+P7+P9: dropna + range predicate + coerce-cast on the JSON props."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     k = F.get_json_object(F.col("props"), "$.k").cast("long")
     return (e.withColumn("k", k)
              .filter(F.col("value").isNotNull() & (F.col("value") > 100.0))
@@ -141,9 +106,9 @@ def q_null_range_filter(spark, sf_dir):
 def q_label_attach(spark, sf_dir):
     """J1: exact-key inner label attach (lineitem ⋈ orders), facts keep their
     grain; orders side is the smaller input → broadcast by Catalyst/AQE."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus",
-                                           "o_totalprice")
+    li = read_table(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice")
     return (li.join(o, li.l_orderkey == o.o_orderkey, "inner")
               .select("l_orderkey", "l_linenumber", "o_orderstatus",
                       roundn(F.col("o_totalprice")).alias("o_totalprice")))
@@ -152,10 +117,10 @@ def q_label_attach(spark, sf_dir):
 def q_semi_join(spark, sf_dir):
     """J3: left-semi — orders whose customer sits in region AMERICA
     (the reference's dedup-then-inner-merge emulation, preprocess.py:302-327)."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
+    o = read_table(spark, sf_dir, "orders")
+    c = read_table(spark, sf_dir, "customer")
+    n = read_table(spark, sf_dir, "nation")
+    r = read_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
     keys = (c.join(n, c.c_nationkey == n.n_nationkey)
              .join(r, n.n_regionkey == r.r_regionkey)
              .select(F.col("c_custkey").alias("o_custkey")))
@@ -167,8 +132,8 @@ def q_semi_join(spark, sf_dir):
 def q_enrich_left(spark, sf_dir):
     """J4: left enrichment join + fillna (merge_route_embeddings shape):
     per-user event totals left-joined back onto customers, missing → 0."""
-    c = _t(spark, sf_dir, "customer")
-    e = _t(spark, sf_dir, "events")
+    c = read_table(spark, sf_dir, "customer")
+    e = read_table(spark, sf_dir, "events")
     totals = e.groupBy(F.col("user_id").alias("c_custkey")) \
               .agg(F.sum("value").alias("total_value"))
     out = enrich_left(c.select("c_custkey", "c_name"), totals,
@@ -181,9 +146,9 @@ def q_nearest_in_group(spark, sf_dir):
     """J6+A9: within-group cross join → min distance.  Customers × suppliers
     per nation; nearest supplier by |acctbal difference| (the
     compute_catch_separation shape, preprocess.py:441-513)."""
-    c = _t(spark, sf_dir, "customer").select(
+    c = read_table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nationkey"), "c_custkey", "c_acctbal")
-    s = _t(spark, sf_dir, "supplier").select(
+    s = read_table(spark, sf_dir, "supplier").select(
         F.col("s_nationkey").alias("nationkey"), "s_acctbal")
     dist = F.abs(F.col("l.c_acctbal") - F.col("r.s_acctbal"))
     out = nearest_in_group(c, s, ["nationkey"], "c_custkey", dist,
@@ -213,7 +178,8 @@ def q_catch_separation(spark, sf_dir):
     (compute_catch_separation, preprocess.py:441-513) — filter to the
     designated frame, within-group cross join, min per offensive player."""
     from .operators.separation import separation_at_frame
-    t = _sep_tracking(_t(spark, sf_dir, "events")).filter(F.col("frame_id") == 3)
+    t = _sep_tracking(read_table(spark, sf_dir, "events")).filter(
+        F.col("frame_id") == 3)
     out = separation_at_frame(t, ["play_id"], "player_id", "side",
                               "offense", "defense")
     return out.select("play_id", "player_id",
@@ -225,7 +191,7 @@ def q_initial_separation(spark, sf_dir):
     the same within-group min (compute_initial_separation_at_throw,
     preprocess.py:330-402)."""
     from .operators.separation import separation_at_max_frame
-    t = _sep_tracking(_t(spark, sf_dir, "events"))
+    t = _sep_tracking(read_table(spark, sf_dir, "events"))
     out = separation_at_max_frame(t, ["play_id"], "player_id", "side",
                                   "offense", "defense")
     return out.select("play_id", "player_id",
@@ -238,7 +204,7 @@ def q_defender_sep_frame(spark, sf_dir):
     BDB_2026.ipynb#cell69) — the banned Python nested loop as one equi-join
     keyed one level deeper."""
     from .operators.separation import separation_at_frame
-    t = _sep_tracking(_t(spark, sf_dir, "events"))
+    t = _sep_tracking(read_table(spark, sf_dir, "events"))
     out = separation_at_frame(t, ["play_id"], "player_id", "side",
                               "offense", "defense", per_frame=True,
                               default=20.0)
@@ -253,7 +219,7 @@ def q_defender_sep_frame(spark, sf_dir):
 def q_frame_diff(spark, sf_dir):
     """W1+F1: lag-diff kinematics — per-user ordered value diff ≙ frame-to-
     frame speed (preprocess.py:125-127), first row filled 0."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     out = lag_diff(e, "value", ["user_id"], ["ts", "event_id"],
                    out="dvalue", fill=0.0)
     return out.select("event_id", "user_id", roundn(F.col("dvalue")).alias("dvalue"))
@@ -262,7 +228,7 @@ def q_frame_diff(spark, sf_dir):
 def q_converge_rate_lead(spark, sf_dir):
     """W3: notebook-dialect converge rate — value[t] − value[t+1], last
     row → 0 (BDB_2026.ipynb#cell80)."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     out = lead_diff(e, "value", ["user_id"], ["ts", "event_id"],
                     out="converge_rate", fill=0.0)
     return out.select("event_id", "user_id",
@@ -272,7 +238,7 @@ def q_converge_rate_lead(spark, sf_dir):
 def q_cum_index(spark, sf_dir):
     """W4+W5: cumcount within group + offset from group min
     (frame_since_throw / time_since_throw, preprocess.py:196-201)."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     out = cum_index(e, ["user_id"], ["ts", "event_id"], out="seq_idx")
     out = group_min_offset(out, "event_id", ["user_id"], out="id_offset")
     return out.select("event_id", "user_id", "seq_idx",
@@ -281,7 +247,7 @@ def q_cum_index(spark, sf_dir):
 
 def q_zscore_in_group(spark, sf_dir):
     """W6: within-group z-score, ddof=0, clipped ±3 (metrics.py:97-122)."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     out = zscore_in_group(e, "value", ["event_type"], out="z",
                           ddof=0, clip3=True)
     return out.select("event_id", "event_type", roundn(F.col("z")).alias("z"))
@@ -290,7 +256,7 @@ def q_zscore_in_group(spark, sf_dir):
 def q_rank_leaderboard(spark, sf_dir):
     """W7+O2+A1: leaderboard — mean value per user, competition-ranked desc
     (build_truespeed_scorecard rank, metrics.py:348)."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     # integer-cents mean (see cents()): engine-invariant before rounding
     vc = cents(F.col("value"))
     board = e.groupBy("user_id").agg(
@@ -304,7 +270,7 @@ def q_rank_leaderboard(spark, sf_dir):
 def q_argmax_frame(spark, sf_dir):
     """W8: rows at the per-group max ordering key (throw-frame selection,
     preprocess.py:366-373) — window filter, no join-back."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     out = argmax_rows(e, "event_id", ["user_id"])
     return out.select("user_id", "event_id", "event_type",
                       roundn(F.col("value")).alias("value"))
@@ -313,7 +279,7 @@ def q_argmax_frame(spark, sf_dir):
 def q_dedup_keep_last(spark, sf_dir):
     """W9: one row per (user, type), keeping latest by ts with explicit
     event_id tie-break (metrics.py:260-265; SURVEY risk 4)."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     out = dedup_keep_last(e, ["user_id", "event_type"], ["ts"],
                           tiebreak=["event_id"])
     return out.select("user_id", "event_type", "event_id",
@@ -323,7 +289,7 @@ def q_dedup_keep_last(spark, sf_dir):
 def q_topk_per_group(spark, sf_dir):
     """W10/O3: top-3 events per user by value (nlargest / top player per
     route, _inisghts.ipynb#cell3), event_id tie-break."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     out = topk_per_group(e, ["user_id"], ["value", "event_id"], k=3)
     return out.select("user_id", "event_id", roundn(F.col("value")).alias("value"))
 
@@ -335,7 +301,7 @@ def q_topk_per_group(spark, sf_dir):
 def q_tpch_q1(spark, sf_dir):
     """A1/A11 flagship: TPC-H Q1-shaped pricing summary — the multi-metric
     named aggregation block (metrics.py:296-322) on lineitem."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     # integer-cents pricing arithmetic (see cents()): price×(1−disc) and
     # ×(1+tax) become exact long products (2+2 and 2+2+2 decimals), so
     # every sum/avg below is engine- and partition-order-invariant even
@@ -360,7 +326,7 @@ def q_tpch_q1(spark, sf_dir):
 def q_trajectory_features(spark, sf_dir):
     """A3–A8 fused: the route-feature block (routes.py:34-172) over events —
     start/end/path-length/range/count per user in ONE groupBy pass."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     ts_s = F.col("ts").cast("double")
     e2 = e.withColumn("__t", ts_s)
     out = trajectory_features(e2, ["user_id"], "event_id",
@@ -379,7 +345,7 @@ def q_trajectory_features(spark, sf_dir):
 def q_group_stats(spark, sf_dir):
     """A5+A14: group summary incl. exact median (Spark `median` ==
     DuckDB quantile_cont 0.5; SURVEY §4.3 item 5)."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     out = group_stats(e, ["event_type"], "value", ddof=1)
     return out.select("event_type", roundn(F.col("mean")).alias("mean"),
                       roundn(F.col("max")).alias("max"),
@@ -391,7 +357,7 @@ def q_group_stats(spark, sf_dir):
 def q_quantiles(spark, sf_dir):
     """A14: exact quantile thresholds (tight/open q25/q75,
     BDB_2026.ipynb#cell71)."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     return e.groupBy("event_type").agg(
         roundn(F.percentile("value", F.lit(0.25))).alias("q25"),
         roundn(F.percentile("value", F.lit(0.75))).alias("q75"),
@@ -400,12 +366,12 @@ def q_quantiles(spark, sf_dir):
 
 def q_value_counts(spark, sf_dir):
     """A15: frequency table."""
-    return value_counts(_t(spark, sf_dir, "events"), "event_type")
+    return value_counts(read_table(spark, sf_dir, "events"), "event_type")
 
 
 def q_distinct_users(spark, sf_dir):
     """A12: distinct + per-group distinct-count (nunique)."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     return e.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("n_users"),
         F.count(F.lit(1)).alias("n_events"))
@@ -415,7 +381,7 @@ def q_scalar_threshold(spark, sf_dir):
     """A13+P7: global scalar agg feeding a filter — users with ≥50% of the
     max event count (the metrics.py:329-330 volume-threshold idiom), via a
     broadcast 1-row cross join (no driver round-trip)."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     counts = e.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     thresh = counts.agg((F.max("n") * 0.5).alias("__thr"))
     return (counts.crossJoin(F.broadcast(thresh))
@@ -426,7 +392,7 @@ def q_scalar_threshold(spark, sf_dir):
 def q_conditional_flags(spark, sf_dir):
     """A11+F11: boolean→int flag aggregation (is_explosive / is_successful,
     metrics.py:306-308): per user, share of purchases and big events."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     return e.groupBy("user_id").agg(
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
          .cast("long").alias("n_purchases"),
@@ -439,7 +405,7 @@ def q_conditional_flags(spark, sf_dir):
 def q_corr_trend(spark, sf_dir):
     """A18: Pearson r + OLS slope per group from covariance aggregates
     (np.polyfit deg=1, viz.py:431-436)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     out = ols_slope(li, ["l_returnflag"], "l_quantity", "l_extendedprice")
     return out.select("l_returnflag",
                       roundn(F.col("pearson_r")).alias("pearson_r"),
@@ -454,7 +420,7 @@ def q_corr_trend(spark, sf_dir):
 def q_minmax_norm(spark, sf_dir):
     """F10+A13: 0–100 min-max normalized per-user mean value
     (normalize_scores_to_100, metrics.py:129-137)."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     board = e.groupBy("user_id").agg(F.avg("value").alias("mv"))
     # global extrema via aggregate + 1-row broadcast crossJoin — a
     # whole-partition window would funnel the entity-grain board through
@@ -468,7 +434,7 @@ def q_minmax_norm(spark, sf_dir):
 def q_safe_div(spark, sf_dir):
     """F12: null-on-zero-denominator ratio (yards/target shape,
     metrics.py:321-322)."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     agg = e.groupBy("user_id").agg(
         F.sum("value").alias("total_value"),
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
@@ -482,7 +448,7 @@ def q_piecewise_score(spark, sf_dir):
     """F15: the AirPlayIQ piecewise hybrid expression
     (Phase3_Metrics.ipynb#cell18:237-260) as pure nested CASE arithmetic:
     wide-open branch (sep > 5 → ts + 0.05), else 0.8*ts*mult + 0.2*re."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     agg = e.groupBy("user_id").agg(F.avg("value").alias("ts"),
                                    F.stddev_pop("value").alias("re"),
                                    (F.avg("value") / 50.0).alias("sep"))
@@ -496,7 +462,7 @@ def q_scorecard(spark, sf_dir):
     """A11+W7+P7+F10 composite: the build_truespeed_scorecard pipeline
     (metrics.py:198-367) — process metrics + production metrics + volume
     threshold + 0-100 normalize + rank, one declarative plan."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     # integer-cents reductions (see cents()): engine-invariant mean/sum
     vc = cents(F.col("value"))
     board = e.groupBy("user_id").agg(
@@ -527,7 +493,7 @@ def q_scorecard(spark, sf_dir):
 
 def q_top_orders(spark, sf_dir):
     """O2: global top-N by score (nlargest, viz.py:449)."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     return (o.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey")).limit(20)
              .select("o_orderkey", "o_custkey",
                      roundn(F.col("o_totalprice")).alias("o_totalprice")))
@@ -537,7 +503,7 @@ def q_union_dedup(spark, sf_dir):
     """U1: union of two filtered slices + key-dedup (viz.py:597 exemplar
     union; weekly-shard concat data_io.py:38).  Overlapping slices make the
     dedup meaningful."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     hi = e.filter(F.col("value") > 150.0)
     err = e.filter(F.col("event_type") == "error")
     out = hi.unionByName(err).dropDuplicates(["event_id"])
@@ -556,7 +522,7 @@ def q_sequence_build(spark, sf_dir):
     """T1: per-user ordered, last-N, padded sequence (build_sequences,
     sequences.py:21-88) — emitted as a comma-joined string of rounded values
     so the DuckDB oracle can hash-match the tensor content exactly."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     seq = build_sequences(e, ["user_id"], "event_id", ["value"],
                           max_len=SEQ_LEN, keep="last")
     flat = F.transform(F.col("seq"),
@@ -570,7 +536,7 @@ def q_unpivot_sequences(spark, sf_dir):
     table (Submission.ipynb#cell7), padded steps dropped.  'pred' here is a
     deterministic stand-in (value shifted by the per-user mean) so the
     oracle can reproduce it."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id")
     e2 = (e.withColumn("pred", F.avg("value").over(w))
            .withColumn("actual", F.col("value")))
@@ -595,21 +561,21 @@ def q_unpivot_sequences(spark, sf_dir):
 
 def q_dedup_exact(spark, sf_dir):
     """Exact dedup via content hash: canonical doc id per md5(text)."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return exact_dedup(d, text_col="text", id_col="doc_id")
 
 
 def q_text_quality(spark, sf_dir):
     """Text quality features: char/token counts, stopword & punctuation
     ratios, mean token length — all native expressions."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return quality_features(d)
 
 
 def q_language_id(spark, sf_dir):
     """Heuristic language ID from stopword hit counts (n-gram heuristic
     class); deterministic, SQL-expressible."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return language_id(d)
 
 
@@ -617,7 +583,7 @@ def q_ngram_jaccard(spark, sf_dir):
     """Near-dup candidate pairs: token-set Jaccard ≥ 0.5 between documents
     of the same source (token-sorted-join shape: explode → join on token →
     count intersection — the shuffle-friendly set-similarity plan)."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return ngram_jaccard_pairs(d, threshold=0.5)
 
 
@@ -627,7 +593,7 @@ def q_dup_components(spark, sf_dir):
     twin computes the same fixpoint with a recursive CTE — an exact check
     on a genuinely iterative distributed algorithm."""
     from .pipeline.dedup import duplicate_components, ngram_jaccard_pairs
-    pairs = ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.5)
+    pairs = ngram_jaccard_pairs(read_table(spark, sf_dir, "documents"), threshold=0.5)
     return duplicate_components(pairs)
 
 
@@ -638,7 +604,7 @@ def q_containment(spark, sf_dir):
     Same bucketed candidate plan as q_ngram_jaccard; only the bounded
     probe-side size table broadcasts."""
     from .pipeline.dedup import containment_pairs
-    return containment_pairs(_t(spark, sf_dir, "documents"),
+    return containment_pairs(read_table(spark, sf_dir, "documents"),
                              threshold=0.8)
 
 
@@ -650,7 +616,7 @@ def q_winnow_pairs(spark, sf_dir):
     with q_span_dedup: the gram index ships EVERY gram; winnowing ships
     ~2/(w+1) of them with the ≥ w+k−1 shared-run detection guarantee."""
     from .pipeline.text import winnow_pairs
-    return winnow_pairs(_t(spark, sf_dir, "documents"))
+    return winnow_pairs(read_table(spark, sf_dir, "documents"))
 
 
 def q_leakage_split(spark, sf_dir):
@@ -665,7 +631,7 @@ def q_leakage_split(spark, sf_dir):
     for oracle parity (q_group_split discipline); the library crc32
     hasher is property-tested."""
     from .pipeline.dedup import duplicate_components, ngram_jaccard_pairs
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     pairs = (ngram_jaccard_pairs(d, threshold=0.5)
              .select("doc_a", "doc_b")
              .localCheckpoint(eager=True))  # reused by components AND leak audit
@@ -697,7 +663,7 @@ def q_decontaminate(spark, sf_dir):
     is too short/random for that — 2-grams exercise the same plan.)
     Benchmark n-gram set broadcasts; one count shuffle."""
     from .pipeline.decontam import ngram_contamination
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     benchmark = d.filter(F.col("doc_id") % 97 == 0)
     corpus = d.filter(F.col("doc_id") % 97 != 0)
     return ngram_contamination(corpus, benchmark, n=2, min_overlap=5)
@@ -709,7 +675,7 @@ def q_heavy_hitters(spark, sf_dir):
     map-side (est ≥ true ⇒ lossless), only candidates reach the exact
     count shuffle.  Result is exact — plain GROUP BY/HAVING oracle."""
     from .operators.sketches import cms_heavy_hitters
-    l = _t(spark, sf_dir, "lineitem")
+    l = read_table(spark, sf_dir, "lineitem")
     return (cms_heavy_hitters(l, "l_partkey", min_count=40)
             .select(F.col("l_partkey"), F.col("n")))
 
@@ -721,8 +687,8 @@ def q_bloom_semi_join(spark, sf_dir):
     are removed by the final semi-join, so the result is EXACT — the
     oracle is the plain IN-subquery."""
     from .operators.joins import bloom_semi_join
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
+    l = read_table(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders")
     keys = (o.filter(F.col("o_totalprice") > 450000)
              .select(F.col("o_orderkey").alias("l_orderkey")))
     kept = bloom_semi_join(l, keys, "l_orderkey")
@@ -738,7 +704,7 @@ def q_zorder_values(spark, sf_dir):
     arithmetic — exact DuckDB oracle twin; the pruning effect itself is
     pinned by the layout locality test."""
     from .sources.layout import with_zorder
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     base = e.select("event_id", "user_id",
                     F.unix_timestamp("ts").alias("__ep"))
     return (with_zorder(base, "user_id", "__ep", bits=16)
@@ -753,7 +719,7 @@ def q_minhash_incremental(spark, sf_dir):
     rebuilds both the stored index and the batch probe in SQL); the
     cross-batch match ≡ batch-mode equivalence is property-tested."""
     from .pipeline.dedup import minhash_lsh_match, minhash_signatures
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     index = minhash_signatures(d.filter(F.col("doc_id") % 7 != 0))
     batch = d.filter(F.col("doc_id") % 7 == 0)
     return minhash_lsh_match(batch, index, min_est_jaccard=0.5)
@@ -767,7 +733,7 @@ def q_embed_dup(spark, sf_dir):
     oracle is EXACT because blocking is on a stored column, not an
     engine-specific hash."""
     from .pipeline.dedup import embedding_dup_pairs
-    em = _t(spark, sf_dir, "embeddings")
+    em = read_table(spark, sf_dir, "embeddings")
     return embedding_dup_pairs(em, threshold=0.25)
 
 
@@ -783,7 +749,7 @@ def q_pq_topk(spark, sf_dir):
     and prototype-exactness are property-tested besides, and xxhash64
     stays the library default."""
     from .pipeline.similarity import pq_codebooks, pq_encode, pq_topk_adc
-    em = _t(spark, sf_dir, "embeddings")
+    em = read_table(spark, sf_dir, "embeddings")
     books = pq_codebooks(em, m=8, k=16, iters=2, train_frac=0.25,
                          neutral=True)
     codes = pq_encode(em, books, m=8)
@@ -795,7 +761,7 @@ def q_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-k over the embedding column: for the first 5
     vectors, the 3 nearest others.  Dot products via F.aggregate/zip_with —
     JVM-side, no Python."""
-    em = _t(spark, sf_dir, "embeddings")
+    em = read_table(spark, sf_dir, "embeddings")
     return cosine_topk(em, query_ids=[0, 1, 2, 3, 4], k=3)
 
 
@@ -809,7 +775,7 @@ def q_asof_join(spark, sf_dir):
     as-of join — implemented as union + carry-forward window (one shuffle,
     linear); DuckDB's native ASOF JOIN is the oracle."""
     from .operators.asof import asof_join
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     purchases = e.filter(F.col("event_type") == "purchase")
     views = e.filter(F.col("event_type") == "view") \
              .select("user_id", "ts", "value", "event_id")
@@ -826,7 +792,7 @@ def q_salted_agg(spark, sf_dir):
     over 16 reducers; phase 2 merges partials.  Result must equal the
     direct groupBy — the oracle IS the direct formulation."""
     from .operators.skew import salted_agg
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     out = salted_agg(e, ["event_type"], "value", n_salts=16)
     return out.select("event_type", roundn(F.col("total")).alias("total"),
                       "n", roundn(F.col("min")).alias("min"),
@@ -841,7 +807,7 @@ def q_salted_agg(spark, sf_dir):
 def q_cluster_centroids(spark, sf_dir):
     """A17: per-cluster mean of the first 3 embedding dims (groupby-mean
     centroid table, Phase3_Metrics.ipynb#cell10)."""
-    em = _t(spark, sf_dir, "embeddings")
+    em = read_table(spark, sf_dir, "embeddings")
     def dim(i):
         return F.element_at("embedding", i + 1).cast("double")
     return em.groupBy("label").agg(
@@ -857,7 +823,7 @@ def q_centroid_score(spark, sf_dir):
     assignment — exploded-dim join against the broadcast centroid table,
     then negate + min-max 0-100."""
     from .ml.clustering import centroid_distance_score
-    em = _t(spark, sf_dir, "embeddings")
+    em = read_table(spark, sf_dir, "embeddings")
     out = centroid_distance_score(em, "vec_id", "label", "embedding")
     return out.select("vec_id", "label", roundn(F.col("dist")).alias("dist"),
                       roundn(F.col("score_100")).alias("score_100"))
@@ -866,7 +832,7 @@ def q_centroid_score(spark, sf_dir):
 def q_onehot(spark, sf_dir):
     """F17: one-hot encode event_type into K float columns
     (make_route_embedding_table, routes.py:279-295)."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     types = ["click", "error", "purchase", "signup", "view"]
     cols = [F.when(F.col("event_type") == t, 1.0).otherwise(0.0)
             .alias(f"is_{t}") for t in types]
@@ -878,7 +844,7 @@ def q_group_split(spark, sf_dir):
     side; split sizes per side prove the grouping (by-game 80/20 split,
     BDB_2026.ipynb#cell91).  Modulo hasher here for oracle parity; the
     library's crc32 hasher is covered by property tests."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     split = F.when(F.col("user_id") % 5 == 0, "val").otherwise("train")
     return (e.withColumn("split", split)
              .groupBy("split")
@@ -891,7 +857,7 @@ def q_closest_to_median(spark, sf_dir):
     median(group)| (viz.py:327-336).  Distance is rounded BEFORE ordering
     so interpolated-median ulp differences between engines can't flip
     near-ties; event_id breaks exact ties."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     # median via aggregate + broadcast join-back, argmin via a combinable
     # min(struct(...)) — no per-group sort, no low-cardinality window
     # (operators/windows.py:closest_to_median rationale)
@@ -916,10 +882,11 @@ def q_tpch_q3(spark, sf_dir):
     """Q3 shape: 3-table join, filter both sides of the date, top-10 revenue.
     customer is the small build side (broadcast); the orders⋈lineitem join
     shuffles once on orderkey."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = read_table(spark, sf_dir, "customer").filter(
+        F.col("c_mktsegment") == "BUILDING")
+    o = read_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-03-15 00:00:00"))
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-03-15 00:00:00"))
     rev = F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (li.join(o, li.l_orderkey == o.o_orderkey)
@@ -936,12 +903,12 @@ def q_tpch_q5(spark, sf_dir):
     """Q5 shape: 6-table snowflake join — revenue by nation where customer
     and supplier share the nation.  Dimensions (region/nation/customer/
     supplier) broadcast; the single big shuffle is lineitem⋈orders."""
-    r = _t(spark, sf_dir, "region")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    r = read_table(spark, sf_dir, "region")
+    n = read_table(spark, sf_dir, "nation")
+    c = read_table(spark, sf_dir, "customer")
+    s = read_table(spark, sf_dir, "supplier")
+    o = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
     # integer-cents revenue (see cents()): per-nation sums reach 1e9+ at
     # bench SF, where a float sum's association error crosses 6 decimals
     rev_c4 = cents(F.col("l_extendedprice")) \
@@ -965,7 +932,7 @@ def q_pivot_event_types(spark, sf_dir):
     operator): per-user event counts spread across explicit type columns.
     The explicit value list skips the extra values-discovery job — at
     scale the domain is a catalog fact, not something to re-scan for."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     out = (e.groupBy("user_id")
             .pivot("event_type", EVENT_TYPES)
             .agg(F.count(F.lit(1))))
@@ -985,7 +952,7 @@ def q_phase3_pipeline(spark, sf_dir):
     from .ml.clustering import centroid_distance_score
     from .operators.kinematics import lag_diff as _lag_diff
 
-    em = _t(spark, sf_dir, "embeddings")
+    em = read_table(spark, sf_dir, "embeddings")
     dist = centroid_distance_score(em, "vec_id", "label", "embedding") \
         .select("vec_id", "label", "dist")
     iq = zscore_in_group(dist, "dist", ["label"], out="route_exec",
@@ -994,7 +961,7 @@ def q_phase3_pipeline(spark, sf_dir):
                .groupBy("user_id")
                .agg(F.avg("route_exec").alias("route_exec")))
 
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     # integer-cents residual/mean (see cents()): engine-invariant averages
     vc = e.withColumn("__vc", cents(F.col("value")))
     resid = _lag_diff(vc, "__vc", ["user_id"], ["ts", "event_id"],
@@ -1006,7 +973,7 @@ def q_phase3_pipeline(spark, sf_dir):
                     F.count(F.lit(1)).alias("n_frames"),
                     (F.sum("__vc") / n / 10000.0).alias("sep")))
 
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     prod = (o.groupBy(F.col("o_custkey").alias("user_id"))
              .agg(F.sum("o_totalprice").alias("total_value"),
                   F.count(F.lit(1)).alias("n_orders")))
@@ -1040,7 +1007,7 @@ def _insight_metrics(spark, sf_dir):
     derived from events exactly as the notebook's per-play IQ columns —
     quantized to exact integer units (cents / floor-micro) so every
     downstream MEAN is a long-sum (order-free, engine-stable)."""
-    e = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    e = read_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     return e.select(
         "user_id", "event_type",
         cents(F.col("value")).alias("__exec_c"),
@@ -1220,7 +1187,7 @@ def q_rollup_revenue(spark, sf_dir):
     """Hierarchical subtotals: ROLLUP over (returnflag, linestatus) with a
     grouping id — the multi-grain agg the reference computes as separate
     groupbys, in one shuffle."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (li.rollup("l_returnflag", "l_linestatus")
               .agg(roundn(F.sum("l_quantity")).alias("sum_qty"),
                    F.count(F.lit(1)).alias("n"),
@@ -1231,7 +1198,7 @@ def q_sliding_window(spark, sf_dir):
     """Sliding-frame window (ROWS BETWEEN 3 PRECEDING AND CURRENT ROW):
     trailing mean + max per user — the moving-average shape the reference
     never needed but any kinematics smoothing does."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     w = (Window.partitionBy("user_id").orderBy("ts", "event_id")
                .rowsBetween(-3, 0))
     return e.select("event_id", "user_id",
@@ -1243,8 +1210,8 @@ def q_tpch_q14(spark, sf_dir):
     """Q14 shape: promo-revenue share — lineitem⋈part broadcast join with
     a conditional aggregate over the joined rows (CASE inside sum / total
     sum, one pass)."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    p = read_table(spark, sf_dir, "part")
     # integer-cents revenue (see cents()): the global total is a
     # billion-scale sum where float association error crosses 6 decimals
     rev_c4 = cents(F.col("l_extendedprice")) \
@@ -1262,7 +1229,7 @@ def q_range_window(spark, sf_dir):
     event TIME, not row position — the frame family time-series smoothing
     needs when sampling is irregular.  Ordered on epoch seconds so the
     range arithmetic is integral in both engines."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     epoch = F.unix_timestamp("ts").cast("long")
     w = (Window.partitionBy("user_id").orderBy(epoch)
                .rangeBetween(-3600, 0))
@@ -1275,8 +1242,8 @@ def q_tpch_q18(spark, sf_dir):
     """Q18 shape: large-quantity orders — HAVING over a fact-side agg,
     then semi-join back to enrich.  The agg's build side is tiny after the
     threshold, so the enrich join broadcasts."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders")
     big = (li.groupBy("l_orderkey")
              .agg(F.sum("l_quantity").alias("total_qty"))
              .filter(F.col("total_qty") > 150))
@@ -1294,7 +1261,7 @@ def q_tpch_q6(spark, sf_dir):
     WHERE clause pushes into the parquet reader and the only exchange is
     the final one-row reduce — the cheapest possible 100 TB full-scan
     query, bounded by IO not shuffle."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     sel = li.filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00"))
         & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00"))
@@ -1312,8 +1279,8 @@ def q_exists_late_ship(spark, sf_dir):
     with at least one lineitem shipped >60 days after the order date,
     counted by priority.  The semi-join stops probing an order on first
     match; the extra inequality rides on the equi-join, no theta join."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
     late = o.join(
         li, (o.o_orderkey == li.l_orderkey)
         & (li.l_shipdate > o.o_orderdate + F.expr("INTERVAL 60 DAYS")),
@@ -1326,10 +1293,10 @@ def q_tpch_q10(spark, sf_dir):
     """Q10 shape: returned-item revenue per customer, top 20.  The
     returnflag filter prunes lineitem before the one orderkey shuffle;
     customer and nation broadcast onto the aggregated (small) side."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    o = read_table(spark, sf_dir, "orders")
+    c = read_table(spark, sf_dir, "customer")
+    n = read_table(spark, sf_dir, "nation")
     rev = F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (li.join(o, li.l_orderkey == o.o_orderkey)
               .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -1345,10 +1312,10 @@ def q_tpch_q12(spark, sf_dir):
     per linestatus, how many 1997 shipments belonged to high- vs
     low-priority orders.  One shuffle (orderkey); the CASE buckets are
     map-side expressions feeding a partial agg."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00"))
         & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00")))
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (li.join(o, li.l_orderkey == o.o_orderkey)
               .groupBy("l_linestatus")
@@ -1364,8 +1331,8 @@ def q_anti_join(spark, sf_dir):
     filtered key set), opposite polarity.  The reference's ``~isin`` (P4)
     is this operator with a driver-side list; anti-join is the form that
     survives when the exclusion set no longer fits on the driver."""
-    c = _t(spark, sf_dir, "customer")
-    urgent = _t(spark, sf_dir, "orders").filter(
+    c = read_table(spark, sf_dir, "customer")
+    urgent = read_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT")
     return (c.join(urgent, c.c_custkey == urgent.o_custkey, "left_anti")
              .select("c_custkey", "c_name",
@@ -1377,7 +1344,7 @@ def q_cube_qty(spark, sf_dir):
     (detail, each single-axis subtotal, grand total) in ONE shuffle, where
     the reference runs a separate groupby per grain.  grouping() flags
     disambiguate real NULLs from subtotal rows."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (li.cube("l_returnflag", "l_linestatus")
               .agg(roundn(F.sum("l_quantity")).alias("sum_qty"),
                    F.count(F.lit(1)).alias("n"),
@@ -1391,7 +1358,7 @@ def q_interval_join(spark, sf_dir):
     matches the interval length (explode factor ≤ 3); the plan is a pure
     equi-join on (user_id, bucket) + exact containment filter."""
     from .operators.ranges import interval_join
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     errs = (e.filter(F.col("event_type") == "error")
              .select("user_id", F.col("event_id").alias("err_event_id"),
                      (F.col("ts") - F.expr("INTERVAL 6 HOURS")).alias("w_start"),
@@ -1413,7 +1380,7 @@ def q_training_prep(spark, sf_dir):
     features (pure projections, fused by codegen), a length/stopword
     keep-filter, then per-language corpus stats including language-ID
     accuracy against the table's ground-truth ``lang`` column."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     w = Window.partitionBy(F.md5("text")).orderBy("doc_id")
     canon = (docs.withColumn("_rn", F.row_number().over(w))
                  .filter(F.col("_rn") == 1).drop("_rn"))
@@ -1443,11 +1410,11 @@ def q_tpch_q7(spark, sf_dir):
     supplier nation are DIFFERENT dimension rows of the same table (two
     broadcast aliases), with a disjunctive pair predicate and a year
     rollup of the fact."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    li = read_table(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders")
+    c = read_table(spark, sf_dir, "customer")
+    s = read_table(spark, sf_dir, "supplier")
+    n = read_table(spark, sf_dir, "nation")
     n1 = n.select(F.col("n_nationkey").alias("c_nk"),
                   F.col("n_name").alias("cust_nation"))
     n2 = n.select(F.col("n_nationkey").alias("s_nk"),
@@ -1486,7 +1453,7 @@ def q_shard_stats(spark, sf_dir):
     (sources/shards.py) clusters on this id so each shard directory is
     one task's output; this query pins the assignment + manifest math."""
     from .sources.shards import shard_assignment
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return (shard_assignment(d, "doc_id", 8)
             .groupBy("shard")
             .agg(F.count(F.lit(1)).alias("n_rows"),
@@ -1503,7 +1470,7 @@ def q_quota_sample(spark, sf_dir):
     distribution.  At sf0.01 every source exceeds the budget, so the
     oracle verifies the cut point, not the trivial keep-all case."""
     from .pipeline.sampling import quota_sample
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     kept = quota_sample(d, "source", "doc_id", "n_chars", 3000)
     return (kept.groupBy("source")
                 .agg(F.count(F.lit(1)).alias("n_docs"),
@@ -1522,7 +1489,7 @@ def q_hash_sample(spark, sf_dir):
     for any int64 key (mod 2^32 would NOT suffice: reduced keys ≳ 3.47e9
     overflow — wrapping in Spark but promoting to HUGEINT in DuckDB,
     breaking the cross-engine guarantee)."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     bucket = F.pmod(F.pmod(F.col("doc_id"), F.lit(HASH_SAMPLE_KEY_MOD))
                     * F.lit(HASH_SAMPLE_MULT),
                     F.lit(HASH_SAMPLE_MOD))
@@ -1538,7 +1505,7 @@ def q_approx_quantiles(spark, sf_dir):
     sketch is engine-specific); the containment contract vs the EXACT
     per-group quantiles (approx within the rank-error bound) is pinned by
     tests/test_pipeline.py::test_approx_quantiles_within_rank_error."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     acc = 1000  # rank error ≤ n / acc per group
     return (e.groupBy("event_type")
              .agg(roundn(F.percentile_approx("value", 0.5, acc)).alias("p50"),
@@ -1560,7 +1527,7 @@ def q_quantile_sketch(spark, sf_dir):
     from .operators.sketches import (quantile_sketch_estimate,
                                      quantile_sketch_merge,
                                      quantile_sketch_state)
-    e = _t(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
+    e = read_table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
     daily = quantile_sketch_state(e, ["event_type", "day"], "value",
                                   "event_id", k=128)
     merged = quantile_sketch_merge(daily.drop("day"), ["event_type"],
@@ -1582,7 +1549,7 @@ def q_distribution_windows(spark, sf_dir):
     (tie-free).  The oracle stays the plain window formulation — the
     hash match proves the distributed form IS the window semantics."""
     from .operators.windows import cumsum_distributed
-    c = (_t(spark, sf_dir, "customer")
+    c = (read_table(spark, sf_dir, "customer")
          .select("c_custkey", "c_acctbal", F.lit(1).alias("__one")))
     rn = F.col("cum___one")
     ranked = (cumsum_distributed(c, ["c_acctbal", "c_custkey"],
@@ -1614,7 +1581,7 @@ def q_window_agg_hourly(spark, sf_dir):
     Structured Streaming operator (streaming/stream_ops.py); epoch-aligned
     1-hour windows ≙ date_trunc('hour')."""
     from .streaming.stream_ops import hourly_window_agg
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     out = hourly_window_agg(e, exact_cents=True)
     return out.select("window_start", "event_type", "n",
                       roundn(F.col("total_value")).alias("total_value"),
@@ -1626,7 +1593,7 @@ def q_sessionize(spark, sf_dir):
     oracle via the gaps-and-islands formulation (new session when the gap
     to the previous event is ≥ 30 min)."""
     from .streaming.stream_ops import sessionize
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     out = sessionize(e, gap="30 minutes")
     return out.select("user_id", "session_start", "n_events",
                       roundn(F.col("session_value")).alias("session_value"))
@@ -1635,7 +1602,7 @@ def q_sessionize(spark, sf_dir):
 def q_token_counts(spark, sf_dir):
     """Token counting: whitespace tokens + chars + BPE-ish estimate."""
     from .pipeline.text import token_counts
-    return token_counts(_t(spark, sf_dir, "documents"))
+    return token_counts(read_table(spark, sf_dir, "documents"))
 
 
 def q_text_normalize(spark, sf_dir):
@@ -1643,7 +1610,7 @@ def q_text_normalize(spark, sf_dir):
     collapse → trim): the pre-step that makes trivial variants hash equal
     in exact dedup.  Pure codegen projection, exact oracle."""
     from .pipeline.text import normalize_text
-    return normalize_text(_t(spark, sf_dir, "documents"))
+    return normalize_text(read_table(spark, sf_dir, "documents"))
 
 
 def q_chunk_docs(spark, sf_dir):
@@ -1652,14 +1619,14 @@ def q_chunk_docs(spark, sf_dir):
     token array + executor-side posexplode fan-out.  Exact oracle over
     doc_id × chunk_id with the chunk text and its token count."""
     from .pipeline.text import chunk_documents
-    return chunk_documents(_t(spark, sf_dir, "documents"), chunk_size=32)
+    return chunk_documents(read_table(spark, sf_dir, "documents"), chunk_size=32)
 
 
 def q_union_by_name(spark, sf_dir):
     """S2/U1: schema-drift union — two projections with different columns
     combined by NAME with nulls for the missing side
     (unionByName(allowMissingColumns=True), the weekly-shard concat fix)."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     a = e.filter(F.col("event_type") == "purchase") \
          .select("event_id", "user_id", roundn(F.col("value")).alias("value"))
     b = e.filter(F.col("event_type") == "error") \
@@ -1680,7 +1647,7 @@ def q_minhash_pairs(spark, sf_dir):
     hash in the pipeline is the polynomial family.  Threshold 0.4
     distinguishes it from q_minhash_neutral's 0.5."""
     from .pipeline.dedup import minhash_lsh_pairs
-    return minhash_lsh_pairs(_t(spark, sf_dir, "documents"),
+    return minhash_lsh_pairs(read_table(spark, sf_dir, "documents"),
                              min_est_jaccard=0.4)
 
 
@@ -1690,7 +1657,7 @@ def q_simhash(spark, sf_dir):
     fingerprint — hash-verified (r5; previously fingerprints only,
     rows-only)."""
     from .pipeline.dedup import simhash_neutral_pairs
-    return simhash_neutral_pairs(_t(spark, sf_dir, "documents"),
+    return simhash_neutral_pairs(read_table(spark, sf_dir, "documents"),
                                  max_hamming=4)
 
 
@@ -1701,7 +1668,7 @@ def q_lsh_topk(spark, sf_dir):
     at sf0.1 over 50 query ids, asserted ≥ 0.52 by
     tests/test_recall_sf01.py (trade curve in SCALE.md r10)."""
     from .pipeline.similarity import lsh_bucketed_topk
-    return lsh_bucketed_topk(_t(spark, sf_dir, "embeddings"),
+    return lsh_bucketed_topk(read_table(spark, sf_dir, "embeddings"),
                              query_ids=[0, 1, 2, 3, 4], k=3)
 
 
@@ -1714,7 +1681,7 @@ def q_ivf_topk(spark, sf_dir):
     equivalence to brute force at nprobe == n_cells is pinned by
     test_ivf_full_probe_equals_brute_force."""
     from .pipeline.similarity import ivf_topk
-    return ivf_topk(_t(spark, sf_dir, "embeddings"),
+    return ivf_topk(read_table(spark, sf_dir, "embeddings"),
                     query_ids=[0, 1, 2, 3, 4], k=3)
 
 
@@ -1724,7 +1691,7 @@ def q_lsh_neutral(spark, sf_dir):
     sum (floor-to-micro-units quantization), bucket equi-join, exact
     cosine re-rank — the ANN analogue of q_minhash_neutral."""
     from .pipeline.similarity import lsh_neutral_topk
-    return lsh_neutral_topk(_t(spark, sf_dir, "embeddings"),
+    return lsh_neutral_topk(read_table(spark, sf_dir, "embeddings"),
                             query_ids=[0, 1, 2, 3, 4], k=3)
 
 
@@ -1734,7 +1701,7 @@ def q_ivf_neutral(spark, sf_dir):
     re-rank — same plan shape as q_ivf_topk with a value-comparable cell
     assignment."""
     from .pipeline.similarity import ivf_neutral_topk
-    return ivf_neutral_topk(_t(spark, sf_dir, "embeddings"),
+    return ivf_neutral_topk(read_table(spark, sf_dir, "embeddings"),
                             query_ids=[0, 1, 2, 3, 4], k=3, nprobe=2)
 
 
@@ -1742,7 +1709,7 @@ def q_fingerprint(spark, sf_dir):
     """Winnowing-style document fingerprint (polynomial rolling hash —
     explicit arithmetic, so the DuckDB oracle reproduces it exactly)."""
     from .pipeline.text import fingerprint_documents
-    return fingerprint_documents(_t(spark, sf_dir, "documents"))
+    return fingerprint_documents(read_table(spark, sf_dir, "documents"))
 
 
 def q_media_ahash(spark, sf_dir):
@@ -1757,7 +1724,7 @@ def q_media_ahash(spark, sf_dir):
     from .pipeline.multimodal import (ahash_band_cols,
                                       attach_binary_payload,
                                       perceptual_ahash)
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     media = attach_binary_payload(d, "doc_id", "text")
     h = perceptual_ahash(media)
     return h.select("media_id", "ahash", *ahash_band_cols("ahash", 4))
@@ -1767,7 +1734,7 @@ def q_multimodal_features(spark, sf_dir):
     """Binary-column multimodal plumbing: utf-8 payloads → mapInPandas
     decode-stub → per-payload features (Arrow-batched, schema-typed)."""
     from .pipeline.multimodal import attach_binary_payload, extract_features
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     media = attach_binary_payload(d, "doc_id", "text")
     return extract_features(media)
 
@@ -1779,7 +1746,7 @@ def q_frame_sample(spark, sf_dir):
     deferred to sampled frames only.  Oracle checks the frame grid
     (media_id × frame_idx) and each frame's byte length arithmetically."""
     from .pipeline.multimodal import attach_binary_payload, explode_frames
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     media = attach_binary_payload(d, "doc_id", "text")
     return explode_frames(media, frame_bytes=32, every_n=2) \
         .select("media_id", "frame_idx", "n_bytes")
@@ -1798,7 +1765,7 @@ def q_pack_chunks(spark, sf_dir):
     100 TB corpus onto a handful of tasks).  Never a driver loop, never
     a global single-partition ordering."""
     from .pipeline.text import chunk_documents
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     chunks = chunk_documents(d, chunk_size=32, carry=("lang",)) \
         .withColumn("stream", F.pmod(F.col("doc_id"), F.lit(8)).cast("long"))
     w = Window.partitionBy("lang", "stream").orderBy("doc_id", "chunk_id")
@@ -1823,7 +1790,7 @@ def q_bpe_merges(spark, sf_dir):
     match is exact); gold-corpus and determinism tests pin the
     algorithm besides."""
     from .pipeline.bpe import bpe_learn_merges
-    return bpe_learn_merges(_t(spark, sf_dir, "documents"), n_merges=8)
+    return bpe_learn_merges(read_table(spark, sf_dir, "documents"), n_merges=8)
 
 
 def q_bpe_encode(spark, sf_dir):
@@ -1836,7 +1803,7 @@ def q_bpe_encode(spark, sf_dir):
     words, so the per-doc token counts a data-mixing budget consumes
     are verified end-to-end, not just the learned merge list."""
     from .pipeline.bpe import bpe_learn_merges, bpe_segment
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     merges = [(r["left"], r["right"]) for r in
               bpe_learn_merges(d, n_merges=8).orderBy("rank").collect()]
     return bpe_segment(d, merges)
@@ -1851,7 +1818,7 @@ def q_route_clusters(spark, sf_dir):
     the library path, covered by label-invariant tests — its labels are
     init-dependent and can never value-match another engine)."""
     from .ml.clustering import route_clusters_relational
-    return route_clusters_relational(_t(spark, sf_dir, "embeddings"),
+    return route_clusters_relational(read_table(spark, sf_dir, "embeddings"),
                                      n_dims=8, iters=2)
 
 
@@ -1865,7 +1832,7 @@ def q_pca_embed(spark, sf_dir):
     invariant tests — its component SIGN is library-specific and can
     never value-match another engine."""
     from .ml.clustering import pca_power_2d
-    out = pca_power_2d(_t(spark, sf_dir, "embeddings"), n_dims=6,
+    out = pca_power_2d(read_table(spark, sf_dir, "embeddings"), n_dims=6,
                        iters=50)
     return out.select("vec_id", roundn(F.col("pc1")).alias("pc1"),
                       roundn(F.col("pc2")).alias("pc2"))
@@ -1882,12 +1849,12 @@ def q_flagship_truespeed(spark, sf_dir):
     (≙ J4, broadcast), mean |residual| per user (≙ A1/A2 MAE), rank desc
     (≙ W7).  One shuffle for the window, one for the agg; the dimension
     join is broadcast and free."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     # integer-cents residuals: exact long arithmetic end to end, so the
     # mean is bit-identical across engines/partitionings (see cents())
     vc = e.withColumn("__vc", cents(F.col("value")))
     d = lag_diff(vc, "__vc", ["user_id"], ["ts", "event_id"], out="resid_c")
-    dim = _t(spark, sf_dir, "customer").select(
+    dim = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_name")
     joined = d.filter(F.col("resid_c").isNotNull()) \
               .join(F.broadcast(dim), "user_id", "left")
@@ -1907,8 +1874,8 @@ def q_tpch_q13(spark, sf_dir):
     the first's output.  Two shuffles total (custkey, then count key); the
     second agg's input is one row per customer, so it is tiny regardless
     of fact scale — the classic two-level agg that needs no broadcast."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = read_table(spark, sf_dir, "customer")
+    o = read_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "1-URGENT")
     per_cust = (c.join(o, c.c_custkey == o.o_custkey, "left")
                  .groupBy("c_custkey")
@@ -1923,10 +1890,10 @@ def q_tpch_q15(spark, sf_dir):
     rows by equality join.  The whole 'view + scalar subquery' lowers to
     agg → crossJoin(broadcast(max)) → filter; no second scan of the
     fact."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00"))
         & (F.col("l_shipdate") < F.lit("1997-04-01 00:00:00")))
-    s = _t(spark, sf_dir, "supplier")
+    s = read_table(spark, sf_dir, "supplier")
     rev = (li.groupBy("l_suppkey")
              .agg(roundn(F.sum(F.col("l_extendedprice")
                                * (1 - F.col("l_discount"))))
@@ -1945,9 +1912,9 @@ def q_tpch_q16(spark, sf_dir):
     schema has no partsupp).  Suppliers in bad standing (negative
     acctbal) are removed with a broadcast LEFT ANTI before the distinct
     agg; count(DISTINCT) shuffles on the (brand,type,size-bucket) key."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_brand") != "Brand#4")
-    bad = (_t(spark, sf_dir, "supplier")
+    li = read_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    p = read_table(spark, sf_dir, "part").filter(F.col("p_brand") != "Brand#4")
+    bad = (read_table(spark, sf_dir, "supplier")
            .filter(F.col("s_acctbal") < 0).select("s_suppkey"))
     return (li.join(F.broadcast(bad),
                     li.l_suppkey == bad.s_suppkey, "left_anti")
@@ -1964,8 +1931,8 @@ def q_tpch_q17(spark, sf_dir):
     per-part agg is |part| rows, always broadcastable), then the
     below-threshold filter and a one-row reduce.  Avoids the window-over-
     partkey alternative, which would shuffle the full fact on partkey."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#4")
+    li = read_table(spark, sf_dir, "lineitem")
+    p = read_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#4")
     branded = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
     avg_qty = (branded.groupBy(F.col("l_partkey").alias("ak"))
                       .agg(F.avg("l_quantity").alias("avg_qty")))
@@ -1984,8 +1951,8 @@ def q_tpch_q19(spark, sf_dir):
     predicate), the residual disjunction evaluates post-join — exactly
     what Catalyst's constraint propagation does with an OR of
     conjunctions."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    p = read_table(spark, sf_dir, "part")
     j = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
     arm1 = ((F.col("p_brand") == "Brand#2") & (F.col("p_size") <= 5)
             & (F.col("l_quantity") >= 1) & (F.col("l_quantity") <= 11))
@@ -2007,8 +1974,8 @@ def q_tpch_q22(spark, sf_dir):
     uses phone-prefix country codes and an empty-orders NOT EXISTS; this
     schema's customers all have old orders, so 'recent' keeps the anti
     join meaningful.)"""
-    c = _t(spark, sf_dir, "customer")
-    recent = (_t(spark, sf_dir, "orders")
+    c = read_table(spark, sf_dir, "customer")
+    recent = (read_table(spark, sf_dir, "orders")
               .filter(F.col("o_orderdate") >= F.lit("2000-01-01 00:00:00"))
               .select("o_custkey"))
     pos_avg = (c.filter(F.col("c_acctbal") > 0.0)
@@ -2028,12 +1995,12 @@ def q_tpch_q2(spark, sf_dir):
     equality.  (No partsupp in this schema: lineitem is the part↔supplier
     bridge and s_acctbal stands in for ps_supplycost.)  All dimension
     joins broadcast; only the bridge dedup shuffles."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    p = (_t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    p = (read_table(spark, sf_dir, "part")
          .filter((F.col("p_type") == "ECONOMY") & (F.col("p_size") < 10)))
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    s = read_table(spark, sf_dir, "supplier")
+    n = read_table(spark, sf_dir, "nation")
+    r = read_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     cand = (li.dropDuplicates(["l_partkey", "l_suppkey"])
               .join(F.broadcast(p), li.l_partkey == p.p_partkey)
               .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
@@ -2054,15 +2021,15 @@ def q_tpch_q8(spark, sf_dir):
     year among a region's customers for one part type.  The share is a
     conditional-sum / sum ratio inside one agg, so the whole query is one
     fact shuffle (orderkey) plus broadcast dims."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").filter(
+    li = read_table(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00"))
         & (F.col("o_orderdate") < F.lit("1998-01-01 00:00:00")))
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "STANDARD")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    c = read_table(spark, sf_dir, "customer")
+    s = read_table(spark, sf_dir, "supplier")
+    p = read_table(spark, sf_dir, "part").filter(F.col("p_type") == "STANDARD")
+    n = read_table(spark, sf_dir, "nation")
+    r = read_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nc = n.select(F.col("n_nationkey").alias("c_nk"),
                   F.col("n_regionkey").alias("c_rk"))
     ns = n.select(F.col("n_nationkey").alias("s_nk"),
@@ -2088,12 +2055,12 @@ def q_tpch_q9(spark, sf_dir):
     supplycost proxy (no partsupp here).  The contains() filter cannot
     push to a dictionary but prunes the broadcast side before the fact
     join."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    s = _t(spark, sf_dir, "supplier")
-    p = (_t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders")
+    s = read_table(spark, sf_dir, "supplier")
+    p = (read_table(spark, sf_dir, "part")
          .filter(F.col("p_name").contains("widget")))
-    n = _t(spark, sf_dir, "nation")
+    n = read_table(spark, sf_dir, "nation")
     # integer-cents profit in 1e-4-dollar units: price·(1−disc) is
     # pc·(100−dc); 0.6·retail·qty dollars is 60·retail_cents·qty (exact —
     # quantity is integral).  Long arithmetic end to end (see cents()).
@@ -2117,9 +2084,9 @@ def q_tpch_q11(spark, sf_dir):
     HAVING-against-scalar-subquery idiom: same aggregated table feeds
     both sides, the global reduce is one broadcast row, no second fact
     scan."""
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = (_t(spark, sf_dir, "nation")
+    li = read_table(spark, sf_dir, "lineitem")
+    s = read_table(spark, sf_dir, "supplier")
+    n = (read_table(spark, sf_dir, "nation")
          .filter(F.col("n_name").isin("NATION_1", "NATION_2")))
     val = (li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
              .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
@@ -2138,11 +2105,11 @@ def q_tpch_q20(spark, sf_dir):
     then a semi-join up to the supplier dimension.  Two aggs over one
     scan shape: the per-pair agg reshuffles to per-part with a window
     instead of a second scan."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00"))
         & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00")))
-    s = _t(spark, sf_dir, "supplier")
-    n = (_t(spark, sf_dir, "nation")
+    s = read_table(spark, sf_dir, "supplier")
+    n = (read_table(spark, sf_dir, "nation")
          .filter(F.col("n_name").isin("NATION_0", "NATION_3")))
     pair = (li.groupBy("l_partkey", "l_suppkey")
               .agg(F.sum("l_quantity").alias("pair_qty")))
@@ -2163,9 +2130,9 @@ def q_tpch_q21(spark, sf_dir):
     supplier count, the late supplier key via conditional max) — one
     orderkey shuffle instead of two correlated self-probes of the
     fact."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    s = _t(spark, sf_dir, "supplier")
+    li = read_table(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    s = read_table(spark, sf_dir, "supplier")
     late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr(
         "INTERVAL 90 DAYS")
     # pre-aggregate to one row per (order, supplier) instead of the double
@@ -2199,7 +2166,7 @@ def q_repetition(spark, sf_dir):
     share) — explode → two-level agg so the shuffle carries one row per
     distinct (doc, token) after map-side combine."""
     from .pipeline.text import repetition_features
-    return repetition_features(_t(spark, sf_dir, "documents"))
+    return repetition_features(read_table(spark, sf_dir, "documents"))
 
 
 def q_dup_ngrams(spark, sf_dir):
@@ -2212,7 +2179,7 @@ def q_dup_ngrams(spark, sf_dir):
     map-side-combinable explode → (doc, gram) → doc two-level agg, one
     shuffled row per distinct gram per doc."""
     from .pipeline.text import dup_ngram_features
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     bg = dup_ngram_features(docs, n=2)
     tg = dup_ngram_features(docs, n=3)
     pick = ["n_grams", "dup_gram_occurrences", "dup_gram_fraction",
@@ -2227,7 +2194,7 @@ def q_stratified_sample(spark, sf_dir):
     tail languages at 50% — rate is a broadcast when-chain, membership is
     a key hash, the whole thing a map-side filter (no shuffle, no rand())."""
     from .pipeline.sampling import stratified_hash_sample
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     rates = {"en": 0.1, "de": 0.5, "es": 0.5, "fr": 0.5, "zh": 0.5}
     return (stratified_hash_sample(d, "doc_id", "lang", rates)
             .select("doc_id", "lang", "source",
@@ -2240,7 +2207,7 @@ def q_nearest_centroid(spark, sf_dir):
     vector scored against the K-row broadcast centroid table, argmax by
     one row_number window."""
     from .pipeline.similarity import nearest_centroid
-    return nearest_centroid(_t(spark, sf_dir, "embeddings"))
+    return nearest_centroid(read_table(spark, sf_dir, "embeddings"))
 
 
 def q_doc_histogram(spark, sf_dir):
@@ -2248,7 +2215,7 @@ def q_doc_histogram(spark, sf_dir):
     arithmetic (engine-neutral, unlike width_bucket variants), count +
     mean per bucket — the one-pass profile every corpus audit starts
     with."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return (d.groupBy(F.floor(F.col("n_chars") / 50).cast("long")
                        .alias("bucket"))
              .agg(F.count(F.lit(1)).alias("n_docs"),
@@ -2266,14 +2233,14 @@ def q_lloyd_kmeans(spark, sf_dir):
     q_pagerank technique); monotone-inertia and self-consistency
     properties are additionally pinned in tests."""
     from .pipeline.similarity import lloyd_kmeans
-    return lloyd_kmeans(_t(spark, sf_dir, "embeddings"), iters=3)
+    return lloyd_kmeans(read_table(spark, sf_dir, "embeddings"), iters=3)
 
 
 def q_grouping_sets(spark, sf_dir):
     """Explicit GROUPING SETS — the generalization of rollup/cube: per
     (returnflag), per (linestatus), and grand total in ONE pass (single
     shuffle with grouping-id expansion), not three scans unioned."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (li.groupingSets([["l_returnflag"], ["l_linestatus"], []],
                             "l_returnflag", "l_linestatus")
               .agg(roundn(F.sum("l_quantity")).alias("sum_qty"),
@@ -2288,7 +2255,7 @@ def q_forward_fill(spark, sf_dir):
     streams (masking error-frames as the gaps here, since the synthetic
     table has no nulls).  Same single partition-shuffle as every W-family
     window; no self-join, no loop."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     masked = F.when(F.col("event_type") == "error", None) \
               .otherwise(F.col("value"))
     w = (Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -2303,7 +2270,7 @@ def q_pct_of_total(spark, sf_dir):
     """Percent-of-total (ratio_to_report): each user's share of their
     event-type's total value and of the grand total — two window sums at
     different grains over ONE scan of the aggregated (small) table."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     per_user = (e.groupBy("user_id", "event_type")
                  .agg(F.sum("value").alias("user_value")))
     # Denominators via aggregates + broadcast join-backs, not windows: a
@@ -2330,7 +2297,7 @@ def q_truespeed_variants(spark, sf_dir):
     the per-user lag-diff residual — the reference's five
     ``compute_truespeed`` variants (metrics.py:13-57) as one multi-agg
     (everything shares the single user_id window shuffle)."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # integer-cents residuals (see cents()): every aggregate below reduces
     # exact longs, so the pre-round doubles are engine/partition-invariant
@@ -2355,7 +2322,7 @@ def _submission_inputs(spark, sf_dir):
     hash-verified relational spine), so the two can never drift apart.
     Every coordinate is an exact sequence of IEEE ops on the parquet
     doubles (pmod/mul/add), bit-reproducible in DuckDB."""
-    e = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    e = read_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     base = (e.filter(F.col("user_id") < 300)
              .withColumn("frame_id", F.row_number().over(w))
@@ -2657,7 +2624,7 @@ def q_eval_metrics(spark, sf_dir):
     empty-partition window ever funnels the exploded prediction rows
     through a single task (plan-shape-tested)."""
     from .ml.lstm import eval_predictions
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     p = (e.select(F.col("value").alias("actual"),
                   F.lag("value").over(w).alias("pred"))
@@ -2674,7 +2641,7 @@ def q_normalize_flip(spark, sf_dir):
     mirror (120−x for 'left' rows ≙ error-type events) and the 180°
     wraparound rotation via pmod — pure map-side expressions, zero
     shuffle."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     left = F.col("event_type") == "error"
     angle = F.pmod(F.col("event_id").cast("double"), F.lit(360.0))
     return e.select(
@@ -2691,7 +2658,7 @@ def q_asof_tolerance(spark, sf_dir):
     matches go null.  Same single union+window shuffle as the unbounded
     form; the age test is map-side."""
     from .operators.asof import asof_join
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     purchases = e.filter(F.col("event_type") == "purchase")
     views = e.filter(F.col("event_type") == "view") \
              .select("user_id", "ts", "value", "event_id")
@@ -2711,7 +2678,7 @@ def q_group_ksample(spark, sf_dir):
     or partitioning).  One window shuffle on the group key; no global
     sort, no rand()."""
     from .pipeline.sampling import hash_bucket
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     # Two-phase exact top-k: a single window per LANGUAGE would rank the
     # whole language on one task (4-5 partitions for the corpus).  Phase 1
     # takes the k smallest hashes within (lang, doc_id mod 16) shards —
@@ -2736,7 +2703,7 @@ def q_json_struct(spark, sf_dir):
     scale path — parsed ONCE into a struct, pruned/pushed like any column,
     vs per-reference get_json_object re-parsing per extraction), then an
     aggregate over the typed field."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     props = F.from_json(F.col("props"), "k BIGINT")
     return (e.withColumn("k", props["k"])
              .groupBy(F.col("event_type"))
@@ -2751,7 +2718,7 @@ def q_array_hof(spark, sf_dir):
     JVM-side vector math path (transform/filter/aggregate run in codegen;
     no Python, no explode): component mean/min/max, L2 norm, and the
     count of positive components per vector."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     total = F.aggregate(v, F.lit(0.0), lambda a, x: a + x)
     return emb.select(
@@ -2772,7 +2739,7 @@ def q_bm25_rank(spark, sf_dir):
     df/N/avgdl aggregate once (broadcast back), hits filter BEFORE the
     shuffle, scores round before ranking (doc_id tie-break)."""
     from .pipeline.ranking import bm25_rank
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return bm25_rank(d, ["spark", "join", "window"], topk=10)
 
 
@@ -2781,7 +2748,7 @@ def q_unigram_scores(spark, sf_dir):
     log-probabilities learned in one aggregate, broadcast back, mean
     per document."""
     from .pipeline.ranking import unigram_scores
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return unigram_scores(d)
 
 
@@ -2793,7 +2760,7 @@ def q_bigram_scores(spark, sf_dir):
     shuffle joins (never broadcast hints); per-bigram logp quantizes to
     integer micro-units before the mean (order-free long sums)."""
     from .pipeline.ranking import bigram_scores
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return bigram_scores(d)
 
 
@@ -2808,8 +2775,8 @@ def q_hybrid_rrf(spark, sf_dir):
     dimension-scale at any corpus size.  Returns the fused top-10."""
     from .pipeline.ranking import bm25_rank, rrf_fuse
     from .pipeline.similarity import cosine_topk
-    d = _t(spark, sf_dir, "documents")
-    em = _t(spark, sf_dir, "embeddings")
+    d = read_table(spark, sf_dir, "documents")
+    em = read_table(spark, sf_dir, "embeddings")
     bm = (bm25_rank(d, ["spark", "join", "window"], topk=20)
           .withColumn("rank", F.row_number().over(
               Window.orderBy(F.desc("score"), F.asc("doc_id"))))
@@ -2831,7 +2798,7 @@ def q_span_dedup(spark, sf_dir):
     vocabulary-grain aggregate, the flag is a gram equi-join.
     dup_fraction is a raw long/long division (bit-identical)."""
     from .pipeline.dedup import duplicated_spans
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return duplicated_spans(d, n=8, min_docs=2)
 
 
@@ -2844,7 +2811,7 @@ def q_span_dedup_incremental(spark, sf_dir):
     corpus (the contamination gate an ingest pipeline applies before
     accepting a crawl batch)."""
     from .pipeline.dedup import duplicated_spans_incremental, gram_index
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     cut = d.agg((F.max("doc_id") - 99).alias("__c"))
     hist = (d.crossJoin(F.broadcast(cut))
              .filter(F.col("doc_id") < F.col("__c")).drop("__c"))
@@ -2868,7 +2835,7 @@ def q_semdedup(spark, sf_dir):
     the hash checks quantizer, assignment tie-breaks, and the pair
     threshold at once."""
     from .pipeline.similarity import semantic_dedup_pairs
-    em = _t(spark, sf_dir, "embeddings")
+    em = read_table(spark, sf_dir, "embeddings")
     return semantic_dedup_pairs(em, threshold=0.35)
 
 
@@ -2884,7 +2851,7 @@ def q_curation_funnel(spark, sf_dir):
     the (doc, gram) bigram aggregation pair, and the final per-source
     report — token stats are in-row."""
     from .pipeline.text import dup_ngram_features
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     w = Window.partitionBy(F.md5("text")).orderBy(F.asc("doc_id"))
     toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
     base = (d.select("doc_id", "source", "text")
@@ -2923,7 +2890,7 @@ def q_psm_match(spark, sf_dir):
     tractable at the sweep SFs while the engine side scales by the
     caliper-cell key like any grid query."""
     from .functions.scalar import cents
-    e = _t(spark, sf_dir, "events").filter(
+    e = read_table(spark, sf_dir, "events").filter(
         (F.col("user_id") % 7 == 0) & F.col("value").isNotNull())
     units = (e.groupBy("user_id")
               .agg((F.sum(cents(F.col("value")))
@@ -2954,7 +2921,7 @@ def q_hard_negatives(spark, sf_dir):
     L∞ resolution bound holds unchanged; 51.6× → ~3× at the 10×
     stress SF, SCALE.md r10)."""
     from .pipeline.similarity import hard_negatives
-    em = _t(spark, sf_dir, "embeddings")
+    em = read_table(spark, sf_dir, "embeddings")
     pts = em.select("vec_id", "label",
                     F.element_at("embedding", 1).alias("x"),
                     F.element_at("embedding", 2).alias("y"))
@@ -2972,7 +2939,7 @@ def q_mmr_rerank(spark, sf_dir):
     MATERIALIZED CTE stages, the query vector joined in-SQL from the
     same row the engine collected."""
     from .pipeline.similarity import mmr_rerank
-    em = _t(spark, sf_dir, "embeddings")
+    em = read_table(spark, sf_dir, "embeddings")
     qv = [float(x) for x in
           em.filter(F.col("vec_id") == 0).select("embedding").first()[0]]
     return mmr_rerank(em.filter(F.col("vec_id") != 0), qv, k=8)
@@ -2986,7 +2953,7 @@ def q_set_cover(spark, sf_dir):
     vocabulary dual of q_kcenter_coreset's geometric spread).  Oracle
     unrolls the 8 rounds as chained MATERIALIZED covered-set CTEs."""
     from .pipeline.sampling import greedy_set_cover
-    return greedy_set_cover(_t(spark, sf_dir, "documents"), k=8)
+    return greedy_set_cover(read_table(spark, sf_dir, "documents"), k=8)
 
 
 def q_novelty_scores(spark, sf_dir):
@@ -3000,7 +2967,7 @@ def q_novelty_scores(spark, sf_dir):
     join, never a broadcast — the q_unigram_scores rule); counts are
     integers, the ratio is one division of exact longs."""
     from .pipeline.text import _token_ngrams
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     grams = d.select("doc_id", "source",
                      F.explode(_token_ngrams("text", 2)).alias("g"))
     ref = (grams.filter(F.col("source") == "src0")
@@ -3030,7 +2997,7 @@ def q_weighted_cover(spark, sf_dir):
     floor equals exact integer division in both engines.  Oracle
     unrolls the rounds with DuckDB's // on the same integers."""
     from .pipeline.sampling import greedy_weighted_cover
-    return greedy_weighted_cover(_t(spark, sf_dir, "documents"), k=8)
+    return greedy_weighted_cover(read_table(spark, sf_dir, "documents"), k=8)
 
 
 def q_jl_project(spark, sf_dir):
@@ -3042,7 +3009,7 @@ def q_jl_project(spark, sf_dir):
     scalar rows so the driver's float normalization applies; the
     1/√16 = 0.25 scale is exact dyadic."""
     from .pipeline.similarity import jl_project
-    em = _t(spark, sf_dir, "embeddings")
+    em = read_table(spark, sf_dir, "embeddings")
     return jl_project(em, d_out=16)
 
 
@@ -3058,7 +3025,7 @@ def q_kcenter_coreset(spark, sf_dir):
     unrolls the 8 selections as chained MATERIALIZED CTE stages (the
     q_pagerank discipline)."""
     from .pipeline.similarity import kcenter_coreset
-    em = _t(spark, sf_dir, "embeddings")
+    em = read_table(spark, sf_dir, "embeddings")
     return kcenter_coreset(em, k=8)
 
 
@@ -3071,7 +3038,7 @@ def q_sequence_packing(spark, sf_dir):
     window, plan-tested); bins are in-row integer floor-divs, so every
     output value is exact."""
     from .pipeline.sampling import pack_documents
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return pack_documents(d, ctx_len=1024)
 
 
@@ -3082,7 +3049,7 @@ def q_packed_bins(spark, sf_dir):
     Every bin must hold exactly 1024 tokens except the last; first/last
     tokens pin the exact layout without shipping full arrays."""
     from .pipeline.sampling import materialize_bins
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return materialize_bins(d, ctx_len=1024)
 
 
@@ -3092,7 +3059,7 @@ def q_redact_pii(spark, sf_dir):
     document first (same concat in the oracle), then redacts — proving
     both the match counts and the rewritten text byte-for-byte."""
     from .pipeline.text import redact_pii
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     planted = d.select(
         "doc_id",
         F.concat(F.col("text"), F.lit(" contact u"),
@@ -3110,7 +3077,7 @@ def q_merge_upsert(spark, sf_dir):
     base.  Exercises all three MERGE branches; value rounds to 6 so the
     oracle hash is stable."""
     from .operators.merge import merge_upsert
-    e = (_t(spark, sf_dir, "events")
+    e = (read_table(spark, sf_dir, "events")
          .select("event_id", "user_id", "event_type",
                  roundn(F.col("value")).alias("value")))
     updates = (e.filter(F.col("event_id") % 7 == 0)
@@ -3142,7 +3109,7 @@ def q_pagerank(spark, sf_dir):
     ordering are additionally property-tested.  Top-20 by rounded rank,
     user_id tie-break."""
     from .operators.graph import bipartite_edges, pagerank
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     rel = e.select("user_id", (F.col("event_id") / 5).cast("long").alias("item"))
     edges = bipartite_edges(rel, "user_id", "item", max_entities_per_item=8)
     pr = pagerank(edges, iters=5)
@@ -3162,7 +3129,7 @@ def q_triangle_count(spark, sf_dir):
     formulation, so the hash match checks the orientation logic, not a
     shared implementation."""
     from .operators.graph import bipartite_edges, triangle_count
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     rel = e.select("user_id",
                    (F.col("event_id") / 5).cast("long").alias("item"))
     # undirected=True: canonical src<dst edges — half the projection
@@ -3178,7 +3145,7 @@ def q_winsorize(spark, sf_dir):
     exact [p05, p95] of their event_type — one percentile aggregate
     broadcast back, map-side clamp.  Thresholds round before the clamp
     so engines agree at the boundary."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     pct = e.groupBy("event_type").agg(
         F.round(F.percentile("value", F.lit(0.05)), 6).alias("__lo"),
         F.round(F.percentile("value", F.lit(0.95)), 6).alias("__hi"))
@@ -3203,7 +3170,7 @@ def q_ewma(spark, sf_dir):
     is guarded at 100k events/user — the raise_error branch rides the
     live n_events column (fails loud at execution, no extra pass), same
     discipline as funnel_stages' max_group."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     max_group = 100_000
     arr = F.transform(
         F.array_sort(F.collect_list(F.struct("ts", "event_id", "value"))),
@@ -3228,7 +3195,7 @@ def q_intersect_except(spark, sf_dir):
     """Set algebra beyond union: users who both purchased AND errored
     (INTERSECT), minus those who signed up (EXCEPT) — native
     intersect/exceptAll lowering to hash semi/anti aggregates."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     users = lambda t, v: (e.filter((F.col("event_type") == t)
                                    & (F.col("value") > v))
                            .select("user_id"))
@@ -3241,7 +3208,7 @@ def q_mad_robust(spark, sf_dir):
     """Robust dispersion per group: median absolute deviation —
     median(|x − median(x)|) via two aggregate passes with a broadcast
     join-back between them (no window, no sort of the fact table)."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     med = e.groupBy("event_type").agg(F.median("value").alias("__med"))
     return (e.join(F.broadcast(med), "event_type")
              .withColumn("__ad", F.abs(F.col("value") - F.col("__med")))
@@ -3259,7 +3226,7 @@ def q_corpus_release(spark, sf_dir):
     (candidates / quality / sampled / rate).  Three shuffles total: the
     dedup window, the per-source counts, the final report aggregate —
     everything else is map-side or broadcast."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     norm = F.trim(F.regexp_replace(
         F.regexp_replace(F.lower(F.col("text")), r"[.,!?;:]", ""),
         r"\s+", " "))
@@ -3300,7 +3267,7 @@ def q_corpus_diff(spark, sf_dir):
     two corpus snapshots (v2 simulated deterministically: every 13th doc
     dropped, every 7th edited, shifted ids added).  The md5 compare means
     the shuffle carries 32-byte digests, not documents."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     v1 = d.select("doc_id", F.md5("text").alias("h1"))
     v2_keep = (d.filter(F.col("doc_id") % 13 != 0)
                 .select("doc_id",
@@ -3326,7 +3293,7 @@ def q_filter_funnel(spark, sf_dir):
     quality gate (length → stopword ratio → mean token length) — the
     one-pass conditional-aggregate funnel every dataset card quotes.
     Single aggregate row; no per-filter scans."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
     n_tok = F.size(toks)
     stop_hits = F.size(F.filter(toks, lambda t: t.isin("the", "a", "of",
@@ -3349,7 +3316,7 @@ def q_ngram_hotspots(spark, sf_dir):
     boilerplate sweeps use 5-grams+; the synthetic vocabulary is too
     small for 5-gram repeats, so the query pins the mechanics on
     bigrams.)"""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     staged = d.select("doc_id",
                       F.filter(F.split(F.col("text"), " "),
                                lambda t: t != "").alias("__toks"))
@@ -3378,7 +3345,7 @@ def q_ivfpq_topk(spark, sf_dir):
     property-tested, and the Spark ML KMeans quantizer stays the
     library default."""
     from .pipeline.similarity import ivfpq_topk
-    em = _t(spark, sf_dir, "embeddings")
+    em = read_table(spark, sf_dir, "embeddings")
     return ivfpq_topk(em, [0, 1, 2, 3, 4], k=3, nprobe=2,
                       m=8, pq_k=16, train_frac=0.25, iters=1,
                       neutral=True)
@@ -3391,7 +3358,7 @@ def q_span_corruption(spark, sf_dir):
     array slicing over the staged token column (HOF-CSE rule); the
     training-pair fan-out is map-side.  Docs shorter than the span are
     dropped (both engines agree)."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     span = 5
     staged = d.select(
         "doc_id",
@@ -3416,7 +3383,7 @@ def q_kfold(spark, sf_dir):
     """Leakage-safe k-fold assignment: every event of a user lands in ONE
     fold (key-hash mod k); per-fold sizes prove balance.  The k-way
     generalization of the M8 group split."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     fold = F.pmod(F.pmod(F.col("user_id"), F.lit(1 << 31))
                   * F.lit(2654435761), F.lit(1 << 32)) % 5
     return (e.withColumn("fold", fold)
@@ -3435,7 +3402,7 @@ def q_rolling_active_users(spark, sf_dir):
     that actually exist.  The oracle uses the equivalent BETWEEN range
     join — different formulation, same result, so the match checks the
     fan-out logic."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     act = (e.select("user_id", F.to_date("ts").alias("day"))
             .distinct())
     dau = (act.groupBy("day")
@@ -3464,7 +3431,7 @@ def q_table_profile(spark, sf_dir):
     n_distinct to ``approx_count_distinct`` (mergeable HLL, no Expand,
     one true pass) — the A12 scale rule; exact stays here because the
     oracle hash-verifies it."""
-    e = _t(spark, sf_dir, "events").select(
+    e = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value")
     total = F.count(F.lit(1))
     aggs = []
@@ -3499,7 +3466,7 @@ def q_period_over_period(spark, sf_dir):
     aggregated grain; integer-cents sums keep totals exact and each
     delta is an integer subtraction before one division."""
     from .functions.scalar import cents
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     daily = (e.groupBy("event_type", F.to_date("ts").alias("day"))
               .agg(F.sum(cents(F.col("value"))).alias("__c")))
     d1 = daily.select("event_type",
@@ -3525,7 +3492,7 @@ def q_new_vs_returning(spark, sf_dir):
     them new that day, returning after.  User-grain first-day table
     joins the (user, day) activity grain (both shuffle on user_id and
     co-partition; never broadcast — the PageRank node-table rule)."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     act = (e.select("user_id", F.to_date("ts").alias("day"))
             .distinct())
     first = act.groupBy("user_id").agg(F.min("day").alias("first_day"))
@@ -3545,7 +3512,7 @@ def q_group_entropy(spark, sf_dir):
     each, the second over the already-collapsed grain; p·log2(p) terms
     round at 9 digits BEFORE the sum so the addition order across
     engines cannot flip the 6-digit output."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     counts = (e.groupBy("user_id", "event_type")
                .agg(F.count(F.lit(1)).alias("n")))
     w_tot = Window.partitionBy("user_id")
@@ -3567,7 +3534,7 @@ def q_cohort_ltv(spark, sf_dir):
     window walks that tiny series — the window never sees fact rows,
     and integer cents keep the cumulative totals engine-exact."""
     from .functions.scalar import cents
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     first = (e.groupBy("user_id")
               .agg(F.min(F.to_date("ts")).alias("cohort_day")))
     cells = (e.join(first, "user_id")
@@ -3590,7 +3557,7 @@ def q_chi_square(spark, sf_dir):
     shifted.  All marginals join back onto the O(R·C) cell grain;
     per-cell terms round at 9 digits before the final sum (the
     q_group_entropy association-order rule)."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     cells = d.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n"))
     row = cells.groupBy("lang").agg(F.sum("n").alias("__r"))
@@ -3626,7 +3593,7 @@ def q_ks_drift(spark, sf_dir):
     cumsum_distributed's range-partitioned prefix sums, never a
     single-reducer global window (operators/drift.py)."""
     from .operators.drift import ks_two_sample
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     tagged = (e.filter(F.col("event_type").isin("purchase", "error"))
                .select("value",
                        (F.col("event_type") == "purchase")
@@ -3643,7 +3610,7 @@ def q_auc_exact(spark, sf_dir):
     division over exact integers — auc emitted unrounded because every
     engine computes the identical bits (operators/drift.py)."""
     from .operators.drift import auc_exact
-    e = (_t(spark, sf_dir, "events")
+    e = (read_table(spark, sf_dir, "events")
          .filter(F.col("value").isNotNull())
          .withColumn("is_pos",
                      (F.col("event_type") == "purchase").cast("long")))
@@ -3659,7 +3626,7 @@ def q_auc_by_group(spark, sf_dir):
     distributed-cumsum machinery is only needed when there is no
     partition key).  DECIMAL(38,0) term accumulation, one final
     division per group, auc unrounded (bit-identical)."""
-    e = (_t(spark, sf_dir, "events")
+    e = (read_table(spark, sf_dir, "events")
          .filter(F.col("value").isNotNull())
          .select(F.dayofweek("ts").alias("dow"), "value",
                  (F.col("event_type") == "purchase").cast("long")
@@ -3694,7 +3661,7 @@ def q_cumulative_gains(spark, sf_dir):
     (share of all positives reached by targeting down to this bin) —
     the campaign-targeting staple.  Cumulative pass is a window over
     the 10-row bin grain; capture = long/long division, unrounded."""
-    e = (_t(spark, sf_dir, "events")
+    e = (read_table(spark, sf_dir, "events")
          .filter(F.col("value").isNotNull())
          .select("value",
                  (F.col("event_type") == "purchase").cast("long")
@@ -3727,7 +3694,7 @@ def q_classification_report(spark, sf_dir):
     exact-integer divisions (F1 via 2TP/(2TP+FP+FN), one division —
     never the precision·recall composite, which would divide three
     times and round twice)."""
-    e = (_t(spark, sf_dir, "events")
+    e = (read_table(spark, sf_dir, "events")
          .filter(F.col("value").isNotNull())
          .select((F.col("value") >= 100.0).cast("long").alias("pred"),
                  (F.col("event_type") == "purchase").cast("long")
@@ -3753,7 +3720,7 @@ def q_calibration_bins(spark, sf_dir):
     rate.  Means reduce as integer-unit long sums (cents for the
     score); rates are long/long divisions — every double bit-identical
     across engines, so no rounding is applied."""
-    e = (_t(spark, sf_dir, "events")
+    e = (read_table(spark, sf_dir, "events")
          .filter(F.col("value").isNotNull())
          .select("value",
                  (F.col("event_type") == "purchase").cast("long")
@@ -3783,7 +3750,7 @@ def q_trending_decay(spark, sf_dir):
     term rounds at 9 BEFORE the sum (the q_group_entropy discipline:
     rounded-term sums are association-order-proof), with the final sum
     rounded at 6."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     anchor = e.agg(F.max(F.unix_timestamp("ts")).alias("__t0"))
     term = F.round(
         F.pow(F.lit(2.0),
@@ -3806,7 +3773,7 @@ def q_psi_drift(spark, sf_dir):
     no width_bucket uniform-bins limitation), empty current bins clamp
     at 1e-6 (standard practice, deterministic in both engines), and
     per-bin terms round at 9 before the final sum."""
-    e = _t(spark, sf_dir, "events").select(
+    e = read_table(spark, sf_dir, "events").select(
         "value", F.dayofmonth(F.to_date("ts")).alias("__dom"))
     ref = e.filter(F.col("__dom") <= 15)
     cur = e.filter(F.col("__dom") > 15)
@@ -3848,7 +3815,7 @@ def q_gini_concentration(spark, sf_dir):
     deterministic total order (count, user_id); every term of
     G = (2·Σ(i·xᵢ) − (n+1)·Σxᵢ) / (n·Σxᵢ) is an exact integer until
     the single final division, so association order cannot drift."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     counts = (e.groupBy("event_type", "user_id")
                .agg(F.count(F.lit(1)).alias("x")))
     w = Window.partitionBy("event_type").orderBy("x", "user_id")
@@ -3871,7 +3838,7 @@ def q_path_analysis(spark, sf_dir):
     array_sort over (ts, event_id, type) structs, transform, slice —
     one shuffle for the session window, one for the session agg, one
     for the path count."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # gap in exact MICROSECONDS (unix_micros), not truncated seconds:
     # unix_timestamp floors each side, so a sub-second-straddling gap
@@ -3910,7 +3877,7 @@ def q_retention_cohorts(spark, sf_dir):
     (joined, NOT broadcast — user-grain scales with the fact table, the
     PageRank node-table rule), and the cell count combines map-side.
     At 100 TB both sides shuffle on user_id and co-partition."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     act = (e.select("user_id", F.to_date("ts").alias("day"))
             .distinct())
     first = act.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
@@ -3926,7 +3893,7 @@ def q_attribution(spark, sf_dir):
     PRECEDING non-purchase event (channel + lead time) — the as-of self
     join, linear union+window plan; DuckDB native ASOF JOIN oracle."""
     from .operators.asof import asof_join
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     purchases = (e.filter(F.col("event_type") == "purchase")
                   .select("event_id", "user_id", "ts"))
     touches = (e.filter(F.col("event_type") != "purchase")
@@ -3942,7 +3909,7 @@ def q_quantile_normalize(spark, sf_dir):
     """Within-group quantile normalization (batch-effect correction):
     each value maps to its percent_rank inside its event_type — rank
     windows share the one group exchange; ranks round before hashing."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy(F.asc("value"),
                                                  F.asc("event_id"))
     return (e.select("event_id", "event_type",
@@ -3955,7 +3922,7 @@ def q_temperature_mix(spark, sf_dir):
     √n-proportional sampling rates derived in-plan, deterministic hash
     membership — the multilingual rebalancing rule, reproducibly."""
     from .pipeline.sampling import temperature_mixture
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     out = temperature_mixture(d, "source", "doc_id", target_rows=200)
     return out.select("doc_id", "source", roundn(F.col("rate")).alias("rate"))
 
@@ -3967,7 +3934,7 @@ def q_negative_samples(spark, sf_dir):
     positives removed by one left-anti join.  Reproducible across
     engines/partitionings — no rand()."""
     from .pipeline.sampling import negative_samples
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     pos = (e.select("user_id", (F.col("event_id") % 1000).alias("item"))
             .distinct())
     return negative_samples(pos, "user_id", "item", n_items=1000, k=2)
@@ -4003,7 +3970,7 @@ def q_fuzzy_join(spark, sf_dir):
     fewer candidates measured); both strategies are property-tested
     equal to brute force."""
     from .pipeline.dedup import deletion_neighborhood_pairs
-    c = _t(spark, sf_dir, "customer")
+    c = read_table(spark, sf_dir, "customer")
     return deletion_neighborhood_pairs(c, max_dist=1,
                                        id_col="c_custkey",
                                        string_col="c_name")
@@ -4015,7 +3982,7 @@ def q_hll_neutral(spark, sf_dir):
     division) — the sketch-tier trio's third hash-verified twin; the
     DataSketches binary form stays the production path."""
     from .operators.sketches import hll_neutral
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     return hll_neutral(e, ["event_type"], "user_id")
 
 
@@ -4028,7 +3995,7 @@ def q_near_dup_diff(spark, sf_dir):
     Rows-only at the driver; opcode semantics pinned by unit tests."""
     from .pipeline.dedup import ngram_jaccard_pairs
     from .pipeline.diffing import diff_summary
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(d, threshold=0.5)
     texts = d.select("doc_id", "text")
     withtext = (pairs
@@ -4056,7 +4023,7 @@ def q_grid_nearest(spark, sf_dir):
     play key does in J6/J8).  Exact for the within-radius semantics —
     the oracle brute-forces all pairs."""
     from .operators.separation import grid_nearest
-    em = _t(spark, sf_dir, "embeddings")
+    em = read_table(spark, sf_dir, "embeddings")
     pts = em.select("vec_id",
                     F.element_at("embedding", 1).alias("x"),
                     F.element_at("embedding", 2).alias("y"))
@@ -4074,7 +4041,7 @@ def q_grid_knn(spark, sf_dir):
     bound then covers all k), so partially-matched queries escalate to
     the radius backstop."""
     from .operators.separation import grid_knn
-    em = _t(spark, sf_dir, "embeddings")
+    em = read_table(spark, sf_dir, "embeddings")
     pts = em.select("vec_id",
                     F.element_at("embedding", 1).alias("x"),
                     F.element_at("embedding", 2).alias("y"))
@@ -4089,7 +4056,7 @@ def q_hard_negatives_k(spark, sf_dir):
     exact under the label predicate (identical candidate subset at
     every rung); the oracle brute-forces all label-mismatched pairs."""
     from .pipeline.similarity import hard_negatives_k
-    em = _t(spark, sf_dir, "embeddings")
+    em = read_table(spark, sf_dir, "embeddings")
     pts = em.select("vec_id", "label",
                     F.element_at("embedding", 1).alias("x"),
                     F.element_at("embedding", 2).alias("y"))
@@ -4105,7 +4072,7 @@ def q_mutual_knn(spark, sf_dir):
     (point × ≤k) grain, then one reciprocity self-join — n·k rows
     through the mutuality shuffle, never candidate pairs."""
     from .pipeline.similarity import mutual_knn_edges
-    em = _t(spark, sf_dir, "embeddings")
+    em = read_table(spark, sf_dir, "embeddings")
     pts = em.select("vec_id",
                     F.element_at("embedding", 1).alias("x"),
                     F.element_at("embedding", 2).alias("y"))
@@ -4120,7 +4087,7 @@ def q_triplet_mining(spark, sf_dir):
     passes + one point-grain join.  Oracle: two brute-force ranked CTEs
     joined the same way."""
     from .pipeline.similarity import triplet_mining
-    em = _t(spark, sf_dir, "embeddings")
+    em = read_table(spark, sf_dir, "embeddings")
     pts = em.select("vec_id", "label",
                     F.element_at("embedding", 1).alias("x"),
                     F.element_at("embedding", 2).alias("y"))
@@ -4136,7 +4103,7 @@ def q_quality_classifier(spark, sf_dir):
     transform + aggregate — no explode, no shuffle at any corpus
     size)."""
     from .pipeline.text import quality_classifier
-    return quality_classifier(_t(spark, sf_dir, "documents"))
+    return quality_classifier(read_table(spark, sf_dir, "documents"))
 
 
 def q_perplexity_buckets(spark, sf_dir):
@@ -4148,7 +4115,7 @@ def q_perplexity_buckets(spark, sf_dir):
     tier boundary is deterministic because avg_logp is a long/long
     division, bit-identical across engines."""
     from .pipeline.ranking import perplexity_buckets
-    return perplexity_buckets(_t(spark, sf_dir, "documents"))
+    return perplexity_buckets(read_table(spark, sf_dir, "documents"))
 
 
 def q_mixture_weights(spark, sf_dir):
@@ -4158,7 +4125,7 @@ def q_mixture_weights(spark, sf_dir):
     double division of exact integer counts — and the sampling rate
     min(1, weight).  One group aggregate + a 1-row totals broadcast."""
     from .pipeline.sampling import mixture_weights
-    return mixture_weights(_t(spark, sf_dir, "documents"))
+    return mixture_weights(read_table(spark, sf_dir, "documents"))
 
 
 def q_simhash_neutral(spark, sf_dir):
@@ -4167,7 +4134,7 @@ def q_simhash_neutral(spark, sf_dir):
     the oracle reproduces fingerprints and 15-bit bands exactly (the
     fingerprint stage of q_simhash)."""
     from .pipeline.dedup import simhash_neutral
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return simhash_neutral(d)
 
 
@@ -4178,7 +4145,7 @@ def q_cdc_chunks(spark, sf_dir):
     makes chunk-level dedup stable.  In-row arithmetic over the staged
     token array; the oracle reproduces every chunk bit-for-bit."""
     from .pipeline.text import cdc_chunk_documents
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return cdc_chunk_documents(d, window=4, divisor=16)
 
 
@@ -4189,7 +4156,7 @@ def q_minhash_neutral(spark, sf_dir):
     and estimates bit-for-bit.  Same pipeline as q_minhash_pairs over
     the empty-token-filtered split (minhash_neutral_pairs)."""
     from .pipeline.dedup import minhash_neutral_pairs
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return minhash_neutral_pairs(d, min_est_jaccard=0.5)
 
 
@@ -4203,7 +4170,7 @@ def q_minhash_oph(spark, sf_dir):
     stage on the shared shingle-hash kernel (SCALE.md, "One
     shingle-hash kernel", has its history and timings)."""
     from .pipeline.dedup import minhash_oph_signatures
-    sig = minhash_oph_signatures(_t(spark, sf_dir, "documents"))
+    sig = minhash_oph_signatures(read_table(spark, sf_dir, "documents"))
     return sig.select("doc_id",
                       F.posexplode("sig").alias("slot", "value"))
 
@@ -4216,7 +4183,7 @@ def q_minhash_oph_pairs(spark, sf_dir):
     is held to the same standard as the classic one
     (q_minhash_neutral)."""
     from .pipeline.dedup import minhash_oph_pairs
-    return minhash_oph_pairs(_t(spark, sf_dir, "documents"),
+    return minhash_oph_pairs(read_table(spark, sf_dir, "documents"),
                              min_est_jaccard=0.5)
 
 
@@ -4233,7 +4200,7 @@ def q_entity_resolution(spark, sf_dir):
         deletion_neighborhood_pairs,
         duplicate_components,
     )
-    p = _t(spark, sf_dir, "part")
+    p = read_table(spark, sf_dir, "part")
     dic = p.groupBy("p_name").agg(F.min("p_partkey").alias("dict_id"))
     pairs = deletion_neighborhood_pairs(dic, max_dist=2,
                                         id_col="dict_id",
@@ -4258,7 +4225,7 @@ def q_ivm_refresh(spark, sf_dir):
     batch-split ⊕ merge ≡ one-shot; at 100 TB only the delta partitions
     are ever read."""
     from .operators.ivm import agg_state, finalize_state, merge_states
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     batches = [e.filter(F.col("event_id") % 10 <= 7),
                e.filter(F.col("event_id") % 10 == 8),
                e.filter(F.col("event_id") % 10 == 9)]
@@ -4273,7 +4240,7 @@ def q_jaccard_prefix(spark, sf_dir):
     verified in-row — equals the naive all-pairs join the oracle
     spells out."""
     from .pipeline.dedup import jaccard_prefix_pairs
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return jaccard_prefix_pairs(d, threshold=0.6)
 
 
@@ -4284,7 +4251,7 @@ def q_resample_ffill(spark, sf_dir):
     null — both engines agree.  Oracle uses DuckDB's native ASOF JOIN on
     fractional epochs."""
     from .operators.asof import resample_ffill
-    e = (_t(spark, sf_dir, "events")
+    e = (read_table(spark, sf_dir, "events")
          .select("user_id", "ts", roundn(F.col("value")).alias("value"),
                  "event_id"))
     out = resample_ffill(e, ["user_id"], "ts", ["value"],
@@ -4302,7 +4269,7 @@ def q_hll_incremental(spark, sf_dir):
     path with union≡whole + accuracy property tests.  n_batches counts
     the day-grain states merged."""
     from .operators.sketches import hll_neutral_registers, hll_neutral_rollup
-    e = _t(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
+    e = read_table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
     # localCheckpoint (GC-released) stands in for the parquet the state
     # table would live in: both consumers (merge, batch count) read the
     # day-grain state, never the fact table twice — and unlike a bare
@@ -4331,7 +4298,7 @@ def q_bloom_ingest_gate(spark, sf_dir):
     from .operators.sketches import (bloom_neutral_merge,
                                      bloom_neutral_state,
                                      with_bloom_maybe_seen)
-    e = _t(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
+    e = read_table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
     last = e.agg(F.max("day").alias("__last"))
     e2 = e.crossJoin(F.broadcast(last))
     hist = e2.filter(F.col("day") < F.col("__last"))
@@ -4358,7 +4325,7 @@ def q_hll_overlap(spark, sf_dir):
     ROUNDED estimates (round-before-subtract, the house float rule)."""
     from .operators.sketches import (hll_neutral_registers,
                                      hll_neutral_rollup)
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     # localCheckpoint, not persist: its lifetime is tied to the plan
     # object (GC-released), so repeated invocations (bench runs each
     # headline query twice; oracle parity runs every query in one
@@ -4408,7 +4375,7 @@ def q_minhash_audience(spark, sf_dir):
     The signature table pins once (localCheckpoint) before its self-join."""
     from .pipeline.dedup import (minhash_audience_signatures,
                                  minhash_audience_similarity)
-    e = _t(spark, sf_dir, "events").withColumn(
+    e = read_table(spark, sf_dir, "events").withColumn(
         "day", F.to_date("ts"))
     # localCheckpoint (GC-released), not an un-unpersisted .persist():
     # see q_hll_overlap's pin note.
@@ -4427,7 +4394,7 @@ def q_variant_props(spark, sf_dir):
     where ``from_json`` (q_json_struct) would need a declared struct.
     Parse happens ONCE per row regardless of how many paths are pulled
     (vs get_json_object re-parsing per extraction)."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     v = e.withColumn("__v", F.try_parse_json("props"))
     k = F.try_variant_get(F.col("__v"), "$.k", "bigint")
     return (v.select("event_type", k.alias("k"))
@@ -4443,7 +4410,7 @@ def q_weighted_sample(spark, sf_dir):
     inclusion probability ∝ length, reproducible across engines/runs/
     partitionings (key-derived uniform, no rand())."""
     from .pipeline.sampling import weighted_sample
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     out = weighted_sample(d, "doc_id", "n_chars", k=50)
     return out.select("doc_id", "lang", "wkey")
 
@@ -4454,7 +4421,7 @@ def q_cooccurrence(spark, sf_dir):
     the group key — the J6 bounded-fan-out discipline (≤C(5,2) pairs per
     user here)."""
     from .operators.aggregates import cooccurrence_pairs
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     return cooccurrence_pairs(e, "user_id", "event_type")
 
 
@@ -4466,7 +4433,7 @@ def q_basket_lift(spark, sf_dir):
     broadcast onto the pairs — the fact table is scanned once for the
     distinct relation and everything else is derived from it."""
     from .operators.aggregates import basket_lift
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     return basket_lift(e, "user_id", "event_type")
 
 
@@ -4476,7 +4443,7 @@ def q_transition_matrix(spark, sf_dir):
     totals join-back (states²-row table, never a whole-partition
     window)."""
     from .operators.aggregates import transition_matrix
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     return transition_matrix(e, "user_id", "event_type", ["ts", "event_id"])
 
 
@@ -4490,7 +4457,7 @@ def q_pit_join(spark, sf_dir):
     interval form."""
     from .operators.asof import asof_join
     from .operators.scd import scd2_history
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     hist = scd2_history(e, keys=["user_id"], ts_col="ts",
                         attr_cols=["event_type"], tie_cols=["event_id"])
     err = (e.filter(F.col("event_type") == "error")
@@ -4510,7 +4477,7 @@ def q_equidepth_bins(spark, sf_dir):
     percentile thresholds once (broadcast back), bucket = in-row strict
     count below.  No global sort (the ntile trap)."""
     from .operators.aggregates import equidepth_bins
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     out = equidepth_bins(e, "value", n_bins=10, keep=("event_id",))
     return out.select("event_id", roundn(F.col("value")).alias("value"),
                       "bin")
@@ -4523,7 +4490,7 @@ def q_rank_distributed(spark, sf_dir):
     window.  Same oracle as the window form (semantics identical); the
     plan is the one you'd want when the ranked frame is fact-grain."""
     from .operators.windows import rank_desc_distributed
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     vc = cents(F.col("value"))
     board = e.groupBy("user_id").agg(
         (F.sum(vc) / F.count("value") / 100.0).alias("mean_value"),
@@ -4541,7 +4508,7 @@ def q_scd2_history(spark, sf_dir):
     change (lead) — one window partitioning, single shuffle.  Epochs
     floor-truncate (the DuckDB-cast gotcha, verify skill)."""
     from .operators.scd import scd2_history
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     h = scd2_history(e, keys=["user_id"], ts_col="ts",
                      attr_cols=["event_type"], tie_cols=["event_id"])
     return h.select(
@@ -4557,7 +4524,7 @@ def q_funnel_stages(spark, sf_dir):
     per-user sorted event array and a single fold — vs the k-shuffle
     aggregate+join chain per step the SQL oracle spells out."""
     from .operators.scd import funnel_stages
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     return funnel_stages(e, "user_id", "ts", "event_type",
                          ["view", "click", "purchase"], tie_col="event_id")
 
@@ -4582,7 +4549,7 @@ def q_degree_distribution(spark, sf_dir):
     degree-grain; each ln term rounds at 9 before the sum and α̂ rides
     every histogram row (a 1-row broadcast)."""
     from .operators.graph import bipartite_edges
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     rel = e.select("user_id",
                    (F.col("event_id") / 5).cast("long").alias("item"))
     edges = bipartite_edges(rel, "user_id", "item",
@@ -4695,7 +4662,7 @@ def q_lead_lag(spark, sf_dir):
     hash-match), and r is one identical double expression.  The grid is
     span-bounded (hours, not events), so the 7 lag passes cost
     span × 7 rows total."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     hours = (e.groupBy(F.unix_timestamp(
                  F.date_trunc("hour", F.col("ts"))).alias("__h"),
                        "event_type")
@@ -4723,8 +4690,8 @@ def q_stratified_rates(spark, sf_dir):
     rate).  Everything from one customer-grain outcome join + one
     stratum-grain aggregate; weighted-rate terms round at 9 before the
     sum."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = read_table(spark, sf_dir, "customer")
+    o = read_table(spark, sf_dir, "orders")
     conv = (o.filter(F.col("o_orderpriority") == "1-URGENT")
              .select(F.col("o_custkey").alias("c_custkey")).distinct()
              .withColumn("__conv", F.lit(1)))
@@ -4782,7 +4749,7 @@ def q_vocab_kl(spark, sf_dir):
     corpus token table derives from it (vocab-grain second aggregate,
     joined back on the term); each p·ln(p/q) term rounds at 9 BEFORE
     the per-source sum (the q_group_entropy order-free discipline)."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     from .pipeline.text import _tokens
     st = (d.select("source", F.explode(_tokens("text")).alias("term"))
            .groupBy("source", "term")
@@ -4810,7 +4777,7 @@ def q_burst_detection(spark, sf_dir):
     sparse.  One user-partitioned RANGE window over integer epoch
     seconds (parallel across users, never global), then a per-user max
     — two aggregates on one exchange's partitioning."""
-    e = (_t(spark, sf_dir, "events")
+    e = (read_table(spark, sf_dir, "events")
          .select("user_id", F.unix_timestamp("ts").alias("__ep")))
     w = (Window.partitionBy("user_id").orderBy("__ep")
                .rangeBetween(-3600, 0))
@@ -4830,7 +4797,7 @@ def _markov_transitions(spark, sf_dir):
     are the implicit NULL sink: the solve only needs outgoing totals).
     One window shuffle on the user key; counts collapse to the ≤ 6×6
     grain."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     conv = (e.filter(F.col("event_type") == "purchase")
              .groupBy("user_id")
@@ -4925,8 +4892,8 @@ def q_join_size_est(spark, sf_dir):
     broadcastable tables, not a join."""
     from .operators.sketches import agms_join_size_estimate, \
         agms_sketch_build
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
     ca = agms_sketch_build(o, "o_orderkey", w=2048, d=3)
     cb = agms_sketch_build(li, "l_orderkey", w=2048, d=3)
     est = agms_join_size_estimate(ca, cb)
@@ -4951,7 +4918,7 @@ def q_rfm_segments(spark, sf_dir):
     segment-grain rollup (r_score, f_score, m_score, segment,
     n_users)."""
     from .functions.scalar import cents
-    e = (_t(spark, sf_dir, "events")
+    e = (read_table(spark, sf_dir, "events")
          .filter(F.col("value").isNotNull()))
     fin = e.agg(F.max(F.unix_timestamp("ts")).alias("__end"))
     users = (e.crossJoin(F.broadcast(fin))
@@ -5002,7 +4969,7 @@ def q_kaplan_meier(spark, sf_dir):
     0.0 in both engines.  Returns event-time rows
     (duration, n_risk, n_event, surv)."""
     from .operators.windows import cumsum_distributed
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     t1 = (e.filter(F.col("event_type") == "view")
            .groupBy("user_id")
            .agg(F.min(F.unix_timestamp("ts")).alias("__t0")))
@@ -5059,7 +5026,7 @@ def q_forecast_backtest(spark, sf_dir):
     so the backtest metrics are engine-exact.  Test cells unseen in training are
     dropped (inner join) and counted via n_scored."""
     from .functions.scalar import cents
-    e = (_t(spark, sf_dir, "events")
+    e = (read_table(spark, sf_dir, "events")
          .filter(F.col("value").isNotNull())
          .select("event_type", "value",
                  cents(F.col("value")).alias("__vc"),
@@ -5106,7 +5073,7 @@ def q_contrastive_pairs(spark, sf_dir):
     one row per pair, ready to groupBy-collect into training
     examples."""
     from .pipeline.dedup import embedding_dup_pairs
-    em = _t(spark, sf_dir, "embeddings")
+    em = read_table(spark, sf_dir, "embeddings")
     pairs = embedding_dup_pairs(em, threshold=0.25)
     sym = (pairs.select(F.col("id_a").alias("anchor_id"),
                         F.col("id_b").alias("partner_id"), "cosine")
@@ -5158,7 +5125,7 @@ def q_dedup_canonical(spark, sf_dir):
     identical formulation in the oracle, on top of the recursive-CTE
     component fixpoint."""
     from .pipeline.dedup import duplicate_components, ngram_jaccard_pairs
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(d, threshold=0.5)
     comp = duplicate_components(pairs)
     # the catalog already carries n_chars — joining on it keeps the
@@ -5189,7 +5156,7 @@ def q_skew_advisor(spark, sf_dir):
     share and the p99/median size ratio.  Independent linear passes per
     candidate, unioned; exact percentiles over the size distribution."""
     from .operators.skew import skew_profile
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     return skew_profile(e, ["user_id", "event_type"])
 
 
@@ -5205,7 +5172,7 @@ def q_cuped(spark, sf_dir):
     finals are one identical double expression tree.  The time cutoff
     is the epoch-second midpoint (floor semantics on both engines)."""
     from .functions.scalar import cents
-    e = (_t(spark, sf_dir, "events")
+    e = (read_table(spark, sf_dir, "events")
          .filter(F.col("value").isNotNull())
          .select("user_id", "ts", cents(F.col("value")).alias("__vc")))
     # floor, not cast: cast truncates toward zero, which diverges from
@@ -5274,7 +5241,7 @@ def q_seasonal_anomalies(spark, sf_dir):
     the shortlist is a distributed TakeOrdered (orderBy+limit — never a
     global window) under a rounded-residual + event_id total order."""
     from .functions.scalar import cents
-    e = (_t(spark, sf_dir, "events")
+    e = (read_table(spark, sf_dir, "events")
          .filter(F.col("value").isNotNull())
          .withColumn("__vc", cents(F.col("value")))
          .withColumn("__dow", F.dayofweek("ts"))
@@ -5302,7 +5269,7 @@ def q_dup_size_histogram(spark, sf_dir):
     component labeling (which is itself exact-checked against a
     recursive-CTE fixpoint in q_dup_components)."""
     from .pipeline.dedup import duplicate_components, ngram_jaccard_pairs
-    pairs = ngram_jaccard_pairs(_t(spark, sf_dir, "documents"),
+    pairs = ngram_jaccard_pairs(read_table(spark, sf_dir, "documents"),
                                 threshold=0.5)
     comp = duplicate_components(pairs)
     sizes = comp.groupBy("component").agg(
@@ -5325,7 +5292,7 @@ def q_wasserstein_drift(spark, sf_dir):
     telescoping."""
     from .functions.scalar import cents
     from .operators.drift import wasserstein_two_sample
-    e = (_t(spark, sf_dir, "events")
+    e = (read_table(spark, sf_dir, "events")
          .filter(F.col("event_type").isin("purchase", "error")
                  & F.col("value").isNotNull())
          .select(cents(F.col("value")).alias("__vc"),
@@ -5342,7 +5309,7 @@ def q_k_anonymity(spark, sf_dir):
     account-balance band (l), classes below k=5 flagged.  One exact
     aggregate; class count is domain-bounded, never table-bounded."""
     from .operators.checks import anonymity_profile
-    c = (_t(spark, sf_dir, "customer")
+    c = (read_table(spark, sf_dir, "customer")
          .withColumn("balance_band",
                      F.floor(F.col("c_acctbal") / 1000).cast("long")))
     return anonymity_profile(c, ["c_nationkey", "c_mktsegment"],
@@ -5360,7 +5327,7 @@ def q_theta_overlap(spark, sf_dir):
     the final rounded estimates."""
     from .operators.sketches import theta_intersect_pairs, \
         theta_sketch_state
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     st = theta_sketch_state(e, ["event_type"], "user_id", k=32)
     return theta_intersect_pairs(st, "event_type", "user_id")
 
@@ -5373,7 +5340,7 @@ def q_window_funnel(spark, sf_dir):
     history (single shuffle + hot-key guard).  The oracle is the same
     CTE chain with the interval bound."""
     from .operators.scd import windowed_funnel
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     return windowed_funnel(e, "user_id", "ts", "event_type",
                            ["view", "click", "purchase"],
                            within_seconds=7200)
@@ -5388,7 +5355,7 @@ def q_langid_confusion(spark, sf_dir):
     lang recall share as a long/long division against broadcast
     marginals."""
     from .pipeline.text import language_id_columns
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     pred = d.select("lang", *language_id_columns("text"))
     cells = (pred.groupBy("lang", "predicted_lang")
                  .agg(F.count(F.lit(1)).alias("n"))
@@ -5407,7 +5374,7 @@ def q_readability(spark, sf_dir):
     integer counting and two divisions, map-only, the same quality-
     filter family as q_text_quality."""
     from .pipeline.text import readability
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return readability(d)
 
 
@@ -5419,7 +5386,7 @@ def q_kcore(spark, sf_dir):
     SAME three rounds as materialized CTE stages, so the hash match
     verifies every intermediate peel."""
     from .operators.graph import bipartite_edges, kcore
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     rel = e.select("user_id",
                    (F.col("event_id") / 5).cast("long").alias("item"))
     edges = bipartite_edges(rel, "user_id", "item",
@@ -5437,7 +5404,7 @@ def q_cusum_drift(spark, sf_dir):
     ordering-sensitive sum never touches a float."""
     from .functions.scalar import cents
     from .operators.drift import cusum_range
-    e = (_t(spark, sf_dir, "events")
+    e = (read_table(spark, sf_dir, "events")
          .filter(F.col("value").isNotNull())
          .withColumn("__vc", cents(F.col("value"))))
     return cusum_range(e, "event_type", "__vc", ["ts", "event_id"])
@@ -5451,7 +5418,7 @@ def q_woe_iv(spark, sf_dir):
     are one aggregate; WOE and the IV contribution are per-row scalar
     math on exact longs (identical expressions in the oracle), emitted
     at the bin grain so no float sum exists anywhere."""
-    e = (_t(spark, sf_dir, "events")
+    e = (read_table(spark, sf_dir, "events")
          .filter(F.col("value").isNotNull()))
     lab = F.when(F.col("event_type") == "purchase", 1).otherwise(0)
     fracs = [k / 10 for k in range(1, 10)]
@@ -5486,7 +5453,7 @@ def q_item_similarity(spark, sf_dir):
     the bounded within-basket self-join, item counts broadcast back,
     similarities per-row scalar math on exact long counts."""
     from .operators.aggregates import item_similarity
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return item_similarity(li, "l_orderkey", "l_partkey",
                            min_pair_groups=3)
 
@@ -5499,12 +5466,12 @@ def q_referential_integrity(spark, sf_dir):
     one anti join against the distinct dimension keys; edges evaluate
     independently and union."""
     from .operators.checks import referential_profile
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    p = _t(spark, sf_dir, "part")
-    n = _t(spark, sf_dir, "nation")
+    li = read_table(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders")
+    c = read_table(spark, sf_dir, "customer")
+    s = read_table(spark, sf_dir, "supplier")
+    p = read_table(spark, sf_dir, "part")
+    n = read_table(spark, sf_dir, "nation")
     return referential_profile([
         ("lineitem->orders", li, ["l_orderkey"], o, ["o_orderkey"]),
         ("lineitem->part", li, ["l_partkey"], p, ["p_partkey"]),
@@ -5523,7 +5490,7 @@ def q_benford_audit(spark, sf_dir):
     digit-grain aggregate, observed share as long/long division,
     expected share log10(1+1/d) and the per-digit chi-square term as
     identical scalar expressions both engines round at 6."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     digit = F.substring(cents(F.col("l_extendedprice")).cast("string"),
                         1, 1).cast("long")
     counts = (li.filter(F.col("l_extendedprice") > 0)
@@ -5551,7 +5518,7 @@ def q_ab_test(spark, sf_dir):
     exchange), then a 1-row scalar report — rates are long/long
     divisions and z is one identical double expression tree on exact
     counts (pooled-variance form), so the statistic is engine-exact."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     users = (e.groupBy("user_id")
               .agg(F.max(F.when(F.col("event_type") == "purchase", 1)
                           .otherwise(0)).alias("__conv"))
@@ -5594,7 +5561,7 @@ def q_skyline(spark, sf_dir):
     dominance formulation, so the hash match verifies the prefix-max
     LOGIC, not a mirror of it."""
     from .operators.windows import skyline_2d
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     parts = (li.groupBy("l_partkey")
                .agg(F.sum(F.col("l_quantity").cast("long"))
                      .alias("qty_total"),
@@ -5611,7 +5578,7 @@ def q_pmi_collocations(spark, sf_dir):
     PMI itself is per-row scalar math on exact integer counts, the
     double expression mirrored verbatim in the oracle (no float sums)."""
     from .pipeline.ranking import pmi_collocations
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return pmi_collocations(d, min_count=3)
 
 
@@ -5622,7 +5589,7 @@ def q_mutual_information(spark, sf_dir):
     H(Y) / NMI with every p·ln(p) term rounded at 9 digits before the
     sum (the q_group_entropy order-free discipline)."""
     from .operators.aggregates import mutual_information
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return mutual_information(d, "lang", "source")
 
 
@@ -5634,7 +5601,7 @@ def q_dsir_weights(spark, sf_dir):
     the resampling score is engine-exact.  The only global state is two
     64-row bucket tables — the 100 TB cost is one linear token pass."""
     from .pipeline.sampling import dsir_weights
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return dsir_weights(d, F.col("lang") == "en")
 
 
@@ -5653,7 +5620,7 @@ def q_label_propagation(spark, sf_dir):
     max(struct(c, −label)) — no window; labels are node-grain and pin
     each round (fixpoint.iterate)."""
     from .operators.graph import bipartite_edges, label_propagation
-    e = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    e = read_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     rel = e.select("user_id",
                    (F.col("event_id") / 2).cast("long").alias("item"))
     edges = bipartite_edges(rel, "user_id", "item",
@@ -5677,7 +5644,7 @@ def q_hits(spark, sf_dir):
     Oracle unrolls the 6 sweeps + rescales as CTE stages with the same
     coalesce-0 dangling handling."""
     from .operators.graph import hits
-    e = _t(spark, sf_dir, "events").select(
+    e = read_table(spark, sf_dir, "events").select(
         (F.col("event_id") / 5).cast("long").alias("item"),
         "user_id", "ts", "event_id")
     a, b = e.alias("a"), e.alias("b")
@@ -5702,7 +5669,7 @@ def q_bfs_hops(spark, sf_dir):
     each round.  The oracle unrolls the same 3 min-relax stages; hops
     are exact integers, so the match is bit-exact by construction."""
     from .operators.graph import bipartite_edges, bfs_hops
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     rel = e.select("user_id",
                    (F.col("event_id") / 5).cast("long").alias("item"))
     edges = bipartite_edges(rel, "user_id", "item",
@@ -5722,7 +5689,7 @@ def q_tfidf_topk(spark, sf_dir):
     never a single reducer) and the score is a single product of
     engine-identical doubles, so rank order needs no quantization."""
     from .pipeline.ranking import tfidf_topk
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return tfidf_topk(d, k=3)
 
 
@@ -5734,8 +5701,8 @@ def q_fd_profile(spark, sf_dir):
     shuffle per candidate, candidates independent and unioned — the
     fd sibling of the referential-integrity orphan profile."""
     from .operators.checks import fd_profile
-    e = _t(spark, sf_dir, "events")
-    d = _t(spark, sf_dir, "documents")
+    e = read_table(spark, sf_dir, "events")
+    d = read_table(spark, sf_dir, "documents")
     return fd_profile([
         ("events: user_id -> event_type", e, ["user_id"], "event_type"),
         ("events: event_id -> event_type", e, ["event_id"], "event_type"),
@@ -5755,7 +5722,7 @@ def q_poisson_bootstrap(spark, sf_dir):
     at any scale, which is exactly why Poisson bootstrap replaced
     n-out-of-n resampling for big-data CIs."""
     from .pipeline.sampling import poisson_bootstrap
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     reps = poisson_bootstrap(
         o.select("o_orderkey", cents(F.col("o_totalprice")).alias("units")),
         "units", "o_orderkey", reps=32)
@@ -5782,8 +5749,8 @@ def q_frequent_triples(spark, sf_dir):
     count-equivalence pattern).  Thresholds are one IEEE product of
     min_support and the basket total on both engines."""
     from .operators.aggregates import frequent_triples
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    p = read_table(spark, sf_dir, "part")
     baskets = (li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
                  .select("l_orderkey", "p_brand"))
     return frequent_triples(baskets, "l_orderkey", "p_brand",
@@ -5801,7 +5768,7 @@ def q_seasonal_decompose(spark, sf_dir):
     round at 9 before the seasonal mean (the q_group_entropy
     order-free discipline).  Windows partition by type — group-grain,
     never a single reducer; the output is the ≤ types×24 profile."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     y = (e.groupBy("event_type",
                    F.floor(F.unix_timestamp("ts") / 3600)
                     .cast("long").alias("hr"))
@@ -5831,8 +5798,8 @@ def q_weighted_median(spark, sf_dir):
     value-grain window for the rank_distributed range-partition form
     (operators/windows.py) — the value-grain reduction is what makes
     either walk cheap."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders")
     w = li.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("__w"))
     r = (o.join(w, o.o_orderkey == w.l_orderkey)
           .select(F.col("o_orderpriority").alias("prio"),
@@ -5860,7 +5827,7 @@ def q_mutual_nn(spark, sf_dir):
     condition with id_a < id_b canonicalization.  The nearest table is
     point-grain, so the mutuality join shuffles n rows, not pairs."""
     from .operators.separation import grid_nearest
-    em = _t(spark, sf_dir, "embeddings")
+    em = read_table(spark, sf_dir, "embeddings")
     pts = em.select("vec_id",
                     F.element_at("embedding", 1).alias("x"),
                     F.element_at("embedding", 2).alias("y"))
@@ -5889,7 +5856,7 @@ def q_time_weighted_avg(spark, sf_dir):
     final long/long division is bit-identical on both engines.
     Streams whose total span is zero (single event or all-tied
     timestamps) are excluded — there is no interval to average over."""
-    e = (_t(spark, sf_dir, "events")
+    e = (read_table(spark, sf_dir, "events")
          .filter(F.col("value").isNotNull())
          .select("user_id", "event_type", "event_id",
                  cents(F.col("value")).alias("__c"),
@@ -5927,7 +5894,7 @@ def q_isotonic_calibration(spark, sf_dir):
     calibration's bounded bin counts; a driver-side PAV would be O(b)
     but order-dependent).  Interval means are exact long/long
     divisions; min/max of bit-identical doubles is deterministic."""
-    e = (_t(spark, sf_dir, "events")
+    e = (read_table(spark, sf_dir, "events")
          .filter(F.col("value").isNotNull())
          .select("value",
                  (F.col("event_type") == "purchase").cast("long")
@@ -5983,7 +5950,7 @@ def q_modularity(spark, sf_dir):
         label_propagation,
         modularity,
     )
-    e = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    e = read_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     rel = e.select("user_id",
                    (F.col("event_id") / 2).cast("long").alias("item"))
     und = (bipartite_edges(rel, "user_id", "item",
@@ -6006,7 +5973,7 @@ def q_lsh_precision(spark, sf_dir):
     the mean.  Zero-overlap bucket collisions keep their row (inter
     coalesces to 0) — hiding them would overstate precision."""
     from .pipeline.dedup import minhash_neutral_pairs, word_shingle_sets
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     cands = (minhash_neutral_pairs(d, min_est_jaccard=0.5)
              .localCheckpoint(eager=True))
     # r14: the per-doc distinct shingle build is one Arrow batch stage
@@ -6061,7 +6028,7 @@ def q_hilbert_values(spark, sf_dir):
     Python reference) carry their own tests.  Same min-max
     normalization contract as q_zorder_values."""
     from .sources.layout import with_hilbert
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     base = e.select("event_id", "user_id",
                     F.unix_timestamp("ts").alias("__ep"))
     return (with_hilbert(base, "user_id", "__ep", bits=8)
@@ -6077,7 +6044,7 @@ def q_acf(spark, sf_dir):
     exact aggregate (DECIMAL(38,0) sums of integer counts) and one
     identical Pearson expression.  Cost: span × 12 rows total — hours,
     not events."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     hours = (e.groupBy(F.unix_timestamp(
                  F.date_trunc("hour", F.col("ts"))).alias("__h"))
               .agg(F.count(F.lit(1)).alias("__n")))
@@ -6096,7 +6063,7 @@ def q_did(spark, sf_dir):
     One cell-grain aggregate (4 rows) off a single scan; every mean is
     a long/long division and the estimate is one identical expression
     tree over the four exact means."""
-    e = (_t(spark, sf_dir, "events")
+    e = (read_table(spark, sf_dir, "events")
          .filter(F.col("value").isNotNull())
          .select(F.pmod(F.col("user_id"), F.lit(2)).alias("__treat"),
                  cents(F.col("value")).alias("__c"),
@@ -6151,7 +6118,7 @@ def q_theil_sen(spark, sf_dir):
     UNBOUNDED grain, compose median_distributed over the pair join —
     kept and property-tested as the documented scale path."""
     from .operators.aggregates import theil_sen_bounded
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     days = (o.groupBy(F.floor(F.unix_timestamp("o_orderdate") / 86400)
                        .cast("long").alias("__d"))
              .agg(F.sum(cents(F.col("o_totalprice"))).alias("__r")))
@@ -6170,7 +6137,7 @@ def q_personalized_pagerank(spark, sf_dir):
     unrolls the rounds with IEEE-identical constants.  Top 20 by
     rounded rank, user_id tie-break."""
     from .operators.graph import bipartite_edges, personalized_pagerank
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     rel = e.select("user_id",
                    (F.col("event_id") / 5).cast("long").alias("item"))
     edges = bipartite_edges(rel, "user_id", "item", max_entities_per_item=8)
@@ -6193,7 +6160,7 @@ def q_session_stats(spark, sf_dir):
     q_weighted_median discipline).  One session aggregate + one
     value-grain pass; everything long/long exact."""
     from .streaming.stream_ops import sessionize
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     s = (sessionize(e, gap="30 minutes").select("n_events")
          .localCheckpoint(eager=True))  # summary + value grain
     vg = s.groupBy("n_events").agg(F.count(F.lit(1)).alias("__w"))
@@ -6223,7 +6190,7 @@ def q_conversion_lag(spark, sf_dir):
     user-grain delay table never hits a single-reducer percentile
     buffer at any scale."""
     from .operators.windows import median_distributed
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     firsts = (e.groupBy("user_id")
                .agg(F.min(F.when(F.col("event_type") == "view",
                                  F.unix_timestamp("ts"))).alias("__fv"),
@@ -6256,7 +6223,7 @@ def q_stationary_dist(spark, sf_dir):
     long/long divisions; per-round sums drift only at ~1e-16 relative
     (the q_pagerank argument), far inside the round-6 output."""
     from .operators.fixpoint import iterate
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = e.select("user_id", "event_type",
                    F.lag("event_type").over(w).alias("__prev"))
@@ -6307,7 +6274,7 @@ def q_zipf_tokens(spark, sf_dir):
     degrees; it decides whether frequency-based vocab truncation has a
     heavy tail to exploit.  One token pass to the vocabulary grain, one
     count-grain histogram; ln terms round at 9 pre-sum."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     tok = d.select(F.explode(F.filter(F.split(F.col("text"), " "),
                                       lambda t: t != "")).alias("tk"))
     counts = (tok.groupBy("tk").agg(F.count(F.lit(1)).alias("cnt"))
@@ -6333,7 +6300,7 @@ def q_mde(spark, sf_dir):
     planning readout that says what lift this traffic can even see.
     The z constants are shortest-repr double literals identical in both
     engines; everything else is one expression over exact counts."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     users = (e.groupBy("user_id")
               .agg(F.max(F.when(F.col("event_type") == "purchase", 1)
                           .otherwise(0)).alias("__conv"))
@@ -6365,7 +6332,7 @@ def q_silhouette(spark, sf_dir):
     rounds at 9 before the cluster mean."""
     from .pipeline.similarity import (_as_double, assign_with_runnerup,
                                       label_centroids, lloyd_centroids)
-    em = _t(spark, sf_dir, "embeddings")
+    em = read_table(spark, sf_dir, "embeddings")
     vecs = em.select("vec_id", _as_double(F.col("embedding")).alias("v"))
     cents0 = (label_centroids(em, "vec_id", "embedding", "label")
               .select(F.col("label").cast("long").alias("cand_label"),
@@ -6392,7 +6359,7 @@ def q_bm25_batch(spark, sf_dir):
     the identical Okapi formula; df is per term (query-independent);
     top-5 per query by rounded score with doc_id tie-break."""
     from .pipeline.ranking import bm25_batch
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     q = spark.createDataFrame(
         [(0, "spark"), (0, "hash"), (1, "join"), (1, "merge"),
          (2, "window"), (2, "sort"), (2, "batch")],
@@ -6410,7 +6377,7 @@ def q_ivm_retract(spark, sf_dir):
     which is exactly what the oracle does.  Cost is O(deleted +
     touched-group rows + groups), never O(base)."""
     from .operators.ivm import agg_state, finalize_state, retract_state
-    e = (_t(spark, sf_dir, "events")
+    e = (read_table(spark, sf_dir, "events")
          .filter(F.col("value").isNotNull())
          .select("event_id", "event_type", "value")
          .localCheckpoint(eager=True))  # state + split consumers
@@ -6432,7 +6399,7 @@ def q_expectations(spark, sf_dir):
     relation pins once so six verdicts cost six cheap scans of a
     materialized table, not six source reads."""
     from .operators.checks import expectation_report
-    e = _t(spark, sf_dir, "events").localCheckpoint(eager=True)
+    e = read_table(spark, sf_dir, "events").localCheckpoint(eager=True)
     return expectation_report(e, [
         ("rows >= 100", "min_rows", 100),
         ("value null share <= 5%", "max_null_share", ("value", 0.05)),
@@ -6456,7 +6423,7 @@ def q_uplift_deciles(spark, sf_dir):
     grain collapses first (one exchange); scores are exact-cents
     means; rates are long/long divisions; uplift is one identical
     subtraction rounded at 6."""
-    e = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    e = read_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     users = (e.groupBy("user_id")
               .agg(F.max(F.when(F.col("event_type") == "purchase", 1)
                           .otherwise(0)).alias("__conv"),
@@ -6502,7 +6469,7 @@ def q_ece(spark, sf_dir):
     per-bin terms rounded at 9 before the sum.  Confidence is the
     bin's mean normalized score from exact long sums; accuracy the
     long/long positive rate; one cell-grain aggregate end to end."""
-    e = (_t(spark, sf_dir, "events")
+    e = (read_table(spark, sf_dir, "events")
          .filter(F.col("value").isNotNull())
          .select(cents(F.col("value")).alias("__c"),
                  (F.col("event_type") == "purchase").cast("long")

@@ -14,11 +14,20 @@ chosen for a multi-executor cluster and merely *tested* on local[N]:
   DELTA_BYTE_ARRAY, RLE_DICTIONARY encodings) and INT64 TIMESTAMP_MICROS
   timestamps, whose min/max statistics let timestamp range scans prune
   (legacy INT96 carries none).  No writer passes its own codec.
+- ``configure(spark)`` owns the settings the query registry's answers
+  depend on (``ENGINE_CONF``): the UTC session zone, LTZ timestamp
+  inference, nano timestamps read as longs, the Parquet format and the
+  ``InferFiltersFromGenerate`` exclusion.  ``build_session`` applies it,
+  and so does ``read_table``, so a session built anywhere else (a
+  caller's own) runs the same engine from its first read.
+
+This is the only module that sets a Spark conf key.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -39,6 +48,47 @@ PARQUET_FORMAT = {
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
 }
 
+_EXCLUDED_RULES = "spark.sql.optimizer.excludedRules"
+
+# Runtime settings every query/oracle pair was validated under.
+ENGINE_CONF = {
+    # hour()/dayofweek()/unix_timestamp read the session zone, and the
+    # oracles use DuckDB's NAIVE timestamp arithmetic (≡ UTC).  Without
+    # the pin the answers depend on the host JVM zone.
+    "spark.sql.session.timeZone": "UTC",
+    # pandas-written timestamps (isAdjustedToUTC=false) read as TIMESTAMP,
+    # not TIMESTAMP_NTZ, and TIMESTAMP(NANOS) columns as longs that
+    # read_table truncates to micros (sources/io.py).
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    **PARQUET_FORMAT,
+    # Appended to the rules the session already excludes.  The rule
+    # copies every exploded computed array expression into a
+    # size(e) > 0 filter below the repartition, evaluating it twice per
+    # row, and Parquet never prunes on array size.  Excluding an
+    # optimizer rule preserves semantics by contract (measurements:
+    # SCALE.md, "One engine configuration").
+    _EXCLUDED_RULES: "org.apache.spark.sql.catalyst.optimizer."
+                     "InferFiltersFromGenerate",
+}
+
+# WeakSet, not id()-keyed: a stopped session's id can be reused.
+_CONFIGURED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
+
+
+def configure(spark: SparkSession) -> SparkSession:
+    """Apply ``ENGINE_CONF`` to ``spark`` once; return it."""
+    if spark in _CONFIGURED:
+        return spark
+    for key, value in ENGINE_CONF.items():
+        if key == _EXCLUDED_RULES:
+            current = spark.conf.get(key, None) or ""
+            rules = [r.strip() for r in current.split(",") if r.strip()]
+            value = ",".join(dict.fromkeys(rules + [value]))
+        spark.conf.set(key, value)
+    _CONFIGURED.add(spark)
+    return spark
+
 
 def build_session(app_name: str = "big_data_bowl_spark",
                   master: str | None = None,
@@ -52,32 +102,13 @@ def build_session(app_name: str = "big_data_bowl_spark",
         .config("spark.sql.shuffle.partitions",
                 str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Pin the session timezone: hour()/dayofweek()/unix_timestamp
-        # read it, and every query/oracle pair was validated against
-        # DuckDB's NAIVE timestamp arithmetic (≡ UTC).  Without the pin
-        # the parity contract silently depends on the host JVM zone —
-        # correct on a UTC CI box, wrong (and DST-warped) anywhere else.
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # InferFiltersFromGenerate synthesizes size(e) > 0 AND
-        # isnotnull(e) above every explode(e) of a PROJECTED
-        # HOF-computed array and pushes it below repartitions — the
-        # whole gram/shingle-hash expression evaluated TWICE per row,
-        # on the scan's (often 1-2) partitions.  Our workloads explode
-        # computed token/gram/shingle arrays everywhere, and parquet
-        # can never prune on array size, so the rule is pure cost here:
-        # measured q_span_dedup 5.5s → 2.3s at sf0.1 (r13).  Excluding
-        # an optimizer rule is semantics-preserving by contract.
-        .config("spark.sql.optimizer.excludedRules",
-                "org.apache.spark.sql.catalyst.optimizer."
-                "InferFiltersFromGenerate")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # no \r progress frames interleaved with a script's own output
+        .config("spark.ui.showConsoleProgress", "false")
     )
     if master:
         builder = builder.master(master)
     elif not SparkSession.getActiveSession():
         builder = builder.master(f"local[{DEFAULT_CPUS}]")
-    spark = builder.getOrCreate()
-    for key, value in PARQUET_FORMAT.items():
-        spark.conf.set(key, value)
-    return spark
+    return configure(builder.getOrCreate())

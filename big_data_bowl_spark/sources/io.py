@@ -11,7 +11,7 @@ all three steps collapse into declarative equivalents:
   (``mode("ignore")``) — columnar, splittable, statistics-bearing; at 100 TB
   this is the difference between re-parsing CSV per run and pruned scans.
   Every writer here inherits the session's one storage format
-  (``session.build_session``): zstd pages, v2 data pages, and timestamps
+  (``session.configure``): zstd pages, v2 data pages, and timestamps
   as INT64 TIMESTAMP_MICROS.  The INT64 form is what makes timestamp keys
   statistics-bearing: Spark's default, legacy INT96, carries no min/max
   statistics, so a timestamp range filter would read every row group.
@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..schemas import TEST_TABLES
+from ..session import configure
 
 TEST_TABLE_NAMES = tuple(TEST_TABLES)
 
@@ -47,12 +48,12 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Timestamp normalization: pandas-written parquet stores timestamps with
     isAdjustedToUTC=false, which Spark 4 infers as TIMESTAMP_NTZ by default.
     The engine (and the DuckDB oracles, via an Etc/UTC session) treats event
-    time as instants, so we disable NTZ inference and read them as TIMESTAMP
-    — the same dtype every query was validated against."""
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    time as instants, so they read as TIMESTAMP — the same dtype every query
+    was validated against — and nano columns as longs.  Both settings come
+    from ``session.configure``, which this call applies to any session it
+    has not seen (a caller's own included)."""
+    configure(spark)
     nanos = _NANOS_TS_COLS.get(name, ())
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     dtypes = dict(df.dtypes)
     for c in nanos:

@@ -23,25 +23,17 @@ ARTIFACT = os.environ.get("DRIVE_ARTIFACT")
 TABLES = ("region nation customer supplier part orders lineitem "
           "events documents embeddings").split()
 
+# the checkout this script belongs to, wherever it is run from
 spec = importlib.util.spec_from_file_location(
-    "__spark_entry__", "/root/repo/__spark_entry__.py")
+    "__spark_entry__", os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "__spark_entry__.py"))
 mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(mod)
 
-from pyspark.sql import SparkSession  # noqa: E402
+from big_data_bowl_spark.session import build_session  # noqa: E402
 
-spark = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.session.timeZone", "UTC")
-         # no \r progress frames: they can overwrite an in-flight
-         # "ok ..." line and make a green query look unreported
-         .config("spark.ui.showConsoleProgress", "false")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-         .config("spark.driver.memory", "8g")
-        .config("spark.sql.optimizer.excludedRules",
-                "org.apache.spark.sql.catalyst.optimizer."
-                "InferFiltersFromGenerate")  # r13: see session.py
-         .appName("drive_driver").getOrCreate())
+spark = build_session("drive_driver", "local[8]", 8)
 spark.sparkContext.setLogLevel("ERROR")
 
 con = duckdb.connect()

@@ -16,17 +16,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     name = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    from pyspark.sql import SparkSession
-
     from big_data_bowl_spark.queries import QUERIES
+    from big_data_bowl_spark.session import build_session
 
-    spark = (SparkSession.builder.master("local[4]")
-             .appName("explain-one")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.sql.autoBroadcastJoinThreshold",
-                     str(64 * 1024 * 1024))
-             .getOrCreate())
+    spark = build_session("explain-one", "local[4]", 32)
     spark.sparkContext.setLogLevel("ERROR")
     df = QUERIES[name](spark, sf_dir)
     df.explain("formatted")

@@ -15,19 +15,15 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 from big_data_bowl_spark.pipeline.similarity import cosine_topk, ivf_topk
+from big_data_bowl_spark.session import build_session
 from big_data_bowl_spark.sources.io import read_table
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    spark = (SparkSession.builder.master("local[8]")
-             .config("spark.sql.shuffle.partitions", "8")
-             .config("spark.driver.memory", "8g")
-             .appName("ivf-recall").getOrCreate())
+    spark = build_session("ivf-recall", "local[8]", 8)
     spark.sparkContext.setLogLevel("ERROR")
     em = read_table(spark, SF, "embeddings")
     qids = list(range(50))

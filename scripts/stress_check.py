@@ -234,28 +234,12 @@ def main() -> None:
                 [sys.executable, os.path.join(HERE, gen), sf_dir],
                 check=True)
 
-    from pyspark.sql import SparkSession
-
     from big_data_bowl_spark.queries import QUERIES
+    from big_data_bowl_spark.session import build_session
     from big_data_bowl_spark.sources.io import read_table
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.shuffle.partitions",
-                os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold",
-                str(64 * 1024 * 1024))
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.sql.optimizer.excludedRules",
-                "org.apache.spark.sql.catalyst.optimizer."
-                "InferFiltersFromGenerate")  # r13: see session.py
-        .appName("stress_check").getOrCreate())
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = build_session("stress_check", f"local[{cpus}]", cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     def force(df):

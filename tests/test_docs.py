@@ -153,16 +153,29 @@ def test_default_parallelism_read_only_in_schemas():
 
 
 def test_parquet_format_set_only_in_session():
-    """The Parquet storage format (codec, page version, timestamp type)
-    is set once, in ``session.build_session``: no other package module
-    names a compression option, ``outputTimestampType`` or
-    ``parquet.writer.version``, so every writer inherits one format."""
+    """The engine's configuration lives in ``session.py`` alone.  No
+    other package module names a compression option,
+    ``outputTimestampType`` or ``parquet.writer.version``, so every
+    writer inherits one Parquet format; no other module of the package,
+    ``scripts/`` or ``bench.py`` builds a session or passes a ``spark.*``
+    key to a builder, and no other package module sets a conf key, so
+    every entry point runs the settings ``build_session`` and
+    ``configure`` apply."""
     import glob
 
     pkg = f"{REPO}/big_data_bowl_spark"
-    pat = re.compile(
-        r"compression|outputTimestampType|parquet\.writer\.version")
-    setters = sorted(p[len(pkg) + 1:] for p in glob.glob(
-        f"{pkg}/**/*.py", recursive=True)
-        if pat.search(open(p).read()))
-    assert setters == ["session.py"], setters
+    mods = glob.glob(f"{pkg}/**/*.py", recursive=True)
+    entry_points = mods + glob.glob(f"{REPO}/scripts/*.py") \
+        + [f"{REPO}/bench.py"]
+
+    def matching(pattern, paths):
+        pat = re.compile(pattern)
+        return sorted(os.path.relpath(p, REPO) for p in paths
+                      if pat.search(open(p).read()))
+
+    session = ["big_data_bowl_spark/session.py"]
+    assert matching(r"compression|outputTimestampType"
+                    r"|parquet\.writer\.version", mods) == session
+    assert matching(r"SparkSession\.builder|\.config\(\s*[\"']spark\.",
+                    entry_points) == session
+    assert matching(r"conf\.set\(", mods) == session

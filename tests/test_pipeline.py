@@ -3704,3 +3704,29 @@ def test_fixpoint_lineage_is_bounded(spark, name, monkeypatch):
     counts = [count_exchanges(_routed_fixpoint(spark, name, r, monkeypatch))
               for r in (2, 6)]
     assert counts[0] == counts[1], counts
+
+
+def test_foreign_session_runs_the_engine_configuration(spark):
+    """A session the engine did not build (a caller's own) runs
+    the engine's configuration from its first table read: the fixture
+    session's answers whatever zone it arrived with, its own excluded
+    rules kept beside the engine's, and the engine's Parquet codec.
+    ``newSession`` shares the fixture's context, so nothing is stopped."""
+    from big_data_bowl_spark.queries import QUERIES
+
+    rules_key = "spark.sql.optimizer.excludedRules"
+    rule = "org.apache.spark.sql.catalyst.optimizer."
+    own_rule = rule + "ReorderJoin"
+    other = spark.newSession()
+    other.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    other.conf.set(rules_key, own_rule)
+    q = QUERIES["q_auc_by_group"]
+
+    def rows(session):
+        return sorted(map(tuple, q(session, SF_SMALL).collect()), key=repr)
+
+    assert rows(other) == rows(spark)
+    assert other.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert set(other.conf.get(rules_key).split(",")) == {
+        own_rule, rule + "InferFiltersFromGenerate"}
+    assert other.conf.get("spark.sql.parquet.compression.codec") == "zstd"

@@ -596,13 +596,13 @@ def test_kaplan_meier_equals_python_product_limit(spark, data):
              .withColumnRenamed("et", "event_type")
     from big_data_bowl_spark.queries import q_kaplan_meier
     import big_data_bowl_spark.queries as Q
-    orig = Q._t
+    orig = Q.read_table
     try:
-        Q._t = lambda spark_, sf_, name: e  # the query reads one table
+        Q.read_table = lambda spark_, sf_, name: e  # the query reads one table
         got = {r.duration: (r.n_risk, r.n_event, r.surv)
                for r in q_kaplan_meier(spark, "ignored").collect()}
     finally:
-        Q._t = orig
+        Q.read_table = orig
     # python model: subjects = events (duration d) + censored (60, and
     # the end-pin user at 0)
     subj = [(d, 1) for d, ev in durs if ev] \
