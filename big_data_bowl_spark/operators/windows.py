@@ -7,7 +7,7 @@ a single hash-shuffle on the group keys serves all of them.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalar import zscore_expr
@@ -224,12 +224,15 @@ def dedup_keep_last(df: DataFrame, keys: list[str], order: list[str],
               .filter(F.col("__rn") == 1).drop("__rn"))
 
 
-def topk_per_group(df: DataFrame, group: list[str], order: list[str],
-                   k: int, ascending: bool = False) -> DataFrame:
-    """W10/O3: top-k rows per group (grp.tail(n), nlargest, top player per
-    route — sequences.py:82, viz.py:586-594, _inisghts.ipynb#cell3)."""
-    cols = [F.asc(c) if ascending else F.desc(c) for c in order]
-    w = Window.partitionBy(*group).orderBy(*cols)
+def topk_per_group(df: DataFrame, group: list, order: list[Column],
+                   k) -> DataFrame:
+    """W10/O3: the first ``k`` rows per group under the sort Columns
+    ``order`` (grp.tail(n), nlargest, top player per route —
+    sequences.py:82, viz.py:586-594, _inisghts.ipynb#cell3).  ``group``
+    takes names or Columns; ``k`` may be a Column for a per-row bound.
+    One ``row_number`` window: every ≤ k ranking in the engine, the ANN
+    re-ranks included, goes through here."""
+    w = Window.partitionBy(*group).orderBy(*order)
     return (df.withColumn("__rn", F.row_number().over(w))
               .filter(F.col("__rn") <= k).drop("__rn"))
 

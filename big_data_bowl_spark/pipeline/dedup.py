@@ -308,9 +308,6 @@ def jaccard_prefix_pairs(df: DataFrame, threshold: float = 0.6,
                 .select("doc_a", "doc_b", "jaccard"))
 
 
-_JACCARD_SALTS = 1  # prefix-join salt fan-out; see _jaccard_smallvocab
-
-
 def _jaccard_smallvocab(tok: DataFrame, freq: DataFrame, tau: float,
                         id_col: str, n_words: int) -> DataFrame:
     """The V ≤ 63·W bitmask set-grain path of
@@ -340,19 +337,8 @@ def _jaccard_smallvocab(tok: DataFrame, freq: DataFrame, tau: float,
     25.6s with the distinct → 8.6–9.4s dedup-free — and the r10 array
     form was 182.5s, so the small-vocab path is now ~20× end-to-end.
 
-    SKEW KNOB (``_JACCARD_SALTS``, default 1 = off): the prefix join
-    key __g has at most V distinct values, which reads like a skewed
-    join — but the b-side is SET-grain prefix rows (distinct sets ×
-    prefix length), small enough to BROADCAST at any tested scale, so
-    the join never hash-partitions by __g at all and parallelism comes
-    from the a-side's partitioning.  Salting was built and MEASURED:
-    a-side pmod(xxhash64(mask words), S), b-side replicated ×S, each
-    pair still meeting exactly once at (g_min, salt(a)) — and at
-    sf0.1 it made the query 3× SLOWER (25.5s at S = 16 vs 8.6s at
-    S = 1) by inflating the broadcast build side for a skew that the
-    broadcast had already dissolved.  The knob stays (equality-tested
-    at S = 16) for the regime where distinct-set count outgrows the
-    broadcast threshold and the join really does shuffle on __g."""
+    The prefix join key __g has at most V distinct values, but the
+    broadcast SET-grain build side already removes that skew."""
     wg = Window.orderBy(F.asc("__df"), F.asc("token"))  # V rows: tiny
     granks = (freq.withColumn("__g", F.row_number().over(wg))
                   .select("token", "__g"))
@@ -406,12 +392,9 @@ def _jaccard_smallvocab(tok: DataFrame, freq: DataFrame, tau: float,
     b_cols = [f"__b{w}" for w in range(n_words)]
     pa_cols = [f"__pa{w}" for w in range(n_words)]
     pb_cols = [f"__pb{w}" for w in range(n_words)]
-    n_salts = _JACCARD_SALTS
     sa = spfx.select(*[F.col(m).alias(a) for m, a in zip(mask_cols, a_cols)],
                      *[F.col(p).alias(a) for p, a in zip(pfx_cols, pa_cols)],
-                     F.col("__n").alias("__na"), "__g",
-                     F.pmod(F.xxhash64(*mask_cols),
-                            F.lit(n_salts)).alias("__salt"))
+                     F.col("__n").alias("__na"), "__g")
     # fan the PROBE side out to full parallelism (r14): the set table is
     # tiny in BYTES (set-count × ~25 longs), so AQE coalesces the
     # upstream shuffle to 1-2 partitions — and the prefix join's probe
@@ -426,9 +409,7 @@ def _jaccard_smallvocab(tok: DataFrame, freq: DataFrame, tau: float,
     sa = fan_out(sa)
     sb = spfx.select(*[F.col(m).alias(b) for m, b in zip(mask_cols, b_cols)],
                      *[F.col(p).alias(b) for p, b in zip(pfx_cols, pb_cols)],
-                     F.col("__n").alias("__nb"), "__g",
-                     F.explode(F.array(*[F.lit(s) for s in range(n_salts)])
-                               ).alias("__salt"))
+                     F.col("__n").alias("__nb"), "__g")
     inter = None
     for a, b in zip(a_cols, b_cols):
         term = F.bit_count(F.col(a).bitwiseAND(F.col(b)))
@@ -448,7 +429,7 @@ def _jaccard_smallvocab(tok: DataFrame, freq: DataFrame, tau: float,
             f"CAST((__g - 1) % 63 AS INT)) - CAST(1 AS BIGINT) "
             f"ELSE CAST(0 AS BIGINT) END)) = 0")
         first_shared = c if first_shared is None else (first_shared & c)
-    spairs = (sa.join(sb, ["__g", "__salt"])
+    spairs = (sa.join(sb, "__g")
                 .filter((F.struct(*[F.col(a) for a in a_cols])
                          < F.struct(*[F.col(b) for b in b_cols]))
                         & (F.col("__na").cast("double")

@@ -16,17 +16,25 @@ Scale paths:
   test); with small ``nprobe`` the corpus side touches ~nprobe/n_cells of
   the data.  At 100 TB the cell id becomes the physical partition key so a
   probe is a partition-pruned scan.
+
+Every search is a composition of the private operators below: the
+vector/query/corpus projections, ``_cosine`` + ``_nearest`` (exact
+re-rank and top-k), ``_probe_cells`` + ``_ivf_search`` (cell probe),
+``_label_cells`` (the label-mean coarse quantizer), ``_subvectors`` +
+``_adc_tables`` + ``_adc`` (PQ scoring) and ``_mean_vectors`` (every
+centroid mean).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import roundn
 from ..operators.fixpoint import iterate
+from ..operators.windows import topk_per_group
 from ..schemas import arrow_fanout, fan_out, require_columns
-from .sampling import HASH_KEY_MOD, HASH_MOD, HASH_MULT
+from .sampling import HASH_KEY_MOD, HASH_MOD, HASH_MULT, wang_mixed_hash
 
 
 def _as_double(col) -> Column:
@@ -43,6 +51,138 @@ def _norm(a: Column) -> Column:
                               F.lit(0.0), lambda acc, x: acc + x))
 
 
+def _sqdist(a: Column, b: Column) -> Column:
+    """Squared Euclidean distance, folded left to right — the same IEEE
+    double on every engine that folds in element order."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+                       F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, v array<double>) — floats cast to double BEFORE any
+    arithmetic so element-order folds match the oracles bit for bit."""
+    return df.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
+
+
+def _queries(vecs: DataFrame, query_ids: list[int], id_col: str,
+             *keys: str) -> DataFrame:
+    """The query side of a search: (query_id, qv, *keys)."""
+    return (vecs.filter(F.col(id_col).isin(query_ids))
+                .select(F.col(id_col).alias("query_id"),
+                        F.col("v").alias("qv"), *keys))
+
+
+def _corpus(vecs: DataFrame, id_col: str, *keys: str) -> DataFrame:
+    """The candidate side of a search: (neighbor_id, nv, *keys)."""
+    return vecs.select(F.col(id_col).alias("neighbor_id"),
+                       F.col("v").alias("nv"), *keys)
+
+
+def _cosine(pairs: DataFrame) -> DataFrame:
+    """Exact cosine of every (query, candidate) pair but the query
+    itself: (query_id, neighbor_id, cosine), rounded at 6."""
+    cos = _dot(F.col("qv"), F.col("nv")) \
+        / (_norm(F.col("qv")) * _norm(F.col("nv")))
+    return (pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+                 .select("query_id", "neighbor_id",
+                         roundn(cos).alias("cosine")))
+
+
+def _nearest(scored: DataFrame, k: int) -> DataFrame:
+    """Top-k cosine per query, ties to the lower neighbor id."""
+    return topk_per_group(scored, ["query_id"],
+                          [F.desc("cosine"), F.asc("neighbor_id")], k)
+
+
+def _probe_cells(q: DataFrame, centroids: DataFrame,
+                 nprobe: int) -> DataFrame:
+    """Each query's ``nprobe`` nearest cells: the query set scores every
+    (cell, centroid) row of a broadcast codebook, ties to the lower cell.
+    Returns (query_id, qv, cell)."""
+    scored = (q.crossJoin(F.broadcast(centroids))
+               .withColumn("__d", _sqdist(F.col("qv"), F.col("centroid"))))
+    return (topk_per_group(scored, ["query_id"],
+                           [F.asc("__d"), F.asc("cell")], nprobe)
+            .select("query_id", "qv", "cell"))
+
+
+def _ivf_search(q: DataFrame, corpus: DataFrame, centroids: DataFrame,
+                nprobe: int, k: int) -> DataFrame:
+    """IVF search: probe cells, meet the (neighbor_id, nv, cell) corpus
+    on the cell-id equi-join, exact cosine re-rank."""
+    pairs = (F.broadcast(_probe_cells(q, centroids, nprobe))
+             .join(corpus, "cell"))
+    return _nearest(_cosine(pairs), k)
+
+
+def _label_cells(df: DataFrame, id_col: str, vec_col: str,
+                 label_col: str) -> tuple[DataFrame, DataFrame]:
+    """The deterministic coarse quantizer: per-label mean centroids, and
+    every vector's nearest of them (l2, ties to the lower label).
+    Returns ((id, cell), (cell, centroid)); cells keep the label type."""
+    cents = (label_centroids(df, id_col, vec_col, label_col)
+             .select(F.col(label_col).alias("cell"), "centroid"))
+    cells = (assign_to_centroids(df, cents.withColumnRenamed(
+                 "cell", "cand_label"), id_col, vec_col, metric="l2")
+             .select(F.col(id_col), F.col("assigned_label").alias("cell")))
+    return cells, cents
+
+
+def _mean_vectors(df: DataFrame, keys: list[str], vec) -> DataFrame:
+    """Element-wise mean of the array column ``vec`` per ``keys`` group:
+    posexplode → (keys, dim) average → re-assemble in dim order.  The
+    exploded shuffle carries (groups × dims) partial sums after map-side
+    combine.  Returns (*keys, centroid array<double>)."""
+    comp = (df.select(*keys, F.posexplode(vec).alias("dim", "x"))
+              .groupBy(*keys, "dim")
+              .agg(F.avg("x").alias("c")))
+    return (comp.groupBy(*keys)
+                .agg(F.transform(
+                        F.sort_array(F.collect_list(F.struct("dim", "c"))),
+                        lambda s: s["c"]).alias("centroid")))
+
+
+def _nested_codebook(cents: DataFrame) -> DataFrame:
+    """A (cand_label, centroid) table nested into ONE broadcastable row:
+    centroids ``__cts`` and labels ``__lbls``, both in label order."""
+    return cents.groupBy().agg(
+        F.transform(F.array_sort(F.collect_list(
+            F.struct("cand_label", "centroid"))),
+            lambda s: s["centroid"]).alias("__cts"),
+        F.sort_array(F.collect_list("cand_label")).alias("__lbls"))
+
+
+def _subvectors(vec: Column, m: int, d_sub: int) -> Column:
+    """posexplode of the ``m`` contiguous ``d_sub``-long double slices —
+    alias it as (subspace, subvector)."""
+    return F.posexplode(F.array(*[
+        F.slice(_as_double(vec), s * d_sub + 1, d_sub) for s in range(m)]))
+
+
+def _adc_tables(qsub: DataFrame, books: DataFrame) -> DataFrame:
+    """Per-query ADC distance tables: (query_id, subspace, qv) against
+    every codebook entry, nested as (query_id, pdm[subspace][code])."""
+    return (qsub.join(F.broadcast(books), "subspace")
+                .select("query_id", "subspace", "code",
+                        _sqdist(F.col("qv"), F.col("centroid")).alias("pd"))
+                .groupBy("query_id", "subspace")
+                .agg(F.transform(
+                        F.array_sort(F.collect_list(F.struct("code", "pd"))),
+                        lambda s: s["pd"]).alias("pds"))
+                .groupBy("query_id")
+                .agg(F.transform(
+                        F.array_sort(F.collect_list(
+                            F.struct("subspace", "pds"))),
+                        lambda s: s["pds"]).alias("pdm")))
+
+
+def _adc(codes: Column, pdm: Column) -> Column:
+    """ADC distance: the sum of ``pdm[s][codes[s]]`` over subspaces."""
+    return F.aggregate(
+        F.zip_with(codes, pdm, lambda c, pds: F.element_at(pds, c + 1)),
+        F.lit(0.0), lambda acc, x: acc + x)
+
+
 def cosine_topk(df: DataFrame, query_ids: list[int], k: int = 3,
                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Brute-force exact cosine top-k: for each query vector, the k nearest
@@ -54,21 +194,10 @@ def cosine_topk(df: DataFrame, query_ids: list[int], k: int = 3,
     for-bit (then rounded).
     """
     require_columns(df, [id_col, vec_col], "cosine_topk")
-    vecs = fan_out(df.select(F.col(id_col),
-                             _as_double(F.col(vec_col)).alias("v")))
-    q = (vecs.filter(F.col(id_col).isin(query_ids))
-             .select(F.col(id_col).alias("query_id"), F.col("v").alias("qv")))
-    pairs = (F.broadcast(q)
-             .crossJoin(vecs.select(F.col(id_col).alias("neighbor_id"),
-                                    F.col("v").alias("nv")))
-             .filter(F.col("query_id") != F.col("neighbor_id")))
-    cos = _dot(F.col("qv"), F.col("nv")) / (_norm(F.col("qv")) * _norm(F.col("nv")))
-    scored = pairs.withColumn("cosine", roundn(cos))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("__rn", F.row_number().over(w))
-                  .filter(F.col("__rn") <= k)
-                  .select("query_id", "neighbor_id", "cosine"))
+    vecs = fan_out(_vectors(df, id_col, vec_col))
+    pairs = (F.broadcast(_queries(vecs, query_ids, id_col))
+             .crossJoin(_corpus(vecs, id_col)))
+    return _nearest(_cosine(pairs), k)
 
 
 N_PLANES = 8
@@ -125,13 +254,14 @@ def lsh_bucketed_topk(df: DataFrame, query_ids: list[int], k: int = 3,
     recall trade — and the candidate join is equi on (table, bucket),
     never cross; duplicate candidates from multiple tables collapse in
     a (query, neighbor)-grain distinct before the re-rank window.
+    A null vector is never a query or a candidate.
     Approximate → no SQL oracle; containment + measured-recall tested.
     """
     require_columns(df, [id_col, vec_col], "lsh_bucketed_topk")
     # The fan-out feeds a mapInPandas stage, so arrow_fanout bounds its
     # partition count by input size.
-    vecs = arrow_fanout(df.select(F.col(id_col),
-                                  _as_double(F.col(vec_col)).alias("v")))
+    vecs = arrow_fanout(_vectors(df.filter(F.col(vec_col).isNotNull()),
+                                 id_col, vec_col))
     id_type = dict(vecs.dtypes)[id_col]
 
     # The sign-bit projections run as one vectorized Arrow batch over
@@ -177,24 +307,11 @@ def lsh_bucketed_topk(df: DataFrame, query_ids: list[int], k: int = 3,
         _bucketize,
         f"{id_col} {id_type}, v array<double>, table int, bucket int"
     ).localCheckpoint(eager=True)
-    q = (bucketed.filter(F.col(id_col).isin(query_ids))
-                 .select(F.col(id_col).alias("query_id"),
-                         F.col("v").alias("qv"), "table", "bucket"))
-    pairs = (F.broadcast(q)
-             .join(bucketed.select(F.col(id_col).alias("neighbor_id"),
-                                   F.col("v").alias("nv"),
-                                   "table", "bucket"),
-                   ["table", "bucket"])
-             .filter(F.col("query_id") != F.col("neighbor_id")))
-    cos = _dot(F.col("qv"), F.col("nv")) / (_norm(F.col("qv")) * _norm(F.col("nv")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (pairs.select("query_id", "neighbor_id",
-                         roundn(cos).alias("cosine"))
-                 .distinct()
-                 .withColumn("__rn", F.row_number().over(w))
-                 .filter(F.col("__rn") <= k)
-                 .select("query_id", "neighbor_id", "cosine"))
+    pairs = (F.broadcast(_queries(bucketed, query_ids, id_col,
+                                  "table", "bucket"))
+             .join(_corpus(bucketed, id_col, "table", "bucket"),
+                   ["table", "bucket"]))
+    return _nearest(_cosine(pairs).distinct(), k)
 
 
 def ivf_topk(df: DataFrame, query_ids: list[int], k: int = 3,
@@ -238,48 +355,23 @@ def ivf_topk(df: DataFrame, query_ids: list[int], k: int = 3,
     from pyspark.ml.functions import array_to_vector
 
     require_columns(df, [id_col, vec_col], "ivf_topk")
-    vecs = df.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-
-    # --- index build: coarse quantizer + cell assignment (one pass) -----
+    vecs = _vectors(df, id_col, vec_col)
+    # index build: coarse quantizer + cell assignment in one pass
     assembled = vecs.withColumn("__f", array_to_vector("v"))
     model = KMeans(k=n_cells, seed=seed, featuresCol="__f",
                    predictionCol="cell").fit(assembled)
-    corpus = model.transform(assembled).select(
-        F.col(id_col).alias("neighbor_id"), F.col("v").alias("nv"), "cell")
-
-    # --- cell probe list: q × n_cells scored driver-free ----------------
     centroids = vecs.sparkSession.createDataFrame(
         [(int(i), [float(x) for x in c])
          for i, c in enumerate(model.clusterCenters())],
         "cell int, centroid array<double>")
-    q = (vecs.filter(F.col(id_col).isin(query_ids))
-             .select(F.col(id_col).alias("query_id"), F.col("v").alias("qv")))
-    l2 = F.aggregate(F.zip_with("qv", "centroid", lambda x, c: (x - c) * (x - c)),
-                     F.lit(0.0), lambda acc, x: acc + x)
-    w_cell = Window.partitionBy("query_id").orderBy(F.asc("__d"), F.asc("cell"))
-    probes = (q.crossJoin(F.broadcast(centroids))
-                .withColumn("__d", l2)
-                .withColumn("__rn", F.row_number().over(w_cell))
-                .filter(F.col("__rn") <= nprobe)
-                .select("query_id", "qv", "cell"))
-
-    # --- candidate join on cell id + exact re-rank ----------------------
-    pairs = (F.broadcast(probes)
-             .join(corpus, "cell")
-             .filter(F.col("query_id") != F.col("neighbor_id")))
-    cos = _dot(F.col("qv"), F.col("nv")) / (_norm(F.col("qv")) * _norm(F.col("nv")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (pairs.withColumn("cosine", roundn(cos))
-                 .withColumn("__rn", F.row_number().over(w))
-                 .filter(F.col("__rn") <= k)
-                 .select("query_id", "neighbor_id", "cosine"))
+    return _ivf_search(_queries(vecs, query_ids, id_col),
+                       _corpus(model.transform(assembled), id_col, "cell"),
+                       centroids, nprobe, k)
 
 
 def pq_codebooks(df: DataFrame, m: int = 8, k: int = 16, iters: int = 2,
                  id_col: str = "vec_id", vec_col: str = "embedding",
-                 dim: int = 64, train_frac: float = 1.0,
-                 neutral: bool = False) -> DataFrame:
+                 dim: int = 64, train_frac: float = 1.0) -> DataFrame:
     """Product-quantization codebooks: split each vector into ``m``
     subvectors and k-means each subspace into ``k`` codes — the index that
     stores a 100 TB embedding corpus as ``m`` small ints per vector
@@ -288,41 +380,30 @@ def pq_codebooks(df: DataFrame, m: int = 8, k: int = 16, iters: int = 2,
     ALL ``m`` subspaces train in ONE Lloyd loop: vectors explode to
     (subspace, subvector) rows and the subspace id rides the grouping
     keys, so adding subspaces widens the aggregate instead of multiplying
-    driver-side iterations.  Init is deterministic (code = xxhash64(id) %
-    k — no RNG, engine-reproducible); the m×k-row codebook
-    ``localCheckpoint``s each round so plan depth is O(1) in ``iters``.
+    driver-side iterations.  Init is deterministic (code =
+    wang_mixed_hash(id) mod k — explicit integer arithmetic, so the whole
+    codebooks→encode→ADC chain is SQL-reproducible: q_pq_topk's oracle);
+    the m×k-row codebook ``localCheckpoint``s each round so plan depth is
+    O(1) in ``iters``.
 
     ``train_frac`` < 1 trains on a deterministic hash sample of the corpus
-    (``xxhash64(id) % 1000 < 1000·frac``) — the 100 TB shape: codebooks
-    need only O(k·m) well-spread examples to converge (FAISS trains on
-    ~max(256·k, 100k) samples), so the Lloyd loop touches a fixed-size
-    training set while encode/search still cover every vector.
+    (``wang_mixed_hash(id) mod 1000 < 1000·frac``) — the 100 TB shape:
+    codebooks need only O(k·m) well-spread examples to converge (FAISS
+    trains on ~max(256·k, 100k) samples), so the Lloyd loop touches a
+    fixed-size training set while encode/search still cover every vector.
 
     Returns (subspace, code, centroid array<double>) — m·k rows.
     """
     require_columns(df, [id_col, vec_col], "pq_codebooks")
     if dim % m != 0:
         raise ValueError(f"dim ({dim}) must be divisible by m ({m})")
-    d_sub = dim // m
-    # neutral=True swaps BOTH id hashes (train sample + code init) for
-    # the explicit wang_mixed_hash family — the only engine-specific
-    # atoms in the whole PQ pipeline, so with it the entire
-    # codebooks→encode→ADC chain is SQL-reproducible (q_pq_topk's
-    # oracle); xxhash64 stays the default.
-    if neutral:
-        from .sampling import wang_mixed_hash
-        id_hash = wang_mixed_hash(F.col(id_col))
-    else:
-        id_hash = F.xxhash64(F.col(id_col))
+    id_hash = wang_mixed_hash(F.col(id_col))
     train = df
     if train_frac < 1.0:
         train = df.filter(
             F.pmod(id_hash, F.lit(1000)) < F.lit(int(1000 * train_frac)))
-    sub = (train.select(
-               F.col(id_col),
-               F.posexplode(F.array(*[
-                   F.slice(_as_double(F.col(vec_col)), s * d_sub + 1, d_sub)
-                   for s in range(m)])).alias("subspace", "sv")))
+    sub = train.select(F.col(id_col), _subvectors(
+        F.col(vec_col), m, dim // m).alias("subspace", "sv"))
     # the training set is re-scanned every Lloyd round (assign + recompute):
     # materialize the explode once instead of re-reading/re-exploding
     sub = sub.persist()
@@ -332,15 +413,7 @@ def pq_codebooks(df: DataFrame, m: int = 8, k: int = 16, iters: int = 2,
     books = None
     try:
         for it in range(iters):
-            comp = (assigned.select("subspace", "code",
-                                    F.posexplode("sv").alias("d", "x"))
-                            .groupBy("subspace", "code", "d")
-                            .agg(F.avg("x").alias("c")))
-            books = (comp.groupBy("subspace", "code")
-                         .agg(F.transform(
-                                 F.sort_array(
-                                     F.collect_list(F.struct("d", "c"))),
-                                 lambda s: s["c"]).alias("centroid")))
+            books = _mean_vectors(assigned, ["subspace", "code"], "sv")
             # materialize periodically (bounds lineage on long runs) and
             # ALWAYS on the final round: the returned codebook feeds 3+
             # consumers (assign, encode, ADC) and must not recompute its
@@ -360,11 +433,7 @@ def _argmin_code(sv, cents):
     in-row array and ``array_position(min)`` picks the LOWEST code on ties
     (same tie-break as min(struct(dist, code))).  Pure expression — runs
     inside whole-stage codegen, no join fan-out, no aggregate."""
-    dists = F.transform(
-        cents,
-        lambda c: F.aggregate(F.zip_with(sv, c, lambda x, cc:
-                                         (x - cc) * (x - cc)),
-                              F.lit(0.0), lambda acc, x: acc + x))
+    dists = F.transform(cents, lambda c: _sqdist(sv, c))
     return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
 
@@ -392,19 +461,18 @@ def pq_encode(df: DataFrame, books: DataFrame, m: int = 8,
               id_col: str = "vec_id", vec_col: str = "embedding",
               dim: int = 64) -> DataFrame:
     """Encode vectors to PQ codes: (id, codes array<int>) with
-    ``codes[s]`` the nearest codebook entry of subspace ``s``.
+    ``codes[s]`` the nearest codebook entry of subspace ``s``; a null
+    vector gets no code row.
 
     MAP-ONLY: encoding a 100 TB corpus is a single scan with zero
     exchanges (the old explode → join → groupBy shape shuffled n·m
-    subvector rows twice).  r14 moved the m·k argmin folds from in-row
-    JVM expressions to one vectorized Arrow batch stage (optimization-
-    guide §4.2): the unrolled m×k fold tree (~128 aggregate nodes) was
-    FIXED overhead like q_lsh_topk's plane folds — measured ~3.2s at
-    sf0.1 for 2,000 vectors.  The codebook is collected driver-side
-    (m·k rows, a few KB — the bounded-parameter collect pattern; it is
-    already localCheckpoint-materialized by pq_codebooks) and the numpy
-    distance loop runs over subvector positions IN ASCENDING ORDER, so
-    every partial distance is the same IEEE double as the JVM fold and
+    subvector rows twice).  The m·k argmin folds run as one vectorized
+    Arrow batch stage (history: SCALE.md, "PQ encode Arrow stage").  The
+    codebook is collected driver-side (m·k rows, a few KB — the
+    bounded-parameter collect pattern; it is already
+    localCheckpoint-materialized by pq_codebooks) and the numpy distance
+    loop runs over subvector positions IN ASCENDING ORDER, so every
+    partial distance is the same IEEE double as the JVM fold and
     np.argmin's first-minimum tie-break equals array_position(min)
     (lowest code) — oracle-hash-checked (q_pq_topk / q_ivfpq_topk)."""
     require_columns(df, [id_col, vec_col], "pq_encode")
@@ -414,15 +482,9 @@ def pq_encode(df: DataFrame, books: DataFrame, m: int = 8,
     for r in rows:
         cents[r["subspace"]] = [list(c) for c in r["cents"]]
     id_type = dict(df.select(F.col(id_col)).dtypes)[id_col]
-    # r15 measured NO-GO: a size-bounded fan-out (arrow_fanout) before
-    # this stage LOSES at both SFs — isolated interleaved min-of-4,
-    # encode→noop: sf0.1 0.369→0.481s, sf1.0 (20k vecs) 0.536→0.760s.
-    # The numpy encode is trivial per byte (m·k distance folds), so the
-    # scan's own partitioning already saturates it; the probe job +
-    # exchange are pure overhead.  At real corpus scale scans arrive
-    # pre-parallel (many row groups), so no fan-out is needed there
-    # either.
-    vecs = df.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
+    # no fan-out: the numpy encode is trivial per byte, so the scan's own
+    # partitioning already saturates it (SCALE.md, "PQ encode Arrow stage")
+    vecs = _vectors(df.filter(F.col(vec_col).isNotNull()), id_col, vec_col)
 
     def _encode(batches):
         import numpy as np
@@ -468,70 +530,35 @@ def pq_topk_adc(codes: DataFrame, books: DataFrame, queries: DataFrame,
 
     Returns (query_id, neighbor_id, approx_d2) — smaller is nearer.
     """
-    d_sub = dim // m
-    qsub = (queries.select(
-                F.col(id_col).alias("query_id"),
-                F.posexplode(F.array(*[
-                    F.slice(_as_double(F.col(vec_col)), s * d_sub + 1, d_sub)
-                    for s in range(m)])).alias("subspace", "qv")))
-    d2 = F.aggregate(F.zip_with("qv", "centroid",
-                                lambda x, c: (x - c) * (x - c)),
-                     F.lit(0.0), lambda acc, x: acc + x)
-    adc = (qsub.join(F.broadcast(books), "subspace")
-               .select("query_id", "subspace", "code", d2.alias("pd")))
-    # nest the distance tables: (query_id, pdm[m][k]) rows → one row
-    qrow = (adc.groupBy("query_id", "subspace")
-               .agg(F.transform(
-                       F.array_sort(F.collect_list(F.struct("code", "pd"))),
-                       lambda s: s["pd"]).alias("pds"))
-               .groupBy("query_id")
-               .agg(F.transform(
-                       F.array_sort(F.collect_list(
-                           F.struct("subspace", "pds"))),
-                       lambda s: s["pds"]).alias("pdm"))
-               .groupBy()
-               .agg(F.collect_list(F.struct("query_id", "pdm")).alias("qs")))
-    approx = F.aggregate(
-        F.zip_with(F.col("codes"), F.col("q.pdm"),
-                   lambda c, pds: F.element_at(pds, c + 1)),
-        F.lit(0.0), lambda acc, x: acc + x)
+    qsub = queries.select(F.col(id_col).alias("query_id"), _subvectors(
+        F.col(vec_col), m, dim // m).alias("subspace", "qv"))
+    qrow = (_adc_tables(qsub, books)
+            .groupBy()
+            .agg(F.collect_list(F.struct("query_id", "pdm")).alias("qs")))
     scored = (codes.select(F.col(id_col).alias("neighbor_id"), "codes")
                    .crossJoin(F.broadcast(qrow))
                    .select("neighbor_id", "codes",
                            F.explode("qs").alias("q"))
                    .select(F.col("q.query_id").alias("query_id"),
-                           "neighbor_id", roundn(approx).alias("approx_d2"))
+                           "neighbor_id",
+                           roundn(_adc(F.col("codes"), F.col("q.pdm")))
+                           .alias("approx_d2"))
                    .filter(F.col("query_id") != F.col("neighbor_id")))
-    w1 = Window.partitionBy(
-        "query_id", F.pmod(F.col("neighbor_id"), F.lit(shards))).orderBy(
-        F.asc("approx_d2"), F.asc("neighbor_id"))
-    survivors = (scored.withColumn("__rn", F.row_number().over(w1))
-                       .filter(F.col("__rn") <= k).drop("__rn"))
-    w2 = Window.partitionBy("query_id").orderBy(F.asc("approx_d2"),
-                                                F.asc("neighbor_id"))
-    return (survivors.withColumn("__rn", F.row_number().over(w2))
-                     .filter(F.col("__rn") <= k)
-                     .select("query_id", "neighbor_id", "approx_d2"))
+    order = [F.asc("approx_d2"), F.asc("neighbor_id")]
+    survivors = topk_per_group(
+        scored, ["query_id", F.pmod(F.col("neighbor_id"), F.lit(shards))],
+        order, k)
+    return topk_per_group(survivors, ["query_id"], order, k)
 
 
 def label_centroids(df: DataFrame, id_col: str = "vec_id",
                     vec_col: str = "embedding",
                     label_col: str = "label") -> DataFrame:
-    """Per-label mean embedding via posexplode → (label, dim) average →
-    re-assemble with sort_array(collect_list).  The exploded shuffle
-    carries (labels × dims) partial sums after map-side combine —
-    constant-size output regardless of fact scale.  Returns
-    (label, centroid array<double>)."""
+    """Per-label mean embedding (:func:`_mean_vectors`) — constant-size
+    output regardless of fact scale.  Returns (label, centroid
+    array<double>)."""
     require_columns(df, [id_col, vec_col, label_col], "label_centroids")
-    comp = (df.select(F.col(label_col),
-                      F.posexplode(_as_double(F.col(vec_col)))
-                       .alias("dim", "v"))
-              .groupBy(label_col, "dim")
-              .agg(F.avg("v").alias("c")))
-    return (comp.groupBy(label_col)
-                .agg(F.transform(
-                        F.sort_array(F.collect_list(F.struct("dim", "c"))),
-                        lambda s: s["c"]).alias("centroid")))
+    return _mean_vectors(df, [label_col], _as_double(F.col(vec_col)))
 
 
 def nearest_centroid(df: DataFrame, id_col: str = "vec_id",
@@ -539,8 +566,8 @@ def nearest_centroid(df: DataFrame, id_col: str = "vec_id",
                      label_col: str = "label") -> DataFrame:
     """Assign every vector to its nearest per-label mean centroid by dot
     product (vectors are unit-norm, so dot = cosine).  The centroid table
-    is K rows — broadcast cross join, K dot products per row, argmax via
-    one row_number window keyed by the vector id.  This is the assignment
+    is K rows — broadcast cross join, K dot products per row, argmax
+    in-row (:func:`assign_to_centroids`, no window).  This is the assignment
     step of an IVF coarse quantizer / one Lloyd iteration, expressed
     relationally."""
     cents = label_centroids(df, id_col, vec_col, label_col)
@@ -570,24 +597,14 @@ def assign_to_centroids(df: DataFrame, cents: DataFrame,
     per round; now assignment never exchanges at all."""
     if metric not in ("dot", "l2"):
         raise ValueError(f"unknown metric {metric!r}")
-    nested = cents.groupBy().agg(
-        F.transform(F.array_sort(F.collect_list(
-            F.struct("cand_label", "centroid"))),
-            lambda s: s["centroid"]).alias("__cts"),
-        F.sort_array(F.collect_list("cand_label")).alias("__lbls"))
-    vecs = df.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    if metric == "dot":
-        score_fn = lambda c: _dot(F.col("v"), c)  # noqa: E731
-        best = F.array_max
-    else:
-        score_fn = lambda c: F.aggregate(  # noqa: E731
-            F.zip_with(F.col("v"), c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, x: acc + x)
-        best = F.array_min
+    score, best = (_dot, F.array_max) if metric == "dot" \
+        else (_sqdist, F.array_min)
     # stage the distance array ONCE as a named column (HOF-CSE rule —
     # see minhash_slots), then the index once; references stay references
-    return (vecs.crossJoin(F.broadcast(nested))
-                .withColumn("__d", F.transform(F.col("__cts"), score_fn))
+    return (_vectors(df, id_col, vec_col)
+                .crossJoin(F.broadcast(_nested_codebook(cents)))
+                .withColumn("__d", F.transform(
+                    F.col("__cts"), lambda c: score(F.col("v"), c)))
                 .withColumn("__i", F.array_position(
                     F.col("__d"), best(F.col("__d"))).cast("int"))
                 .select(F.col(id_col),
@@ -612,8 +629,7 @@ def lloyd_kmeans(df: DataFrame, iters: int = 3, id_col: str = "vec_id",
 
     Returns (id, cluster, score) plus per-cluster sizes would be one more
     agg; kept minimal to compose."""
-    vecs = fan_out(df.select(F.col(id_col),
-                             _as_double(F.col(vec_col)).alias("v")))
+    vecs = fan_out(_vectors(df, id_col, vec_col))
     cents = (label_centroids(df, id_col, vec_col, label_col)
              .select(F.col(label_col).cast("long").alias("cand_label"),
                      "centroid"))
@@ -632,26 +648,18 @@ def lloyd_centroids(vecs: DataFrame, cents: DataFrame, iters: int,
     the identical iteration instead of re-implementing it."""
     def step(c: DataFrame) -> DataFrame:
         assign = assign_to_centroids(vecs, c, id_col, "v", metric="l2")
-        comp = (vecs.join(assign.select(id_col, "assigned_label"), id_col)
-                    .select(F.col("assigned_label").alias("cand_label"),
-                            F.posexplode("v").alias("dim", "val"))
-                    .groupBy("cand_label", "dim")
-                    .agg(F.avg("val").alias("c")))
-        return (comp.groupBy("cand_label")
-                    .agg(F.transform(
-                            F.sort_array(F.collect_list(
-                                F.struct("dim", "c"))),
-                            lambda s: s["c"]).alias("centroid")))
+        return _mean_vectors(
+            vecs.join(assign.select(id_col, F.col("assigned_label")
+                                    .alias("cand_label")), id_col),
+            ["cand_label"], "v")
 
     return iterate(cents, step, iters)
 
 
 def ivfpq_topk(df: DataFrame, query_ids: list[int], k: int = 3,
-               n_cells: int = 4, nprobe: int = 2, m: int = 8,
-               pq_k: int = 16, dim: int = 64,
+               nprobe: int = 2, m: int = 8, pq_k: int = 16, dim: int = 64,
                id_col: str = "vec_id", vec_col: str = "embedding",
-               seed: int = 42, train_frac: float = 1.0,
-               iters: int = 2, neutral: bool = False) -> DataFrame:
+               train_frac: float = 1.0, iters: int = 2) -> DataFrame:
     """IVF-PQ — the production ANN architecture (FAISS IVFPQ) from the
     engine's two tiers composed: the coarse quantizer routes each query
     to ``nprobe`` cells, and ADC scans ONLY those cells' PQ codes.  At
@@ -659,100 +667,38 @@ def ivfpq_topk(df: DataFrame, query_ids: list[int], k: int = 3,
     partitioned by cell; a query touches nprobe/n_cells of the index and
     never reads a raw vector.
 
-    Scoring is map-only like :func:`pq_topk_adc` (distance tables nest
-    into a per-query broadcast row); the candidate restriction is one
-    broadcast equi-join on the cell id.  Returns
-    (query_id, neighbor_id, approx_d2), smaller = nearer."""
-    require_columns(df, [id_col, vec_col], "ivfpq_topk")
-    vecs = fan_out(df.select(F.col(id_col),
-                             _as_double(F.col(vec_col)).alias("v")))
-
-    if neutral:
-        # Engine-neutral coarse quantizer: deterministic per-label mean
-        # centroids (the ivf_neutral_topk construction) — with the
-        # neutral PQ hash family below, the ENTIRE composite becomes
-        # SQL-reproducible (q_ivfpq_topk's oracle).  n_cells/seed are
-        # ignored: cells are the label partition.
-        cents = (label_centroids(df, id_col, vec_col, "label")
-                 .select(F.col("label").cast("int").alias("cell"),
-                         "centroid"))
-        cells = (assign_to_centroids(
-                     df, cents.select(F.col("cell").alias("cand_label"),
-                                      "centroid"),
-                     id_col, vec_col, metric="l2")
-                 .select(F.col(id_col),
-                         F.col("assigned_label").cast("int").alias("cell")))
-        centroids = cents
-    else:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        assembled = vecs.withColumn("__f", array_to_vector("v"))
-        model = KMeans(k=n_cells, seed=seed, featuresCol="__f",
-                       predictionCol="cell").fit(assembled)
-        cells = model.transform(assembled).select(
-            F.col(id_col), "cell")
-
+    The cells are the per-``label`` mean centroids (:func:`_label_cells`,
+    the :func:`ivf_neutral_topk` quantizer) and the codebooks are
+    :func:`pq_codebooks`' wang-hash init, so the whole composite is
+    SQL-reproducible (q_ivfpq_topk's oracle).  Scoring is map-only like
+    :func:`pq_topk_adc` (distance tables nest into a per-query broadcast
+    row); the candidate restriction is one broadcast equi-join on the
+    cell id.  Returns (query_id, neighbor_id, approx_d2), smaller =
+    nearer."""
+    require_columns(df, [id_col, vec_col, "label"], "ivfpq_topk")
+    vecs = fan_out(_vectors(df, id_col, vec_col))
+    cells, centroids = _label_cells(df, id_col, vec_col, "label")
     books = pq_codebooks(df, m=m, k=pq_k, iters=iters, dim=dim,
                          id_col=id_col, vec_col=vec_col,
-                         train_frac=train_frac, neutral=neutral)
+                         train_frac=train_frac)
     codes = (pq_encode(df, books, m=m, dim=dim, id_col=id_col,
                        vec_col=vec_col)
              .join(cells, id_col)
              .select(F.col(id_col).alias("neighbor_id"), "codes", "cell"))
-
-    if not neutral:
-        centroids = vecs.sparkSession.createDataFrame(
-            [(int(i), [float(x) for x in c])
-             for i, c in enumerate(model.clusterCenters())],
-            "cell int, centroid array<double>")
-    q = (vecs.filter(F.col(id_col).isin(query_ids))
-             .select(F.col(id_col).alias("query_id"), F.col("v").alias("qv")))
-    l2 = F.aggregate(F.zip_with("qv", "centroid",
-                                lambda x, c: (x - c) * (x - c)),
-                     F.lit(0.0), lambda acc, x: acc + x)
-    w_cell = Window.partitionBy("query_id").orderBy(F.asc("__d"),
-                                                    F.asc("cell"))
-    probes = (q.crossJoin(F.broadcast(centroids))
-                .withColumn("__d", l2)
-                .withColumn("__rn", F.row_number().over(w_cell))
-                .filter(F.col("__rn") <= nprobe)
-                .select("query_id", "cell"))
-
-    d_sub = dim // m
+    probes = (_probe_cells(_queries(vecs, query_ids, id_col), centroids,
+                           nprobe)
+              .select("query_id", "cell"))
     qsub = (df.filter(F.col(id_col).isin(query_ids))
-              .select(F.col(id_col).alias("query_id"),
-                      F.posexplode(F.array(*[
-                          F.slice(_as_double(F.col(vec_col)),
-                                  s * d_sub + 1, d_sub)
-                          for s in range(m)])).alias("subspace", "qv")))
-    pd_ = F.aggregate(F.zip_with("qv", "centroid",
-                                 lambda x, c: (x - c) * (x - c)),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    qpdm = (qsub.join(F.broadcast(books), "subspace")
-                .select("query_id", "subspace", "code", pd_.alias("pd"))
-                .groupBy("query_id", "subspace")
-                .agg(F.transform(
-                        F.array_sort(F.collect_list(F.struct("code", "pd"))),
-                        lambda s: s["pd"]).alias("pds"))
-                .groupBy("query_id")
-                .agg(F.transform(
-                        F.array_sort(F.collect_list(
-                            F.struct("subspace", "pds"))),
-                        lambda s: s["pds"]).alias("pdm")))
-    approx = F.aggregate(
-        F.zip_with(F.col("codes"), F.col("pdm"),
-                   lambda c, pds: F.element_at(pds, c + 1)),
-        F.lit(0.0), lambda acc, x: acc + x)
-    cand = (codes.join(F.broadcast(probes), "cell")
-                 .join(F.broadcast(qpdm), "query_id")
-                 .filter(F.col("query_id") != F.col("neighbor_id")))
-    w = Window.partitionBy("query_id").orderBy(F.asc("approx_d2"),
-                                               F.asc("neighbor_id"))
-    return (cand.withColumn("approx_d2", roundn(approx))
-                .withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") <= k)
-                .select("query_id", "neighbor_id", "approx_d2"))
+              .select(F.col(id_col).alias("query_id"), _subvectors(
+                  F.col(vec_col), m, dim // m).alias("subspace", "qv")))
+    scored = (codes.join(F.broadcast(probes), "cell")
+                   .join(F.broadcast(_adc_tables(qsub, books)), "query_id")
+                   .filter(F.col("query_id") != F.col("neighbor_id"))
+                   .select("query_id", "neighbor_id",
+                           roundn(_adc(F.col("codes"), F.col("pdm")))
+                           .alias("approx_d2")))
+    return topk_per_group(scored, ["query_id"],
+                          [F.asc("approx_d2"), F.asc("neighbor_id")], k)
 
 
 # Neutral-LSH plane weights: a multiplicative integer hash of (plane, dim)
@@ -789,8 +735,7 @@ def lsh_neutral_topk(df: DataFrame, query_ids: list[int], k: int = 3,
     Returns (query_id, neighbor_id, cosine).
     """
     require_columns(df, [id_col, vec_col], "lsh_neutral_topk")
-    vecs = fan_out(df.select(F.col(id_col),
-                             _as_double(F.col(vec_col)).alias("v")))
+    vecs = fan_out(_vectors(df, id_col, vec_col))
 
     dims = F.sequence(F.lit(0), F.lit(dim - 1)).cast("array<long>")
 
@@ -812,22 +757,9 @@ def lsh_neutral_topk(df: DataFrame, query_ids: list[int], k: int = 3,
                         lambda x: F.floor(x * 1e6).cast("long")))
                     .withColumn("bucket", bucket_bits(F.col("__xq")))
                     .drop("__xq"))
-    q = (bucketed.filter(F.col(id_col).isin(query_ids))
-                 .select(F.col(id_col).alias("query_id"),
-                         F.col("v").alias("qv"), "bucket"))
-    pairs = (F.broadcast(q)
-             .join(bucketed.select(F.col(id_col).alias("neighbor_id"),
-                                   F.col("v").alias("nv"), "bucket"),
-                   "bucket")
-             .filter(F.col("query_id") != F.col("neighbor_id")))
-    cos = _dot(F.col("qv"), F.col("nv")) \
-        / (_norm(F.col("qv")) * _norm(F.col("nv")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (pairs.withColumn("cosine", roundn(cos))
-                 .withColumn("__rn", F.row_number().over(w))
-                 .filter(F.col("__rn") <= k)
-                 .select("query_id", "neighbor_id", "cosine"))
+    pairs = (F.broadcast(_queries(bucketed, query_ids, id_col, "bucket"))
+             .join(_corpus(bucketed, id_col, "bucket"), "bucket"))
+    return _nearest(_cosine(pairs), k)
 
 
 def ivf_neutral_topk(df: DataFrame, query_ids: list[int], k: int = 3,
@@ -846,41 +778,12 @@ def ivf_neutral_topk(df: DataFrame, query_ids: list[int], k: int = 3,
     Returns (query_id, neighbor_id, cosine).
     """
     require_columns(df, [id_col, vec_col, label_col], "ivf_neutral_topk")
-    vecs = fan_out(df.select(F.col(id_col),
-                             _as_double(F.col(vec_col)).alias("v")))
-    cents = (label_centroids(df, id_col, vec_col, label_col)
-             .select(F.col(label_col).cast("long").alias("cell"),
-                     "centroid"))
-    corpus = (assign_to_centroids(df, cents.withColumnRenamed(
-                  "cell", "cand_label"), id_col, vec_col, metric="l2")
-              .select(F.col(id_col).alias("neighbor_id"),
-                      F.col("assigned_label").alias("cell"))
-              .join(vecs.select(F.col(id_col).alias("neighbor_id"),
-                                F.col("v").alias("nv")), "neighbor_id"))
-    q = (vecs.filter(F.col(id_col).isin(query_ids))
-             .select(F.col(id_col).alias("query_id"),
-                     F.col("v").alias("qv")))
-    l2 = F.aggregate(F.zip_with("qv", "centroid",
-                                lambda x, c: (x - c) * (x - c)),
-                     F.lit(0.0), lambda acc, x: acc + x)
-    w_cell = Window.partitionBy("query_id").orderBy(F.asc("__d"),
-                                                    F.asc("cell"))
-    probes = (q.crossJoin(F.broadcast(cents))
-                .withColumn("__d", l2)
-                .withColumn("__rn", F.row_number().over(w_cell))
-                .filter(F.col("__rn") <= nprobe)
-                .select("query_id", "qv", "cell"))
-    pairs = (F.broadcast(probes)
-             .join(corpus, "cell")
-             .filter(F.col("query_id") != F.col("neighbor_id")))
-    cos = _dot(F.col("qv"), F.col("nv")) \
-        / (_norm(F.col("qv")) * _norm(F.col("nv")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (pairs.withColumn("cosine", roundn(cos))
-                 .withColumn("__rn", F.row_number().over(w))
-                 .filter(F.col("__rn") <= k)
-                 .select("query_id", "neighbor_id", "cosine"))
+    vecs = fan_out(_vectors(df, id_col, vec_col))
+    cells, cents = _label_cells(df, id_col, vec_col, label_col)
+    corpus = (cells.select(F.col(id_col).alias("neighbor_id"), "cell")
+                   .join(_corpus(vecs, id_col), "neighbor_id"))
+    return _ivf_search(_queries(vecs, query_ids, id_col), corpus, cents,
+                       nprobe, k)
 
 
 def semantic_dedup_pairs(df: DataFrame, threshold: float = 0.9,
@@ -929,16 +832,11 @@ def semantic_dedup_pairs(df: DataFrame, threshold: float = 0.9,
         raise ValueError(
             f"target_occupancy must be > 0 (got {target_occupancy!r}); "
             "pass None for the single-level label quantizer")
-    cents = (label_centroids(df, id_col, vec_col, label_col)
-             .select(F.col(label_col).alias("cand_label"), "centroid"))
-    cells = (assign_to_centroids(df, cents, id_col, vec_col, metric="l2")
-             .select(F.col(id_col),
-                     F.col("assigned_label").alias("cell")))
+    cells, _ = _label_cells(df, id_col, vec_col, label_col)
     # norms precompute ONCE per vector (m rows) before the pair join —
     # inside the pair expression they would re-reduce the 64-element
     # array 2× per candidate (m² per cell instead of m)
-    vecs = (df.select(F.col(id_col),
-                      _as_double(F.col(vec_col)).alias("v"))
+    vecs = (_vectors(df, id_col, vec_col)
               .withColumn("__n", _norm(F.col("v")))
               .join(cells, id_col))
     if target_occupancy is None:
@@ -949,24 +847,18 @@ def semantic_dedup_pairs(df: DataFrame, threshold: float = 0.9,
                      .withColumn("__s", F.ceil(
                          F.col("__pop") / F.lit(float(target_occupancy))
                      ).cast("long")))
-        wseed = Window.partitionBy("cell").orderBy(F.asc(id_col))
-        seeds = (cells.join(F.broadcast(pops), "cell")
-                      .withColumn("__rn", F.row_number().over(wseed))
-                      .filter(F.col("__rn") <= F.col("__s"))
-                      .select("cell", F.col(id_col).alias("__seed")))
+        seeds = (topk_per_group(cells.join(F.broadcast(pops), "cell"),
+                                ["cell"], [F.asc(id_col)], F.col("__s"))
+                 .select("cell", F.col(id_col).alias("__seed")))
         seedv = (seeds.join(vecs.select(F.col(id_col).alias("__seed"),
                                         F.col("v").alias("__sv")),
                             "__seed")
                       .select("cell", "__seed", "__sv"))
-        d2 = F.aggregate(
-            F.zip_with(F.col("v"), F.col("__sv"),
-                       lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, x: acc + x)
         # argmin collapses in the aggregate (min over (d2, seed) struct)
         # — ties at equal distance pick the smallest seed id
         sub = (vecs.select(id_col, "v", "cell")
                    .join(seedv, "cell")
-                   .withColumn("__d2", d2)
+                   .withColumn("__d2", _sqdist(F.col("v"), F.col("__sv")))
                    .groupBy(id_col)
                    .agg(F.min(F.struct(F.col("__d2"),
                                        F.col("__seed"))).alias("__m"))
@@ -998,16 +890,9 @@ def assign_with_runnerup(vecs: DataFrame, cents: DataFrame,
     positions — all map-side.  ``vecs`` carries (id, v double-array).
     Returns (id, assigned_label, d2_best, d2_runnerup); ties pick the
     smallest label first, matching assign_to_centroids."""
-    nested = cents.groupBy().agg(
-        F.transform(F.array_sort(F.collect_list(
-            F.struct("cand_label", "centroid"))),
-            lambda s: s["centroid"]).alias("__cts"),
-        F.sort_array(F.collect_list("cand_label")).alias("__lbls"))
-    l2 = lambda c: F.aggregate(  # noqa: E731
-        F.zip_with(F.col("v"), c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, x: acc + x)
-    return (vecs.crossJoin(F.broadcast(nested))
-                .withColumn("__d", F.transform(F.col("__cts"), l2))
+    return (vecs.crossJoin(F.broadcast(_nested_codebook(cents)))
+                .withColumn("__d", F.transform(
+                    F.col("__cts"), lambda c: _sqdist(F.col("v"), c)))
                 .withColumn("__a2", F.array_min("__d"))
                 .withColumn("__i", F.array_position(
                     F.col("__d"), F.col("__a2")).cast("int"))
@@ -1088,11 +973,8 @@ def _kcenter_update(state: DataFrame, cur_id: int) -> DataFrame:
     plan test can assert the no-fact-shuffle shape directly."""
     cen = F.broadcast(state.filter(F.col("__id") == cur_id)
                            .select(F.col("__v").alias("__c")))
-    d2 = F.aggregate(
-        F.zip_with(F.col("__v"), F.col("__c"),
-                   lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0), lambda acc, x: acc + x)
-    qd = F.floor(d2 * F.lit(1e6)).cast("long")
+    qd = F.floor(_sqdist(F.col("__v"), F.col("__c")) * F.lit(1e6)) \
+        .cast("long")
     return (state.crossJoin(cen)
                  .select("__id", "__v",
                          F.least(F.col("__qmind"), qd).alias("__qmind")))
@@ -1119,12 +1001,8 @@ def jl_project(df: DataFrame, d_out: int = 16, id_col: str = "vec_id",
     Returns (id, dim 0..d_out-1, value) exploded long-form — scalar
     doubles, so the driver's float normalization applies directly."""
     require_columns(df, [id_col, vec_col], "jl_project")
-    # fan out before the d_out in-row folds (r14): map-only work from a
-    # single-row-group scan otherwise runs on one core (measured
-    # 1.65s -> 1.22s at sf0.1, min-of-3 interleaved; exceptAll-equal).
-    # The iterative siblings (kcenter_coreset, mmr_rerank) measured as
-    # NO-GOs for the same treatment — their per-round fixed job latency
-    # dominates, the r13 "not inside iteration loops" boundary.
+    # fan out before the d_out in-row folds: a single-row-group scan
+    # otherwise runs them on one core (SCALE.md, "JL projection fan-out")
     df = fan_out(df.select(F.col(id_col), F.col(vec_col)))
     v = _as_double(F.col(vec_col))
     scale = F.lit(d_out ** -0.5)
@@ -1176,9 +1054,7 @@ def mmr_rerank(df: DataFrame, query_vec: list[float], k: int = 8,
     require_columns(df, [id_col, vec_col], "mmr_rerank")
     spark = df.sparkSession
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    rel = F.aggregate(F.zip_with(_as_double(F.col(vec_col)), q,
-                                 lambda a, b: a * b),
-                      F.lit(0.0), lambda acc, x: acc + x)
+    rel = _dot(_as_double(F.col(vec_col)), q)
     pts = (df.select(F.col(id_col).cast("long").alias("__id"),
                      _as_double(F.col(vec_col)).alias("__v"),
                      F.floor(rel * F.lit(1e6)).cast("long").alias("__qrel"))
@@ -1190,10 +1066,8 @@ def mmr_rerank(df: DataFrame, query_vec: list[float], k: int = 8,
         if cur_id is not None:
             cen = F.broadcast(state.filter(F.col("__id") == cur_id)
                                    .select(F.col("__v").alias("__c")))
-            sim = F.aggregate(F.zip_with(F.col("__v"), F.col("__c"),
-                                         lambda a, b: a * b),
-                              F.lit(0.0), lambda acc, x: acc + x)
-            qsim = F.floor(sim * F.lit(1e6)).cast("long")
+            qsim = F.floor(_dot(F.col("__v"), F.col("__c"))
+                           * F.lit(1e6)).cast("long")
             state = (state.crossJoin(cen)
                           .select("__id", "__v", "__qrel",
                                   F.greatest(F.col("__qmaxsim"), qsim)

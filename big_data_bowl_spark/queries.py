@@ -290,7 +290,8 @@ def q_topk_per_group(spark, sf_dir):
     """W10/O3: top-3 events per user by value (nlargest / top player per
     route, _inisghts.ipynb#cell3), event_id tie-break."""
     e = read_table(spark, sf_dir, "events")
-    out = topk_per_group(e, ["user_id"], ["value", "event_id"], k=3)
+    out = topk_per_group(e, ["user_id"],
+                         [F.desc("value"), F.desc("event_id")], k=3)
     return out.select("user_id", "event_id", roundn(F.col("value")).alias("value"))
 
 
@@ -742,16 +743,14 @@ def q_pq_topk(spark, sf_dir):
     Lloyd loop for all subspaces, deterministic hash init on a hash-
     sampled training set), encode the corpus to 8-int codes, then ADC
     top-3 for the first 5 vectors — the search scans CODES only, never
-    the original vectors.  Hash-verified since r5 on the neutral hash
-    family: the oracle unrolls both Lloyd rounds with dense-position
-    codebooks (the hot path's gap-safe position semantics), re-encodes
-    the corpus, and replays the ADC lookup in SQL; recall containment
-    and prototype-exactness are property-tested besides, and xxhash64
-    stays the library default."""
+    the original vectors.  Hash-verified since r5 on the wang-hash init:
+    the oracle unrolls both Lloyd rounds with dense-position codebooks
+    (the hot path's gap-safe position semantics), re-encodes the corpus,
+    and replays the ADC lookup in SQL; recall containment and
+    prototype-exactness are property-tested besides."""
     from .pipeline.similarity import pq_codebooks, pq_encode, pq_topk_adc
     em = read_table(spark, sf_dir, "embeddings")
-    books = pq_codebooks(em, m=8, k=16, iters=2, train_frac=0.25,
-                         neutral=True)
+    books = pq_codebooks(em, m=8, k=16, iters=2, train_frac=0.25)
     codes = pq_encode(em, books, m=8)
     queries = em.filter(F.col("vec_id").isin([0, 1, 2, 3, 4]))
     return pq_topk_adc(codes, books, queries, k=3, m=8)
@@ -3338,17 +3337,14 @@ def q_ngram_hotspots(spark, sf_dir):
 def q_ivfpq_topk(spark, sf_dir):
     """IVF-PQ composite ANN (the FAISS-style production shape): coarse
     cells route each query to nprobe=2 cells; ADC scans only those
-    cells' PQ codes, map-only.  Hash-verified since r5 on the neutral
-    construction (label-centroid cells + wang-hash PQ init — the oracle
-    composes the ivf_neutral and pq oracles and replays the
-    cell-restricted ADC); full-probe ≡ flat-PQ equality is
-    property-tested, and the Spark ML KMeans quantizer stays the
-    library default."""
+    cells' PQ codes, map-only.  Hash-verified since r5: label-centroid
+    cells + wang-hash PQ init, so the oracle composes the ivf_neutral
+    and pq oracles and replays the cell-restricted ADC; full-probe ≡
+    flat-PQ equality is property-tested."""
     from .pipeline.similarity import ivfpq_topk
     em = read_table(spark, sf_dir, "embeddings")
     return ivfpq_topk(em, [0, 1, 2, 3, 4], k=3, nprobe=2,
-                      m=8, pq_k=16, train_frac=0.25, iters=1,
-                      neutral=True)
+                      m=8, pq_k=16, train_frac=0.25, iters=1)
 
 
 def q_span_corruption(spark, sf_dir):

@@ -179,3 +179,24 @@ def test_parquet_format_set_only_in_session():
     assert matching(r"SparkSession\.builder|\.config\(\s*[\"']spark\.",
                     entry_points) == session
     assert matching(r"conf\.set\(", mods) == session
+
+
+def test_no_hash_family_switch():
+    """One hash family and one quantizer per algorithm: no function in
+    the package takes a ``neutral`` parameter that picks between an
+    engine-specific construction and a SQL-reproducible twin."""
+    import ast
+    import glob
+
+    pkg = f"{REPO}/big_data_bowl_spark"
+    found = []
+    for p in sorted(glob.glob(f"{pkg}/**/*.py", recursive=True)):
+        for node in ast.walk(ast.parse(open(p).read())):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.Lambda)):
+                a = node.args
+                names = [x.arg for x in a.posonlyargs + a.args
+                         + a.kwonlyargs]
+                if "neutral" in names:
+                    found.append(f"{p[len(pkg) + 1:]}:{node.lineno}")
+    assert not found, f"functions with a neutral= switch: {found}"

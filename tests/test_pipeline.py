@@ -184,6 +184,31 @@ def test_lsh_topk_contained_in_exact_candidates(spark):
             assert abs(exact[key] - r.cosine) < 1e-9
 
 
+def _lsh_stage(df, clean):
+    return lsh_bucketed_topk(df, [0, 1, 7], k=3)
+
+
+def _pq_encode_stage(df, clean):
+    from big_data_bowl_spark.pipeline.similarity import (
+        pq_codebooks, pq_encode)
+    return pq_encode(df, pq_codebooks(clean, m=8, k=16, iters=1), m=8)
+
+
+@pytest.mark.parametrize("stage", [_lsh_stage, _pq_encode_stage],
+                         ids=["lsh_bucketed_topk", "pq_encode"])
+def test_vector_arrow_stage_skips_null_vectors(spark, stage):
+    """Null policy of the two float-vector Arrow stages: a null
+    embedding is never a query, a candidate or a code row, so the
+    stage returns exactly what it returns with that row removed."""
+    em = read_table(spark, SF_SMALL, "embeddings")
+    nulled = em.withColumn("embedding", F.when(
+        F.col("vec_id") != 7, F.col("embedding")))
+    clean = em.filter(F.col("vec_id") != 7)
+    got = sorted(map(tuple, stage(nulled, clean).collect()))
+    want = sorted(map(tuple, stage(clean, clean).collect()))
+    assert got == want and got
+
+
 def test_group_split_is_leakage_safe(spark):
     e = read_table(spark, SF_SMALL, "events")
     tagged = group_split(e, "user_id", val_fraction=0.3)
@@ -1567,34 +1592,6 @@ def test_jaccard_smallvocab_path_equals_array_path(spark):
     assert {(5, 200), (5, 201), (200, 201)} <= pairs
 
 
-def test_jaccard_salt_knob_preserves_output(spark):
-    """The _JACCARD_SALTS skew knob (off by default — salting measured
-    3× slower at sf0.1 where the b-side broadcasts) must stay EXACT
-    when enabled: each pair meets exactly once at (g_min, salt(a)), so
-    S = 16 output ≡ S = 1 output, no duplicates, no losses."""
-    import random
-
-    import big_data_bowl_spark.pipeline.dedup as dedup_mod
-    from big_data_bowl_spark.pipeline.dedup import jaccard_prefix_pairs
-
-    rng = random.Random(41)
-    vocab = [f"t{i}" for i in range(30)]
-    rows = [(i, " ".join(rng.sample(vocab, rng.randint(3, 20))))
-            for i in range(100)]
-    rows.append((300, rows[7][1]))  # same-mask shortcut stays covered
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    base = sorted(map(tuple, jaccard_prefix_pairs(
-        docs, threshold=0.6).collect()))
-    old = dedup_mod._JACCARD_SALTS
-    try:
-        dedup_mod._JACCARD_SALTS = 16
-        salted = sorted(map(tuple, jaccard_prefix_pairs(
-            docs, threshold=0.6).collect()))
-    finally:
-        dedup_mod._JACCARD_SALTS = old
-    assert salted == base and base, (len(base), len(salted))
-
-
 def test_negative_samples_never_hit_positives(spark):
     from big_data_bowl_spark.pipeline.sampling import negative_samples
     pos = spark.createDataFrame(
@@ -1627,23 +1624,6 @@ def test_temperature_mixture_flattens_distribution(spark):
     assert 140 <= total <= 260, by_src
     ratio = by_src["big"] / by_src["small"]
     assert 2.0 <= ratio <= 8.0, by_src  # raw ratio would be 16
-
-
-def test_ivfpq_full_probe_equals_pq_adc(spark):
-    """nprobe == n_cells scans every cell, so IVF-PQ must return exactly
-    the flat PQ-ADC result (identical deterministic codebooks)."""
-    from big_data_bowl_spark.pipeline.similarity import (
-        ivfpq_topk, pq_codebooks, pq_encode, pq_topk_adc)
-    em = read_table(spark, SF_SMALL, "embeddings")
-    books = pq_codebooks(em, m=4, k=8, iters=2, dim=16)
-    codes = pq_encode(em, books, m=4, dim=16)
-    flat = sorted(tuple(r) for r in pq_topk_adc(
-        codes, books, em.filter(F.col("vec_id").isin([0, 1, 2])),
-        k=3, m=4, dim=16).collect())
-    ivf = sorted(tuple(r) for r in ivfpq_topk(
-        em, [0, 1, 2], k=3, n_cells=3, nprobe=3, m=4, pq_k=8,
-        dim=16).collect())
-    assert ivf == flat
 
 
 def test_sampling_ops_partition_invariant(spark):
@@ -1966,9 +1946,9 @@ def test_hll_neutral_registers_merge_equals_direct(spark):
 
 
 def test_ivfpq_neutral_full_probe_equals_neutral_pq(spark):
-    """The neutral IVF-PQ composite (label cells + wang-hash PQ init)
-    must also reduce to the flat neutral-PQ ADC when every cell is
-    probed — the cell restriction only prunes."""
+    """IVF-PQ (label cells + wang-hash PQ init) reduces to the flat
+    PQ ADC when every cell is probed — the cell restriction only
+    prunes."""
     from pyspark.sql import functions as F
 
     from big_data_bowl_spark.pipeline.similarity import (
@@ -1980,15 +1960,14 @@ def test_ivfpq_neutral_full_probe_equals_neutral_pq(spark):
 
     em = read_table(spark, SF_SMALL, "embeddings")
     n_labels = em.select("label").distinct().count()
-    books = pq_codebooks(em, m=8, k=16, iters=1, neutral=True)
+    books = pq_codebooks(em, m=8, k=16, iters=1)
     codes = pq_encode(em, books, m=8)
     queries = em.filter(F.col("vec_id").isin([0, 1, 2]))
     flat = sorted(tuple(r) for r in
                   pq_topk_adc(codes, books, queries, k=3, m=8).collect())
     full = sorted(tuple(r) for r in
                   ivfpq_topk(em, [0, 1, 2], k=3, nprobe=n_labels,
-                             m=8, pq_k=16, iters=1,
-                             neutral=True).collect())
+                             m=8, pq_k=16, iters=1).collect())
     assert full == flat
 
 
