@@ -61,15 +61,13 @@ def separation_at_max_frame(tracking: DataFrame, group: list[str],
                                left_side, right_side, **kw)
 
 
-def _grid_best(p: DataFrame, width: float,
-               max_d2: float | None = None,
-               carry: tuple[str, ...] = (),
-               predicate=None, k: int = 1) -> DataFrame:
-    """Best (min-d², min-id tie-break) candidate per point among the 3×3
-    ``width``-cell neighborhood — the shared kernel of both refinement
-    levels.  Probes replicate 9×, join the cell key exactly (plain
-    equi-join, never a cross join); ``max_d2`` optionally filters pairs
-    (the radius bound of the coarse level).  ``carry`` threads extra
+def _grid_best(p: DataFrame, width: float, max_d2: float,
+               carry: tuple[str, ...], predicate, k: int) -> DataFrame:
+    """Best ``k`` (min-d², min-id tie-break) candidates per point among
+    the 3×3 ``width``-cell neighborhood, pairs filtered to d² ≤
+    ``max_d2`` — the kernel of the first ladder rung and of the
+    single-level form.  Probes replicate 9×, join the cell key exactly
+    (plain equi-join, never a cross join).  ``carry`` threads extra
     columns through both sides (as __q_<c> / __n_<c>) and ``predicate``
     (a 0-arg callable returning a Column over those) restricts the
     candidate SUBSET — e.g. hard-negative mining's label mismatch.  The
@@ -101,8 +99,7 @@ def _grid_best(p: DataFrame, width: float,
                    .withColumn("__d2", dist2))
     if predicate is not None:
         pairs = pairs.filter(predicate())
-    if max_d2 is not None:
-        pairs = pairs.filter(F.col("__d2") <= F.lit(max_d2))
+    pairs = pairs.filter(F.col("__d2") <= F.lit(max_d2))
     from pyspark.sql import Window
     w = Window.partitionBy("__qid").orderBy(F.asc("__d2"), F.asc("__nid"))
     return (pairs.withColumn("__rn", F.row_number().over(w))
@@ -111,28 +108,23 @@ def _grid_best(p: DataFrame, width: float,
 
 
 def _ladder_widths(p: DataFrame, radius: float, refine: int,
-                   target_occupancy: float | None) -> list[float] | None:
+                   target_occupancy: float) -> list[float] | None:
     """Derive the refinement-ladder rung widths for a point frame
     (``__x``/``__y`` columns).  ``None`` means run single-level at the
     radius width (sparse / degenerate / refine<=1).
 
-    Adaptive mode (``target_occupancy`` = K): one driver-scale stats
+    With ``target_occupancy`` = K, one driver-scale stats
     job (count + bbox, 5 scalars) sizes the finest width so the
     EXPECTED candidates per probe is K — w₀ = √(K·area/(9n)) in 2-D,
     K·extent/(3n) when one extent collapses below a cell (1-D data) —
     then geometric rungs ×8, skipping any within ×2 of the radius
     (such a rung resolves little the backstop wouldn't, but costs a
-    full re-grid + checkpoint of job latency — the small-SF tax).
-    Legacy mode (``target_occupancy=None``): the fixed r8 two-level
-    ladder at radius/refine, no stats job."""
+    full re-grid + checkpoint of job latency — the small-SF tax)."""
     if refine <= 1:
         return None
-    if target_occupancy is None:
-        return [float(radius) / refine]
     if not (target_occupancy > 0.0):  # also rejects NaN
         raise ValueError(
-            f"target_occupancy must be > 0 (got {target_occupancy!r}); "
-            "pass None for the legacy fixed-width ladder")
+            f"target_occupancy must be > 0 (got {target_occupancy!r})")
     st = p.agg(F.count(F.lit(1)).alias("n"),
                F.min("__x").alias("x0"), F.max("__x").alias("x1"),
                F.min("__y").alias("y0"), F.max("__y").alias("y1")
@@ -171,109 +163,48 @@ def grid_nearest(points: DataFrame, radius: float,
                  y_col: str = "y", refine: int = 8,
                  carry: tuple[str, ...] = (),
                  predicate=None,
-                 target_occupancy: float | None = 32.0) -> DataFrame:
+                 target_occupancy: float = 32.0) -> DataFrame:
     """Nearest neighbor within ``radius``, grid-bucketed — the
     UNBOUNDED-scale form of the within-group separation join: where
     J6/J8 bound the quadratic blow-up by the play key (≤22 players), this
-    bounds it by a spatial cell key.  Each point lands in cell
-    (⌊x/w⌋, ⌊y/w⌋); any neighbor within w is necessarily in the 3×3 cell
-    neighborhood, so probes replicate 9× and join the cell key exactly —
-    a plain equi-join, never a cross join.  EXACT for the radius-bounded
+    bounds it by a spatial cell key.  EXACT for the radius-bounded
     semantics (a true nearest neighbor farther than r is reported as no
-    row).
-
-    DENSITY-ADAPTIVE refinement ladder (r10; supersedes r8's fixed
-    two-level form, which the recurring stress leg caught going
-    quadratic again on q_hard_negatives: the FINE width radius/refine
-    was density-blind, so fine-pass candidate pairs — ∝ Σ_cell pop² —
-    measured 667k at sf0.1 → 66.6M at the 10× stress SF, a clean ×100;
-    escalation was 0, the fine join itself was the whole cost).  The
-    fix: pick the finest width from the data, not the radius.  One
-    cheap stats job (count + bbox) sizes w₀ = √(K·area/(9n)) so the
-    EXPECTED candidates per probe is the constant K (``target_
-    occupancy``): pair volume ≈ n·K is linear in n by construction,
-    and since the typical nearest-neighbor distance also scales as
-    √(area/n), the fine-pass resolution rate stays flat as density
-    grows (measured at K=32: 98.9% resolved / 178k pairs at sf0.1 →
-    96.0% / 2.0M at 10× — ×11 pairs for ×10 rows).  Unresolved points
-    escalate a GEOMETRIC ladder (w₀, 8w₀, 64w₀, … below radius/2) and
-    finally the radius-width backstop against the full table; each level resolves
-    exactly the points whose best candidate is within that level's
-    width — the L∞ block bound below — so every rung is
-    exactness-preserving.  Degenerate geometries fall back sanely:
-    effectively-1-D data (one extent ≪ the other, e.g. PSM's score
-    line) sizes w₀ = K·extent/(3n) from the 1-D occupancy model; fully
-    stacked or sparse data (w₀ ≥ radius) collapses to the single-level
-    form.  ``target_occupancy=None`` restores the legacy fixed
-    two-level ladder at w = radius/refine (no stats job);
-    ``refine=1`` is the plain single-level form.
-
-    Distances compare in double (coordinates cast on extraction) with
-    the neighbor id as tie-break, so the selection is deterministic and
-    engine-reproducible — ties at equal d² sit inside the same fine
-    block, so both levels pick the same winner and the refined result
-    EQUALS the single-level result row-for-row (property-tested).
-    Returns (``id_col``, neighbor_id, dist).
+    row).  It is :func:`grid_knn` at k = 1, the density-adaptive ladder
+    included (history: SCALE.md, "One greedy driver").  Returns
+    (``id_col``, neighbor_id, dist).
     """
-    require = [id_col, x_col, y_col, *carry]
-    from ..schemas import require_columns
-    require_columns(points, require, "grid_nearest")
-    p = points.select(
-        F.col(id_col).alias("__id"),
-        F.col(x_col).cast("double").alias("__x"),
-        F.col(y_col).cast("double").alias("__y"),
-        *carry)
-    r2 = float(radius) * float(radius)
-
-    def fmt(best):
-        return best.select(F.col("__qid").alias(id_col),
-                           F.col("__nid").alias("neighbor_id"),
-                           F.round(F.sqrt("__d2"), 6).alias("dist"))
-
-    single = fmt(_grid_best(p, float(radius), max_d2=r2,
-                            carry=carry, predicate=predicate))
-    widths = _ladder_widths(p, radius, refine, target_occupancy)
-    if widths is None:
-        return single
-    parts = []
-    residue = p
-    first = True
-    for wk in widths:
-        best = (_grid_best(residue, wk, carry=carry, predicate=predicate)
-                if first else
-                _grid_best_against(residue, p, wk, max_d2=wk * wk,
-                                   carry=carry, predicate=predicate))
-        best = best.localCheckpoint(eager=True)
-        resolved = best.filter(F.col("__d2") <= F.lit(wk * wk))
-        parts.append(resolved)
-        residue = residue.join(
-            resolved.select(F.col("__qid").alias("__id")),
-            "__id", "left_anti")
-        first = False
-    coarse = _grid_best_against(residue, p, float(radius), max_d2=r2,
-                                carry=carry, predicate=predicate)
-    out = fmt(parts[0])
-    for part in parts[1:]:
-        out = out.unionByName(fmt(part))
-    return out.unionByName(fmt(coarse))
+    return grid_knn(points, radius, 1, id_col, x_col, y_col, refine,
+                    carry, predicate, target_occupancy).drop("rank")
 
 
 def grid_knn(points: DataFrame, radius: float, k: int = 3,
              id_col: str = "id", x_col: str = "x", y_col: str = "y",
              refine: int = 8, carry: tuple[str, ...] = (),
              predicate=None,
-             target_occupancy: float | None = 32.0) -> DataFrame:
-    """Radius-bounded k-nearest-neighbors, grid-bucketed — the
-    multi-neighbor form of :func:`grid_nearest` (kNN-graph
+             target_occupancy: float = 32.0) -> DataFrame:
+    """Radius-bounded k-nearest-neighbors, grid-bucketed (kNN-graph
     construction, multi-negative contrastive mining, density
-    estimation).  EXACT for the radius-bounded semantics: per point,
-    UP TO ``k`` rows (fewer when fewer true neighbors exist within
-    ``radius``), ranked by distance with neighbor-id tie-break.
+    estimation; :func:`grid_nearest` is k = 1).  Each point lands in
+    cell (⌊x/w⌋, ⌊y/w⌋); any neighbor within w is necessarily in the
+    3×3 cell neighborhood, so probes replicate 9× and join the cell key
+    exactly — a plain equi-join, never a cross join.  EXACT for the
+    radius-bounded semantics: per point, UP TO ``k`` rows (fewer when
+    fewer true neighbors exist within ``radius``), ranked by distance
+    with neighbor-id tie-break.
 
-    Same density-adaptive ladder as grid_nearest, with the k-resolution
-    rule: every rung filters candidates to d ≤ w BEFORE the per-query
-    top-k window, so a query that retains a FULL k rows is resolved
-    exactly — its k candidates all sit at d ≤ w, any point outside the
+    DENSITY-ADAPTIVE ladder: one stats job (count + bbox) sizes the
+    finest width w₀ = √(K·area/(9n)) so the EXPECTED candidates per
+    probe is the constant K (``target_occupancy``), which keeps pair
+    volume ≈ n·K linear in n; effectively-1-D data (one extent ≪ the
+    other, e.g. PSM's score line) uses K·extent/(3n), and fully stacked
+    or sparse data collapses to the single-level form.  Unresolved
+    points escalate a GEOMETRIC ladder (w₀, 8w₀, 64w₀, … below
+    radius/2) and finally the radius-width backstop against the full
+    table; ``refine=1`` is the plain single-level form.
+
+    Every rung is exactness-preserving by the k-resolution rule: it
+    filters candidates to d ≤ w BEFORE the per-query top-k window, so a
+    query that retains a FULL k rows is resolved exactly — its k candidates all sit at d ≤ w, any point outside the
     3×3 block is at L∞ > w (strictly: ≥2-cell offsets exceed one cell
     width), hence farther than all k, and in-block candidates past w
     are farther than every kept row; ties at the k-boundary are
@@ -338,8 +269,8 @@ def grid_knn(points: DataFrame, radius: float, k: int = 3,
 
 def _grid_best_against(queries: DataFrame, corpus: DataFrame,
                        width: float, max_d2: float,
-                       carry: tuple[str, ...] = (),
-                       predicate=None, k: int = 1) -> DataFrame:
+                       carry: tuple[str, ...], predicate,
+                       k: int) -> DataFrame:
     """Coarse escalation level: best corpus candidate per QUERY point
     (queries ⊆ corpus, both carrying __id/__x/__y/*carry) among the 3×3
     ``width``-cell neighborhood — same kernel as :func:`_grid_best` but

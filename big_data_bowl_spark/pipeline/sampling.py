@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.fixpoint import greedy
 from ..schemas import require_columns
 
 HASH_MULT = 2654435761  # Knuth multiplicative constant (2^32 · φ)
@@ -411,68 +412,18 @@ def poisson_bootstrap(df: DataFrame, units_col: str, key_col: str,
                             / F.col("n_eff").cast("double")))
 
 
-def _anti_covered(dg: DataFrame, covered: DataFrame | None) -> DataFrame:
-    """Filter out already-covered grams via a LEFT ANTI join against the
-    covered-grams frame (``None`` = nothing covered yet).
-
-    NOT ``~isin(...)``: an IN-list serializes every covered gram as a
-    plan literal — a multi-megabyte plan re-analyzed every round at
-    real document lengths.  And NOT a per-round driver round-trip
-    (r9's fix collected the winner's grams and re-created + broadcast
-    a covered frame each round — plan O(1) but k driver round-trips of
-    gram strings, the r9 bench's #2/#3 cost): the covered set stays
-    DISTRIBUTED and only O(k) scalars ever cross the driver.  Grams are
-    never null (explode of ngrams), so anti-join ≡ the isin complement.
-
-    r14: the callers now DERIVE the covered frame lazily from the pinned
-    (doc, gram) table and the chosen winner ids (see
-    :func:`_covered_grams`) instead of maintaining an accumulated
-    union + eager ``localCheckpoint`` per round — same gram set, half
-    the jobs.
-
-    r15 measured NO-GO — lazy-greedy round skipping (the carried
-    VERDICT item, scoped to "skip rounds whose winner is provably
-    unchanged"): implemented as a submodular-bound check (fresh gain of
-    the last full pass's top-N candidates vs the N-th-gain tail bound,
-    winner provably global when strictly above it; identical winner
-    sequence pinned by test).  On this corpus the bound NEVER
-    separates: the per-doc gain distribution is nearly flat (sf0.1:
-    top gain 98, 32nd 94, 1000th still 76, while the round-8 winner's
-    fresh gain is 50), so 7 of 8 rounds fell back to a full pass —
-    14 jobs instead of 8, q_set_cover 4.12→5.02s / q_weighted_cover
-    4.04→4.38s interleaved A/B.  Reverted; the mechanism only pays on
-    heavy-tailed gain distributions, which no test corpus has."""
-    if covered is None:
-        return dg
-    return dg.join(covered, "__g", "left_anti")
-
-
-def _covered_grams(dg: DataFrame, chosen_ids: list[int]) -> DataFrame | None:
-    """The covered-gram set, derived LAZILY from the pinned (doc, gram)
-    table: exactly the grams of the chosen docs — by induction the same
-    set as the old per-round union of winners' newly-covered grams
-    (each round's winner grams were already anti-joined, so their union
-    over rounds IS the chosen docs' distinct grams, and ``dg`` is
-    distinct by construction).
-
-    r14 (guide §2.4/§1.2): the old shape ran TWO jobs per round — the
-    argmax ``first()`` plus an eager ``localCheckpoint`` of the covered
-    union, the latter re-running the full anti-join just to materialize
-    the winner's grams.  Deriving the covered side as a filter over the
-    already-checkpointed ``dg`` folds that work into the next round's
-    single argmax job: k jobs total instead of 2k−1, identical rounds
-    (same-session interleaved min-of-3 at sf0.1: q_set_cover
-    5.24→4.60s, q_weighted_cover 6.27→4.84s, output rows byte-
-    identical, oracle green).  The filter literal is
-    the ≤k chosen DOC IDS (bounded scalars — never the grams, which is
-    the plan-bloat no-go recorded above), and the broadcast hint is
-    sound at any corpus scale: the build side is the distinct grams of
-    ≤k documents, bounded by k·max_doc_len."""
+def _uncovered(dg: DataFrame, chosen_ids: list[int]) -> DataFrame:
+    """The (doc, gram) rows of ``dg`` whose gram no chosen doc holds: a
+    LEFT ANTI join against the chosen docs' grams, filtered out of the
+    same pinned table by the ≤k chosen doc ids and broadcast (bounded
+    by k·max_doc_len).  Never an IN-list of grams and never a per-round
+    gram collect; only doc ids reach the plan.  Grams are never null
+    (explode of ngrams), so the anti-join is the set complement.
+    History: SCALE.md, "One greedy driver"."""
     if not chosen_ids:
-        return None
-    return F.broadcast(
-        dg.filter(F.col("__id").isin([int(i) for i in chosen_ids]))
-          .select("__g"))
+        return dg
+    covered = dg.filter(F.col("__id").isin(chosen_ids)).select("__g")
+    return dg.join(F.broadcast(covered), "__g", "left_anti")
 
 
 def greedy_set_cover(df: DataFrame, k: int = 8, id_col: str = "doc_id",
@@ -485,40 +436,27 @@ def greedy_set_cover(df: DataFrame, k: int = 8, id_col: str = "doc_id",
 
     Each round counts every doc's UNCOVERED grams (integer gains — no
     float anywhere, so cross-engine determinism is free) and picks the
-    max with lowest-id tie-break.  The covered set is DERIVED each
-    round from the pinned (doc, gram) table and the chosen winner ids
-    (never an isin literal of grams, never a per-round gram collect —
-    see :func:`_anti_covered` / :func:`_covered_grams`); only the
-    chosen list (k scalar triples) crosses the driver, and each round
-    is exactly ONE job.  The (doc, gram) table is fact-grain and never
+    max with lowest-id tie-break through :func:`fixpoint.greedy`, one
+    job per round.  The (doc, gram) table is fact-grain and never
     shuffles after its one distinct — each round is an anti-join-
-    filtered re-aggregation of the same pinned table.  Rounds stop
-    early when no doc adds coverage (both engines converge to the same
-    fixpoint: an exhausted universe keeps yielding empty rounds).
+    filtered re-aggregation of the same pinned table
+    (:func:`_uncovered`).  Rounds stop early when no doc adds coverage
+    (both engines converge to the same fixpoint: an exhausted universe
+    keeps yielding empty rounds).
 
     Returns (sel_order 1..≤k, id, gain = newly covered grams)."""
     from .text import _token_ngrams
     require_columns(df, [id_col, text_col], "greedy_set_cover")
-    spark = df.sparkSession
     dg = (df.select(F.col(id_col).cast("long").alias("__id"),
                     F.explode(_token_ngrams(text_col, n)).alias("__g"))
             .distinct().localCheckpoint(eager=True))
-    chosen: list[tuple[int, int, int]] = []
-    for r in range(1, k + 1):
-        cand = _anti_covered(dg, _covered_grams(dg, [c[1] for c in chosen]))
-        top = (cand.groupBy("__id")
-                   .agg(F.count(F.lit(1)).alias("gain"))
-                   .agg(F.max(F.struct(F.col("gain"),
-                                       (-F.col("__id")).alias("nid")))
-                        .alias("m"))
-                   .select(F.col("m.gain").alias("gain"),
-                           (-F.col("m.nid")).alias("id"))
-                   .first())
-        if top is None or top["id"] is None:
-            break  # universe exhausted
-        chosen.append((r, int(top["id"]), int(top["gain"])))
-    out = spark.createDataFrame(chosen, "sel_order long, id long, gain long")
-    return out.select("sel_order", F.col("id").alias(id_col), "gain")
+
+    def gains(_, chosen):
+        return (_uncovered(dg, chosen).groupBy("__id")
+                .agg(F.count(F.lit(1)).alias("gain")))
+
+    return greedy(dg, k, gains, "gain").select(
+        "sel_order", F.col("id").alias(id_col), "gain")
 
 
 def greedy_weighted_cover(df: DataFrame, k: int = 8,
@@ -531,19 +469,15 @@ def greedy_weighted_cover(df: DataFrame, k: int = 8,
     rambling one covering 25.  The selection budget a curation pipeline
     actually optimizes is tokens, not documents.
 
-    The ratio argmax is FLOOR(gain·10⁶ / cost) — one integer division,
-    identical in both engines (never a float ratio, whose rounding
-    could flip a pick at a boundary) — with lowest-id tie-break.  Same
-    scale shape as the unweighted form: one pinned (doc, gram) table, a
-    covered-set ANTI-join per round derived from the chosen ids
-    (:func:`_anti_covered` / :func:`_covered_grams`), a driver-scale
-    chosen list — the winner's gain/cost/ratio ride the argmax struct,
-    so each round is ONE ``first()`` and no gram ever crosses the
-    driver.
+    The ratio argmax is qratio = (gain·10⁶) div cost — SQL ``div``, TRUE
+    integer division on longs, identical in both engines (Spark ``/``
+    on longs is double division, one ulp from flipping a boundary pick
+    against the oracle's exact ``//``) — with lowest-id tie-break.
+    Same scale shape as the unweighted form; the winner's gain and cost
+    ride the argmax struct, so each round is ONE ``first()``.
     Returns (sel_order, id, gain, cost, qratio)."""
     from .text import _token_ngrams, _tokens
     require_columns(df, [id_col, text_col], "greedy_weighted_cover")
-    spark = df.sparkSession
     base = df.select(F.col(id_col).cast("long").alias("__id"),
                      F.col(text_col))
     costs = (base.select("__id", F.size(_tokens(text_col))
@@ -553,41 +487,16 @@ def greedy_weighted_cover(df: DataFrame, k: int = 8,
                       F.explode(_token_ngrams(text_col, n)).alias("__g"))
               .distinct().join(costs, "__id")
               .localCheckpoint(eager=True))
-    chosen: list[tuple[int, int, int, int, int]] = []
-    for r in range(1, k + 1):
-        cand = _anti_covered(dg, _covered_grams(dg, [c[1] for c in chosen]))
-        # (qr, nid) is unique per doc, so gain/cost tag along in the
-        # max-struct without affecting the ordering — the winner's
-        # scalars come back in the SAME first(), no second action.
-        # qr uses SQL `div` — TRUE integer division on longs (Spark `/`
-        # on longs is double division, one ulp from flipping a
-        # boundary pick vs the oracle's exact `//`).
-        top = (cand.groupBy("__id")
-                   .agg(F.count(F.lit(1)).alias("gain"),
-                        F.first("__cost").alias("cost"))
-                   .withColumn("qr", F.expr(
-                       "(gain * CAST(1000000 AS BIGINT)) div cost"))
-                   .agg(F.max(F.struct(F.col("qr"),
-                                       (-F.col("__id")).alias("nid"),
-                                       F.col("gain"), F.col("cost")))
-                        .alias("m"))
-                   .select((-F.col("m.nid")).alias("id"),
-                           F.col("m.gain").alias("gain"),
-                           F.col("m.cost").alias("cost"))
-                   .first())
-        if top is None or top["id"] is None:
-            break
-        pick = int(top["id"])
-        gain, cost = int(top["gain"]), int(top["cost"])
-        # report the ratio from exact Python integer arithmetic — the
-        # argmax expression above is the same `div`, this just removes
-        # any engine between the winner's scalars and the output row
-        chosen.append((r, pick, gain, cost, gain * 1_000_000 // cost))
-    out = spark.createDataFrame(
-        chosen,
-        "sel_order long, id long, gain long, cost long, qratio long")
-    return out.select("sel_order", F.col("id").alias(id_col),
-                      "gain", "cost", "qratio")
+
+    def ratios(_, chosen):
+        return (_uncovered(dg, chosen).groupBy("__id")
+                .agg(F.count(F.lit(1)).alias("gain"),
+                     F.first("__cost").alias("cost"))
+                .withColumn("qratio", F.expr(
+                    "(gain * CAST(1000000 AS BIGINT)) div cost")))
+
+    return greedy(dg, k, ratios, "qratio", carry=("gain", "cost")).select(
+        "sel_order", F.col("id").alias(id_col), "gain", "cost", "qratio")
 
 
 def mixture_weights(docs: DataFrame, group_col: str = "source",

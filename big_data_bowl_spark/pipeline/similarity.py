@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import roundn
-from ..operators.fixpoint import iterate
+from ..operators.fixpoint import greedy, iterate
 from ..operators.windows import topk_per_group
 from ..schemas import arrow_fanout, fan_out, require_columns
 from .sampling import HASH_KEY_MOD, HASH_MOD, HASH_MULT, wang_mixed_hash
@@ -60,8 +60,11 @@ def _sqdist(a: Column, b: Column) -> Column:
 
 def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """(id, v array<double>) — floats cast to double BEFORE any
-    arithmetic so element-order folds match the oracles bit for bit."""
-    return df.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
+    arithmetic so element-order folds match the oracles bit for bit.
+    A null vector is dropped: it is never a query, a candidate or a
+    code row."""
+    return (df.filter(F.col(vec_col).isNotNull())
+              .select(F.col(id_col), _as_double(F.col(vec_col)).alias("v")))
 
 
 def _queries(vecs: DataFrame, query_ids: list[int], id_col: str,
@@ -254,14 +257,12 @@ def lsh_bucketed_topk(df: DataFrame, query_ids: list[int], k: int = 3,
     recall trade — and the candidate join is equi on (table, bucket),
     never cross; duplicate candidates from multiple tables collapse in
     a (query, neighbor)-grain distinct before the re-rank window.
-    A null vector is never a query or a candidate.
     Approximate → no SQL oracle; containment + measured-recall tested.
     """
     require_columns(df, [id_col, vec_col], "lsh_bucketed_topk")
     # The fan-out feeds a mapInPandas stage, so arrow_fanout bounds its
     # partition count by input size.
-    vecs = arrow_fanout(_vectors(df.filter(F.col(vec_col).isNotNull()),
-                                 id_col, vec_col))
+    vecs = arrow_fanout(_vectors(df, id_col, vec_col))
     id_type = dict(vecs.dtypes)[id_col]
 
     # The sign-bit projections run as one vectorized Arrow batch over
@@ -484,7 +485,7 @@ def pq_encode(df: DataFrame, books: DataFrame, m: int = 8,
     id_type = dict(df.select(F.col(id_col)).dtypes)[id_col]
     # no fan-out: the numpy encode is trivial per byte, so the scan's own
     # partitioning already saturates it (SCALE.md, "PQ encode Arrow stage")
-    vecs = _vectors(df.filter(F.col(vec_col).isNotNull()), id_col, vec_col)
+    vecs = _vectors(df, id_col, vec_col)
 
     def _encode(batches):
         import numpy as np
@@ -646,11 +647,15 @@ def lloyd_centroids(vecs: DataFrame, cents: DataFrame, iters: int,
     centroid) table, returning the FINAL centroids — extracted from
     :func:`lloyd_kmeans` so evaluation queries (silhouette) can reuse
     the identical iteration instead of re-implementing it."""
+    # both join sides take the same null filter, so the vectors'
+    # exchange below it is reused rather than run twice per round
+    nonnull = _vectors(vecs, id_col, "v")
+
     def step(c: DataFrame) -> DataFrame:
         assign = assign_to_centroids(vecs, c, id_col, "v", metric="l2")
         return _mean_vectors(
-            vecs.join(assign.select(id_col, F.col("assigned_label")
-                                    .alias("cand_label")), id_col),
+            nonnull.join(assign.select(id_col, F.col("assigned_label")
+                                       .alias("cand_label")), id_col),
             ["cand_label"], "v")
 
     return iterate(cents, step, iters)
@@ -935,34 +940,14 @@ def kcenter_coreset(df: DataFrame, k: int = 8, id_col: str = "vec_id",
     selection time; NULL for the seed) — radius is the coverage
     guarantee curve callers cut off at."""
     require_columns(df, [id_col, vec_col], "kcenter_coreset")
-    spark = df.sparkSession
     pts = (df.select(F.col(id_col).cast("long").alias("__id"),
                      _as_double(F.col(vec_col)).alias("__v"))
              .localCheckpoint(eager=True))
-    seed_id = pts.agg(F.min("__id")).first()[0]
-    if seed_id is None:
-        raise ValueError("kcenter_coreset: empty input")
-    chosen: list[tuple[int, int, int | None]] = [(1, int(seed_id), None)]
-    state = pts.withColumn("__qmind", F.lit(None).cast("long"))
-    cur_id = int(seed_id)
-    for r in range(2, k + 1):
-        state = _kcenter_update(state, cur_id).localCheckpoint(eager=True)
-        top = (state.filter(~F.col("__id")
-                             .isin([c[1] for c in chosen]))
-                    .agg(F.max(F.struct(
-                        F.col("__qmind").alias("q"),
-                        (-F.col("__id")).alias("nid"))).alias("m"))
-                    .select(F.col("m.q").alias("q"),
-                            (-F.col("m.nid")).alias("id"))
-                    .first())
-        if top is None or top["id"] is None:
-            break  # fewer than k points
-        chosen.append((r, int(top["id"]), int(top["q"])))
-        cur_id = int(top["id"])
-    out = spark.createDataFrame(
-        chosen, "sel_order long, id long, q long")
+    out = greedy(pts.withColumn("__qmind", F.lit(None).cast("long")), k,
+                 lambda state, _: state, "__qmind", update=_kcenter_update,
+                 empty_error="kcenter_coreset: empty input")
     return out.select("sel_order", F.col("id").alias(id_col),
-                      (F.col("q") / F.lit(1e6)).alias("radius"))
+                      (F.col("__qmind") / F.lit(1e6)).alias("radius"))
 
 
 def _kcenter_update(state: DataFrame, cur_id: int) -> DataFrame:
@@ -1052,7 +1037,6 @@ def mmr_rerank(df: DataFrame, query_vec: list[float], k: int = 8,
     quantized objective at selection; relevance alone for the first
     pick)."""
     require_columns(df, [id_col, vec_col], "mmr_rerank")
-    spark = df.sparkSession
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     rel = _dot(_as_double(F.col(vec_col)), q)
     pts = (df.select(F.col(id_col).cast("long").alias("__id"),
@@ -1060,36 +1044,27 @@ def mmr_rerank(df: DataFrame, query_vec: list[float], k: int = 8,
                      F.floor(rel * F.lit(1e6)).cast("long").alias("__qrel"))
              .withColumn("__qmaxsim", F.lit(None).cast("long"))
              .localCheckpoint(eager=True))
-    chosen: list[tuple[int, int, int]] = []
-    state, cur_id = pts, None
-    for r in range(1, k + 1):
-        if cur_id is not None:
-            cen = F.broadcast(state.filter(F.col("__id") == cur_id)
-                                   .select(F.col("__v").alias("__c")))
-            qsim = F.floor(_dot(F.col("__v"), F.col("__c"))
-                           * F.lit(1e6)).cast("long")
-            state = (state.crossJoin(cen)
-                          .select("__id", "__v", "__qrel",
-                                  F.greatest(F.col("__qmaxsim"), qsim)
-                                   .alias("__qmaxsim"))
-                          .localCheckpoint(eager=True))
-        obj = F.col("__qrel") - F.coalesce(F.col("__qmaxsim"), F.lit(0))
-        top = (state.filter(~F.col("__id")
-                             .isin([c[1] for c in chosen]))
-                    .agg(F.max(F.struct(obj.alias("s"),
-                                        (-F.col("__id")).alias("nid")))
-                         .alias("m"))
-                    .select(F.col("m.s").alias("s"),
-                            (-F.col("m.nid")).alias("id"))
-                    .first())
-        if top is None or top["id"] is None:
-            break
-        chosen.append((r, int(top["id"]), int(top["s"])))
-        cur_id = int(top["id"])
-    out = spark.createDataFrame(
-        chosen, "sel_order long, id long, s long")
+    obj = F.col("__qrel") - F.coalesce(F.col("__qmaxsim"), F.lit(0))
+    out = greedy(pts, k, lambda state, _: state.select("__id",
+                                                       obj.alias("s")),
+                 "s", update=_mmr_update)
     return out.select("sel_order", F.col("id").alias(id_col),
                       (F.col("s") / F.lit(1e6)).alias("score"))
+
+
+def _mmr_update(state: DataFrame, cur_id: int) -> DataFrame:
+    """One MMR round's max-similarity state update — map-only like
+    :func:`_kcenter_update`: the newest pick broadcasts as one row, the
+    dot product folds in-row, and greatest() folds it into the running
+    quantized maximum."""
+    cen = F.broadcast(state.filter(F.col("__id") == cur_id)
+                           .select(F.col("__v").alias("__c")))
+    qsim = F.floor(_dot(F.col("__v"), F.col("__c")) * F.lit(1e6)) \
+        .cast("long")
+    return (state.crossJoin(cen)
+                 .select("__id", "__v", "__qrel",
+                         F.greatest(F.col("__qmaxsim"), qsim)
+                          .alias("__qmaxsim")))
 
 
 def hard_negatives(df: DataFrame, radius: float = 0.5,

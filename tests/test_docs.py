@@ -86,28 +86,25 @@ def test_no_unreferenced_functions():
     assert not unused, f"functions nothing references: {unused}"
 
 
-# Loops that pin inside their own body instead of going through
-# operators/fixpoint.py:iterate, each with the reason it cannot.
+# Loops that pin or run a per-round ``first()`` inside their own body
+# instead of going through operators/fixpoint.py (``iterate`` or
+# ``greedy``), each with the reason it cannot.
 _LOOP_PIN_EXEMPT = {
-    ("operators/separation.py", "grid_nearest"):
-        "walks a list of grid widths, not a fixpoint",
     ("operators/separation.py", "grid_knn"):
         "walks a list of grid widths, not a fixpoint",
     ("pipeline/similarity.py", "pq_codebooks"):
         "<=2 rounds over a two-frame state; the final eager pin is tied "
         "to the sub.persist() lifetime",
-    ("pipeline/similarity.py", "kcenter_coreset"):
-        "greedy selector: driver-side chosen list + per-round argmax action",
-    ("pipeline/similarity.py", "mmr_rerank"):
-        "greedy selector: driver-side chosen list + per-round argmax action",
 }
 
 
 def test_loop_pins_only_in_fixpoint_driver():
-    """No ``.localCheckpoint``/``.persist``/``.cache`` call sits lexically
-    inside a ``for``/``while`` body in the package: an iterative
-    operator cuts lineage through ``fixpoint.iterate`` (the one place
-    that decides the pin policy), bar the exempt loops above."""
+    """No ``.localCheckpoint``/``.persist``/``.cache`` call and no
+    ``.first()`` driver action sits lexically inside a ``for``/``while``
+    body in the package: an iterative operator cuts lineage through
+    ``fixpoint.iterate`` and a greedy selector picks through
+    ``fixpoint.greedy`` (the one place that decides the pin policy and
+    the per-round action), bar the exempt loops above."""
     import ast
     import glob
 
@@ -125,7 +122,8 @@ def test_loop_pins_only_in_fixpoint_driver():
                         if (isinstance(n, ast.Call)
                                 and isinstance(n.func, ast.Attribute)
                                 and n.func.attr in ("localCheckpoint",
-                                                    "persist", "cache")):
+                                                    "persist", "cache",
+                                                    "first")):
                             found.add((path, name, n.lineno))
             visit(child, path, name)
 
@@ -134,7 +132,8 @@ def test_loop_pins_only_in_fixpoint_driver():
     bad = sorted(f for f in found
                  if f[0] != "operators/fixpoint.py"
                  and f[:2] not in _LOOP_PIN_EXEMPT)
-    assert not bad, f"pins inside loop bodies (use fixpoint.iterate): {bad}"
+    assert not bad, ("pins or first() inside loop bodies (use "
+                     f"fixpoint.iterate or fixpoint.greedy): {bad}")
     assert {f[:2] for f in found} >= set(_LOOP_PIN_EXEMPT), \
         "an exempt loop no longer pins: drop it from _LOOP_PIN_EXEMPT"
 

@@ -184,6 +184,15 @@ def test_lsh_topk_contained_in_exact_candidates(spark):
             assert abs(exact[key] - r.cosine) < 1e-9
 
 
+def _cosine_stage(df, clean):
+    return cosine_topk(df, [0, 1, 7], k=3)
+
+
+def _ivf_neutral_stage(df, clean):
+    from big_data_bowl_spark.pipeline.similarity import ivf_neutral_topk
+    return ivf_neutral_topk(df, [0, 1, 7], k=3)
+
+
 def _lsh_stage(df, clean):
     return lsh_bucketed_topk(df, [0, 1, 7], k=3)
 
@@ -194,12 +203,16 @@ def _pq_encode_stage(df, clean):
     return pq_encode(df, pq_codebooks(clean, m=8, k=16, iters=1), m=8)
 
 
-@pytest.mark.parametrize("stage", [_lsh_stage, _pq_encode_stage],
-                         ids=["lsh_bucketed_topk", "pq_encode"])
-def test_vector_arrow_stage_skips_null_vectors(spark, stage):
-    """Null policy of the two float-vector Arrow stages: a null
-    embedding is never a query, a candidate or a code row, so the
-    stage returns exactly what it returns with that row removed."""
+@pytest.mark.parametrize(
+    "stage", [_cosine_stage, _ivf_neutral_stage, _lsh_stage,
+              _pq_encode_stage],
+    ids=["cosine_topk", "ivf_neutral_topk", "lsh_bucketed_topk",
+         "pq_encode"])
+def test_vector_search_skips_null_vectors(spark, stage):
+    """One null policy for the vector tier (``similarity._vectors``): a
+    null embedding is never a query, a candidate or a code row, so a
+    search or the PQ encode returns exactly what it returns with that
+    row removed."""
     em = read_table(spark, SF_SMALL, "embeddings")
     nulled = em.withColumn("embedding", F.when(
         F.col("vec_id") != 7, F.col("embedding")))
@@ -2571,6 +2584,16 @@ def test_kcenter_coreset_k_exceeding_points_stops_clean(spark):
     assert [r["vec_id"] for r in out] == [7, 9]  # stops at the point count
 
 
+def test_kcenter_coreset_empty_input_raises(spark):
+    """An input with no point raises at construction, as the seed job
+    used to: the greedy driver's first round finds nothing to pick."""
+    from big_data_bowl_spark.pipeline.similarity import kcenter_coreset
+
+    df = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="kcenter_coreset: empty input"):
+        kcenter_coreset(df, k=3)
+
+
 def test_jl_projection_preserves_pairwise_distances(spark):
     """JL guarantee, empirically: project 40 random 64-d vectors to 16
     dims and check the pairwise squared-distance RATIO stays within a
@@ -2632,10 +2655,6 @@ def test_grid_nearest_refined_equals_single_level(spark):
     slow = grid_nearest(df, radius=0.15, refine=1).collect()
     assert sorted(map(tuple, fast)) == sorted(map(tuple, slow))
     assert len(fast) > 100  # the clumps actually produced neighbors
-    # the legacy fixed-width two-level ladder must agree too
-    legacy = grid_nearest(df, radius=0.15, refine=8,
-                          target_occupancy=None).collect()
-    assert sorted(map(tuple, legacy)) == sorted(map(tuple, slow))
 
 
 def test_grid_nearest_adaptive_ladder_on_stacked_duplicates(spark):
@@ -3623,6 +3642,57 @@ def test_iterate_until_stops_the_loop(spark):
                   until=lambda s: len(calls) == 3)
     assert len(calls) == 3
     assert out.first()["r"] == 3
+
+
+def _greedy_pick(spark, scores, k, update=None):
+    """fixpoint.greedy over an (__id, s) frame ranked by its own
+    score column; returns the picks as (sel_order, id, s) tuples."""
+    from big_data_bowl_spark.operators.fixpoint import greedy
+
+    state = spark.createDataFrame(list(scores.items()), "__id long, s long")
+    out = greedy(state, k, lambda st, _: st, "s", update=update)
+    assert out.columns == ["sel_order", "id", "s"]
+    assert all(t == "bigint" for _, t in out.dtypes)
+    return [tuple(r) for r in out.orderBy("sel_order").collect()]
+
+
+def test_greedy_tie_goes_to_lowest_id(spark):
+    assert _greedy_pick(spark, {9: 5, 4: 5, 6: 3, 2: 1}, 3) == [
+        (1, 4, 5), (2, 9, 5), (3, 6, 3)]
+
+
+def test_greedy_stops_when_no_candidate_is_left(spark):
+    assert _greedy_pick(spark, {3: 1, 1: 2}, 5) == [(1, 1, 2), (2, 3, 1)]
+
+
+def test_greedy_zero_rounds_is_empty(spark):
+    from big_data_bowl_spark.operators.fixpoint import greedy
+
+    def boom(state, picked):
+        raise AssertionError("rank must not run at k=0")
+
+    out = greedy(spark.range(3).withColumnRenamed("id", "__id"), 0, boom,
+                 "score", carry=("gain",))
+    assert out.columns == ["sel_order", "id", "score", "gain"]
+    assert out.collect() == []
+
+
+def test_greedy_update_runs_once_per_round_after_the_first(spark):
+    """``update(state, last_id)`` folds each pick into the state before
+    the next round: k rounds run it k - 1 times, each with the id the
+    round before picked, and the next round ranks the updated state."""
+    calls = []
+
+    def lower_the_rest(state, last_id):
+        calls.append(last_id)
+        return state.withColumn("s", F.when(
+            F.col("__id") == last_id, F.col("s")).otherwise(
+            F.col("s") - 10))
+
+    picks = _greedy_pick(spark, {1: 30, 2: 25, 3: 20}, 3,
+                         lower_the_rest)
+    assert calls == [1, 2]
+    assert picks == [(1, 1, 30), (2, 2, 15), (3, 3, 0)]
 
 
 def _routed_fixpoint(spark, name, rounds, monkeypatch):

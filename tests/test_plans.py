@@ -714,31 +714,32 @@ def test_quality_classifier_is_map_only(spark):
 
 def test_greedy_cover_round_has_no_in_list(spark):
     """The per-round covered-set filter must be a LEFT ANTI join against
-    the DISTRIBUTED covered frame, never a literal IN-list (an isin over
-    the covered grams grows the plan with k × the winners' distinct
-    grams — multi-megabyte plans re-analyzed each round at real document
-    lengths) and never a forced broadcast of driver-collected grams
-    (r9's shape: k gram round-trips through the driver and a hard
-    driver-memory ceiling at corpus scale).  The covered side is
-    checkpointed, so AQE sees its true size and broadcasts while small."""
+    the DISTRIBUTED covered grams, never a literal IN-list of grams (an
+    isin over the covered grams grows the plan with k × the winners'
+    distinct grams — multi-megabyte plans re-analyzed each round at
+    real document lengths) and never a broadcast of driver-collected
+    grams (r9's shape: k gram round-trips through the driver and a hard
+    driver-memory ceiling at corpus scale).  The covered side is the
+    chosen docs' grams filtered out of the pinned table by doc id, so
+    the only plan literals are the ≤k chosen ids, and it is broadcast."""
     from pyspark.sql import functions as F
 
-    from big_data_bowl_spark.pipeline.sampling import _anti_covered
+    from big_data_bowl_spark.pipeline.sampling import _uncovered
 
     dg = spark.range(100).select(
         F.col("id").alias("__id"),
         F.concat(F.lit("g"), (F.col("id") % 37)).alias("__g"))
-    covered = (spark.range(20)
-               .select(F.concat(F.lit("g"), F.col("id")).alias("__g"))
-               .localCheckpoint(eager=True))
-    cand = _anti_covered(dg, covered)
+    cand = _uncovered(dg, [3, 5])
     plan = executed_plan(cand, execute=True)
     assert "LeftAnti" in plan, plan
-    assert "BroadcastHashJoin" in plan, plan  # AQE: small side broadcast
-    # no covered gram may appear as a plan literal
+    assert "BroadcastHashJoin" in plan, plan
+    # no covered gram may appear as a plan literal: the IN-list holds
+    # the chosen doc ids alone
     optimized = cand._jdf.queryExecution().optimizedPlan().toString()
-    assert " IN (" not in optimized, optimized
-    assert "g19" not in optimized, optimized
+    assert "IN(3,5)" in optimized.replace(" ", ""), optimized
+    assert "g3" not in optimized and "g5" not in optimized, optimized
+    assert {r["__g"] for r in cand.select("__g").distinct().collect()} \
+        == {f"g{i}" for i in range(37)} - {"g3", "g5"}
 
 
 def test_jaccard_prefix_path_selection(spark):
